@@ -190,9 +190,11 @@ final class Cms(var depth: Int, var width: Int, var seed: Long) extends BytesSer
     * phase scale with cores instead of with the allocator (measured on
     * the 152M-token bench: the exploded-row pipeline was
     * allocation-bound and did not speed up from 8 to 32 threads). */
-  def addTextTokens(text: String): Unit = {
-    if (text == null || text.isEmpty) return
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  def addTextTokens(text: String): Unit =
+    if (text != null) addTokens(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[addTextTokens]] over the text's UTF-8 bytes. */
+  def addTokens(bytes: Array[Byte]): Unit = {
     var start = 0
     var i = 0
     val n = bytes.length
@@ -367,8 +369,8 @@ final class Cms(var depth: Int, var width: Int, var seed: Long) extends BytesSer
     width = in.getInt()
     seed = in.getLong()
     total = in.getLong()
-    // objenesis path (Kryo): EVERY field must be initialized here —
-    // the constructor never ran
+    // re-initializes a placeholder instance (fromBytes): EVERY field
+    // must be set here
     val mode = in.get()
     if (mode == 1.toByte) {
       val nnz = Cms.readVarint(in)

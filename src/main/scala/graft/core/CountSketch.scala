@@ -101,9 +101,11 @@ final class CountSketch(var depth: Int, var width: Int, var seed: Long)
     * allocation per document instead of one per token. By linearity
     * the resulting sketch is BYTE-identical to adding each non-empty
     * token via [[add]] (spec-asserted). */
-  def addTextTokens(text: String): Unit = {
-    if (text == null || text.isEmpty) return
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  def addTextTokens(text: String): Unit =
+    if (text != null) addTokens(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[addTextTokens]] over the text's UTF-8 bytes. */
+  def addTokens(bytes: Array[Byte]): Unit = {
     var start = 0
     var i = 0
     val n = bytes.length
@@ -229,7 +231,7 @@ final class CountSketch(var depth: Int, var width: Int, var seed: Long)
     width = in.getInt()
     seed = in.getLong()
     total = in.getLong()
-    // objenesis path (Kryo): every field initialized here
+    // re-initializes a placeholder instance (fromBytes): every field set here
     table = new Array[Long](depth * width)
     val mode = in.get()
     if (mode == 1.toByte) {

@@ -43,7 +43,7 @@ final class DecayedCms(var depth: Int, var width: Int, var seed: Long,
   require(depth >= 1 && width >= 2, s"bad dims: $depth x $width")
 
   /** Reference epoch of the stored masses; NaN marks an empty sketch
-    * (no event seen — NaN survives Kryo/wire roundtrips unambiguously
+    * (no event seen — NaN survives wire roundtrips unambiguously
     * where a sentinel time could collide with real data). */
   var t0: Double = Double.NaN
   var table: Array[Double] = new Array[Double](depth * width)
@@ -67,12 +67,15 @@ final class DecayedCms(var depth: Int, var width: Int, var seed: Long,
     t0 = tNew
   }
 
-  def add(key: String, ts: Double, count: Double = 1.0): Unit = {
+  def add(key: String, ts: Double, count: Double = 1.0): Unit =
+    addHash(Hash128.hashString(key, seed), ts, count)
+
+  /** [[add]] with the key's `Hash128` already computed. */
+  def addHash(h: Hash128.H, ts: Double, count: Double): Unit = {
     require(count >= 0.0 && !ts.isNaN, s"bad event: count=$count ts=$ts")
     if (isEmpty) t0 = ts
     else if (lambda * (ts - t0) > 200.0) rebase(ts)
     val w = count * math.exp(lambda * (ts - t0))
-    val h = Hash128.hashString(key, seed)
     var r = 0
     while (r < depth) { table(idx(h, r)) += w; r += 1 }
     total += w

@@ -62,9 +62,9 @@ import java.nio.ByteBuffer
   * no false negatives, one-sided error with
   * FPR <= (1 - e^(-k*n/m))^k at the current load.
   *
-  * Header fields are vars solely for [[BytesSerde]] (Kryo re-init via
-  * `loadBytes` on a constructor-less instance); they are never mutated
-  * outside deserialization.
+  * Header fields are vars solely for [[BytesSerde]] (`fromBytes`
+  * re-initializes a placeholder instance via `loadBytes`); they are
+  * never mutated outside deserialization.
   */
 final class Ebf(
     var m0: Int,          // base bucket count, power of two

@@ -164,9 +164,11 @@ final class FreqSketch(var capacity: Int,
   /** Tokenize on single spaces (empty tokens skipped — same semantics
     * as [[Cms.addTextTokens]]) and add each token: one UTF-8 encoding
     * per document, zero allocations per already-tracked token. */
-  def addTextTokens(text: String): Unit = {
-    if (text == null || text.isEmpty) return
-    val bytes = text.getBytes(StandardCharsets.UTF_8)
+  def addTextTokens(text: String): Unit =
+    if (text != null) addTokens(text.getBytes(StandardCharsets.UTF_8))
+
+  /** [[addTextTokens]] over the text's UTF-8 bytes. */
+  def addTokens(bytes: Array[Byte]): Unit = {
     var start = 0
     var i = 0
     val len = bytes.length

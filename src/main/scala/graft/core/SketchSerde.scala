@@ -1,43 +1,24 @@
 package graft.core
 
-import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
-import com.esotericsoftware.kryo.io.{Input, Output}
-
-/** Serialization through the sketch's own compact wire format, for both
-  * serializers Spark uses.
+/** Java serialization (task closures, broadcasts) through the sketch's
+  * own compact wire format, via the `writeReplace` proxy pattern.
   *
   * Why this exists (measured, 1M-row bench): the default field-walking
-  * serializers are the single biggest cost in the whole engine. An EBF
-  * over 10^6 urls holds ~10^7 buckets as `Array[Array[Int]]`; Kryo and
-  * Java serialization walk ~10^7 tiny objects per partial-aggregate
-  * shuffle and per task closure, which made the global sketch build
-  * anti-scale (local[32] slower than local[8]). Routing both paths
-  * through `toBytes`/`loadBytes` (varint + bit-packed fingerprints)
-  * shrinks the payload ~10x and removes the object churn entirely.
-  *
-  * - Kryo (`Encoders.kryo` aggregation buffers): [[KryoSerializable]] —
-  *   Kryo instantiates via objenesis (no constructor) and calls `read`,
-  *   so implementors keep header fields as vars and must fully
-  *   initialize in [[loadBytes]].
-  * - Java (task closures, broadcasts): `writeReplace` proxy pattern.
+  * serializer is the single biggest cost in the whole engine. An EBF
+  * over 10^6 urls holds ~10^7 buckets; field-walking ~10^7 tiny objects
+  * per broadcast or task closure made the global sketch build
+  * anti-scale (local[32] slower than local[8]). Shipping `toBytes`
+  * (varint + bit-packed fingerprints) shrinks the payload ~10x and
+  * removes the object churn entirely. Aggregation buffers never take
+  * this path: `graft.plans.SketchAgg` serializes them as the same wire
+  * bytes itself.
   */
-trait BytesSerde extends KryoSerializable with Serializable {
+trait BytesSerde extends Serializable {
   def toBytes: Array[Byte]
 
-  /** Re-initialize this (possibly constructor-less) instance from the
-    * wire format. */
+  /** Re-initialize this instance from the wire format (the kernels'
+    * `fromBytes` build on it). */
   private[core] def loadBytes(bytes: Array[Byte]): Unit
-
-  override def write(kryo: Kryo, output: Output): Unit = {
-    val b = toBytes
-    output.writeVarInt(b.length, true)
-    output.writeBytes(b)
-  }
-
-  override def read(kryo: Kryo, input: Input): Unit = {
-    val n = input.readVarInt(true)
-    loadBytes(input.readBytes(n))
-  }
 
   /** Java serialization proxy: ship wire bytes, rebuild on read. */
   protected def writeReplace(): AnyRef = new SerializedSketch(toBytes)

@@ -168,7 +168,7 @@ final class Theta(var k: Int, var seed: Long) extends BytesSerde {
     k = in.getInt()
     seed = in.getLong()
     val n = in.getInt()
-    // objenesis path: init every field
+    // re-initializes a placeholder instance (fromBytes): init every field
     vals = new Array[Long](n)
     scratch = null
     sUsed = 0

@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * Shape: contamination is an EQUI-join on the shingle string. The
   * benchmark side is tiny by definition (eval sets are thousands of
   * docs, the corpus is billions), so its distinct shingle set is
-  * broadcast; corpus shingling is map-side (tokenize -> sliding window
-  * -> per-doc distinct); the only shuffle is the pair-count groupBy,
-  * bounded by the number of (contaminated doc, benchmark doc, shared
-  * shingle) triples — i.e. by actual contamination, not corpus size.
+  * broadcast; corpus shingling is map-side (tokenize -> sliding window,
+  * repeats kept) and the per-doc distinct happens AFTER the join, in
+  * the pair-count groupBy — the only shuffle, bounded by the number of
+  * (contaminated doc, benchmark doc, shared shingle) matches, i.e. by
+  * actual contamination, not corpus size.
   * At 100 TB the broadcast carries the shingle strings themselves; if
   * the benchmark's shingle set outgrows the broadcast budget, probe
   * corpus shingles through an EBF of the benchmark shingles first

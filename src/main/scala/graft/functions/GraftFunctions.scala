@@ -3,7 +3,6 @@ package graft.functions
 import graft.core._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udaf
 
 /** Session registration for the graft sketch library.
   *
@@ -67,13 +66,14 @@ object Graft {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ graft.plans.ApproxTopKRewriteRule
       }
-      // native codegen'd SQL expressions (the UDF registry can't host
-      // Expression builders; goes through the sessionState shim)
+      // native SQL expressions and the sketch aggregates (the UDF
+      // registry can't host Expression builders; goes through the
+      // sessionState shim)
       val natives = Seq(
         graft.plans.Hash128Expr.sqlDescriptor("graft_hash128_h1", 0),
         graft.plans.Hash128Expr.sqlDescriptor("graft_hash128_h2", 1),
         graft.plans.GraftShardExpr.sqlDescriptor,
-        graft.plans.ZOrderKeyExpr.sqlDescriptor)
+        graft.plans.ZOrderKeyExpr.sqlDescriptor) ++ graft.plans.SketchAgg.sqlDescriptors
       for ((id, info, builder) <- natives)
         org.apache.spark.sql.graftshim.FunctionShim.register(spark, id.funcName, info, builder)
       spark.conf.set("graft.registered", "true")
@@ -82,49 +82,7 @@ object Graft {
   }
 
   def registerAll(spark: SparkSession): Unit = {
-    import SketchAggregators._
     val r = spark.udf
-
-    // build aggregators (default parameters; parameterized variants can
-    // be constructed directly via the Column API)
-    r.register("ebf_agg", udaf(new EbfAgg(Ebf.DefaultM0, Ebf.DefaultK, Ebf.DefaultL0,
-      Ebf.DefaultAlphaNum, Ebf.DefaultAlphaDen, SketchSeed)))
-    r.register("hll_agg", udaf(new HllAgg(Hll.DefaultP, SketchSeed)))
-    r.register("theta_agg", udaf(new ThetaAgg(Theta.DefaultK, SketchSeed)))
-    r.register("cms_agg", udaf(new CmsAgg(Cms.DefaultDepth, Cms.DefaultWidth, SketchSeed)))
-    // O79: Count Sketch, the unbiased/turnstile frequency sketch
-    r.register("cs_agg", udaf(new CountSketchAgg(
-      CountSketch.DefaultDepth, CountSketch.DefaultWidth, SketchSeed)))
-    r.register("cs_tokens_agg", udaf(new CsTokensAgg(
-      CountSketch.DefaultDepth, CountSketch.DefaultWidth, SketchSeed)))
-    // O68: time-decayed CMS, 1-hour half-life (lambda = ln2/3600);
-    // other half-lives go through the Column API with a custom udaf
-    r.register("dcms_agg", udaf(new DecayedCmsAgg(
-      DecayedCms.DefaultDepth, DecayedCms.DefaultWidth, SketchSeed, math.log(2.0) / 3600.0)))
-    r.register("cms_tokens_agg", udaf(new CmsTokensAgg(Cms.DefaultDepth, Cms.DefaultWidth, SketchSeed)))
-    r.register("kll_agg", udaf(new KllAgg(Kll.DefaultK)))
-    r.register("tdigest_agg", udaf(new TDigestAgg(TDigest.DefaultCompression)))
-    r.register("tdigest_weighted_agg", udaf(new TDigestWeightedAgg(TDigest.DefaultCompression)))
-    r.register("topk_agg", udaf(new TopKAgg(FreqSketch.DefaultCapacity)))
-    r.register("topk_tokens_agg", udaf(new TopKTokensAgg(FreqSketch.DefaultCapacity)))
-    r.register("cms_topk_tokens_agg", udaf(new CmsTopkTokensAgg(
-      Cms.DefaultDepth, Cms.DefaultWidth, FreqSketch.DefaultCapacity, SketchSeed)))
-    // O73: grouped uniform sampling as a mergeable aggregate (k smallest
-    // md5(key) of the distinct-key set — deterministic, cross-engine
-    // exact); other k go through the Column API with a custom udaf
-    r.register("sample_agg", udaf(new BottomKAgg(BottomKSample.DefaultK)))
-
-    // merge aggregators (sketch-bytes -> sketch-bytes re-aggregation)
-    r.register("ebf_merge_agg", udaf(new EbfMergeAgg))
-    r.register("hll_merge_agg", udaf(new HllMergeAgg))
-    r.register("theta_merge_agg", udaf(new ThetaMergeAgg))
-    r.register("cms_merge_agg", udaf(new CmsMergeAgg))
-    r.register("dcms_merge_agg", udaf(new DecayedCmsMergeAgg))
-    r.register("kll_merge_agg", udaf(new KllMergeAgg))
-    r.register("tdigest_merge_agg", udaf(new TDigestMergeAgg))
-    r.register("topk_merge_agg", udaf(new TopKMergeAgg))
-    r.register("sample_merge_agg", udaf(new BottomKMergeAgg))
-    r.register("cs_merge_agg", udaf(new CountSketchMergeAgg))
 
     // scalar functions over serialized sketches. Each deserializes via a
     // per-thread cache keyed by content hash, so probing N rows against
@@ -266,7 +224,8 @@ object Graft {
 
   /** Probe UDF over a BROADCAST sketch: the E2 pattern — sketch built
     * once, shipped via TorrentBroadcast (deserialized once per executor
-    * JVM, through the compact wire format thanks to BytesSerde), zero
+    * JVM, as its wire bytes through the Java-serialization proxy in
+    * `BytesSerde`), zero
     * per-row and zero per-task deserialization. A plain closure capture
     * would instead re-ship and re-deserialize the sketch inside every
     * task binary — measured as the dominant cost of the probe phase at

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.data.WebPagesGen
-import graft.functions.{Graft, SketchAggregators}
-import graft.plans.EbfShardedProbeExpr
+import graft.functions.Graft
+import graft.plans.{BatchedTokenBuf, EbfShardedProbeExpr, MergeKind, PerHostKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,63 +43,20 @@ object Flagship {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Per-(lang,host) spec with small per-group parameters. Consumes a
-    * precomputed `text_len` column — NOT length(text) inline: the
-    * adaptive salted aggregation clusters rows through a shuffle first,
-    * and shuffling the full 1KB text to compute an 8-byte length on the
-    * other side is a 4GB shuffle where 30MB suffices. Project early,
-    * shuffle narrow.
-    *
-    * Since round 2 the four sketches build through ONE fused aggregator
-    * (PerHostSketchesAgg: one converter crossing and one url hash per
-    * row instead of four and two) — byte-identical to the unfused form
-    * (SparkPipelineSpec asserts it); [[perHostSpecsUnfused]] remains the
-    * generic per-sketch form. */
-  def perHostSpecs: Seq[SaltedAgg.SketchSpec] = {
-    val fused = udaf(new SketchAggregators.PerHostSketchesAgg(
-      128, 5, 16, 1, 8, 10, 160, 50.0, Graft.SketchSeed))
-    val merge = udaf(new SketchAggregators.PerHostMergeAgg)
-    Seq(SaltedAgg.SketchSpec("sk", fused(col("url"), col("text_len")), "",
-      mergeBuilder = Some(n =>
-        merge(col(s"$n.ebf"), col(s"$n.hll"), col(s"$n.kll"), col(s"$n.td")))))
-  }
-
-  /** The "shuffle hashes, not strings" form of [[perHostSpecs]]: the
-    * fused aggregator consumes pre-computed `__h1`/`__h2` url-hash
-    * columns (16 bytes through the clustering exchange) instead of the
-    * raw url (~60 bytes) — byte-identical sketches, roughly half the
-    * shuffle (spec: SparkPipelineSpec "hash-fed flagship"). */
-  def perHostHashSpecs: Seq[SaltedAgg.SketchSpec] = {
-    val fused = udaf(new SketchAggregators.PerHostSketchesHashAgg(
-      128, 5, 16, 1, 8, 10, 160, 50.0, Graft.SketchSeed))
-    val merge = udaf(new SketchAggregators.PerHostMergeAgg)
-    Seq(SaltedAgg.SketchSpec("sk", fused(col("__h1"), col("__h2"), col("text_len")), "",
-      mergeBuilder = Some(n =>
-        merge(col(s"$n.ebf"), col(s"$n.hll"), col(s"$n.kll"), col(s"$n.td")))))
-  }
-
-  /** The native (TypedImperativeAggregate) form of [[perHostHashSpecs]]
-    * — no per-row Tuple3/boxing converter crossing on the reduce side
-    * (see NativeTokenAggs scaladoc; byte-identical, spec-asserted). */
+  /** Per-(lang,host) spec with small per-group parameters: the four
+    * sketches in ONE aggregate over url-hash halves and a precomputed
+    * `text_len` ([[graft.plans.PerHostKind]]), merged in stage 2 by the
+    * same kind's [[graft.plans.MergeKind]]. Consumes `text_len`, NOT
+    * length(text) inline: the adaptive salted aggregation clusters rows
+    * through a shuffle first, and shuffling the full 1KB text to compute
+    * an 8-byte length on the other side is a 4GB shuffle where 30MB
+    * suffices. Project early, shuffle narrow. */
   def perHostNativeSpecs: Seq[SaltedAgg.SketchSpec] = {
-    val merge = udaf(new SketchAggregators.PerHostMergeAgg)
+    val kind = PerHostKind(128, 5, 16, 1, 8, 10, 160, 50.0, Graft.SketchSeed)
     Seq(SaltedAgg.SketchSpec("sk",
-      graft.plans.PerHostSketchesNativeAgg.column(col("__h1"), col("__h2"),
-        col("text_len"), 128, 5, 16, 1, 8, 10, 160, 50.0, Graft.SketchSeed), "",
+      SketchAgg.column(Seq(col("__h1"), col("__h2"), col("text_len")), kind), "",
       mergeBuilder = Some(n =>
-        merge(col(s"$n.ebf"), col(s"$n.hll"), col(s"$n.kll"), col(s"$n.td")))))
-  }
-
-  def perHostSpecsUnfused: Seq[SaltedAgg.SketchSpec] = {
-    val ebf = udaf(new SketchAggregators.EbfAgg(128, 5, 16, 1, 8, Graft.SketchSeed))
-    val hll = udaf(new SketchAggregators.HllAgg(10, Graft.SketchSeed))
-    val kll = udaf(new SketchAggregators.KllAgg(160))
-    val td = udaf(new SketchAggregators.TDigestAgg(50.0))
-    Seq(
-      SaltedAgg.SketchSpec("ebf", ebf(col("url")), "ebf_merge_agg"),
-      SaltedAgg.SketchSpec("hll", hll(col("url")), "hll_merge_agg"),
-      SaltedAgg.SketchSpec("kll", kll(col("text_len")), "kll_merge_agg"),
-      SaltedAgg.SketchSpec("td", td(col("text_len")), "tdigest_merge_agg"))
+        SketchAgg.column(Seq(col(n)), MergeKind(kind)))))
   }
 
   /** The phase-1 pre-exchange projection — as narrow as the semantics
@@ -118,62 +75,6 @@ object Flagship {
       length(col("text")).cast("double").as("text_len"),
       substring_index(substring_index(col("url"), "/", 3), "/", -1).as("host"))
 
-  /** Phase 1 body: per-(lang,host) sketches, salted two-stage; returns
-    * the group count with every sketch byte forced. Pre-exchange
-    * projection: [[hostProjection]]. */
-  private[graft] def phase1(wp: DataFrame, numSalts: Int,
-                            native: Boolean = true): Long = {
-    val withHost = hostProjection(wp)
-    // adaptive: only Zipf-head hosts get salted; the tail's stage-2
-    // merge is a single-row pass-through (see SaltedAgg scaladoc).
-    // Forced via sum(length(sketch)): a bare count() lets Catalyst
-    // PRUNE the unused aggregate expressions and time only the
-    // group-by skeleton (measured: "0.2s" for a phase that really
-    // costs seconds — always materialize what you benchmark).
-    val agged = SaltedAgg.adaptiveSketchAgg(withHost, Seq("lang", "host"), col("__h1"),
-      numSalts, if (native) perHostNativeSpecs else perHostHashSpecs,
-      hotRowThreshold = 1000L)
-    val sizeSum = Seq("sk.ebf", "sk.hll", "sk.kll", "sk.td")
-      .map(f => length(col(f)).cast("long")).reduce(_ + _)
-    agged.agg(count(lit(1)), sum(sizeSum)).head.getLong(0)
-  }
-
-  /** Phase 2 body: per-lang CMS + Misra-Gries over text tokens in ONE
-    * fused aggregation — tokenized INSIDE the aggregator (no exploded
-    * token relation), CMS for point queries, MG so the heavy hitters
-    * can be ENUMERATED (a sketch that answers "how often is X" can't
-    * list the X's). The top-20 extraction rides the same collect; the
-    * per-lang result is a handful of rows. */
-  // batchTokens 512: the row-major batched CMS kernel measured equal or
-  // slightly better (2-3%) at both parallelism levels in 5 of 6 paired
-  // trials (PLAN13) and bounds the hot working set per flush to one
-  // 128 KB CMS row slice; byte-identical at any batch size (spec)
-  private[graft] def phase2(wp: DataFrame, native: Boolean = true,
-                            batchTokens: Int = 512): (Long, Map[String, Seq[String]]) = {
-    val tokCol =
-      if (native)
-        graft.plans.CmsTopkTokensNativeAgg.column(col("text"), 5, 16384, 256,
-          Graft.SketchSeed, batchTokens)
-      else {
-        val u = udaf(new SketchAggregators.CmsTopkTokensAgg(5, 16384, 256, Graft.SketchSeed))
-        u(col("text"))
-      }
-    val perLang = wp.select(col("lang"), col("text"))
-      .groupBy("lang")
-      .agg(tokCol.as("tok"))
-      // lengths force every sketch byte; topk_items forces + extracts
-      // the heavy hitters (a bare count() would let Catalyst prune
-      // the aggregate itself out of the timing)
-      .select(col("lang"), length(col("tok.cms")).as("cms_len"),
-        length(col("tok.topk")).as("topk_len"),
-        expr("topk_items(tok.topk, 20)").as("top"))
-      .collect()
-    val tops = perLang.map { r =>
-      r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](3).map(_.getString(0)).toSeq
-    }.toMap
-    (perLang.length.toLong, tops)
-  }
-
   /** Phases 1 AND 2 over ONE text scan: the per-lang token sketches
     * ride phase 1's scan as a side-channel metric
     * (`Dataset.observe` / CollectMetrics with the map-buffer
@@ -186,13 +87,17 @@ object Flagship {
     * extractSec). The hot-detection sample runs against an UNOBSERVED
     * plan so the side channel completes with the main aggregation, not
     * the sample. */
-  private[graft] def phase12Fused(wp: DataFrame, numSalts: Int, batchTokens: Int = 512):
+  private[graft] def phase12Fused(wp: DataFrame, numSalts: Int):
       (Long, Long, Map[String, Seq[String]], Double, Double) = {
     val obs = org.apache.spark.sql.Observation()
     val tokCol = graft.plans.PerLangTokenSketchesAgg.column(
-      col("lang"), col("text"), 5, 16384, 256, Graft.SketchSeed, batchTokens)
+      col("lang"), col("text"), 5, 16384, 256, Graft.SketchSeed, BatchedTokenBuf.Batch)
     val t0 = System.nanoTime()
     val withHost = hostProjection(wp.observe(obs, tokCol.as("tok")))
+    // adaptive: only Zipf-head hosts get salted (see SaltedAgg
+    // scaladoc). Forced via sum(length(sketch)): a bare count() lets
+    // Catalyst PRUNE the unused aggregate expressions and time only the
+    // group-by skeleton.
     val agged = SaltedAgg.adaptiveSketchAgg(withHost, Seq("lang", "host"), col("__h1"),
       numSalts, perHostNativeSpecs, hotRowThreshold = 1000L,
       sampleSource = Some(hostProjection(wp)))
@@ -212,14 +117,12 @@ object Flagship {
 
   /** Phase 3 body: the sharded global EBF build, materialized
     * (cached + every sketch byte forced). Caller unpersists. */
-  private[graft] def phase3(wp: DataFrame, numShards: Int,
-                            clusterFirst: Boolean = true,
-                            nativeAgg: Boolean = true): DataFrame = {
+  private[graft] def phase3(wp: DataFrame, numShards: Int): DataFrame = {
     // clusterFirst: repartition-by-shard makes the partial aggregate
     // the final build (see ShardedProbe.buildShardTable scaladoc and
     // the PLAN13 A/B in BENCH/PLANS.md)
     val table = ShardedProbe.buildShardTable(wp, col("url"), numShards,
-      clusterFirst = clusterFirst, nativeAgg = nativeAgg).cache()
+      clusterFirst = true).cache()
     // force materialization of every sketch byte (a bare count() lets
     // Catalyst prune the aggregate itself)
     table.agg(count(lit(1)), sum(length(col("sk")))).head.getLong(0)
@@ -233,21 +136,14 @@ object Flagship {
     *                thing measured and the FPR evidence rides the
     *                high-parallelism run. */
   def run(spark: SparkSession, tablePath: String, numSalts: Int = 32,
-          nProbes: Long = 1000000L, fusedPhase12: Boolean = true): Result = {
+          nProbes: Long = 1000000L): Result = {
     Graft.ensure(spark)
     val wp = spark.read.parquet(tablePath)
     val rows = wp.count()
 
-    // fused: phase 2 rides phase 1's text scan as a side-channel
-    // observation (one 13 GB scan instead of two — PLAN16); the
-    // separate form stays for the A/B and as the reference
-    val (hostGroups, langGroups, topTokens, t1, t2) =
-      if (fusedPhase12) phase12Fused(wp, numSalts)
-      else {
-        val (hg, t1s) = time(phase1(wp, numSalts))
-        val ((lg, tops), t2s) = time(phase2(wp))
-        (hg, lg, tops, t1s, t2s)
-      }
+    // phases 1+2: phase 2 rides phase 1's text scan as a side-channel
+    // observation (one 13 GB scan instead of two — PLAN16)
+    val (hostGroups, langGroups, topTokens, t1, t2) = phase12Fused(wp, numSalts)
 
     // phase 3: SHARDED global EBF over all urls — a parallel
     // groupBy(shard) with no single-reducer merge tail (see ShardedEbf:
@@ -259,7 +155,7 @@ object Flagship {
     // 256 shards (was 64): the reduce side of the shard build is
     // numShards tasks — 64 gave local[32] two badly packed waves while
     // local[8] packed its eight perfectly, which alone cost ~2x in the
-    // phase's 8->32 scaling (ScalingProbe stage decomposition, PLAN13).
+    // phase's 8->32 scaling (stage decomposition, BENCH/PLANS.md PLAN13).
     // 256 gives every level >= 8 waves; per-shard filters are a quarter
     // the size at identical total bytes and the same per-shard FPR
     // bound. At 10^12 rows the shard count scales with the data anyway.

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.core.ShardedEbf
-import graft.functions.{Graft, SketchAggregators}
-import graft.plans.EbfShardedProbeExpr
+import graft.functions.Graft
+import graft.plans.{EbfHashKind, EbfShardedProbeExpr, SketchAgg}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -31,8 +31,7 @@ object ShardedProbe {
     * (scanTasks x numShards partials); measured in BENCH/BASELINE.md. */
   def buildShardTable(df: DataFrame, keyCol: Column, numShards: Int,
                       m0: Int = 4096, k: Int = 5, l0: Int = 16,
-                      clusterFirst: Boolean = false,
-                      nativeAgg: Boolean = true): DataFrame = {
+                      clusterFirst: Boolean = false): DataFrame = {
     Graft.ensure(df.sparkSession)
     // "shuffle hashes, not strings": the key is consumed only as its
     // Hash128 (Ebf.insertHash), so hash BEFORE the shard exchange and
@@ -47,22 +46,10 @@ object ShardedProbe {
         graft.plans.Hash128Expr.h2(col("__key"), Graft.SketchSeed).as("__h2"))
     val clustered =
       if (clusterFirst) keyed.repartition(numShards, col("shard")) else keyed
-    // nativeAgg: the TypedImperativeAggregate form reads the two hash
-    // longs straight off the InternalRow — no per-row Tuple2/boxed-Long
-    // converter allocation (measured ~1.8 us/row on the ScalaAggregator
-    // path, PLAN13); byte-identical output (spec-asserted), kept
-    // switchable for the A/B and as the reference implementation
-    val aggCol =
-      if (nativeAgg)
-        graft.plans.EbfHashBuildAgg.column(col("__h1"), col("__h2"),
-          m0, k, l0, 1, 8, Graft.SketchSeed)
-      else {
-        val u = udaf(new SketchAggregators.EbfHashAgg(m0, k, l0, 1, 8, Graft.SketchSeed))
-        u(col("__h1"), col("__h2"))
-      }
     clustered
       .groupBy("shard")
-      .agg(aggCol.as("sk"))
+      .agg(SketchAgg.column(Seq(col("__h1"), col("__h2")),
+        EbfHashKind(m0, k, l0, 1, 8, Graft.SketchSeed)).as("sk"))
   }
 
   /** Deploy a shard table for probing: collect it once into a

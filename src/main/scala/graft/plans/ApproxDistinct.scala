@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{Hash128, Hll}
+import graft.core.Hll
 import graft.functions.Graft
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -15,15 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native HLL distinct-count aggregate — `TypedImperativeAggregate[Hll]`
   * emitting the ESTIMATE directly as a long, so it is type-compatible
   * with `Count` and an optimizer rule can swap it in post-analysis
-  * (the [[EbfBuildAggExpr]] pattern; the `udaf()`-wrapped `HllAgg`
-  * needs analyzer-time encoder resolution and can't be injected).
+  * (`hll_agg`, a [[SketchAgg]], emits sketch bytes instead).
   *
   * Inserts hash exactly like `hll_agg` over the same string key
-  * (`Hash128.hashBytes` of the UTF-8 bytes, same default p and seed),
-  * so the rewritten estimate EQUALS `hll_estimate(hll_agg(key))` —
-  * the equivalence the driver gate asserts. Buffers serialize through
-  * the HLL wire format (sparse below m/8, no Kryo); merge is the
-  * register max, associative under any partial-aggregation tree.
+  * ([[Utf8Key]], same default p and seed), so the rewritten estimate
+  * EQUALS `hll_estimate(hll_agg(key))` — the equivalence the driver
+  * gate asserts. Buffers serialize through the HLL wire format (sparse
+  * below m/8); merge is the register max, associative under any
+  * partial-aggregation tree.
   */
 case class HllNdvAggExpr(child: Expression, p: Int = Hll.DefaultP,
                          mutableAggBufferOffset: Int = 0,
@@ -44,7 +43,7 @@ case class HllNdvAggExpr(child: Expression, p: Int = Hll.DefaultP,
   override def update(buffer: Hll, input: InternalRow): Hll = {
     val v = child.eval(input)
     if (v != null)
-      buffer.addHash(Hash128.hashBytes(v.asInstanceOf[UTF8String].getBytes, Graft.SketchSeed).h1)
+      buffer.addHash(Utf8Key.hash(v.asInstanceOf[UTF8String], Graft.SketchSeed).h1)
     buffer
   }
 

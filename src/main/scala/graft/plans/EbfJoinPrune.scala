@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.core.Ebf
-import graft.functions.{Graft, SketchCache}
+import graft.functions.SketchCache
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Alias, BinaryExpression, Cast, EqualTo, Expression, PredicateHelper, ScalarSubquery}
@@ -12,59 +12,21 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native catalyst EBF aggregate — `TypedImperativeAggregate[Ebf]`, the
-  * same contract Spark's own `BloomFilterAggregate` implements. Unlike
-  * the `udaf()`-wrapped `EbfAgg` (a ScalaAggregator needing
-  * analyzer-time encoder resolution), this expression is fully
-  * self-contained, so an OPTIMIZER rule can inject it into a plan after
-  * analysis — which is exactly what [[EbfJoinPruneRule]] does. Buffers
-  * serialize through the EBF wire format (no Kryo); output bytes are
-  * identical to `ebf_agg` over the same rows (same seed, same insert
-  * hash — spec-asserted).
+/** The build side of [[EbfJoinPruneRule]]: `ebf_agg` at its default
+  * parameters as a self-contained [[SketchAgg]], which an optimizer
+  * rule can inject after analysis (the key is cast to string by the
+  * rule itself). Output bytes equal `ebf_agg` over the same rows.
   *
   * The elastic filter is what makes one un-sized code path safe here:
   * Spark's runtime bloom filter must guess NDV from (often stale) stats
   * at plan time; this filter EXPANDS to the observed keys at a bounded
   * FPR, so a 10^3-key and a 10^8-key build side get the same plan.
   */
-case class EbfBuildAggExpr(child: Expression,
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Ebf] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string key, got ${child.dataType.simpleString}")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "ebf_build_agg"
-
-  override def createAggregationBuffer(): Ebf =
-    Ebf.empty(seed = Graft.SketchSeed)
-
-  override def update(buffer: Ebf, input: InternalRow): Ebf = {
-    val v = child.eval(input)
-    if (v != null) buffer.insert(v.asInstanceOf[UTF8String].getBytes)
-    buffer
-  }
-
-  override def merge(buffer: Ebf, other: Ebf): Ebf = buffer.merge(other)
-  override def eval(buffer: Ebf): Any = buffer.toBytes
-  override def serialize(buffer: Ebf): Array[Byte] = buffer.toBytes
-  override def deserialize(storageFormat: Array[Byte]): Ebf = Ebf.fromBytes(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): EbfBuildAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): EbfBuildAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): EbfBuildAggExpr =
-    copy(child = newChild)
+object EbfBuildAggExpr {
+  def apply(child: Expression): SketchAgg[Ebf] = SketchAgg(Seq(child), EbfKind())
 }
 
 /** Membership probe where the sketch side is an arbitrary expression —
@@ -91,7 +53,7 @@ case class EbfProbeExpr(left: Expression, right: Expression) extends BinaryExpre
 
   /** Called from both interpreted eval and generated code. */
   def probe(sk: Array[Byte], key: UTF8String): Boolean =
-    sk != null && key != null && SketchCache.ebf(sk).mightContain(key.getBytes)
+    sk != null && key != null && SketchCache.ebf(sk).mightContain(Utf8Key.bytes(key))
 
   override def eval(input: InternalRow): Any =
     probe(left.eval(input).asInstanceOf[Array[Byte]],
@@ -228,7 +190,7 @@ case class EbfShardedBlobProbeExpr(left: Expression, right: Expression)
 
   def probe(blob: Array[Byte], key: UTF8String): Boolean =
     blob != null && key != null &&
-      SketchCache.sharded(blob).mightContain(key.getBytes)
+      SketchCache.sharded(blob).mightContain(Utf8Key.bytes(key))
 
   override def eval(input: InternalRow): Any =
     probe(left.eval(input).asInstanceOf[Array[Byte]],
@@ -261,7 +223,7 @@ case class EbfShardedBlobProbeExpr(left: Expression, right: Expression)
   * For a qualifying equi-join it rewrites
   *
   *   Join(fact, build, type, factKey = buildKey)
-  *     -> Join(Filter(ebf_probe(scalar-subquery(ebf_build_agg(buildKey)
+  *     -> Join(Filter(ebf_probe(scalar-subquery(ebf_agg(buildKey)
   *             over build), factKey), fact), build, ...)
   *
   * the same shape Spark's own `InjectRuntimeFilter` emits with its
@@ -417,7 +379,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     else Cast(e, StringType, Some(conf.sessionLocalTimeZone))
 
   /** Monolithic window:
-    * `Filter(ebf_probe(subquery(ebf_build_agg(buildKey)), factKey), fact)`.
+    * `Filter(ebf_probe(subquery(ebf_agg(buildKey)), factKey), fact)`.
     * The subquery aggregates the build side down to ONE sketch row
     * (partial aggregation map-side — no build row ever moves
     * unaggregated), evaluated once per query like any scalar subquery,
@@ -427,7 +389,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     *
     *   Aggregate(Nil, ebf_sharded_wire_agg(shard, sk),
     *     Aggregate(shard = graft_shard(buildKey, n),
-    *       [shard, ebf_build_agg(buildKey) as sk], buildProj))
+    *       [shard, ebf_agg(buildKey) as sk], buildProj))
     *
     * — numShards PARALLEL per-shard builds+merges (the grouped inner
     * aggregate), then a one-row concat into a ShardedEbf wire blob the

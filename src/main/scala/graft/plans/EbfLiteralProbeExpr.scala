@@ -42,7 +42,7 @@ case class EbfLiteralProbeExpr(child: Expression, sketchBytes: Array[Byte])
 
   /** Called from both interpreted eval and generated code. */
   def probe(key: UTF8String): Boolean =
-    key != null && ebf.mightContain(key.getBytes)
+    key != null && ebf.mightContain(Utf8Key.bytes(key))
 
   override def eval(input: InternalRow): Any =
     probe(child.eval(input).asInstanceOf[UTF8String])
@@ -139,8 +139,8 @@ object ReplaceLiteralEbfProbe extends Rule[LogicalPlan] {
 /** `SparkSessionExtensions` entry point — the config-driven way to get
   * the graft optimizer rules and native SQL expressions without code
   * changes: `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
-  * (UDF/aggregator registration still goes through
-  * `Graft.ensure(spark)`, which also installs the optimizer rule via
+  * (The sketch aggregates and scalar UDFs register through
+  * `Graft.ensure(spark)`, which also installs the optimizer rules via
   * `experimental.extraOptimizations`.)
   *
   * Injected SQL functions (native, codegen'd):

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row (UTF8String -> String decode) plus a megamorphic function
   * call outside the whole-stage-codegen span. This expression stays
   * inside the generated code: the child's UTF8String feeds
-  * `ShardedEbf.mightContain(byte[])` directly (UTF-8 bytes hash
-  * identically to the String form), no decode, no boxing.
+  * `ShardedEbf.mightContain(byte[])` directly through [[Utf8Key]]
+  * (which hashes identically to the String form), no boxing.
   *
   * Why not a broadcast hash JOIN on shard id carrying sketch bytes:
   * extracting a multi-MB `sk` binary column from the joined row costs a
@@ -48,7 +48,7 @@ case class EbfShardedProbeExpr(child: Expression, bc: Broadcast[ShardedEbf])
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    v != null && bc.value.mightContain(v.asInstanceOf[UTF8String].getBytes)
+    v != null && bc.value.mightContain(Utf8Key.bytes(v.asInstanceOf[UTF8String]))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -63,7 +63,7 @@ case class EbfShardedProbeExpr(child: Expression, bc: Broadcast[ShardedEbf])
         boolean ${ev.value} = false;
         if (!${childGen.isNull}) {
           ${ev.value} = ((graft.core.ShardedEbf) $bcRef.value())
-            .mightContain(${childGen.value}.getBytes());
+            .mightContain(graft.plans.Utf8Key.bytes(${childGen.value}));
         }
       """,
       isNull = FalseLiteral)

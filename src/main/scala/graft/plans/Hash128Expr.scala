@@ -8,6 +8,26 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The bytes a Catalyst string key hashes as — the one entry point
+  * every native string path (sketch aggregates, probes, hash and shard
+  * expressions) goes through, so that it agrees with the `String`
+  * kernels (`Hash128.hashString`) and the Scala UDFs, which see the
+  * decoded `String`. For valid UTF-8 these are the raw bytes (no copy
+  * when the string owns its array); an invalid sequence is decoded and
+  * re-encoded, since decoding replaces it with U+FFFD: `X'C328'` hashes
+  * as `EF BF BD 28`, exactly as its decoded `String` does. */
+object Utf8Key {
+  def bytes(u: UTF8String): Array[Byte] = {
+    val b = u.getBytes
+    var i = 0
+    while (i < b.length && b(i) >= 0) i += 1
+    if (i == b.length || u.isValid) b
+    else u.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  def hash(u: UTF8String, seed: Long): Hash128.H = Hash128.hashBytes(bytes(u), seed)
+}
+
 /** Codegen'd 128-bit string hash (the library's own [[Hash128]] — the
   * hash every sketch consumes), exposed as a Long column per half
   * (`part` 0 -> h1, 1 -> h2).
@@ -39,7 +59,7 @@ case class Hash128Expr(child: Expression, seed: Long, part: Int)
 
   /** Called from both interpreted eval and generated code. */
   def hashPart(u: UTF8String): Long = {
-    val h = Hash128.hashBytes(u.getBytes, seed)
+    val h = Utf8Key.hash(u, seed)
     if (part == 0) h.h1 else h.h2
   }
 
@@ -76,7 +96,7 @@ case class GraftShardExpr(child: Expression, numShards: Int)
 
   /** Called from both interpreted eval and generated code. */
   def route(u: UTF8String): Int = {
-    val h = Hash128.hashBytes(u.getBytes, graft.core.ShardedEbf.DefaultRouteSeed).h1
+    val h = Utf8Key.hash(u, graft.core.ShardedEbf.DefaultRouteSeed).h1
     val m = (h % numShards).toInt
     if (m < 0) m + numShards else m
   }

@@ -1,105 +1,89 @@
 package graft.plans
 
-import graft.core.{Ebf, Hash128, Hll, Kll, TDigest}
-import graft.functions.SketchAggregators.{HostSketchBuf, TokenSketchBuf}
+import graft.core.{Cms, Ebf, FreqSketch, Hash128, Hll, Kll, TDigest}
+import graft.functions.Graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike, UnaryLike}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native (TypedImperativeAggregate) forms of the two flagship
-  * workhorse aggregators. The `udaf()`-wrapped versions pay a
-  * catalyst->scala converter crossing PER ROW:
-  *
-  *  - the fused per-host aggregator allocates a Tuple3 + two boxed
-  *    Longs + a boxed Double per row on the reduce side of the
-  *    clustering exchange (32M rows in the flagship bench);
-  *  - the token aggregator converts each UTF8String text to a Java
-  *    String (UTF-8 decode into a fresh char[]) only for the kernel to
-  *    re-ENCODE it right back to UTF-8 bytes.
-  *
-  * ScalingProbe's stage decomposition (PLAN13) showed this converter
-  * stack, not sketch arithmetic, dominating reduce-side CPU and its
-  * allocation traffic degrading 8->32-thread scaling. These forms read
-  * the InternalRow directly — zero boxing, and for text ONE raw UTF-8
-  * byte copy instead of decode+encode. Outputs are byte-identical to
-  * the udaf forms (same inserts in the same order; spec-asserted in
-  * NativeSketchAggsSpec).
-  */
-object NativeTokenAggs {
-  private[plans] val hostSketchesType = StructType(Seq(
-    StructField("ebf", BinaryType, nullable = false),
-    StructField("hll", BinaryType, nullable = false),
-    StructField("kll", BinaryType, nullable = false),
-    StructField("td", BinaryType, nullable = false)))
-
-  private[plans] val tokenSketchesType = StructType(Seq(
-    StructField("cms", BinaryType, nullable = false),
-    StructField("topk", BinaryType, nullable = false)))
-
-  private[plans] def writeChunks(chunks: Array[Array[Byte]]): Array[Byte] = {
-    val total = 4 * chunks.length + chunks.map(_.length).sum
-    val buf = java.nio.ByteBuffer.allocate(total)
+/** Length-prefixed concatenation of several sketch blobs: the wire
+  * format of the multi-sketch buffers below. */
+private[plans] object Chunks {
+  def write(chunks: Array[Array[Byte]]): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(4 * chunks.length + chunks.map(_.length).sum)
     chunks.foreach { c => buf.putInt(c.length); buf.put(c) }
     buf.array()
   }
 
-  private[plans] def readChunks(bytes: Array[Byte], n: Int): Array[Array[Byte]] = {
+  def read(buf: java.nio.ByteBuffer): Array[Byte] = {
+    val c = new Array[Byte](buf.getInt())
+    buf.get(c)
+    c
+  }
+
+  def read(bytes: Array[Byte], n: Int): Array[Array[Byte]] = {
     val buf = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(n) {
-      val len = buf.getInt()
-      val c = new Array[Byte](len)
-      buf.get(c)
-      c
-    }
+    Array.fill(n)(read(buf))
   }
 }
 
-/** Fused per-(group) EBF+HLL+KLL+t-digest build fed url-hash halves and
-  * a length — the native twin of `PerHostSketchesHashAgg`. Null hash
-  * halves skip the key sketches; null length skips the quantile
-  * sketches (identical to the udaf form). */
-case class PerHostSketchesNativeAgg(first: Expression, second: Expression,
-                                    third: Expression,
-                                    m0: Int, k: Int, l0: Int, aNum: Int, aDen: Int,
-                                    hllP: Int, kllK: Int, tdCompression: Double, seed: Long,
-                                    mutableAggBufferOffset: Int = 0,
-                                    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HostSketchBuf] with TernaryLike[Expression] {
+/** The four flagship per-host sketches, built as one buffer. */
+final class HostSketches(val ebf: Ebf, val hll: Hll, val kll: Kll, val td: TDigest) {
+  def merge(o: HostSketches): HostSketches = {
+    ebf.merge(o.ebf); hll.merge(o.hll); kll.merge(o.kll); td.merge(o.td)
+    this
+  }
+  def sketches: Array[Array[Byte]] = Array(ebf.toBytes, hll.toBytes, kll.toBytes, td.toBytes)
+}
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == LongType && second.dataType == LongType &&
-        third.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (bigint, bigint, double), got " +
-        s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-        s"${third.dataType.simpleString})")
+object HostSketches {
+  def of(b: Array[Array[Byte]]): HostSketches =
+    new HostSketches(Ebf.fromBytes(b(0)), Hll.fromBytes(b(1)), Kll.fromBytes(b(2)),
+      TDigest.fromBytes(b(3)))
 
-  override def dataType: DataType = NativeTokenAggs.hostSketchesType
-  override def nullable: Boolean = false
-  override def prettyName: String = "per_host_sketches_native_agg"
+  val wire: Wire[HostSketches] =
+    Wire(b => of(Chunks.read(b, 4)), h => Chunks.write(h.sketches), _ merge _)
 
-  override def createAggregationBuffer(): HostSketchBuf = new HostSketchBuf(
+  val dataType: StructType = StructType(Seq("ebf", "hll", "kll", "td")
+    .map(StructField(_, BinaryType, nullable = false)))
+}
+
+/** All four flagship per-(lang, host) sketches in ONE aggregate over
+  * (url h1, url h2, text length): one buffer lookup per row, and one
+  * 128-bit url hash feeding both EBF and HLL (`Ebf.insertHash` and
+  * `Hll.addHash` consume the same `Hash128.H`). Fed hash halves, not the
+  * url ("shuffle hashes, not strings"). Null hash halves skip the key
+  * sketches; a null length skips the quantile sketches. Result:
+  * struct<ebf, hll, kll, td> of sketch blobs; its stage-2 merge is
+  * `MergeKind(this)` over the struct. */
+case class PerHostKind(m0: Int, k: Int, l0: Int, aNum: Int, aDen: Int,
+                       hllP: Int, kllK: Int, tdCompression: Double, seed: Long)
+    extends SketchKind[HostSketches](HostSketches.wire) {
+  def name: String = "per_host_sketches_agg"
+  def inputTypes: Seq[DataType] = Seq(LongType, LongType, DoubleType)
+  override def dataType: DataType = HostSketches.dataType
+
+  def empty(): HostSketches = new HostSketches(
     Ebf.empty(m0, k, l0, aNum, aDen, seed), Hll.empty(hllP, seed),
     Kll.empty(kllK), TDigest.empty(tdCompression))
 
-  override def update(b: HostSketchBuf, input: InternalRow): HostSketchBuf = {
-    val a = first.eval(input)
+  def update(b: HostSketches, row: InternalRow, in: Array[Expression]): HostSketches = {
+    val a = in(0).eval(row)
     if (a != null) {
-      val h2 = second.eval(input)
+      val h2 = in(1).eval(row)
       if (h2 != null) {
         val h1l = a.asInstanceOf[Long]
         b.ebf.insertHash(Hash128.H(h1l, h2.asInstanceOf[Long]))
         b.hll.addHash(h1l)
       }
     }
-    val v = third.eval(input)
+    val v = in(2).eval(row)
     if (v != null) {
       val d = v.asInstanceOf[Double]
       b.kll.add(d)
@@ -108,67 +92,60 @@ case class PerHostSketchesNativeAgg(first: Expression, second: Expression,
     b
   }
 
-  override def merge(a: HostSketchBuf, b: HostSketchBuf): HostSketchBuf = {
-    a.ebf.merge(b.ebf); a.hll.merge(b.hll); a.kll.merge(b.kll); a.td.merge(b.td)
-    a
+  override def result(b: HostSketches): Any = InternalRow.fromSeq(b.sketches.toSeq)
+  override def fromResult(v: Any): HostSketches = {
+    val r = v.asInstanceOf[InternalRow]
+    HostSketches.of(Array.tabulate(4)(r.getBinary))
   }
-
-  override def eval(b: HostSketchBuf): Any =
-    InternalRow(b.ebf.toBytes, b.hll.toBytes, b.kll.toBytes, b.td.toBytes)
-
-  override def serialize(b: HostSketchBuf): Array[Byte] =
-    NativeTokenAggs.writeChunks(Array(b.ebf.toBytes, b.hll.toBytes, b.kll.toBytes, b.td.toBytes))
-
-  override def deserialize(bytes: Array[Byte]): HostSketchBuf = {
-    val c = NativeTokenAggs.readChunks(bytes, 4)
-    new HostSketchBuf(Ebf.fromBytes(c(0)), Hll.fromBytes(c(1)),
-      Kll.fromBytes(c(2)), TDigest.fromBytes(c(3)))
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): PerHostSketchesNativeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): PerHostSketchesNativeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): PerHostSketchesNativeAgg =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 object PerHostSketchesNativeAgg {
   def column(h1: Column, h2: Column, len: Column,
              m0: Int, k: Int, l0: Int, aNum: Int, aDen: Int,
              hllP: Int, kllK: Int, tdCompression: Double, seed: Long): Column =
-    ColumnBridge.column(AggregateExpression(
-      PerHostSketchesNativeAgg(ColumnBridge.expression(h1), ColumnBridge.expression(h2),
-        ColumnBridge.expression(len), m0, k, l0, aNum, aDen, hllP, kllK,
-        tdCompression, seed),
-      Complete, isDistinct = false))
+    SketchAgg.column(Seq(h1, h2, len),
+      PerHostKind(m0, k, l0, aNum, aDen, hllP, kllK, tdCompression, seed))
 }
 
-/** Buffer for the batched token kernel: the CMS+MG pair plus a pending
-  * token-hash ring. MG updates stay inline (its open-addressed table is
-  * cache-resident); CMS updates are deferred and applied ROW-MAJOR at
-  * flush — `depth` sequential passes each confined to one 8*width-byte
-  * row slice, instead of `depth` scattered writes across the whole
-  * table per token (the L3-thrashing pattern named by the round-3
-  * scaling analysis). Addition is commutative, so the final table is
-  * bit-identical to unbatched. */
-final class BatchedTokenBuf(val buf: TokenSketchBuf, val batch: Int) extends Serializable {
-  val pendH1 = new Array[Long](batch)
-  val pendH2 = new Array[Long](batch)
-  var pending = 0
+/** CMS + Misra-Gries over text tokens, fused at the kernel: one
+  * tokenization walk and ONE 128-bit token hash feeding both sketches
+  * (both built with the same seed, so `Cms` and
+  * `FreqSketch.addRangeHashed` consume the same `Hash128`). MG updates
+  * stay inline (its open-addressed table is cache-resident); CMS updates
+  * are deferred and applied ROW-MAJOR at flush — `depth` sequential
+  * passes each confined to one 8*width-byte row slice, instead of
+  * `depth` scattered writes across the whole table per token. Addition
+  * is commutative, so the table is bit-identical to unbatched at any
+  * batch size. */
+final class BatchedTokenBuf(val cms: Cms, val topk: FreqSketch, batch: Int) {
+  private val pendH1 = new Array[Long](batch)
+  private val pendH2 = new Array[Long](batch)
+  private[graft] var pending = 0
 
-  def addToken(h: Hash128.H): Unit = {
-    pendH1(pending) = h.h1
-    pendH2(pending) = h.h2
-    pending += 1
-    if (pending == batch) flush()
+  /** Every non-empty space-separated token of the UTF-8 `bytes`. */
+  def addTokens(bytes: Array[Byte]): Unit = {
+    val seed = cms.seed
+    val len = bytes.length
+    var start = 0
+    var i = 0
+    while (i <= len) {
+      if (i == len || bytes(i) == ' ') {
+        if (i > start) {
+          val h = Hash128.hashBytesRange(bytes, start, i - start, seed)
+          pendH1(pending) = h.h1
+          pendH2(pending) = h.h2
+          pending += 1
+          if (pending == batch) flush()
+          topk.addRangeHashed(bytes, start, i - start, 1L, h.h1)
+        }
+        start = i + 1
+      }
+      i += 1
+    }
   }
 
   def flush(): Unit = {
     if (pending == 0) return
-    val cms = buf.cms
     val n = pending
     var r = 0
     while (r < cms.depth) {
@@ -182,95 +159,59 @@ final class BatchedTokenBuf(val buf: TokenSketchBuf, val batch: Int) extends Ser
     cms.total += n
     pending = 0
   }
+
+  def merge(o: BatchedTokenBuf): BatchedTokenBuf = {
+    flush(); o.flush()
+    cms.merge(o.cms)
+    topk.merge(o.topk)
+    this
+  }
+
+  def sketches: Array[Array[Byte]] = { flush(); Array(cms.toBytes, topk.toBytes) }
 }
 
-/** Per-lang CMS + Misra-Gries over text tokens — the native twin of
-  * `CmsTopkTokensAgg`: consumes the UTF8String's raw UTF-8 bytes (one
-  * copy; the udaf form decodes to String then re-encodes), optionally
-  * with the row-major batched CMS kernel (`batchTokens` > 0). Output is
-  * byte-identical to the udaf form for any batch setting. */
-case class CmsTopkTokensNativeAgg(child: Expression,
-                                  depth: Int, width: Int, capacity: Int, seed: Long,
-                                  batchTokens: Int = 0,
-                                  mutableAggBufferOffset: Int = 0,
-                                  inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BatchedTokenBuf] with UnaryLike[Expression] {
+object BatchedTokenBuf {
+  /** Tokens per CMS flush: equal or 2-3% better than unbatched at both
+    * parallelism levels in 5 of 6 paired trials (BENCH/PLANS.md PLAN13),
+    * and bounds the hot working set per flush to one CMS row slice. */
+  val Batch = 512
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string text column, got ${child.dataType.simpleString}")
+  def empty(depth: Int, width: Int, capacity: Int, seed: Long,
+            batch: Int = Batch): BatchedTokenBuf =
+    new BatchedTokenBuf(Cms.empty(depth, width, seed), FreqSketch.empty(capacity, seed), batch)
 
-  override def dataType: DataType = NativeTokenAggs.tokenSketchesType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cms_topk_tokens_native_agg"
+  def of(cms: Array[Byte], topk: Array[Byte], batch: Int = Batch): BatchedTokenBuf =
+    new BatchedTokenBuf(Cms.fromBytes(cms), FreqSketch.fromBytes(topk), batch)
 
-  override def createAggregationBuffer(): BatchedTokenBuf =
-    new BatchedTokenBuf(new TokenSketchBuf(
-      graft.core.Cms.empty(depth, width, seed),
-      graft.core.FreqSketch.empty(capacity, seed)), math.max(1, batchTokens))
+  val wire: Wire[BatchedTokenBuf] = Wire(
+    b => { val c = Chunks.read(b, 2); of(c(0), c(1)) },
+    t => Chunks.write(t.sketches), _ merge _)
 
-  override def update(b: BatchedTokenBuf, input: InternalRow): BatchedTokenBuf = {
-    val v = child.eval(input)
-    if (v == null) return b
-    val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-    val batched = batchTokens > 0
-    var start = 0
-    var i = 0
-    while (i <= len) {
-      if (i == len || bytes(i) == ' ') {
-        if (i > start) {
-          val h = Hash128.hashBytesRange(bytes, start, i - start, seed)
-          if (batched) b.addToken(h) else b.buf.cms.addHash(h, 1L)
-          b.buf.topk.addRangeHashed(bytes, start, i - start, 1L, h.h1)
-        }
-        start = i + 1
-      }
-      i += 1
-    }
-    b
-  }
-
-  override def merge(a: BatchedTokenBuf, b: BatchedTokenBuf): BatchedTokenBuf = {
-    a.flush(); b.flush()
-    a.buf.cms.merge(b.buf.cms)
-    a.buf.topk.merge(b.buf.topk)
-    a
-  }
-
-  override def eval(b: BatchedTokenBuf): Any = {
-    b.flush()
-    InternalRow(b.buf.cms.toBytes, b.buf.topk.toBytes)
-  }
-
-  override def serialize(b: BatchedTokenBuf): Array[Byte] = {
-    b.flush()
-    NativeTokenAggs.writeChunks(Array(b.buf.cms.toBytes, b.buf.topk.toBytes))
-  }
-
-  override def deserialize(bytes: Array[Byte]): BatchedTokenBuf = {
-    val c = NativeTokenAggs.readChunks(bytes, 2)
-    new BatchedTokenBuf(new TokenSketchBuf(
-      graft.core.Cms.fromBytes(c(0)), graft.core.FreqSketch.fromBytes(c(1))),
-      math.max(1, batchTokens))
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsTopkTokensNativeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsTopkTokensNativeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsTopkTokensNativeAgg =
-    copy(child = newChild)
+  /** struct<cms, topk> as [[PerLangTokenSketchesAgg]] emits it. */
+  val dataType: StructType = StructType(Seq(
+    StructField("cms", BinaryType, nullable = false),
+    StructField("topk", BinaryType, nullable = false)))
 }
 
-object CmsTopkTokensNativeAgg {
-  def column(text: Column, depth: Int, width: Int, capacity: Int, seed: Long,
-             batchTokens: Int = 0): Column =
-    ColumnBridge.column(AggregateExpression(
-      CmsTopkTokensNativeAgg(ColumnBridge.expression(text), depth, width, capacity,
-        seed, batchTokens),
-      Complete, isDistinct = false))
+/** `cms_topk_tokens_agg(text)`: CMS point queries AND Misra-Gries
+  * heavy-hitter enumeration over the tokens of a text column in one
+  * pass (see [[BatchedTokenBuf]]) — a sketch that answers "how often is
+  * X" cannot list the X's. The CMS is byte-identical to
+  * `cms_tokens_agg`. Result: struct<cms, topk>. */
+case class CmsTopkTokensKind(depth: Int = Cms.DefaultDepth, width: Int = Cms.DefaultWidth,
+                             capacity: Int = FreqSketch.DefaultCapacity,
+                             seed: Long = Graft.SketchSeed)
+    extends StringKind[BatchedTokenBuf](BatchedTokenBuf.wire) {
+  def name: String = "cms_topk_tokens_agg"
+  override def dataType: DataType =
+    StructType(Seq(StructField("cms", BinaryType), StructField("topk", BinaryType)))
+  def empty(): BatchedTokenBuf = BatchedTokenBuf.empty(depth, width, capacity, seed)
+  def add(b: BatchedTokenBuf, text: UTF8String): Unit = b.addTokens(Utf8Key.bytes(text))
+  override def result(b: BatchedTokenBuf): Any = InternalRow.fromSeq(b.sketches.toSeq)
+  override def fromResult(v: Any): BatchedTokenBuf = {
+    val r = v.asInstanceOf[InternalRow]
+    BatchedTokenBuf.of(r.getBinary(0), r.getBinary(1))
+  }
 }
 
 /** Per-LANG token sketches in ONE un-grouped aggregate: the buffer is a
@@ -281,6 +222,8 @@ object CmsTopkTokensNativeAgg {
   * flagship compute phase 2 DURING phase 1's scan instead of paying the
   * 13 GB text scan twice (PLAN16). Output: map<lang,
   * struct<cms binary, topk binary>>, entries emitted in lang order.
+  * `batchTokens` is the CMS flush batch (at least 1; any value gives the
+  * same bytes).
   *
   * Merge-order caveat (same as everywhere in the library): CMS bytes
   * are identical under any merge order; Misra-Gries heavy hitters are
@@ -305,7 +248,7 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
 
   override def dataType: DataType =
-    MapType(StringType, NativeTokenAggs.tokenSketchesType, valueContainsNull = false)
+    MapType(StringType, BatchedTokenBuf.dataType, valueContainsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "per_lang_token_sketches_agg"
 
@@ -313,10 +256,7 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
   override def createAggregationBuffer(): java.util.TreeMap[String, BatchedTokenBuf] =
     new java.util.TreeMap[String, BatchedTokenBuf]()
 
-  private def newBuf(): BatchedTokenBuf =
-    new BatchedTokenBuf(new TokenSketchBuf(
-      graft.core.Cms.empty(depth, width, seed),
-      graft.core.FreqSketch.empty(capacity, seed)), math.max(1, batchTokens))
+  private def batch: Int = math.max(1, batchTokens)
 
   override def update(m: java.util.TreeMap[String, BatchedTokenBuf],
                       input: InternalRow): java.util.TreeMap[String, BatchedTokenBuf] = {
@@ -326,23 +266,11 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
     if (v == null) return m
     val lang = l.asInstanceOf[UTF8String].toString // tiny, interned-ish per lang
     var b = m.get(lang)
-    if (b == null) { b = newBuf(); m.put(lang, b) }
-    val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-    val batched = batchTokens > 0
-    var start = 0
-    var i = 0
-    while (i <= len) {
-      if (i == len || bytes(i) == ' ') {
-        if (i > start) {
-          val h = Hash128.hashBytesRange(bytes, start, i - start, seed)
-          if (batched) b.addToken(h) else b.buf.cms.addHash(h, 1L)
-          b.buf.topk.addRangeHashed(bytes, start, i - start, 1L, h.h1)
-        }
-        start = i + 1
-      }
-      i += 1
+    if (b == null) {
+      b = BatchedTokenBuf.empty(depth, width, capacity, seed, batch)
+      m.put(lang, b)
     }
+    b.addTokens(Utf8Key.bytes(v.asInstanceOf[UTF8String]))
     m
   }
 
@@ -352,12 +280,7 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
     while (it.hasNext) {
       val e = it.next()
       val mine = a.get(e.getKey)
-      if (mine == null) a.put(e.getKey, e.getValue)
-      else {
-        mine.flush(); e.getValue.flush()
-        mine.buf.cms.merge(e.getValue.buf.cms)
-        mine.buf.topk.merge(e.getValue.buf.topk)
-      }
+      if (mine == null) a.put(e.getKey, e.getValue) else mine.merge(e.getValue)
     }
     a
   }
@@ -370,9 +293,8 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
     var i = 0
     while (it.hasNext) {
       val e = it.next()
-      e.getValue.flush()
       keys(i) = UTF8String.fromString(e.getKey)
-      vals(i) = InternalRow(e.getValue.buf.cms.toBytes, e.getValue.buf.topk.toBytes)
+      vals(i) = InternalRow.fromSeq(e.getValue.sketches.toSeq)
       i += 1
     }
     org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
@@ -383,25 +305,18 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
     val it = m.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      e.getValue.flush()
       entries += e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      entries += e.getValue.buf.cms.toBytes
-      entries += e.getValue.buf.topk.toBytes
+      entries ++= e.getValue.sketches
     }
-    NativeTokenAggs.writeChunks(entries.toArray)
+    Chunks.write(entries.toArray)
   }
 
   override def deserialize(bytes: Array[Byte]): java.util.TreeMap[String, BatchedTokenBuf] = {
     val m = createAggregationBuffer()
     val buf = java.nio.ByteBuffer.wrap(bytes)
     while (buf.hasRemaining) {
-      def chunk(): Array[Byte] = {
-        val len = buf.getInt(); val c = new Array[Byte](len); buf.get(c); c
-      }
-      val lang = new String(chunk(), java.nio.charset.StandardCharsets.UTF_8)
-      val cms = graft.core.Cms.fromBytes(chunk())
-      val topk = graft.core.FreqSketch.fromBytes(chunk())
-      m.put(lang, new BatchedTokenBuf(new TokenSketchBuf(cms, topk), math.max(1, batchTokens)))
+      val lang = new String(Chunks.read(buf), java.nio.charset.StandardCharsets.UTF_8)
+      m.put(lang, BatchedTokenBuf.of(Chunks.read(buf), Chunks.read(buf), batch))
     }
     m
   }

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.core._
-import graft.functions.{Graft, SketchAggregators}
+import graft.functions.Graft
+import graft.plans.{EbfKind, SketchAgg}
 import graft.pipeline.RangePartition
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,9 +63,9 @@ object SketchQueries {
       Graft.ensure(s)
       // small m0 via the Column API to force real expansions, then one
       // manual ebf_expand on top: members must survive
-      val agg = udaf(new SketchAggregators.EbfAgg(64, 5, 16, 1, 8, Graft.SketchSeed))
       val d = docs(s, dir)
-      val bytes = d.select(agg(col("doc_id").cast("string"))).head.getAs[Array[Byte]](0)
+      val bytes = d.select(SketchAgg.column(Seq(col("doc_id").cast("string")),
+        EbfKind(64, 5, 16, 1, 8, Graft.SketchSeed))).head.getAs[Array[Byte]](0)
       val expanded = Ebf.fromBytes(bytes)
       val levelBefore = expanded.level
       expanded.expand()

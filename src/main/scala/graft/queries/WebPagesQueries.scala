@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.core.Ebf
 import graft.data.WebPagesGen
 import graft.functions.Graft
 import graft.pipeline.SaltedAgg
@@ -122,14 +121,12 @@ object WebPagesQueries {
       val strFed = withHost(wp).select("host", "url")
         .groupBy("host")
         .agg(expr("ebf_agg(url)").as("ebf"))
-      val agg = udaf(new graft.functions.SketchAggregators.EbfHashAgg(
-        Ebf.DefaultM0, Ebf.DefaultK, Ebf.DefaultL0,
-        Ebf.DefaultAlphaNum, Ebf.DefaultAlphaDen, Graft.SketchSeed))
       val hashFed = withHost(wp).select(col("host"),
           expr("graft_hash128_h1(url)").as("h1"),
           expr("graft_hash128_h2(url)").as("h2"))
         .groupBy("host")
-        .agg(agg(col("h1"), col("h2")).as("ebf2"))
+        .agg(graft.plans.SketchAgg.column(Seq(col("h1"), col("h2")),
+          graft.plans.EbfHashKind()).as("ebf2"))
       // full join + coalesce(false): a host missing on either side is a
       // MISMATCH (null keys included — null-safe equality on the join),
       // and an EMPTY result must read as false, not NPE on a null

@@ -30,15 +30,28 @@ object FunctionShim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .registerFunction(FunctionIdentifier(name), info, builder)
+
+  /** Spark's own wrong-argument-count analysis error. */
+  def wrongArity(name: String, expected: Int, got: Int): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), got)
 }
 
-/** Mixin giving a unary expression an implicit cast of its input to
-  * string — the behavior a registered Scala UDF with a String
-  * parameter had. Lives here because `AbstractDataType` (the
-  * `inputTypes` element type) is `private[sql]` in Spark 4. */
-trait StringInputCast
+/** Mixin giving an expression implicit casts of its inputs to
+  * `castTargets`, one per child — the analyzer rule Spark applies to
+  * its own built-ins (bigint -> string, decimal -> double, int ->
+  * bigint). Lives here because `AbstractDataType` (the `inputTypes`
+  * element type) is `private[sql]` in Spark 4. */
+trait InputCasts
     extends org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
   self: Expression =>
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
+  protected def castTargets: Seq[org.apache.spark.sql.types.DataType]
+  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] = castTargets
+}
+
+/** [[InputCasts]] for a unary expression over a string — the behavior a
+  * registered Scala UDF with a String parameter had. */
+trait StringInputCast extends InputCasts {
+  self: Expression =>
+  override protected def castTargets: Seq[org.apache.spark.sql.types.DataType] =
     Seq(org.apache.spark.sql.types.StringType)
 }

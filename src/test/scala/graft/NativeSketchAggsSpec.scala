@@ -1,17 +1,21 @@
 package graft
 
+import graft.core.{Cms, Ebf, FreqSketch, Hash128, Hll, Kll, ShardedEbf, TDigest}
 import graft.data.WebPagesGen
 import graft.functions.Graft
 import graft.pipeline.{Flagship, SaltedAgg, ShardedProbe}
+import graft.plans.{BatchedTokenBuf, CmsTopkTokensKind, KllKind, SketchAgg, TDigestKind}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The native TypedImperativeAggregate forms must produce BYTE-IDENTICAL
-  * results to the udaf (ScalaAggregator) forms they replace in the
-  * flagship — same inserts, same merge trees, only the row-access path
-  * differs. Checked end-to-end through real aggregations, plus the
-  * batched CMS kernel across batch sizes. */
+/** The flagship's sketch aggregates against single-thread `graft.core`
+  * folds over the same rows: byte-identical wherever the sketch is
+  * independent of insertion and merge order (EBF, HLL, CMS), and at the
+  * published guarantee where it is not (Misra-Gries). KLL and t-digest
+  * bytes depend on the merge tree, so the fused per-host build is
+  * checked against the standalone `kll_agg`/`tdigest_agg` kinds riding
+  * the SAME salted two-stage aggregation. */
 class NativeSketchAggsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.ensure(
@@ -28,71 +32,108 @@ class NativeSketchAggsSpec extends AnyFunSuite {
     spark.read.parquet(path)
   }
 
-  test("sharded EBF build: native agg byte-identical to udaf agg") {
-    val a = ShardedProbe.buildShardTable(wp, col("url"), 8, nativeAgg = true)
-      .orderBy("shard").collect()
-    val b = ShardedProbe.buildShardTable(wp, col("url"), 8, nativeAgg = false)
-      .orderBy("shard").collect()
-    assert(a.length === 8 && b.length === 8)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.getInt(0) === y.getInt(0))
-      assert(java.util.Arrays.equals(x.getAs[Array[Byte]](1), y.getAs[Array[Byte]](1)),
-        s"shard ${x.getInt(0)} differs")
+  private lazy val urls: Array[String] =
+    wp.select(col("url")).collect().map(_.getString(0))
+
+  private def hostOf(url: String): String = url.split("/")(2)
+
+  test("sharded EBF build: hash-fed agg byte-identical to per-shard kernel folds") {
+    val got = ShardedProbe.buildShardTable(wp, col("url"), 8)
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    def route(url: String): Int =
+      java.lang.Math.floorMod(Hash128.hash64(url, ShardedEbf.DefaultRouteSeed), 8L).toInt
+    val ref = urls.filter(_ != null).groupBy(route).map { case (s, us) =>
+      val e = Ebf.empty(4096, 5, 16, 1, 8, Graft.SketchSeed)
+      us.foreach(e.insert)
+      s -> e.toBytes.toSeq
     }
+    assert(got.size === 8)
+    assert(got === ref)
   }
 
-  private def hostAgg(native: Boolean): Array[org.apache.spark.sql.Row] = {
-    val withHost = wp.select(col("lang"),
+  test("per-host fused sketches: native agg byte-identical through salted two-stage") {
+    val withHost = wp.select(col("lang"), col("url"),
       graft.plans.Hash128Expr.h1(col("url"), Graft.SketchSeed).as("__h1"),
       graft.plans.Hash128Expr.h2(col("url"), Graft.SketchSeed).as("__h2"),
       length(col("text")).cast("double").as("text_len"),
       substring_index(substring_index(col("url"), "/", 3), "/", -1).as("host"))
-    SaltedAgg.adaptiveSketchAgg(withHost, Seq("lang", "host"), col("__h1"), 8,
-      if (native) Flagship.perHostNativeSpecs else Flagship.perHostHashSpecs,
-      hotRowThreshold = 200L)
+    // the standalone quantile kinds ride the same aggregation, so they
+    // see the same rows in the same merge tree as the fused buffer
+    val specs = Flagship.perHostNativeSpecs ++ Seq(
+      SaltedAgg.SketchSpec("kll", SketchAgg.column(Seq(col("text_len")), KllKind(160)),
+        "kll_merge_agg"),
+      SaltedAgg.SketchSpec("td", SketchAgg.column(Seq(col("text_len")), TDigestKind(50.0)),
+        "tdigest_merge_agg"))
+    val rows = SaltedAgg.adaptiveSketchAgg(withHost, Seq("lang", "host"), col("__h1"), 8,
+      specs, hotRowThreshold = 200L)
       .select(col("lang"), col("host"), col("sk.ebf"), col("sk.hll"),
-        col("sk.kll"), col("sk.td"))
-      .orderBy("lang", "host").collect()
-  }
-
-  test("per-host fused sketches: native agg byte-identical through salted two-stage") {
-    val a = hostAgg(native = true)
-    val b = hostAgg(native = false)
-    assert(a.length === b.length && a.nonEmpty)
-    a.zip(b).foreach { case (x, y) =>
-      (2 to 5).foreach { i =>
-        assert(java.util.Arrays.equals(x.getAs[Array[Byte]](i), y.getAs[Array[Byte]](i)),
-          s"field $i differs for (${x.getString(0)}, ${x.getString(1)})")
-      }
+        col("sk.kll"), col("sk.td"), col("kll"), col("td"))
+      .collect()
+    val byGroup = wp.select(col("lang"), col("url")).collect()
+      .groupBy(r => (r.getString(0), hostOf(r.getString(1))))
+    assert(rows.length === byGroup.size && rows.nonEmpty)
+    rows.foreach { r =>
+      val g = (r.getString(0), r.getString(1))
+      val ebf = Ebf.empty(128, 5, 16, 1, 8, Graft.SketchSeed)
+      val hll = Hll.empty(10, Graft.SketchSeed)
+      byGroup(g).foreach { x => ebf.insert(x.getString(1)); hll.add(x.getString(1)) }
+      assert(r.getAs[Array[Byte]](2).toSeq === ebf.toBytes.toSeq, s"ebf differs for $g")
+      assert(r.getAs[Array[Byte]](3).toSeq === hll.toBytes.toSeq, s"hll differs for $g")
+      assert(r.getAs[Array[Byte]](4).toSeq === r.getAs[Array[Byte]](6).toSeq, s"kll differs for $g")
+      assert(r.getAs[Array[Byte]](5).toSeq === r.getAs[Array[Byte]](7).toSeq, s"td differs for $g")
+      assert(Kll.fromBytes(r.getAs[Array[Byte]](4)).n === byGroup(g).length.toLong)
     }
   }
 
-  private def tokenAgg(native: Boolean, batch: Int): Array[(String, Array[Byte], Array[Byte])] = {
-    val c =
-      if (native)
-        graft.plans.CmsTopkTokensNativeAgg.column(col("text"), 5, 1024, 64,
-          Graft.SketchSeed, batch)
-      else {
-        val u = udaf(new graft.functions.SketchAggregators.CmsTopkTokensAgg(
-          5, 1024, 64, Graft.SketchSeed))
-        u(col("text"))
-      }
-    wp.groupBy("lang").agg(c.as("tok"))
-      .select(col("lang"), col("tok.cms"), col("tok.topk"))
-      .orderBy("lang").collect()
-      .map(r => (r.getString(0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2)))
-  }
+  private lazy val textsByLang: Map[String, Array[String]] =
+    wp.select(col("lang"), col("text")).collect()
+      .groupBy(_.getString(0)).map { case (l, rs) => l -> rs.map(_.getString(1)) }
 
-  test("token CMS+MG: native and batched kernels byte-identical to udaf") {
-    val ref = tokenAgg(native = false, 0)
-    for (batch <- Seq(0, 64, 512)) {
-      val got = tokenAgg(native = true, batch)
-      assert(got.length === ref.length && ref.nonEmpty)
-      got.zip(ref).foreach { case ((lg, cms, topk), (lr, cmsR, topkR)) =>
-        assert(lg === lr)
-        assert(java.util.Arrays.equals(cms, cmsR), s"cms differs lang=$lg batch=$batch")
-        assert(java.util.Arrays.equals(topk, topkR), s"topk differs lang=$lg batch=$batch")
+  test("token CMS+MG: batched kernel matches per-lang kernel folds") {
+    val got = wp.groupBy("lang")
+      .agg(SketchAgg.column(Seq(col("text")), CmsTopkTokensKind(5, 1024, 64, Graft.SketchSeed))
+        .as("tok"))
+      .select(col("lang"), col("tok.cms"), col("tok.topk"))
+      .collect()
+    assert(got.length === textsByLang.size && got.nonEmpty)
+    got.foreach { r =>
+      val lang = r.getString(0)
+      val texts = textsByLang(lang)
+      val cms = Cms.empty(5, 1024, Graft.SketchSeed)
+      texts.foreach(cms.addTextTokens)
+      assert(java.util.Arrays.equals(r.getAs[Array[Byte]](1), cms.toBytes), s"cms differs lang=$lang")
+      // Misra-Gries is order-dependent beyond capacity: check its
+      // guarantee against exact token counts
+      val mg = FreqSketch.fromBytes(r.getAs[Array[Byte]](2))
+      val exact = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
+        .groupBy(identity).map { case (t, ts) => t -> ts.length.toLong }
+      assert(mg.n === exact.values.sum)
+      exact.toSeq.sortBy(-_._2).take(10).foreach { case (t, c) =>
+        val est = mg.estimate(t)
+        assert(est <= c && est >= c - mg.maxError, s"MG bound broken for $t in $lang")
       }
+    }
+    // the batched CMS kernel is bit-identical to unbatched at any batch
+    // size, and MG is untouched by batching (same insertion order here)
+    val texts = textsByLang.values.flatten.toArray
+    val plain = Cms.empty(5, 1024, Graft.SketchSeed)
+    val plainMg = FreqSketch.empty(64, Graft.SketchSeed)
+    texts.foreach { t =>
+      plain.addTextTokens(t)
+      val b = t.getBytes("UTF-8")
+      var s = 0
+      for (i <- 0 to b.length) if (i == b.length || b(i) == ' ') {
+        if (i > s) plainMg.addRangeHashed(b, s, i - s, 1L,
+          Hash128.hashBytesRange(b, s, i - s, Graft.SketchSeed).h1)
+        s = i + 1
+      }
+    }
+    for (batch <- Seq(1, 64, 512)) {
+      val buf = BatchedTokenBuf.empty(5, 1024, 64, Graft.SketchSeed, batch)
+      texts.foreach(t => buf.addTokens(t.getBytes("UTF-8")))
+      val Array(cms, topk) = buf.sketches
+      assert(java.util.Arrays.equals(cms, plain.toBytes), s"cms differs batch=$batch")
+      assert(java.util.Arrays.equals(topk, plainMg.toBytes), s"topk differs batch=$batch")
     }
   }
 
@@ -100,11 +141,15 @@ class NativeSketchAggsSpec extends AnyFunSuite {
     // the side-channel token sketches must match the groupBy-built
     // ones: CMS byte-identically (commutative adds), MG at the
     // heavy-hitter level (merge-order guarantee); host groups equal
+    // the exact distinct (lang, host) count
     val (hostGroups, langGroups, tops, _, _) = Flagship.phase12Fused(wp, 8)
-    assert(hostGroups === Flagship.phase1(wp, 8))
+    val exactGroups = wp.select(col("lang"),
+        substring_index(substring_index(col("url"), "/", 3), "/", -1).as("host"))
+      .agg(countDistinct(col("lang"), col("host"))).head.getLong(0)
+    assert(hostGroups === exactGroups)
     val grouped = wp.groupBy("lang")
-      .agg(graft.plans.CmsTopkTokensNativeAgg.column(col("text"), 5, 16384, 256,
-        Graft.SketchSeed, 512).as("tok"))
+      .agg(SketchAgg.column(Seq(col("text")), CmsTopkTokensKind(5, 16384, 256, Graft.SketchSeed))
+        .as("tok"))
       .select(col("lang"), col("tok.cms"), col("tok.topk"))
       .collect().map(r => r.getString(0) ->
         (r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2))).toMap
@@ -120,9 +165,9 @@ class NativeSketchAggsSpec extends AnyFunSuite {
     fusedMap.foreach { case (lang, r) =>
       assert(java.util.Arrays.equals(r.getAs[Array[Byte]]("cms"), grouped(lang)._1),
         s"cms differs for $lang")
-      val fusedTop = graft.core.FreqSketch.fromBytes(r.getAs[Array[Byte]]("topk"))
+      val fusedTop = FreqSketch.fromBytes(r.getAs[Array[Byte]]("topk"))
         .topK(10).map(_._1).toSet
-      val groupedTop = graft.core.FreqSketch.fromBytes(grouped(lang)._2)
+      val groupedTop = FreqSketch.fromBytes(grouped(lang)._2)
         .topK(10).map(_._1).toSet
       assert(fusedTop === groupedTop, s"heavy hitters differ for $lang")
     }
@@ -130,15 +175,12 @@ class NativeSketchAggsSpec extends AnyFunSuite {
   }
 
   test("batched buffer flushes pending tokens on serialize") {
-    val agg = graft.plans.CmsTopkTokensNativeAgg(
-      org.apache.spark.sql.catalyst.expressions.Literal("a b c"),
-      3, 64, 8, 42L, batchTokens = 1000)
-    val buf = agg.createAggregationBuffer()
-    agg.update(buf, org.apache.spark.sql.catalyst.InternalRow.empty)
-    assert(buf.pending === 3) // still unflushed (batch 1000)
-    val bytes = agg.serialize(buf)
-    val back = agg.deserialize(bytes)
-    assert(back.buf.cms.total === 3L)
-    assert(back.buf.cms.estimate("b") === 1L)
+    val kind = CmsTopkTokensKind(3, 64, 8, 42L)
+    val buf = kind.empty()
+    buf.addTokens("a b c".getBytes("UTF-8"))
+    assert(buf.pending === 3) // still unflushed (batch 512)
+    val back = kind.fromBytes(kind.toBytes(buf))
+    assert(back.cms.total === 3L)
+    assert(back.cms.estimate("b") === 1L)
   }
 }

@@ -62,13 +62,19 @@ class SparkPipelineSpec extends AnyFunSuite {
     assert(plain === adaptive)
   }
 
+  // the flagship's per-(lang, host) input: url, its hash halves, text_len
+  private def hostInput = wp
+    .select(col("lang"), col("url"),
+      graft.plans.Hash128Expr.h1(col("url"), Graft.SketchSeed).as("__h1"),
+      graft.plans.Hash128Expr.h2(col("url"), Graft.SketchSeed).as("__h2"),
+      length(col("text")).cast("double").as("text_len"))
+    .withColumn("host", parse_url(col("url"), lit("HOST")))
+
   test("fused per-host aggregator is byte-identical to the four separate aggregators") {
     import graft.pipeline.Flagship
-    val withHost = wp
-      .select(col("lang"), col("url"), length(col("text")).cast("double").as("text_len"))
-      .withColumn("host", parse_url(col("url"), lit("HOST")))
+    import graft.plans.{EbfKind, HllKind, KllKind, SketchAgg, TDigestKind}
     def run(specs: Seq[SaltedAgg.SketchSpec], flatten: Boolean) = {
-      val df = SaltedAgg.adaptiveSketchAgg(withHost, Seq("lang", "host"), col("url"),
+      val df = SaltedAgg.adaptiveSketchAgg(hostInput, Seq("lang", "host"), col("url"),
         8, specs, hotRowThreshold = 50L, sampleFraction = 0.1)
       val cols =
         if (flatten) Seq(col("lang"), col("host"), col("sk.ebf"), col("sk.hll"),
@@ -78,8 +84,18 @@ class SparkPipelineSpec extends AnyFunSuite {
         (r.getString(0), r.getString(1)) ->
           (2 to 5).map(r.getAs[Array[Byte]](_).toSeq)).toMap
     }
-    val fused = run(Flagship.perHostSpecs, flatten = true)
-    val separate = run(Flagship.perHostSpecsUnfused, flatten = false)
+    // the four sketches built separately, at the fused aggregate's
+    // per-group parameters, EBF and HLL fed the url string itself
+    val separateSpecs = Seq(
+      SketchSpec("ebf", SketchAgg.column(Seq(col("url")),
+        EbfKind(128, 5, 16, 1, 8, Graft.SketchSeed)), "ebf_merge_agg"),
+      SketchSpec("hll", SketchAgg.column(Seq(col("url")), HllKind(10, Graft.SketchSeed)),
+        "hll_merge_agg"),
+      SketchSpec("kll", SketchAgg.column(Seq(col("text_len")), KllKind(160)), "kll_merge_agg"),
+      SketchSpec("td", SketchAgg.column(Seq(col("text_len")), TDigestKind(50.0)),
+        "tdigest_merge_agg"))
+    val fused = run(Flagship.perHostNativeSpecs, flatten = true)
+    val separate = run(separateSpecs, flatten = false)
     assert(fused.keySet === separate.keySet)
     assert(fused === separate)
   }
@@ -217,34 +233,31 @@ class SparkPipelineSpec extends AnyFunSuite {
     import graft.pipeline.Flagship
     def skMap(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       val s = r.getStruct(r.length - 1)
-      (r.getString(0), r.getString(1)) -> (0 until 4).map(s.getAs[Array[Byte]](_).toSeq)
+      (r.getString(0), r.getString(1)) -> (0 until 4).map(s.getAs[Array[Byte]](_))
     }.toMap
-    val strFed = wp
-      .select(col("lang"), col("url"), length(col("text")).cast("double").as("text_len"))
-      .withColumn("host", parse_url(col("url"), lit("HOST")))
-    val hashFed = wp.select(col("lang"),
-      graft.plans.Hash128Expr.h1(col("url"), Graft.SketchSeed).as("__h1"),
-      graft.plans.Hash128Expr.h2(col("url"), Graft.SketchSeed).as("__h2"),
-      length(col("text")).cast("double").as("text_len"),
-      substring_index(substring_index(col("url"), "/", 3), "/", -1).as("host"))
-    // plain (same merge tree both sides): FULL byte-identity, all four
-    val a = skMap(SaltedAgg.plainAgg(strFed, Seq("lang", "host"), Flagship.perHostSpecs))
-    val b = skMap(SaltedAgg.plainAgg(hashFed, Seq("lang", "host"), Flagship.perHostHashSpecs))
-    assert(a.keySet === b.keySet)
-    assert(a === b)
-    // salted with different salt expressions (url hash vs __h1): the
-    // merge TREES differ, so only the merge-order-free sketches (EBF,
-    // HLL) must stay byte-identical — KLL/t-digest are guarantee-level
-    // (same rule as the library-wide merge laws)
-    val sa = skMap(SaltedAgg.adaptiveSketchAgg(strFed, Seq("lang", "host"), col("url"),
-      8, Flagship.perHostSpecs, hotRowThreshold = 100L))
-    val sb = skMap(SaltedAgg.adaptiveSketchAgg(hashFed, Seq("lang", "host"), col("__h1"),
-      8, Flagship.perHostHashSpecs, hotRowThreshold = 100L))
-    assert(sa.keySet === sb.keySet)
-    sa.foreach { case (k, v) =>
-      assert(v(0) === sb(k)(0), s"EBF differs for $k")
-      assert(v(1) === sb(k)(1), s"HLL differs for $k")
+    // the string-fed reference: single-thread kernel folds of the url
+    // strings (and text lengths) per (lang, host)
+    val groups = hostInput.select("lang", "host", "url", "text_len").collect()
+      .groupBy(r => (r.getString(0), r.getString(1)))
+    def check(got: Map[(String, String), IndexedSeq[Array[Byte]]]): Unit = {
+      assert(got.keySet === groups.keySet)
+      groups.foreach { case (k, rows) =>
+        val ebf = Ebf.empty(128, 5, 16, 1, 8, Graft.SketchSeed)
+        val hll = Hll.empty(10, Graft.SketchSeed)
+        rows.foreach { r => ebf.insert(r.getString(2)); hll.add(r.getString(2)) }
+        assert(got(k)(0).toSeq === ebf.toBytes.toSeq, s"EBF differs for $k")
+        assert(got(k)(1).toSeq === hll.toBytes.toSeq, s"HLL differs for $k")
+        // KLL/t-digest bytes depend on the merge tree (same rule as the
+        // library-wide merge laws); their byte identity against the
+        // standalone kinds is the fused-vs-separate test above
+        assert(Kll.fromBytes(got(k)(2)).n === rows.length.toLong, s"KLL n differs for $k")
+        assert(TDigest.fromBytes(got(k)(3)).quantile(1.0) ===
+          rows.map(_.getDouble(3)).max, s"t-digest max differs for $k")
+      }
     }
+    check(skMap(SaltedAgg.plainAgg(hostInput, Seq("lang", "host"), Flagship.perHostNativeSpecs)))
+    check(skMap(SaltedAgg.adaptiveSketchAgg(hostInput, Seq("lang", "host"), col("__h1"),
+      8, Flagship.perHostNativeSpecs, hotRowThreshold = 100L)))
   }
 
   test("native graft_shard matches the reference routing and null semantics") {
@@ -308,13 +321,15 @@ class SparkPipelineSpec extends AnyFunSuite {
     val hashFed = graft.pipeline.ShardedProbe
       .buildShardTable(wp, col("url"), numShards, m0 = 256, clusterFirst = true)
       .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val strAgg = udaf(new graft.functions.SketchAggregators.EbfAgg(
-      256, 5, 16, 1, 8, Graft.SketchSeed))
-    val strFed = wp.select(col("url"))
-      .filter(col("url").isNotNull)
-      .select(expr(s"graft_shard(url, $numShards)").as("shard"), col("url"))
-      .groupBy("shard").agg(strAgg(col("url")).as("sk"))
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
+    // string-fed reference: per-shard single-thread kernel folds
+    val strFed = wp.select(col("url")).collect().map(_.getString(0)).filter(_ != null)
+      .groupBy(u => java.lang.Math.floorMod(
+        Hash128.hash64(u, ShardedEbf.DefaultRouteSeed), numShards.toLong).toInt)
+      .map { case (shard, us) =>
+        val e = Ebf.empty(256, 5, 16, 1, 8, Graft.SketchSeed)
+        us.foreach(e.insert)
+        shard -> e.toBytes.toSeq
+      }
     assert(hashFed === strFed)
   }
 }

@@ -1,14 +1,15 @@
 package graft.functions
 
 import graft.core.{Cms, FreqSketch}
-import graft.functions.SketchAggregators._
-import org.apache.spark.sql.SparkSession
+import graft.plans.{CmsTokensKind, CmsTopkTokensKind, SketchAgg, TopKTokensKind}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused phase-2 aggregator (CMS + Misra-Gries over text tokens in
-  * one pass) must be equivalent to the standalone aggregators it fuses:
-  * byte-identical CMS, identical heavy-hitter extraction. */
+  * one pass) must be equivalent to the standalone aggregators it fuses
+  * and to single-thread kernel folds: byte-identical CMS, identical
+  * heavy-hitter extraction. */
 class FusedTokenAggSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.ensure(
@@ -29,14 +30,15 @@ class FusedTokenAggSpec extends AnyFunSuite {
         concat(lit("w"), pmod(xxhash64(col("id"), lit(3)), lit(4)))).as("text"))
   }
 
+  private def fused(text: Column): Column =
+    SketchAgg.column(Seq(text), CmsTopkTokensKind(5, 1024, 64, Graft.SketchSeed))
+
   test("fused CMS+MG equals the standalone aggregators per group") {
-    val fused = udaf(new CmsTopkTokensAgg(5, 1024, 64, Graft.SketchSeed))
-    val cmsOnly = udaf(new CmsTokensAgg(5, 1024, Graft.SketchSeed))
-    val mgOnly = udaf(new TopKTokensAgg(64))
     val rows = corpus.groupBy("lang")
       .agg(fused(col("text")).as("tok"),
-        cmsOnly(col("text")).as("cms"),
-        mgOnly(col("text")).as("topk"))
+        SketchAgg.column(Seq(col("text")), CmsTokensKind(5, 1024, Graft.SketchSeed)).as("cms"),
+        SketchAgg.column(Seq(col("text")), TopKTokensKind(64)).as("topk"),
+        collect_list(col("text")).as("texts"))
       .collect()
     assert(rows.length === 3)
     rows.foreach { r =>
@@ -46,11 +48,17 @@ class FusedTokenAggSpec extends AnyFunSuite {
       val fusedTop = FreqSketch.fromBytes(tok.getAs[Array[Byte]]("topk")).topK(20)
       val aloneTop = FreqSketch.fromBytes(r.getAs[Array[Byte]]("topk")).topK(20)
       assert(fusedTop === aloneTop, s"top-20 differs for ${r.getString(0)}")
+      // and both equal the single-thread kernel folds of the group
+      val cms = Cms.empty(5, 1024, Graft.SketchSeed)
+      val mg = FreqSketch.empty(64)
+      r.getSeq[String](4).foreach { t => cms.addTextTokens(t); mg.addTextTokens(t) }
+      assert(java.util.Arrays.equals(tok.getAs[Array[Byte]]("cms"), cms.toBytes),
+        s"CMS differs from the kernel fold for ${r.getString(0)}")
+      assert(fusedTop === mg.topK(20), s"top-20 differs from the kernel fold for ${r.getString(0)}")
     }
   }
 
   test("fused heavy hitters are exact when vocabulary fits capacity") {
-    val fused = udaf(new CmsTopkTokensAgg(5, 1024, 64, Graft.SketchSeed))
     val sk = corpus.agg(fused(col("text")).as("tok"))
       .select(col("tok.topk")).head.getAs[Array[Byte]](0)
     val got = FreqSketch.fromBytes(sk).topK(10).toMap
