@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
 /** Mergeable bottom-k uniform sample of DISTINCT keys.
@@ -29,10 +28,11 @@ import java.nio.charset.StandardCharsets
   * (2^-64-ish at the 16-byte compare; we compare the full digest) —
   * the standard KMV caveat, negligible at any real k and corpus.
   */
-final class BottomKSample(var k: Int) extends BytesSerde {
+final class BottomKSample(val k: Int) extends BytesSerde {
+  require(k >= 1, s"k must be >= 1, got $k")
 
   // md5 hex (32 chars, lexicographic == bytewise order) -> key
-  private var m = new java.util.TreeMap[String, String]()
+  private val m = new java.util.TreeMap[String, String]()
 
   def size: Int = m.size
 
@@ -65,30 +65,9 @@ final class BottomKSample(var k: Int) extends BytesSerde {
   }
 
   def toBytes: Array[Byte] = {
-    val ks = keys.map(_.getBytes(StandardCharsets.UTF_8))
-    val buf = ByteBuffer.allocate(4 + 4 + 4 + ks.map(_.length + 4).sum)
-    buf.putInt(BottomKSample.MAGIC)
-    buf.putInt(k)
-    buf.putInt(ks.length)
-    ks.foreach { b => buf.putInt(b.length); buf.put(b) }
-    buf.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val buf = ByteBuffer.wrap(bytes)
-    require(buf.getInt() == BottomKSample.MAGIC, "not a bottom-k sample")
-    k = buf.getInt()
-    val n = buf.getInt()
-    m = new java.util.TreeMap[String, String]()
-    var i = 0
-    while (i < n) {
-      val len = buf.getInt()
-      val b = new Array[Byte](len)
-      buf.get(b)
-      val key = new String(b, StandardCharsets.UTF_8)
-      m.put(BottomKSample.md5Hex(key), key)
-      i += 1
-    }
+    val out = new WireWriter().int(BottomKSample.MAGIC).int(k).int(m.size)
+    keys.foreach(key => out.blob(key.getBytes(StandardCharsets.UTF_8)))
+    out.toBytes
   }
 }
 
@@ -99,8 +78,17 @@ object BottomKSample {
   def empty(k: Int = DefaultK): BottomKSample = new BottomKSample(k)
 
   def fromBytes(bytes: Array[Byte]): BottomKSample = {
-    val s = new BottomKSample(1)
-    s.loadBytes(bytes)
+    val in = WireReader(bytes, "BKS1", MAGIC)
+    val s = in.construct(new BottomKSample(in.int("k")))
+    val n = in.count("keys", in.int("keys"), 4)
+    in.check(n <= s.k, "keys", s"$n keys above k = ${s.k}")
+    var i = 0
+    while (i < n) {
+      val key = new String(in.blob("keys"), StandardCharsets.UTF_8)
+      s.m.put(md5Hex(key), key)
+      i += 1
+    }
+    in.finish()
     s
   }
 

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
-
 /** Count-Min sketch, implemented from the published algorithm
   * (Cormode & Muthukrishnan 2005). `depth` rows x `width` counters;
   * row hashes derived from one 128-bit hash (Kirsch-Mitzenmacher).
@@ -13,9 +11,10 @@ import java.nio.ByteBuffer
   *   estimate <= true + eps * N    with prob >= 1 - delta,
   * where eps = e / width and delta = e^(-depth).
   */
-final class Cms(var depth: Int, var width: Int, var seed: Long) extends BytesSerde {
+final class Cms(val depth: Int, val width: Int, val seed: Long) extends BytesSerde {
   require(depth >= 1 && depth <= 16, s"depth must be in [1,16], got $depth")
-  require(width >= 8, s"width must be >= 8, got $width")
+  require(width >= 8 && width <= Cms.MaxCells / depth,
+    s"width must be in [8, ${Cms.MaxCells / depth}] at depth $depth, got $width")
 
   // In-memory representation is DUAL (the O38 sparse-HLL twin): a
   // fresh sketch starts as an open-addressed (cellIdx -> count) map and
@@ -274,22 +273,19 @@ final class Cms(var depth: Int, var width: Int, var seed: Long) extends BytesSer
   def delta: Double = math.exp(-depth.toDouble)
 
   // Wire format v2: dense fixed 8-byte cells, or a sparse
-  // (nnz, index-delta/count varints) list when byte-cheaper — chosen by
-  // exact byte cost, a pure function of table content, so equal tables
-  // serialize identically under any merge ordering. The win case is
-  // categorical counting (cms_agg over a low-cardinality column):
-  // ~n_keys*depth occupied cells out of depth*width, e.g. a 10-source
-  // CMS ships ~600 B instead of 229 KB through the merge exchange.
-  // Token-counting CMS tables are near-full and stay dense.
+  // (nnz, index-delta/count varints) list when byte-cheaper (see
+  // WireWriter.cells). The win case is categorical counting (cms_agg
+  // over a low-cardinality column): ~n_keys*depth occupied cells out of
+  // depth*width, e.g. a 10-source CMS ships ~600 B instead of 229 KB
+  // through the merge exchange. Token-counting CMS tables are near-full
+  // and stay dense. Sparse memory emits its occupied cells in index
+  // order, so both representations give identical bytes.
   def toBytes: Array[Byte] = {
-    // in-memory-sparse path: occupied cells in index order, so the
-    // emitted bytes are IDENTICAL to the dense path's for equal content
-    var idxs: Array[Int] = null
-    var cnts: Array[Long] = null
-    val nCells = depth * width
-    if (table == null) {
-      idxs = new Array[Int](sUsed)
-      cnts = new Array[Long](sUsed)
+    val out = new WireWriter()
+      .int(Cms.MAGIC).int(depth).int(width).long(seed).long(total)
+    if (table != null) out.cells(depth * width, 8, signed = false, null)(table(_))
+    else {
+      val idxs = new Array[Int](sUsed)
       var p = 0
       var o = 0
       while (p < sIdx.length) {
@@ -297,118 +293,9 @@ final class Cms(var depth: Int, var width: Int, var seed: Long) extends BytesSer
         p += 1
       }
       java.util.Arrays.sort(idxs)
-      var s = 0
-      while (s < idxs.length) { cnts(s) = sparseGet(idxs(s)); s += 1 }
+      out.cells(depth * width, 8, signed = false, idxs)(sparseGet)
     }
-    @inline def cellAt(e: Int): Long = if (table != null) table(e) else cnts(e)
-    val nIter = if (table != null) nCells else idxs.length
-    @inline def idxAt(e: Int): Int = if (table != null) e else idxs(e)
-
-    var nnz = 0
-    var sparseCost = 0
-    var prev = -1
-    var e = 0
-    while (e < nIter) {
-      val c = cellAt(e)
-      if (c != 0L) {
-        val i = idxAt(e)
-        nnz += 1
-        sparseCost += Cms.varintLen(i - prev - 1) + Cms.varintLen(c)
-        prev = i
-      }
-      e += 1
-    }
-    sparseCost += Cms.varintLen(nnz.toLong)
-    val dense = 8 * nCells
-    val sparseMode = sparseCost < dense
-    val buf = ByteBuffer.allocate(4 + 4 + 4 + 8 + 8 + 1 + (if (sparseMode) sparseCost else dense))
-    buf.putInt(Cms.MAGIC)
-    buf.putInt(depth)
-    buf.putInt(width)
-    buf.putLong(seed)
-    buf.putLong(total)
-    buf.put(if (sparseMode) 1.toByte else 0.toByte)
-    if (sparseMode) {
-      Cms.writeVarint(buf, nnz.toLong)
-      prev = -1
-      e = 0
-      while (e < nIter) {
-        val c = cellAt(e)
-        if (c != 0L) {
-          val i = idxAt(e)
-          Cms.writeVarint(buf, (i - prev - 1).toLong)
-          Cms.writeVarint(buf, c)
-          prev = i
-        }
-        e += 1
-      }
-    } else {
-      // dense wire from sparse memory is possible (many small counts);
-      // walk cells in order emitting zeros for the gaps
-      if (table != null) {
-        var i = 0
-        while (i < nCells) { buf.putLong(table(i)); i += 1 }
-      } else {
-        var i = 0
-        var o = 0
-        while (i < nCells) {
-          if (o < idxs.length && idxs(o) == i) { buf.putLong(cnts(o)); o += 1 }
-          else buf.putLong(0L)
-          i += 1
-        }
-      }
-    }
-    java.util.Arrays.copyOf(buf.array(), buf.position())
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == Cms.MAGIC, f"bad CMS magic 0x$magic%08x")
-    depth = in.getInt()
-    width = in.getInt()
-    seed = in.getLong()
-    total = in.getLong()
-    // re-initializes a placeholder instance (fromBytes): EVERY field
-    // must be set here
-    val mode = in.get()
-    if (mode == 1.toByte) {
-      val nnz = Cms.readVarint(in)
-      if (nnz <= promoteAt) {
-        // wire-sparse AND small: load straight into sparse memory (the
-        // merge-of-collected-tails case never materializes the dense
-        // table at all)
-        table = null
-        var cap = 16
-        while (cap < nnz * 2) cap <<= 1
-        sparseInit(cap.toInt)
-        var prev = -1
-        var e = 0L
-        while (e < nnz) {
-          val idx = prev + 1 + Cms.readVarint(in).toInt
-          sparsePut(idx, Cms.readVarint(in))
-          prev = idx
-          e += 1
-        }
-      } else {
-        table = new Array[Long](depth * width)
-        sIdx = null; sCnt = null; sUsed = 0
-        var prev = -1
-        var e = 0L
-        while (e < nnz) {
-          val idx = prev + 1 + Cms.readVarint(in).toInt
-          table(idx) = Cms.readVarint(in)
-          prev = idx
-          e += 1
-        }
-      }
-    } else {
-      require(mode == 0.toByte, s"bad CMS wire mode $mode")
-      table = new Array[Long](depth * width)
-      sIdx = null; sCnt = null; sUsed = 0
-      var i = 0
-      while (i < table.length) { table(i) = in.getLong(); i += 1 }
-    }
+    out.toBytes
   }
 }
 
@@ -417,28 +304,9 @@ object Cms {
   // optional sparse cell list); v1 bytes fail the magic check loudly
   // instead of being misparsed
 
-  private[core] def varintLen(v0: Long): Int = {
-    var v = v0
-    var len = 1
-    while ((v & ~0x7fL) != 0L) { v >>>= 7; len += 1 }
-    len
-  }
-  private[core] def writeVarint(buf: ByteBuffer, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0L) { buf.put(((v & 0x7f) | 0x80).toByte); v >>>= 7 }
-    buf.put(v.toByte)
-  }
-  private[core] def readVarint(in: ByteBuffer): Long = {
-    var v = 0L
-    var shift = 0
-    var b = in.get()
-    while ((b & 0x80) != 0) {
-      v |= (b & 0x7fL) << shift
-      shift += 7
-      b = in.get()
-    }
-    v | ((b & 0x7fL) << shift)
-  }
+  /** Cap on depth * width: 128 MiB of dense cells. */
+  val MaxCells: Int = 1 << 24
+
   val DefaultDepth = 7        // delta ~= 9.1e-4
   val DefaultWidth = 4096     // eps ~= 6.6e-4
   val DefaultSeed = 42L
@@ -446,9 +314,16 @@ object Cms {
   def empty(depth: Int = DefaultDepth, width: Int = DefaultWidth,
             seed: Long = DefaultSeed): Cms = new Cms(depth, width, seed)
 
+  /** Decodes [[Cms.toBytes]]. A sparse section small enough to stay
+    * below the promotion threshold loads straight into sparse memory —
+    * a merge of collected tails never materializes the dense table. */
   def fromBytes(bytes: Array[Byte]): Cms = {
-    val c = new Cms(1, 8, 0L)
-    c.loadBytes(bytes)
+    val in = WireReader(bytes, "CMS2", MAGIC)
+    val depth = in.int("depth"); val width = in.int("width"); val seed = in.long("seed")
+    val c = in.construct(new Cms(depth, width, seed))
+    c.total = in.long("total")
+    in.cells("cells", depth * width, 8, signed = false)(bound => if (bound > c.promoteAt) c.promote())(c.addCell)
+    in.finish()
     c
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
-
 /** Count Sketch (Charikar, Chen & Farach-Colton 2002, "Finding frequent
   * items in data streams"), the UNBIASED twin of [[Cms]] and the last
   * member of the frequency-sketch family here:
@@ -40,10 +38,11 @@ import java.nio.ByteBuffer
   * the wire format is still content-sparse when cheaper, so tiny
   * sketches ship small.
   */
-final class CountSketch(var depth: Int, var width: Int, var seed: Long)
+final class CountSketch(val depth: Int, val width: Int, val seed: Long)
     extends BytesSerde {
   require(depth >= 1 && depth <= 16, s"depth must be in [1,16], got $depth")
-  require(width >= 8, s"width must be >= 8, got $width")
+  require(width >= 8 && width <= Cms.MaxCells / depth,
+    s"width must be in [8, ${Cms.MaxCells / depth}] at depth $depth, got $width")
 
   private[core] var table: Array[Long] = new Array[Long](depth * width)
   /** Net signed mass added (sum of counts; deletes subtract). */
@@ -172,84 +171,13 @@ final class CountSketch(var depth: Int, var width: Int, var seed: Long)
   def f2: Double = innerProduct(this)
 
   // Wire format: like CMS v2 — dense fixed 8-byte cells, or a sparse
-  // (nnz, gap-varint/ZIGZAG-varint) list when byte-cheaper, chosen by
-  // exact byte cost: a pure function of table content, so equal tables
-  // serialize identically under any merge ordering. Cells are SIGNED,
-  // hence the zigzag.
-  def toBytes: Array[Byte] = {
-    val nCells = table.length
-    var nnz = 0
-    var sparseCost = 0
-    var prev = -1
-    var i = 0
-    while (i < nCells) {
-      val c = table(i)
-      if (c != 0L) {
-        nnz += 1
-        sparseCost += Cms.varintLen((i - prev - 1).toLong) +
-          Cms.varintLen(CountSketch.zigzag(c))
-        prev = i
-      }
-      i += 1
-    }
-    sparseCost += Cms.varintLen(nnz.toLong)
-    val dense = 8 * nCells
-    val sparseMode = sparseCost < dense
-    val buf = ByteBuffer.allocate(
-      4 + 4 + 4 + 8 + 8 + 1 + (if (sparseMode) sparseCost else dense))
-    buf.putInt(CountSketch.MAGIC)
-    buf.putInt(depth)
-    buf.putInt(width)
-    buf.putLong(seed)
-    buf.putLong(total)
-    buf.put(if (sparseMode) 1.toByte else 0.toByte)
-    if (sparseMode) {
-      Cms.writeVarint(buf, nnz.toLong)
-      prev = -1
-      i = 0
-      while (i < nCells) {
-        val c = table(i)
-        if (c != 0L) {
-          Cms.writeVarint(buf, (i - prev - 1).toLong)
-          Cms.writeVarint(buf, CountSketch.zigzag(c))
-          prev = i
-        }
-        i += 1
-      }
-    } else {
-      i = 0
-      while (i < nCells) { buf.putLong(table(i)); i += 1 }
-    }
-    java.util.Arrays.copyOf(buf.array(), buf.position())
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == CountSketch.MAGIC, f"bad CountSketch magic 0x$magic%08x")
-    depth = in.getInt()
-    width = in.getInt()
-    seed = in.getLong()
-    total = in.getLong()
-    // re-initializes a placeholder instance (fromBytes): every field set here
-    table = new Array[Long](depth * width)
-    val mode = in.get()
-    if (mode == 1.toByte) {
-      val nnz = Cms.readVarint(in)
-      var prev = -1
-      var e = 0L
-      while (e < nnz) {
-        val idx = prev + 1 + Cms.readVarint(in).toInt
-        table(idx) = CountSketch.unzigzag(Cms.readVarint(in))
-        prev = idx
-        e += 1
-      }
-    } else {
-      require(mode == 0.toByte, s"bad CountSketch wire mode $mode")
-      var i = 0
-      while (i < table.length) { table(i) = in.getLong(); i += 1 }
-    }
-  }
+  // (nnz, gap-varint/ZIGZAG-varint) list when byte-cheaper (see
+  // WireWriter.cells). Cells are SIGNED, hence the zigzag.
+  def toBytes: Array[Byte] =
+    new WireWriter()
+      .int(CountSketch.MAGIC).int(depth).int(width).long(seed).long(total)
+      .cells(table.length, 8, signed = true, null)(table(_))
+      .toBytes
 }
 
 object CountSketch {
@@ -261,9 +189,6 @@ object CountSketch {
       override def initialValue(): Array[Long] = new Array[Long](16)
     }
 
-  @inline private[core] def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
-  @inline private[core] def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
-
   val DefaultDepth = 7    // median-of-7: failure prob exp(-Omega(7))
   val DefaultWidth = 4096 // point err ~ 3*sqrt(F2)/64
   val DefaultSeed = 42L
@@ -273,8 +198,12 @@ object CountSketch {
     new CountSketch(depth, width, seed)
 
   def fromBytes(bytes: Array[Byte]): CountSketch = {
-    val c = new CountSketch(1, 8, 0L)
-    c.loadBytes(bytes)
+    val in = WireReader(bytes, "CSK1", MAGIC)
+    val depth = in.int("depth"); val width = in.int("width"); val seed = in.long("seed")
+    val c = in.construct(new CountSketch(depth, width, seed))
+    c.total = in.long("total")
+    in.cells("cells", c.table.length, 8, signed = true)(_ => ())(c.table(_) = _)
+    in.finish()
     c
   }
 }

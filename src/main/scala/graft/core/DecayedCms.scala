@@ -38,9 +38,9 @@ package graft.core
   * current workload groups it finely; recorded here rather than
   * silently assumed away.
   */
-final class DecayedCms(var depth: Int, var width: Int, var seed: Long,
-                       var lambda: Double) extends BytesSerde {
-  require(depth >= 1 && width >= 2, s"bad dims: $depth x $width")
+final class DecayedCms(val depth: Int, val width: Int, val seed: Long,
+                       val lambda: Double) extends BytesSerde {
+  require(depth >= 1 && width >= 2 && width <= Cms.MaxCells / depth, s"bad dims: $depth x $width")
 
   /** Reference epoch of the stored masses; NaN marks an empty sketch
     * (no event seen — NaN survives wire roundtrips unambiguously
@@ -122,25 +122,12 @@ final class DecayedCms(var depth: Int, var width: Int, var seed: Long,
   }
 
   def toBytes: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 4 + 4 + 8 + 8 + 8 + 8 + 8 * table.length)
-    bb.putInt(DecayedCms.Magic)
-    bb.putInt(depth); bb.putInt(width)
-    bb.putLong(seed); bb.putDouble(lambda)
-    bb.putDouble(t0); bb.putDouble(total)
+    val out = new WireWriter(44 + 8 * table.length)
+      .int(DecayedCms.Magic).int(depth).int(width).long(seed).double(lambda)
+      .double(t0).double(total)
     var i = 0
-    while (i < table.length) { bb.putDouble(table(i)); i += 1 }
-    bb.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    require(bb.getInt() == DecayedCms.Magic, "bad DecayedCms wire bytes")
-    depth = bb.getInt(); width = bb.getInt()
-    seed = bb.getLong(); lambda = bb.getDouble()
-    t0 = bb.getDouble(); total = bb.getDouble()
-    table = new Array[Double](depth * width)
-    var i = 0
-    while (i < table.length) { table(i) = bb.getDouble(); i += 1 }
+    while (i < table.length) { out.double(table(i)); i += 1 }
+    out.toBytes
   }
 }
 
@@ -154,8 +141,17 @@ object DecayedCms {
     new DecayedCms(depth, width, seed, lambda)
 
   def fromBytes(bytes: Array[Byte]): DecayedCms = {
-    val c = new DecayedCms(1, 2, 0L, 0.0)
-    c.loadBytes(bytes)
+    val in = WireReader(bytes, "DCM1", Magic)
+    val depth = in.int("depth"); val width = in.int("width")
+    val seed = in.long("seed"); val lambda = in.double("lambda")
+    val t0 = in.double("t0"); val total = in.double("total")
+    in.count("cells", depth.toLong * width, 8) // before the constructor allocates them
+    val c = in.construct(new DecayedCms(depth, width, seed, lambda))
+    c.t0 = t0
+    c.total = total
+    var i = 0
+    while (i < c.table.length) { c.table(i) = in.double("cells"); i += 1 }
+    in.finish()
     c
   }
 }

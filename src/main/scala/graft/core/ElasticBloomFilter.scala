@@ -1,8 +1,5 @@
 package graft.core
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.ByteBuffer
-
 /** Elastic Bloom Filter — a dynamically resizable Bloom filter with
   * bucket-level expansion/compression and fingerprint-preserving rehash,
   * re-implemented from scratch from the published Elastic Bloom Filter
@@ -61,22 +58,20 @@ import java.nio.ByteBuffer
   * Query checks the k bucket bits only (standard Bloom semantics):
   * no false negatives, one-sided error with
   * FPR <= (1 - e^(-k*n/m))^k at the current load.
-  *
-  * Header fields are vars solely for [[BytesSerde]] (`fromBytes`
-  * re-initializes a placeholder instance via `loadBytes`); they are
-  * never mutated outside deserialization.
   */
 final class Ebf(
-    var m0: Int,          // base bucket count, power of two
-    var k: Int,           // number of derived hash functions
-    var l0: Int,          // initial fingerprint width in bits (max expansions)
-    var alphaNum: Int,    // load threshold alpha = alphaNum / alphaDen
-    var alphaDen: Int,
-    var seed: Long
+    val m0: Int,          // base bucket count, power of two
+    val k: Int,           // number of derived hash functions
+    val l0: Int,          // initial fingerprint width in bits (max expansions)
+    val alphaNum: Int,    // load threshold alpha = alphaNum / alphaDen
+    val alphaDen: Int,
+    val seed: Long
 ) extends BytesSerde {
-  require(Integer.bitCount(m0) == 1, s"m0 must be a power of two, got $m0")
+  require(m0 > 0 && m0 <= (1 << 30) && Integer.bitCount(m0) == 1,
+    s"m0 must be a power of two in [1,2^30], got $m0")
   require(l0 >= 0 && l0 <= 30, s"l0 must be in [0,30], got $l0")
   require(k >= 1 && k <= 16, s"k must be in [1,16], got $k")
+  require(alphaNum >= 1 && alphaDen >= 1, s"alpha must be positive, got $alphaNum/$alphaDen")
 
   @inline private def log2m0: Int = Integer.numberOfTrailingZeros(m0)
 
@@ -314,152 +309,48 @@ final class Ebf(
     math.pow(1.0 - math.exp(-k.toDouble * n / numBuckets), k.toDouble)
 
   /** Canonical serialization: one primitive sort of the pair array
-    * yields (bucket asc, fp asc); counts as varints, fingerprints
-    * bit-packed at the current width. Byte-identical for equal content. */
+    * yields (bucket asc, fp asc); the counts section, then the
+    * fingerprints bit-packed at the current width. Byte-identical for
+    * equal content. */
   def toBytes: Array[Byte] = {
-    val m = numBuckets
     val w = fpWidth
     val sorted = java.util.Arrays.copyOf(pairs, numPairs)
     java.util.Arrays.sort(sorted)
-    val bos = new ByteArrayOutputStream(64 + m + numPairs * 2)
-    val out = new DataOutputStream(bos)
-    out.writeInt(Ebf.MAGIC)
-    out.writeInt(m0); out.writeInt(k); out.writeInt(l0); out.writeInt(level)
-    out.writeInt(alphaNum); out.writeInt(alphaDen)
-    out.writeLong(seed); out.writeLong(n)
-    // Counts section: dense varints, or a sparse (nnz, then
-    // index-delta/count pairs) list when that is byte-cheaper. The web's
-    // long tail makes most per-host filters nearly empty, where the
-    // dense form pays one byte per EMPTY bucket (1 KiB at m0=1024);
-    // sparse costs ~2 bytes per occupied bucket. The representation is
-    // chosen by exact byte cost — a pure function of content — so equal
-    // filters serialize identically under any merge ordering.
-    var dense = 0
-    var nnz = 0
-    var sparseCost = 0
-    var prev = -1
-    var b = 0
-    while (b < m) {
-      val c = counts(b)
-      dense += varintLen(c)
-      if (c != 0) {
-        nnz += 1
-        sparseCost += varintLen(b - prev - 1) + varintLen(c)
-        prev = b
-      }
-      b += 1
-    }
-    sparseCost += varintLen(nnz)
-    val sparseMode = sparseCost < dense
-    out.writeByte(if (sparseMode) 1 else 0)
-    if (sparseMode) {
-      writeVarInt(out, nnz)
-      prev = -1
-      b = 0
-      while (b < m) {
-        if (counts(b) != 0) {
-          writeVarInt(out, b - prev - 1)
-          writeVarInt(out, counts(b))
-          prev = b
-        }
-        b += 1
-      }
-    } else {
-      b = 0
-      while (b < m) { writeVarInt(out, counts(b)); b += 1 }
-    }
+    val out = new WireWriter(Ebf.HeaderBytes + 16 + fpBytes)
+      .int(Ebf.MAGIC).int(m0).int(k).int(l0).int(level).int(alphaNum).int(alphaDen)
+      .long(seed).long(n)
+      .cells(numBuckets, 0, signed = false, null)(countAt)
     var acc = 0L
     var accBits = 0
     var i = 0
-    while (i < numPairs) {
-      if (w > 0) {
-        acc |= (sorted(i) & ((1L << w) - 1)) << accBits
-        accBits += w
-        while (accBits >= 8) {
-          out.writeByte((acc & 0xff).toInt)
-          acc >>>= 8
-          accBits -= 8
-        }
+    while (i < numPairs && w > 0) {
+      acc |= (sorted(i) & ((1L << w) - 1)) << accBits
+      accBits += w
+      while (accBits >= 8) {
+        out.byte((acc & 0xff).toInt)
+        acc >>>= 8
+        accBits -= 8
       }
       i += 1
     }
-    if (accBits > 0) out.writeByte((acc & 0xff).toInt)
-    out.flush()
-    bos.toByteArray
+    if (accBits > 0) out.byte((acc & 0xff).toInt)
+    out.toBytes
   }
 
-  def sizeBytes: Int = toBytes.length
+  // Counts section: dense varints, or a sparse (nnz, then
+  // index-delta/count pairs) list when that is byte-cheaper. The web's
+  // long tail makes most per-host filters nearly empty, where the dense
+  // form pays one byte per EMPTY bucket (1 KiB at m0=1024); sparse
+  // costs ~2 bytes per occupied bucket.
+  private def countAt: Int => Long = b => counts(b).toLong
 
-  private def writeVarInt(out: DataOutputStream, v0: Int): Unit = {
-    var v = v0
-    while ((v & ~0x7f) != 0) { out.writeByte((v & 0x7f) | 0x80); v >>>= 7 }
-    out.writeByte(v)
-  }
+  private def fpBytes: Int = ((numPairs.toLong * fpWidth + 7) / 8).toInt
 
-  private def varintLen(v0: Int): Int = {
-    var v = v0
-    var len = 1
-    while ((v & ~0x7f) != 0) { v >>>= 7; len += 1 }
-    len
-  }
+  /** [[toBytes]]`.length`, without the sort or the bytes. */
+  def sizeBytes: Int =
+    Ebf.HeaderBytes + WireWriter.cellsSize(numBuckets, 0, signed = false, null)(countAt) + fpBytes
 
   def copyOf: Ebf = Ebf.fromBytes(toBytes)
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == Ebf.MAGIC, f"bad EBF magic 0x$magic%08x")
-    m0 = in.getInt(); k = in.getInt(); l0 = in.getInt(); level = in.getInt()
-    alphaNum = in.getInt(); alphaDen = in.getInt()
-    seed = in.getLong(); n = in.getLong()
-    val m = m0 << level
-    counts = new Array[Int](m)
-    var total = 0
-    val mode = in.get()
-    var b = 0
-    if (mode == 1.toByte) {
-      val nnz = Ebf.readVarInt(in)
-      var prev = -1
-      var e = 0
-      while (e < nnz) {
-        val bkt = prev + 1 + Ebf.readVarInt(in)
-        counts(bkt) = Ebf.readVarInt(in)
-        total += counts(bkt)
-        prev = bkt
-        e += 1
-      }
-    } else {
-      require(mode == 0.toByte, s"bad EBF wire mode $mode")
-      while (b < m) { counts(b) = Ebf.readVarInt(in); total += counts(b); b += 1 }
-    }
-    pairs = new Array[Long](math.max(64, total))
-    numPairs = total
-    val w = l0 - level
-    var acc = 0L
-    var accBits = 0
-    var idx = 0
-    b = 0
-    while (b < m) {
-      val c = counts(b)
-      var j = 0
-      while (j < c) {
-        var f = 0L
-        if (w > 0) {
-          while (accBits < w) {
-            acc |= (in.get() & 0xffL) << accBits
-            accBits += 8
-          }
-          f = acc & ((1L << w) - 1)
-          acc >>>= w
-          accBits -= w
-        }
-        pairs(idx) = (b.toLong << 32) | f
-        idx += 1
-        j += 1
-      }
-      b += 1
-    }
-  }
 }
 
 object Ebf {
@@ -483,21 +374,68 @@ object Ebf {
             seed: Long = DefaultSeed): Ebf =
     new Ebf(m0, k, l0, alphaNum, alphaDen, seed)
 
-  def fromBytes(bytes: Array[Byte]): Ebf = {
-    val e = new Ebf(1, 1, 0, 1, 8, 0L)
-    e.loadBytes(bytes)
-    e
-  }
+  private val HeaderBytes = 44
 
-  private[core] def readVarInt(in: ByteBuffer): Int = {
-    var v = 0
-    var shift = 0
-    var b = in.get()
-    while ((b & 0x80) != 0) {
-      v |= (b & 0x7f) << shift
-      shift += 7
-      b = in.get()
+  /** Decodes [[Ebf.toBytes]]. The header goes through the constructor;
+    * the body must then be exactly what that header implies: a level
+    * the filter can reach, `k * n` stored fingerprints, and their packed
+    * bytes to the end of the blob, all checked before the bucket array
+    * is allocated. */
+  def fromBytes(bytes: Array[Byte]): Ebf = {
+    val in = WireReader(bytes, "EBF2", MAGIC)
+    val m0 = in.int("m0"); val k = in.int("k"); val l0 = in.int("l0"); val level = in.int("level")
+    val alphaNum = in.int("alphaNum"); val alphaDen = in.int("alphaDen")
+    val seed = in.long("seed"); val n = in.long("n")
+    val e = in.construct(new Ebf(m0, k, l0, alphaNum, alphaDen, seed))
+    in.check(level >= 0 && level <= e.maxLevel, "level", s"$level outside [0, ${e.maxLevel}]")
+    in.check(n >= 0 && n <= Int.MaxValue / k, "n", s"$n keys exceed the pair capacity")
+    val m = m0 << level
+    // (bucket << 32 | count) per occupied bucket, ascending
+    var occupied: Array[Long] = null
+    var nOccupied = 0
+    var total = 0L
+    in.cells("counts", m, 0, signed = false)(bound => occupied = new Array[Long](bound)) { (b, c) =>
+      if (c <= 0 || c > Int.MaxValue) in.fail("counts", s"bad count $c")
+      occupied(nOccupied) = (b.toLong << 32) | c
+      nOccupied += 1
+      total += c
     }
-    v | ((b & 0x7f) << shift)
+    in.check(total == n * k, "counts", s"$total fingerprints stored for $n keys of $k")
+    val w = l0 - level
+    in.check(in.remaining == (total * w + 7) / 8, "fingerprints",
+      s"${in.remaining} bytes for $total fingerprints of $w bits")
+    e.level = level
+    e.n = n
+    e.counts = new Array[Int](m)
+    e.pairs = new Array[Long](math.max(64, total.toInt))
+    e.numPairs = total.toInt
+    var acc = 0L
+    var accBits = 0
+    var idx = 0
+    var o = 0
+    while (o < nOccupied) {
+      val b = occupied(o) >>> 32
+      val c = (occupied(o) & 0xffffffffL).toInt
+      e.counts(b.toInt) = c
+      var j = 0
+      while (j < c) {
+        var f = 0L
+        if (w > 0) {
+          while (accBits < w) {
+            acc |= in.byte("fingerprints").toLong << accBits
+            accBits += 8
+          }
+          f = acc & ((1L << w) - 1)
+          acc >>>= w
+          accBits -= w
+        }
+        e.pairs(idx) = (b << 32) | f
+        idx += 1
+        j += 1
+      }
+      o += 1
+    }
+    in.finish()
+    e
   }
 }

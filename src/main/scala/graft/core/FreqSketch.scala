@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
 /** Misra-Gries heavy-hitter ("frequent items") sketch over strings,
@@ -48,8 +47,8 @@ import java.nio.charset.StandardCharsets
   * kernel on the 4.8G-token flagship phase (the per-token `substring`
   * + `java.lang.Long` churn was the entire gap); this form closes it.
   */
-final class FreqSketch(var capacity: Int,
-                       var seed: Long = FreqSketch.HashSeed) extends BytesSerde {
+final class FreqSketch(val capacity: Int,
+                       val seed: Long = FreqSketch.HashSeed) extends BytesSerde {
   require(capacity >= 1 && capacity <= 1000000,
     s"capacity must be in [1, 1000000], got $capacity")
 
@@ -286,57 +285,10 @@ final class FreqSketch(var capacity: Int,
   def toBytes: Array[Byte] = {
     // canonical: entries sorted by item (byte-stable serde round trips)
     val items = topK(used).sortBy(_._1)
-    var payload = 0
-    items.foreach { case (s, _) => payload += 4 + s.getBytes(StandardCharsets.UTF_8).length + 8 }
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + 8 + 8 + 4 + payload)
-    buf.putInt(FreqSketch.MAGIC)
-    buf.putInt(capacity)
-    buf.putLong(seed)
-    buf.putLong(n)
-    buf.putLong(maxError)
-    buf.putInt(items.size)
-    items.foreach { case (s, c) =>
-      val b = s.getBytes(StandardCharsets.UTF_8)
-      buf.putInt(b.length)
-      buf.put(b)
-      buf.putLong(c)
-    }
-    buf.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    // FQS1 is also accepted: the round-4 build that introduced the
-    // seed field shipped it briefly under the old magic, so
-    // structurally-seeded FQS1 blobs exist (ADVICE r4). Layout is
-    // identical from the capacity field on, and misparse of a genuine
-    // pre-seed FQS1 blob is impossible in practice: it would read the
-    // old n as seed and land sz on garbage, failing the buffer-bounds
-    // reads below loudly rather than silently.
-    require(magic == FreqSketch.MAGIC || magic == FreqSketch.MagicV1,
-      f"bad FreqSketch magic 0x$magic%08x")
-    capacity = in.getInt()
-    seed = in.getLong()
-    n = in.getLong()
-    maxError = in.getLong()
-    val sz = in.getInt()
-    tableBits = FreqSketch.bitsFor(math.max(capacity, sz))
-    keys = new Array[Array[Byte]](1 << tableBits)
-    hashes = new Array[Long](1 << tableBits)
-    cnts = new Array[Long](1 << tableBits)
-    used = 0
-    var i = 0
-    while (i < sz) {
-      val len = in.getInt()
-      val b = new Array[Byte](len)
-      in.get(b)
-      val c = in.getLong()
-      val h = hashRange(b, 0, b.length)
-      val slot = slotOf(h, b, 0, b.length)
-      insertAt(slot, b, h, c)
-      i += 1
-    }
+    val out = new WireWriter()
+      .int(FreqSketch.MAGIC).int(capacity).long(seed).long(n).long(maxError).int(items.size)
+    items.foreach { case (s, c) => out.blob(s.getBytes(StandardCharsets.UTF_8)).long(c) }
+    out.toBytes
   }
 }
 
@@ -345,7 +297,7 @@ object FreqSketch {
   // field between capacity and n)
   val MagicV1: Int = 0x46515331 // "FQS1" — accepted on read for the
   // interim blobs that carried the seeded layout under the old magic
-  // (see loadBytes); always written as FQS2
+  // (see fromBytes); always written as FQS2
   val DefaultCapacity = 256
   private[core] val HashSeed = 0x4d47534bL // "MGSK"
 
@@ -367,8 +319,33 @@ object FreqSketch {
     new FreqSketch(capacity, seed)
 
   def fromBytes(bytes: Array[Byte]): FreqSketch = {
-    val f = new FreqSketch(1)
-    f.loadBytes(bytes)
+    val in = new WireReader(bytes, "FQS2")
+    // FQS1 is also accepted: the round-4 build that introduced the
+    // seed field shipped it briefly under the old magic, so
+    // structurally-seeded FQS1 blobs exist (ADVICE r4). Layout is
+    // identical from the capacity field on, and a genuine pre-seed FQS1
+    // blob cannot misparse silently: it would read the old n as seed
+    // and land the item count on garbage, which the checked reads
+    // reject.
+    val magic = in.int("magic")
+    in.check(magic == MAGIC || magic == MagicV1, "magic", f"0x$magic%08x")
+    val capacity = in.int("capacity"); val seed = in.long("seed")
+    val f = in.construct(new FreqSketch(capacity, seed))
+    f.n = in.long("n")
+    f.maxError = in.long("maxError")
+    val sz = in.count("items", in.int("items"), 12)
+    in.check(sz <= capacity, "items", s"$sz items above capacity $capacity")
+    var i = 0
+    while (i < sz) {
+      val b = in.blob("items")
+      val c = in.long("items")
+      val h = f.hashRange(b, 0, b.length)
+      val slot = f.slotOf(h, b, 0, b.length)
+      if (f.keys(slot) != null || c <= 0) in.fail("items", s"duplicate or non-positive item $i")
+      f.insertAt(slot, b, h, c)
+      i += 1
+    }
+    in.finish()
     f
   }
 }

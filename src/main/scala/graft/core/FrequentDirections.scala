@@ -44,8 +44,14 @@ import breeze.linalg.{svd, DenseMatrix}
 final class Fd private (val ell: Int, val dim: Int) extends Serializable {
 
   private val cap = 2 * ell
-  private var buf: Array[Double] = new Array[Double](cap * dim)
+  // grown on demand up to `cap` rows, so a decoded blob allocates only
+  // the rows it carries
+  private var buf: Array[Double] = Array.emptyDoubleArray
   private var nR: Int = 0
+
+  /** Room for one more row (the caller compacts first at `cap`). */
+  private def room(): Unit =
+    if (buf.length == nR * dim) buf = java.util.Arrays.copyOf(buf, math.min(cap, math.max(4, 2 * nR)) * dim)
   var count: Long = 0L
   var frobSq: Double = 0.0
 
@@ -54,6 +60,7 @@ final class Fd private (val ell: Int, val dim: Int) extends Serializable {
   def insert(v: Array[Double]): Unit = {
     require(v.length == dim, s"expected dim $dim, got ${v.length}")
     if (nR == cap) compact()
+    room()
     System.arraycopy(v, 0, buf, nR * dim, dim)
     nR += 1
     count += 1L
@@ -76,6 +83,7 @@ final class Fd private (val ell: Int, val dim: Int) extends Serializable {
     var r = 0
     while (r < o.nR) {
       if (nR == cap) compact()
+      room()
       System.arraycopy(o.buf, r * dim, buf, nR * dim, dim)
       nR += 1
       r += 1
@@ -144,17 +152,12 @@ final class Fd private (val ell: Int, val dim: Int) extends Serializable {
   def errBound: Double = frobSq / ell
 
   def toBytes: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 4 + 4 + 4 + 8 + 8 + nR * dim * 8)
-    bb.putInt(Fd.Magic)
-    bb.putInt(ell)
-    bb.putInt(dim)
-    bb.putInt(nR)
-    bb.putLong(count)
-    bb.putDouble(frobSq)
+    val out = new WireWriter(32 + nR * dim * 8)
+      .int(Fd.Magic).int(ell).int(dim).int(nR).long(count).double(frobSq)
     var i = 0
     val n = nR * dim
-    while (i < n) { bb.putDouble(buf(i)); i += 1 }
-    bb.array()
+    while (i < n) { out.double(buf(i)); i += 1 }
+    out.toBytes
   }
 }
 
@@ -170,26 +173,18 @@ object Fd {
   }
 
   def fromBytes(bytes: Array[Byte]): Fd = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val magic = bb.getInt()
-    require(magic == Magic, f"bad FD magic 0x$magic%08x")
-    val ell = bb.getInt()
-    val dim = bb.getInt()
-    val nR = bb.getInt()
-    val fd = empty(ell, dim)
-    fd.count = bb.getLong()
-    fd.frobSq = bb.getDouble()
-    require(nR >= 0 && nR <= 2 * ell, s"corrupt FD row count $nR")
-    var r = 0
-    val row = new Array[Double](dim)
-    while (r < nR) {
-      var c = 0
-      while (c < dim) { row(c) = bb.getDouble(); c += 1 }
-      // append raw (bypass insert: frobSq/count already restored)
-      System.arraycopy(row, 0, fd.buf, r * dim, dim)
-      r += 1
-    }
+    val in = WireReader(bytes, "FDS1", Magic)
+    val ell = in.int("ell"); val dim = in.int("dim")
+    val fd = in.construct(empty(ell, dim))
+    val nR = in.int("rows")
+    fd.count = in.long("count")
+    fd.frobSq = in.double("frobSq")
+    in.check(nR >= 0 && nR <= 2 * ell, "rows", s"$nR rows above 2*ell")
+    val n = in.count("rows", nR.toLong * dim, 8)
+    // raw rows (not insert: frobSq/count are already restored)
+    fd.buf = Array.fill(n)(in.double("rows"))
     fd.nR = nR
+    in.finish()
     fd
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
-
 /** HyperLogLog cardinality sketch, implemented from the published
   * algorithm (Flajolet et al. 2007; small-range linear-counting
   * correction per the HLL++ paper, Heule et al. 2013).
@@ -29,9 +27,9 @@ import java.nio.ByteBuffer
   *
   * Merge = register-wise max: associative, commutative, idempotent.
   * Standard error sigma = 1.04 / sqrt(2^p); p = 12 (4 KiB dense) gives
-  * ~1.6%. Header fields are vars solely for [[BytesSerde]] re-init.
+  * ~1.6%.
   */
-final class Hll(var p: Int, var seed: Long) extends BytesSerde {
+final class Hll(val p: Int, val seed: Long) extends BytesSerde {
   require(p >= 4 && p <= 18, s"p must be in [4,18], got $p")
 
   @inline def m: Int = 1 << p
@@ -184,22 +182,16 @@ final class Hll(var p: Int, var seed: Long) extends BytesSerde {
     // content (NOT of the in-memory mode), so any merge order and any
     // sparse/dense promotion history yields identical bytes
     val sparse = 4 + 4 * k < m
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + 1 + (if (sparse) 4 + 4 * k else m))
-    buf.putInt(Hll.MAGIC)
-    buf.putInt(p)
-    buf.putLong(seed)
-    buf.put(if (sparse) 1.toByte else 0.toByte)
+    val out = new WireWriter(4 + 4 + 8 + 1 + (if (sparse) 4 + 4 * k else m))
+      .int(Hll.MAGIC).int(p).long(seed).byte(if (sparse) 1 else 0)
+    // sparse entries: 3-byte register index, 1-byte rho, index-ascending
+    def entry(idx: Int, rho: Int): Unit =
+      out.byte(idx >>> 16).byte(idx >>> 8).byte(idx).byte(rho)
     if (sparse) {
-      buf.putInt(k)
+      out.int(k)
       if (regs != null) {
         var i = 0
-        while (i < m) { // index-ascending: deterministic entry order
-          if (regs(i) != 0) {
-            buf.put((i >>> 16).toByte).put((i >>> 8).toByte).put(i.toByte)
-            buf.put(regs(i))
-          }
-          i += 1
-        }
+        while (i < m) { if (regs(i) != 0) entry(i, regs(i)); i += 1 }
       } else {
         // sparse memory is unordered: sort packed entries — idx is in
         // the high bits, so numeric order IS index order
@@ -212,60 +204,13 @@ final class Hll(var p: Int, var seed: Long) extends BytesSerde {
         }
         java.util.Arrays.sort(packed)
         i = 0
-        while (i < k) {
-          val idx = packed(i) >>> 7
-          buf.put((idx >>> 16).toByte).put((idx >>> 8).toByte).put(idx.toByte)
-          buf.put((packed(i) & 0x7f).toByte)
-          i += 1
-        }
+        while (i < k) { entry(packed(i) >>> 7, packed(i) & 0x7f); i += 1 }
       }
     } else {
       if (regs == null) promote() // cannot happen (k <= m/8 implies sparse wire) — safety
-      buf.put(regs)
+      out.bytes(regs)
     }
-    buf.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == Hll.MAGIC, f"bad HLL magic 0x$magic%08x")
-    p = in.getInt()
-    seed = in.getLong()
-    val mode = in.get()
-    if (mode == 1.toByte) {
-      val k = in.getInt()
-      if (k <= denseThreshold) {
-        // stay sparse in memory: capacity for load < 1/2
-        var cap = Hll.SparseInitSlots
-        while (cap < 2 * k + 2) cap <<= 1
-        regs = null
-        tab = new Array[Int](cap)
-        tabCount = 0
-        var e = 0
-        while (e < k) {
-          val idx = ((in.get() & 0xff) << 16) | ((in.get() & 0xff) << 8) | (in.get() & 0xff)
-          sparseUpd(idx, in.get() & 0x7f)
-          e += 1
-        }
-      } else {
-        regs = new Array[Byte](m)
-        tab = null
-        tabCount = 0
-        var e = 0
-        while (e < k) {
-          val idx = ((in.get() & 0xff) << 16) | ((in.get() & 0xff) << 8) | (in.get() & 0xff)
-          regs(idx) = in.get()
-          e += 1
-        }
-      }
-    } else {
-      require(mode == 0.toByte, s"bad HLL wire mode $mode")
-      regs = new Array[Byte](m)
-      tab = null
-      tabCount = 0
-      in.get(regs)
-    }
+    out.toBytes
   }
 
   /** Test hook: force dense-memory mode regardless of fill. */
@@ -284,9 +229,35 @@ object Hll {
 
   def empty(p: Int = DefaultP, seed: Long = DefaultSeed): Hll = new Hll(p, seed)
 
+  /** Decodes [[Hll.toBytes]]; a sparse list small enough to stay below
+    * the promotion threshold stays sparse in memory. */
   def fromBytes(bytes: Array[Byte]): Hll = {
-    val h = new Hll(4, 0L)
-    h.loadBytes(bytes)
+    val in = WireReader(bytes, "HLL2", MAGIC)
+    val p = in.int("p"); val seed = in.long("seed")
+    val h = in.construct(new Hll(p, seed))
+    in.byte("mode") match {
+      case 1 =>
+        val k = in.count("entries", in.int("entries"), 4)
+        if (k > h.denseThreshold) h.promote()
+        else {
+          var cap = SparseInitSlots // capacity for load < 1/2
+          while (cap < 2 * k + 2) cap <<= 1
+          h.tab = new Array[Int](cap)
+        }
+        var e = 0
+        while (e < k) {
+          val idx = (in.byte("entries") << 16) | (in.byte("entries") << 8) | in.byte("entries")
+          val rho = in.byte("entries")
+          if (idx >= h.m || rho < 1 || rho > 65 - p) in.fail("entries", s"bad register $idx = $rho")
+          if (h.regs != null) h.regs(idx) = rho.toByte else h.sparseUpd(idx, rho)
+          e += 1
+        }
+      case 0 =>
+        h.promote()
+        h.regs = in.bytes("registers", h.m)
+      case mode => in.fail("mode", s"bad mode $mode")
+    }
+    in.finish()
     h
   }
 }

@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
 import scala.collection.mutable.ArrayBuffer
 
 /** Growable primitive double buffer: `ArrayBuffer[Double]` boxes every
@@ -49,7 +48,7 @@ private[core] final class DBuf(initCap: Int) extends Serializable {
   * differs) — unlike EBF/HLL/CMS, and exactly as with the reference
   * DataSketches implementation.
   */
-final class Kll(var k: Int) extends BytesSerde {
+final class Kll(val k: Int) extends BytesSerde {
   require(k >= 8 && k <= 65535, s"k must be in [8,65535], got $k")
 
   private[core] var levels: ArrayBuffer[DBuf] = ArrayBuffer(new DBuf(16))
@@ -207,52 +206,23 @@ final class Kll(var k: Int) extends BytesSerde {
     * with pmf=false; k=200 -> ~1.33%). */
   def normalizedRankError: Double = 1.969 / math.pow(k.toDouble, 0.9433)
 
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == Kll.MAGIC, f"bad KLL magic 0x$magic%08x")
-    k = in.getInt()
-    n = in.getLong()
-    minV = in.getDouble()
-    maxV = in.getDouble()
-    flips = in.getLong()
-    val numLevels = in.getInt()
-    levels = ArrayBuffer.fill(numLevels)(new DBuf(8))
-    var total = 0
-    var l = 0
-    while (l < numLevels) {
-      val c = in.getInt()
-      total += c
-      var i = 0
-      while (i < c) { levels(l).add(in.getDouble()); i += 1 }
-      l += 1
-    }
-    numItems = total
-  }
-
   def toBytes: Array[Byte] = {
     var total = 0
     var l = 0
     while (l < levels.length) { total += levels(l).size; l += 1 }
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + 8 + 8 + 8 + 4 + 4 * levels.length + 8 * total)
-    buf.putInt(Kll.MAGIC)
-    buf.putInt(k)
-    buf.putLong(n)
-    buf.putDouble(minV)
-    buf.putDouble(maxV)
-    buf.putLong(flips)
-    buf.putInt(levels.length)
+    val out = new WireWriter(4 + 4 + 8 + 8 + 8 + 8 + 4 + 4 * levels.length + 8 * total)
+      .int(Kll.MAGIC).int(k).long(n).double(minV).double(maxV).long(flips).int(levels.length)
     l = 0
     while (l < levels.length) {
       val lv = levels(l)
-      buf.putInt(lv.size)
+      out.int(lv.size)
       // canonical per-state form: sorted within level (multiset semantics)
       val arr = lv.sortedCopy
       var i = 0
-      while (i < arr.length) { buf.putDouble(arr(i)); i += 1 }
+      while (i < arr.length) { out.double(arr(i)); i += 1 }
       l += 1
     }
-    buf.array()
+    out.toBytes
   }
 }
 
@@ -263,8 +233,25 @@ object Kll {
   def empty(k: Int = DefaultK): Kll = new Kll(k)
 
   def fromBytes(bytes: Array[Byte]): Kll = {
-    val s = new Kll(8)
-    s.loadBytes(bytes)
+    val in = WireReader(bytes, "KLL1", MAGIC)
+    val s = in.construct(new Kll(in.int("k")))
+    s.n = in.long("n")
+    s.minV = in.double("minV")
+    s.maxV = in.double("maxV")
+    s.flips = in.long("flips")
+    // level l holds items of weight 2^l, and n is a Long
+    val numLevels = in.count("levels", in.int("levels"), 4)
+    in.check(numLevels >= 1 && numLevels <= 64 && s.n >= 0, "levels", s"$numLevels levels for n = ${s.n}")
+    s.levels = ArrayBuffer.fill(numLevels)(new DBuf(8))
+    var l = 0
+    while (l < numLevels) {
+      val c = in.count("items", in.int("items"), 8)
+      var i = 0
+      while (i < c) { s.levels(l).add(in.double("items")); i += 1 }
+      s.numItems += c
+      l += 1
+    }
+    in.finish()
     s
   }
 }

@@ -18,7 +18,7 @@ package graft.core
   * and probes become broadcast-joins by shard id; at bench scale the
   * shards are collected and broadcast whole.
   */
-final class ShardedEbf(shardBytes: Array[Array[Byte]], val routeSeed: Long)
+final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val routeSeed: Long)
     extends Serializable {
   require(shardBytes.nonEmpty, "need at least one shard")
 
@@ -80,17 +80,10 @@ final class ShardedEbf(shardBytes: Array[Array[Byte]], val routeSeed: Long)
     * Round-trips exactly (spec-asserted); shard order is positional so
     * equal tables are byte-equal. */
   def toWire: Array[Byte] = {
-    var size = 4 + 8 + 4 + 4 * numShards
-    shardBytes.foreach(b => if (b != null) size += b.length)
-    val bb = java.nio.ByteBuffer.allocate(size)
-    bb.putInt(ShardedEbf.WireMagic)
-    bb.putLong(routeSeed)
-    bb.putInt(numShards)
-    shardBytes.foreach { b =>
-      if (b == null) bb.putInt(-1)
-      else { bb.putInt(b.length); bb.put(b) }
-    }
-    bb.array()
+    val out = new WireWriter(16 + 4 * numShards + totalSizeBytes.toInt)
+      .int(ShardedEbf.WireMagic).long(routeSeed).int(numShards)
+    shardBytes.foreach(out.blob)
+    out.toBytes
   }
 }
 
@@ -99,24 +92,15 @@ object ShardedEbf {
   /** "SEB1" — sharded-table wire magic. */
   val WireMagic: Int = 0x53454231
 
+  /** Decodes [[ShardedEbf.toWire]]; each shard's own bytes are checked
+    * when [[ShardedEbf.shard]] first decodes it. */
   def fromWire(bytes: Array[Byte]): ShardedEbf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val magic = bb.getInt()
-    require(magic == WireMagic, f"bad ShardedEbf wire magic 0x$magic%08x")
-    val seed = bb.getLong()
-    val n = bb.getInt()
-    require(n >= 1 && n <= (1 << 24), s"implausible shard count $n")
-    val arr = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt()
-      if (len >= 0) {
-        val b = new Array[Byte](len)
-        bb.get(b)
-        arr(i) = b
-      }
-      i += 1
-    }
+    val in = WireReader(bytes, "SEB1", WireMagic)
+    val seed = in.long("routeSeed")
+    val n = in.count("shards", in.int("shards"), 4)
+    in.check(n >= 1, "shards", "no shards")
+    val arr = Array.fill(n)(in.blob("shards", nullable = true))
+    in.finish()
     new ShardedEbf(arr, seed)
   }
 

@@ -12,13 +12,17 @@ package graft.core
   * removes the object churn entirely. Aggregation buffers never take
   * this path: `graft.plans.SketchAgg` serializes them as the same wire
   * bytes itself.
+  *
+  * The wire bytes are the one serialization format. Every sketch
+  * writes them through [[WireWriter]] and reads them back in its
+  * companion's `fromBytes`, which parses through the checked
+  * [[WireReader]] and hands the decoded header to the sketch's
+  * constructor, so the constructor's checks run on wire input too.
+  * Corrupt bytes fail with an `IllegalArgumentException` naming the
+  * format and the field.
   */
 trait BytesSerde extends Serializable {
   def toBytes: Array[Byte]
-
-  /** Re-initialize this instance from the wire format (the kernels'
-    * `fromBytes` build on it). */
-  private[core] def loadBytes(bytes: Array[Byte]): Unit
 
   /** Java serialization proxy: ship wire bytes, rebuild on read. */
   protected def writeReplace(): AnyRef = new SerializedSketch(toBytes)
@@ -31,11 +35,8 @@ final class SerializedSketch(val bytes: Array[Byte]) extends Serializable {
 
 object SketchSerde {
   /** Deserialize any sketch by its magic header. */
-  def fromBytes(bytes: Array[Byte]): AnyRef = {
-    require(bytes.length >= 4, "truncated sketch")
-    val magic = ((bytes(0) & 0xff) << 24) | ((bytes(1) & 0xff) << 16) |
-      ((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff)
-    magic match {
+  def fromBytes(bytes: Array[Byte]): AnyRef =
+    new WireReader(bytes, "sketch").int("magic") match {
       case Ebf.MAGIC     => Ebf.fromBytes(bytes)
       case Hll.MAGIC     => Hll.fromBytes(bytes)
       case Cms.MAGIC     => Cms.fromBytes(bytes)
@@ -48,5 +49,4 @@ object SketchSerde {
       case DecayedCms.Magic  => DecayedCms.fromBytes(bytes)
       case m             => throw new IllegalArgumentException(f"unknown sketch magic 0x$m%08x")
     }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
-
 /** t-digest quantile sketch, implemented from the published merging
   * t-digest algorithm (Dunning & Ertl, "Computing Extremely Accurate
   * Quantiles Using t-Digests"). Centroids (mean, weight) kept sorted by
@@ -17,7 +15,7 @@ import java.nio.ByteBuffer
   * arbitrary merge orderings is validated in the test suite against the
   * DataSketches TDigestDouble oracle.
   */
-final class TDigest(var compression: Double) extends BytesSerde {
+final class TDigest(val compression: Double) extends BytesSerde {
   require(compression >= 10 && compression <= 10000,
     s"compression must be in [10,10000], got $compression")
 
@@ -212,34 +210,11 @@ final class TDigest(var compression: Double) extends BytesSerde {
 
   def toBytes: Array[Byte] = {
     mergeBuffer()
-    val buf = ByteBuffer.allocate(4 + 8 + 8 + 8 + 8 + 4 + 16 * numCentroids)
-    buf.putInt(TDigest.MAGIC)
-    buf.putDouble(compression)
-    buf.putLong(n)
-    buf.putDouble(minV)
-    buf.putDouble(maxV)
-    buf.putInt(numCentroids)
+    val out = new WireWriter(4 + 8 + 8 + 8 + 8 + 4 + 16 * numCentroids)
+      .int(TDigest.MAGIC).double(compression).long(n).double(minV).double(maxV).int(numCentroids)
     var i = 0
-    while (i < numCentroids) { buf.putDouble(means(i)); buf.putLong(weights(i)); i += 1 }
-    buf.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == TDigest.MAGIC, f"bad TDigest magic 0x$magic%08x")
-    compression = in.getDouble()
-    n = in.getLong()
-    minV = in.getDouble()
-    maxV = in.getDouble()
-    numCentroids = in.getInt()
-    means = new Array[Double](numCentroids)
-    weights = new Array[Long](numCentroids)
-    bufMeans = new Array[Double](16)
-    bufWeights = new Array[Long](16)
-    bufSize = 0
-    var i = 0
-    while (i < numCentroids) { means(i) = in.getDouble(); weights(i) = in.getLong(); i += 1 }
+    while (i < numCentroids) { out.double(means(i)).long(weights(i)); i += 1 }
+    out.toBytes
   }
 }
 
@@ -250,8 +225,19 @@ object TDigest {
   def empty(compression: Double = DefaultCompression): TDigest = new TDigest(compression)
 
   def fromBytes(bytes: Array[Byte]): TDigest = {
-    val t = new TDigest(10.0)
-    t.loadBytes(bytes)
+    val in = WireReader(bytes, "TDG1", MAGIC)
+    val t = in.construct(new TDigest(in.double("compression")))
+    t.n = in.long("n")
+    t.minV = in.double("minV")
+    t.maxV = in.double("maxV")
+    val c = in.count("centroids", in.int("centroids"), 16)
+    in.check(c <= t.maxCentroids, "centroids", s"$c centroids above ${t.maxCentroids}")
+    t.means = new Array[Double](c)
+    t.weights = new Array[Long](c)
+    t.numCentroids = c
+    var i = 0
+    while (i < c) { t.means(i) = in.double("centroids"); t.weights(i) = in.long("centroids"); i += 1 }
+    in.finish()
     t
   }
 }

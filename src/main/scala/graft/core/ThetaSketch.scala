@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.ByteBuffer
-
 /** KMV ("k minimum values") / theta sketch: distinct counting WITH set
   * algebra — the capability HLL lacks. An HLL union is exact, but
   * intersection/difference cardinalities can only be had by
@@ -28,7 +26,7 @@ import java.nio.ByteBuffer
   * Relative standard error ~ 1 / sqrt(k - 2) for the full case
   * (~2.2% at the default k = 2048).
   */
-final class Theta(var k: Int, var seed: Long) extends BytesSerde {
+final class Theta(val k: Int, val seed: Long) extends BytesSerde {
   require(k >= 8, s"k must be >= 8, got $k")
 
   // canonical retained set: sign-FLIPPED hashes, sorted ascending
@@ -93,12 +91,14 @@ final class Theta(var k: Int, var seed: Long) extends BytesSerde {
     else (k - 1).toDouble / theta
   }
 
+  /** Keep-k-smallest of the union, in place. A k mismatch resolves to
+    * the smaller (the coarser sketch bounds what the union can claim):
+    * against a coarser `other` the result is a new sketch at its k, and
+    * this one is left as it was. */
   def merge(other: Theta): Theta = {
     require(seed == other.seed, "cannot merge theta sketches with different seeds")
-    // k mismatch resolves to the smaller (the coarser sketch bounds
-    // what the union can claim); same-k is the common path
+    if (other.k < k) return Theta.fromBytes(other.toBytes).merge(this)
     compact(); other.compact()
-    if (other.k < k) k = other.k
     var i = 0
     while (i < other.vals.length) {
       if (scratch == null) scratch = new Array[Long](256)
@@ -151,29 +151,11 @@ final class Theta(var k: Int, var seed: Long) extends BytesSerde {
 
   def toBytes: Array[Byte] = {
     compact()
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + 4 + 8 * vals.length)
-    buf.putInt(Theta.MAGIC)
-    buf.putInt(k)
-    buf.putLong(seed)
-    buf.putInt(vals.length)
+    val out = new WireWriter(4 + 4 + 8 + 4 + 8 * vals.length)
+      .int(Theta.MAGIC).int(k).long(seed).int(vals.length)
     var i = 0
-    while (i < vals.length) { buf.putLong(vals(i) ^ Long.MinValue); i += 1 }
-    buf.array()
-  }
-
-  private[core] def loadBytes(bytes: Array[Byte]): Unit = {
-    val in = ByteBuffer.wrap(bytes)
-    val magic = in.getInt()
-    require(magic == Theta.MAGIC, f"bad theta magic 0x$magic%08x")
-    k = in.getInt()
-    seed = in.getLong()
-    val n = in.getInt()
-    // re-initializes a placeholder instance (fromBytes): init every field
-    vals = new Array[Long](n)
-    scratch = null
-    sUsed = 0
-    var i = 0
-    while (i < n) { vals(i) = in.getLong() ^ Long.MinValue; i += 1 }
+    while (i < vals.length) { out.long(vals(i) ^ Long.MinValue); i += 1 }
+    out.toBytes
   }
 }
 
@@ -185,8 +167,19 @@ object Theta {
   def empty(k: Int = DefaultK, seed: Long = DefaultSeed): Theta = new Theta(k, seed)
 
   def fromBytes(bytes: Array[Byte]): Theta = {
-    val t = new Theta(8, 0L)
-    t.loadBytes(bytes)
+    val in = WireReader(bytes, "THS1", MAGIC)
+    val k = in.int("k"); val seed = in.long("seed")
+    val t = in.construct(new Theta(k, seed))
+    val n = in.count("retained", in.int("retained"), 8)
+    in.check(n <= k, "retained", s"$n hashes above k = $k")
+    t.vals = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      t.vals(i) = in.long("retained") ^ Long.MinValue
+      if (i > 0 && t.vals(i) <= t.vals(i - 1)) in.fail("retained", "hashes not strictly ascending")
+      i += 1
+    }
+    in.finish()
     t
   }
 }

@@ -104,7 +104,7 @@ object Graft {
     })
     r.register("ebf_info", (sk: Array[Byte]) => {
       val e = SketchCache.ebf(sk)
-      EbfInfo(e.level, e.numBuckets, e.n, e.bitsSet, e.fpWidth, e.fprBound, sk.length)
+      EbfInfo(e.level, e.numBuckets, e.n, e.bitsSet, e.fpWidth, e.fprBound, e.sizeBytes)
     })
     r.register("ebf_fpr", (sk: Array[Byte]) => SketchCache.ebf(sk).fprBound)
     // deterministic shard router (same function drives groupBy-side

@@ -138,24 +138,10 @@ case class EbfShardedWireAgg(left: Expression, right: Expression, numShards: Int
   override def serialize(buffer: Array[Array[Byte]]): Array[Byte] = wire(buffer)
 
   private def wire(buffer: Array[Array[Byte]]): Array[Byte] =
-    graft.core.ShardedEbf.fromShardBytes(
-      buffer.zipWithIndex.collect { case (b, i) if b != null => (i, b) }.toSeq,
-      numShards).toWire
+    new graft.core.ShardedEbf(buffer, graft.core.ShardedEbf.DefaultRouteSeed).toWire
 
-  override def deserialize(bytes: Array[Byte]): Array[Array[Byte]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    require(bb.getInt() == graft.core.ShardedEbf.WireMagic, "bad sharded wire")
-    bb.getLong() // route seed (always DefaultRouteSeed here)
-    val n = bb.getInt()
-    val arr = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt()
-      if (len >= 0) { val b = new Array[Byte](len); bb.get(b); arr(i) = b }
-      i += 1
-    }
-    arr
-  }
+  override def deserialize(bytes: Array[Byte]): Array[Array[Byte]] =
+    graft.core.ShardedEbf.fromWire(bytes).shardBytes
 
   override def withNewMutableAggBufferOffset(newOffset: Int): EbfShardedWireAgg =
     copy(mutableAggBufferOffset = newOffset)

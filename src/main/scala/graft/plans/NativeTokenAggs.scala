@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{Cms, Ebf, FreqSketch, Hash128, Hll, Kll, TDigest}
+import graft.core.{Cms, Ebf, FreqSketch, Hash128, Hll, Kll, TDigest, WireReader, WireWriter}
 import graft.functions.Graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,27 +11,6 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Length-prefixed concatenation of several sketch blobs: the wire
-  * format of the multi-sketch buffers below. */
-private[plans] object Chunks {
-  def write(chunks: Array[Array[Byte]]): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(4 * chunks.length + chunks.map(_.length).sum)
-    chunks.foreach { c => buf.putInt(c.length); buf.put(c) }
-    buf.array()
-  }
-
-  def read(buf: java.nio.ByteBuffer): Array[Byte] = {
-    val c = new Array[Byte](buf.getInt())
-    buf.get(c)
-    c
-  }
-
-  def read(bytes: Array[Byte], n: Int): Array[Array[Byte]] = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(n)(read(buf))
-  }
-}
 
 /** The four flagship per-host sketches, built as one buffer. */
 final class HostSketches(val ebf: Ebf, val hll: Hll, val kll: Kll, val td: TDigest) {
@@ -48,7 +27,7 @@ object HostSketches {
       TDigest.fromBytes(b(3)))
 
   val wire: Wire[HostSketches] =
-    Wire(b => of(Chunks.read(b, 4)), h => Chunks.write(h.sketches), _ merge _)
+    Wire(b => of(WireReader.blobs(b, "host sketches", 4)), h => WireWriter.blobs(h.sketches), _ merge _)
 
   val dataType: StructType = StructType(Seq("ebf", "hll", "kll", "td")
     .map(StructField(_, BinaryType, nullable = false)))
@@ -184,8 +163,8 @@ object BatchedTokenBuf {
     new BatchedTokenBuf(Cms.fromBytes(cms), FreqSketch.fromBytes(topk), batch)
 
   val wire: Wire[BatchedTokenBuf] = Wire(
-    b => { val c = Chunks.read(b, 2); of(c(0), c(1)) },
-    t => Chunks.write(t.sketches), _ merge _)
+    b => { val c = WireReader.blobs(b, "token sketches", 2); of(c(0), c(1)) },
+    t => WireWriter.blobs(t.sketches), _ merge _)
 
   /** struct<cms, topk> as [[PerLangTokenSketchesAgg]] emits it. */
   val dataType: StructType = StructType(Seq(
@@ -308,15 +287,15 @@ case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
       entries += e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       entries ++= e.getValue.sketches
     }
-    Chunks.write(entries.toArray)
+    WireWriter.blobs(entries.toArray)
   }
 
   override def deserialize(bytes: Array[Byte]): java.util.TreeMap[String, BatchedTokenBuf] = {
     val m = createAggregationBuffer()
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    while (buf.hasRemaining) {
-      val lang = new String(Chunks.read(buf), java.nio.charset.StandardCharsets.UTF_8)
-      m.put(lang, BatchedTokenBuf.of(Chunks.read(buf), Chunks.read(buf), batch))
+    val in = new WireReader(bytes, "per-lang token sketches")
+    while (in.remaining > 0) {
+      val lang = new String(in.blob("lang"), java.nio.charset.StandardCharsets.UTF_8)
+      m.put(lang, BatchedTokenBuf.of(in.blob("cms"), in.blob("topk"), batch))
     }
     m
   }

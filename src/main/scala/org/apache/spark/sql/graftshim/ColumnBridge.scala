@@ -55,3 +55,10 @@ trait StringInputCast extends InputCasts {
   override protected def castTargets: Seq[org.apache.spark.sql.types.DataType] =
     Seq(org.apache.spark.sql.types.StringType)
 }
+
+/** The listener bus, which Spark keeps package-private. */
+object ListenerBus {
+  /** Blocks until every event posted so far has reached every listener,
+    * so counters read afterwards include the last task of the last job. */
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}

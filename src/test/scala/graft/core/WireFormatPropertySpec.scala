@@ -108,6 +108,7 @@ class WireFormatPropertySpec extends AnyFunSuite {
         i += 1
       }
       val bytes = direct.toBytes
+      assert(direct.sizeBytes == bytes.length, "sizeBytes")
       val back = Ebf.fromBytes(bytes)
       assert(java.util.Arrays.equals(bytes, back.toBytes), "round-trip")
       assert(back.n == direct.n && back.level == direct.level)
