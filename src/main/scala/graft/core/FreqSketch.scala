@@ -299,7 +299,7 @@ object FreqSketch {
   // interim blobs that carried the seeded layout under the old magic
   // (see fromBytes); always written as FQS2
   val DefaultCapacity = 256
-  private[core] val HashSeed = 0x4d47534bL // "MGSK"
+  val HashSeed = 0x4d47534bL // "MGSK"
 
   /** Table bits so `entries` fits at load factor <= 0.5 (min 16 slots). */
   private[core] def bitsFor(entries: Int): Int =

@@ -1,63 +1,22 @@
 package graft.plans
 
 import graft.core.Hll
-import graft.functions.Graft
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native HLL distinct-count aggregate — `TypedImperativeAggregate[Hll]`
-  * emitting the ESTIMATE directly as a long, so it is type-compatible
-  * with `Count` and an optimizer rule can swap it in post-analysis
-  * (`hll_agg`, a [[SketchAgg]], emits sketch bytes instead).
-  *
-  * Inserts hash exactly like `hll_agg` over the same string key
-  * ([[Utf8Key]], same default p and seed), so the rewritten estimate
-  * EQUALS `hll_estimate(hll_agg(key))` — the equivalence the driver
-  * gate asserts. Buffers serialize through the HLL wire format (sparse
-  * below m/8); merge is the register max, associative under any
-  * partial-aggregation tree.
-  */
-case class HllNdvAggExpr(child: Expression, p: Int = Hll.DefaultP,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Hll] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string key, got ${child.dataType.simpleString}")
-
+/** `COUNT(DISTINCT x)` rewritten: `hll_agg`'s sketch over the key at
+  * the default p and seed, its estimate as a non-null bigint, so it is
+  * type-compatible with `Count`. The rewritten estimate therefore EQUALS
+  * `hll_estimate(hll_agg(key))`, the equivalence the driver gate
+  * asserts. */
+case object HllEstimateKind extends ResultKind[Hll](HllKind()) {
+  def name: String = "hll_ndv_agg"
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
-  override def prettyName: String = "hll_ndv_agg"
-
-  override def createAggregationBuffer(): Hll = Hll.empty(p, Graft.SketchSeed)
-
-  override def update(buffer: Hll, input: InternalRow): Hll = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.addHash(Utf8Key.hash(v.asInstanceOf[UTF8String], Graft.SketchSeed).h1)
-    buffer
-  }
-
-  override def merge(buffer: Hll, other: Hll): Hll = buffer.merge(other)
-  override def eval(buffer: Hll): Any = buffer.estimate
-  override def serialize(buffer: Hll): Array[Byte] = buffer.toBytes
-  override def deserialize(storageFormat: Array[Byte]): Hll = Hll.fromBytes(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllNdvAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllNdvAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllNdvAggExpr =
-    copy(child = newChild)
+  override def result(s: Hll): Any = s.estimate
 }
 
 /** O64 — opt-in `COUNT(DISTINCT x)` -> HLL estimate rewrite.
@@ -99,7 +58,6 @@ object ApproxDistinctRewriteRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString("spark.graft.approxDistinct.enabled", "false") != "true") return plan
-    val p = conf.getConfString("spark.graft.approxDistinct.p", Hll.DefaultP.toString).toInt
     plan.transformUp {
       case agg: Aggregate if !agg.child.isStreaming =>
         agg.transformExpressions {
@@ -109,7 +67,7 @@ object ApproxDistinctRewriteRule extends Rule[LogicalPlan] {
               else Cast(c, StringType, Some(conf.sessionLocalTimeZone))
             // copy preserves resultId, so downstream attribute
             // references to the count keep resolving
-            ae.copy(aggregateFunction = HllNdvAggExpr(key, p), isDistinct = false)
+            ae.copy(aggregateFunction = SketchAgg(Seq(key), HllEstimateKind), isDistinct = false)
         }
     }
   }

@@ -2,21 +2,15 @@ package graft.plans
 
 import graft.core.FreqSketch
 import graft.functions.Graft
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Mode, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Mode}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Misra-Gries mode aggregate — `TypedImperativeAggregate
-  * [FreqSketch]` emitting the top-1 key, type-compatible with `Mode`
-  * over a string child so [[ApproxModeRewriteRule]] can swap it in
-  * post-analysis (the [[HllNdvAggExpr]] pattern).
-  *
+/** `mode(x)` rewritten: `topk_agg`'s Misra-Gries sketch over the string
+  * value (seeded with the library seed), its top-1 item as the result,
+  * NULL on empty input, type-compatible with `Mode` over a string child.
   * EXACT whenever the group's distinct-value count fits the sketch
   * capacity (no decrement ever fires — all counts are true counts);
   * beyond capacity it is the classic heavy-hitter approximation
@@ -24,45 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * its frequency exceeds that). Ties resolve deterministically to the
   * smallest value (FreqSketch.topK order), where exact `Mode` with no
   * WITHIN GROUP ordering returns an arbitrary one. */
-case class ModeAggExpr(child: Expression, capacity: Int = FreqSketch.DefaultCapacity,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[FreqSketch] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string child, got ${child.dataType.simpleString}")
-
+case class MgModeKind(capacity: Int)
+    extends ResultKind[FreqSketch](TopKKind(capacity, Graft.SketchSeed)) {
+  def name: String = "mg_mode_agg"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "mg_mode_agg"
-
-  override def createAggregationBuffer(): FreqSketch =
-    FreqSketch.empty(capacity, Graft.SketchSeed)
-
-  override def update(buffer: FreqSketch, input: InternalRow): FreqSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: FreqSketch, other: FreqSketch): FreqSketch =
-    buffer.merge(other)
-
-  override def eval(buffer: FreqSketch): Any =
-    buffer.topK(1).headOption.map(t => UTF8String.fromString(t._1)).orNull
-
-  override def serialize(buffer: FreqSketch): Array[Byte] = buffer.toBytes
-  override def deserialize(storageFormat: Array[Byte]): FreqSketch =
-    FreqSketch.fromBytes(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ModeAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ModeAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ModeAggExpr =
-    copy(child = newChild)
+  override def result(s: FreqSketch): Any =
+    s.topK(1).headOption.map(t => UTF8String.fromString(t._1)).orNull
 }
 
 /** O76 — opt-in `mode(x)` -> Misra-Gries rewrite (the third member of
@@ -103,7 +64,7 @@ object ApproxModeRewriteRule extends Rule[LogicalPlan] {
           case ae @ AggregateExpression(Mode(c, _, _, None), _, false, _, _)
               if c.deterministic && !c.foldable && c.dataType == StringType =>
             // copy preserves resultId — downstream references keep resolving
-            ae.copy(aggregateFunction = ModeAggExpr(c, capacity))
+            ae.copy(aggregateFunction = SketchAgg(Seq(c), MgModeKind(capacity)))
         }
     }
   }

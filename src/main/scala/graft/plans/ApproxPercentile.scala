@@ -1,74 +1,31 @@
 package graft.plans
 
 import graft.core.Kll
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile, PercentileDisc, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Percentile, PercentileDisc}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Native KLL quantile aggregate — `TypedImperativeAggregate[Kll]`
-  * emitting the quantile ESTIMATE(s) directly, type-compatible with
-  * `Percentile`'s result (double, or array<double> for the array
-  * form), so [[ApproxPercentileRewriteRule]] can swap it in
-  * post-analysis (the [[HllNdvAggExpr]] pattern).
-  *
-  * Inserts exactly like `kll_agg` over the same double value (same
-  * default k, same deterministic alternating-offset compaction), so
-  * the estimate carries the library's published single-rank error
-  * eps ~= 1.969/k^0.9433 (~1.55% at the default k=200) under any
-  * merge tree. Buffers serialize through the KLL wire format; merge
-  * is level-wise concat + compaction, associative in the rank-error
-  * bound (KLL is deliberately NOT byte-stable across merge trees —
-  * the same posture as every kll_* gate in this repo).
-  */
-case class KllQuantileAggExpr(child: Expression, percentages: Seq[Double],
-                              returnArray: Boolean, k: Int = Kll.DefaultK,
-                              mutableAggBufferOffset: Int = 0,
-                              inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Kll] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a double value, got ${child.dataType.simpleString}")
-
-  // must mirror Percentile's result type exactly: the rewrite keeps the
-  // AggregateExpression's resultId, so downstream attribute references
-  // resolve against this type
+/** `percentile`/`percentile_disc` rewritten: `kll_agg`'s sketch over the
+  * value at the default k, the quantile ESTIMATE(s) as its result, NULL
+  * on empty input like `Percentile`. The type must mirror `Percentile`'s
+  * exactly (double, or array<double> for the array form), since the
+  * rewrite keeps the AggregateExpression's resultId. The estimate
+  * carries the library's published single-rank error
+  * eps ~= 1.969/k^0.9433 (~1.55% at the default k=200) under any merge
+  * tree; KLL is deliberately NOT byte-stable across merge trees (the
+  * same posture as every kll_* gate in this repo). */
+case class KllQuantileKind(percentages: Seq[Double], returnArray: Boolean)
+    extends ResultKind[Kll](KllKind()) {
+  def name: String = "kll_quantile_agg"
   override def dataType: DataType =
     if (returnArray) ArrayType(DoubleType, containsNull = false) else DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "kll_quantile_agg"
-
-  override def createAggregationBuffer(): Kll = Kll.empty(k)
-
-  override def update(buffer: Kll, input: InternalRow): Kll = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(buffer: Kll, other: Kll): Kll = buffer.merge(other)
-
-  override def eval(buffer: Kll): Any =
-    if (buffer.n == 0L) null // Percentile returns null on empty input
-    else if (returnArray) new GenericArrayData(percentages.map(buffer.quantile).toArray)
-    else buffer.quantile(percentages.head)
-
-  override def serialize(buffer: Kll): Array[Byte] = buffer.toBytes
-  override def deserialize(storageFormat: Array[Byte]): Kll = Kll.fromBytes(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllQuantileAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllQuantileAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllQuantileAggExpr =
-    copy(child = newChild)
+  override def result(s: Kll): Any =
+    if (s.n == 0L) null
+    else if (returnArray) new GenericArrayData(percentages.map(s.quantile).toArray)
+    else s.quantile(percentages.head)
 }
 
 /** O71 — opt-in exact `percentile(x, p)` / `median(x)` -> KLL estimate
@@ -86,7 +43,7 @@ case class KllQuantileAggExpr(child: Expression, percentages: Seq[Double],
   * answer changes (estimate, and order-statistic semantics rather than
   * `Percentile`'s linear interpolation between adjacent values), so
   * the rule is opt-in per query: `SET spark.graft.approxPercentile
-  * .enabled=true`, optionally `spark.graft.approxPercentile.k`.
+  * .enabled=true`.
   *
   * Fires only on non-distinct `Percentile` with unit frequency,
   * foldable percentage(s), a deterministic non-foldable NUMERIC child,
@@ -141,7 +98,6 @@ object ApproxPercentileRewriteRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (conf.getConfString("spark.graft.approxPercentile.enabled", "false") != "true") return plan
-    val k = conf.getConfString("spark.graft.approxPercentile.k", Kll.DefaultK.toString).toInt
     plan.transformUp {
       case agg: Aggregate if !agg.child.isStreaming =>
         agg.transformExpressions {
@@ -155,7 +111,7 @@ object ApproxPercentileRewriteRule extends Rule[LogicalPlan] {
                 val value = if (p.child.dataType == DoubleType) p.child
                   else Cast(p.child, DoubleType)
                 // copy preserves resultId — downstream references keep resolving
-                ae.copy(aggregateFunction = KllQuantileAggExpr(value, pcts, isArray, k))
+                ae.copy(aggregateFunction = SketchAgg(Seq(value), KllQuantileKind(pcts, isArray)))
               case None => ae
             }
           // percentile_disc: the closest exact twin of the KLL estimate —
@@ -174,7 +130,7 @@ object ApproxPercentileRewriteRule extends Rule[LogicalPlan] {
                 val value = if (p.child.dataType == DoubleType) p.child
                   else Cast(p.child, DoubleType)
                 ae.copy(aggregateFunction =
-                  KllQuantileAggExpr(value, pcts, returnArray = false, k))
+                  SketchAgg(Seq(value), KllQuantileKind(pcts, returnArray = false)))
               case _ => ae
             }
         }

@@ -3,67 +3,30 @@ package graft.plans
 import graft.core.FreqSketch
 import graft.functions.Graft
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, Inline, IntegerLiteral, Literal, NamedExpression, SortOrder}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Inline, IntegerLiteral, Literal, NamedExpression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort, Generate}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.expressions.Descending
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Misra-Gries top-k pairs aggregate: a grouping-less
-  * `TypedImperativeAggregate[FreqSketch]` emitting the retained
-  * (key, count) entries as `array<struct<key,cnt>>` in the library's
-  * canonical heavy-hitter order (count desc, key asc) — the build side
-  * of [[ApproxTopKRewriteRule]], which `Inline`s the array back into
-  * rows under the query's own Sort/Limit. */
-case class TopKPairsAggExpr(child: Expression,
-                            capacity: Int = FreqSketch.DefaultCapacity,
-                            mutableAggBufferOffset: Int = 0,
-                            inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[FreqSketch] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string child, got ${child.dataType.simpleString}")
-
+/** The build side of [[ApproxTopKRewriteRule]]: `topk_agg`'s
+  * Misra-Gries sketch over the string key (seeded with the library
+  * seed), its retained (key, count) entries as `array<struct<key,cnt>>`
+  * in the library's canonical heavy-hitter order (count desc, key asc),
+  * which the rule `Inline`s back into rows under the query's own
+  * Sort/Limit. */
+case class MgPairsKind(capacity: Int)
+    extends ResultKind[FreqSketch](TopKKind(capacity, Graft.SketchSeed)) {
+  def name: String = "mg_topk_pairs_agg"
   override def dataType: DataType = ApproxTopKRewriteRule.PairsType
   override def nullable: Boolean = false
-  override def prettyName: String = "mg_topk_pairs_agg"
-
-  override def createAggregationBuffer(): FreqSketch =
-    FreqSketch.empty(capacity, Graft.SketchSeed)
-
-  override def update(buffer: FreqSketch, input: InternalRow): FreqSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: FreqSketch, other: FreqSketch): FreqSketch =
-    buffer.merge(other)
-
-  override def eval(buffer: FreqSketch): Any = {
-    val entries = buffer.topK(capacity)
-    new GenericArrayData(entries.map { case (k, c) =>
+  override def result(s: FreqSketch): Any =
+    new GenericArrayData(s.topK(capacity).map { case (k, c) =>
       InternalRow(UTF8String.fromString(k), c)
     }.toArray[Any])
-  }
-
-  override def serialize(buffer: FreqSketch): Array[Byte] = buffer.toBytes
-  override def deserialize(storageFormat: Array[Byte]): FreqSketch =
-    FreqSketch.fromBytes(storageFormat)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKPairsAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKPairsAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): TopKPairsAggExpr =
-    copy(child = newChild)
 }
 
 /** O80 — opt-in top-k-by-count -> Misra-Gries rewrite, the fourth
@@ -163,7 +126,7 @@ object ApproxTopKRewriteRule extends Rule[LogicalPlan] {
           sortMatches(order, keyOut, cntOut)
         }.map { case (keyOut, cntOut) =>
           val pairs = Alias(AggregateExpression(
-            TopKPairsAggExpr(agg.groupingExpressions.head, capacity),
+            SketchAgg(Seq(agg.groupingExpressions.head), MgPairsKind(capacity)),
             Complete, isDistinct = false), "__mg_topk_pairs")()
           val global = Aggregate(Nil, Seq(pairs), agg.child)
           val keyGen = AttributeReference("key", StringType, nullable = false)()

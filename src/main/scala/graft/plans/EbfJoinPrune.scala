@@ -1,11 +1,11 @@
 package graft.plans
 
-import graft.core.Ebf
+import graft.core.{Ebf, ShardedEbf}
 import graft.functions.SketchCache
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Alias, BinaryExpression, Cast, EqualTo, Expression, PredicateHelper, ScalarSubquery}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
@@ -79,77 +79,42 @@ case class EbfProbeExpr(left: Expression, right: Expression) extends BinaryExpre
 }
 
 /** Collapses a `(shard, sk)` shard table into ONE ShardedEbf wire blob
-  * (`ShardedEbf.toWire`) — the final, cheap step of the rule's
-  * BEYOND-broadcast-window rewrite: the heavy per-shard merges happen
-  * in the grouped [[EbfBuildAggExpr]] BELOW this aggregate (numShards
-  * parallel reducers — the single-reducer merge tail is exactly why the
-  * monolithic form stops at `maxBuildBytes`), and this one-row
-  * aggregate only concatenates numShards finished sketch blobs.
-  * Duplicate shard rows (impossible from the grouped child, kept safe
-  * anyway) merge EBF-wise. */
-case class EbfShardedWireAgg(left: Expression, right: Expression, numShards: Int,
-                             mutableAggBufferOffset: Int = 0,
-                             inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Array[Byte]]]
-    with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (IntegerType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (int shard, binary sketch), got " +
-          s"${l.simpleString(10)} and ${r.simpleString(10)}")
-    }
-
-  override def dataType: DataType = BinaryType
+  * (`ShardedEbf.toWire`, also the partial buffer's wire) — the final,
+  * cheap step of the rule's BEYOND-broadcast-window rewrite: the heavy
+  * per-shard merges happen in the grouped [[EbfBuildAggExpr]] BELOW this
+  * aggregate (numShards parallel reducers — the single-reducer merge
+  * tail is exactly why the monolithic form stops at `maxBuildBytes`),
+  * and this one-row aggregate only concatenates numShards finished
+  * sketch blobs. A null shard or sketch skips the row; duplicate shard
+  * rows (impossible from the grouped child, kept safe anyway) merge
+  * EBF-wise. */
+case class EbfShardedWireKind(numShards: Int)
+    extends SketchKind[Array[Array[Byte]]](EbfShardedWireKind.wire) {
+  def name: String = "ebf_sharded_wire_agg"
+  def inputTypes: Seq[DataType] = Seq(IntegerType, BinaryType)
   override def nullable: Boolean = false
-  override def prettyName: String = "ebf_sharded_wire_agg"
 
-  override def createAggregationBuffer(): Array[Array[Byte]] =
-    new Array[Array[Byte]](numShards)
-
-  override def update(buffer: Array[Array[Byte]], input: InternalRow): Array[Array[Byte]] = {
-    val s = left.eval(input)
-    val sk = right.eval(input)
-    if (s != null && sk != null) {
-      val idx = s.asInstanceOf[Int]
-      require(idx >= 0 && idx < numShards, s"shard id $idx out of [0, $numShards)")
-      buffer(idx) = mergeBytes(buffer(idx), sk.asInstanceOf[Array[Byte]])
+  def empty(): Array[Array[Byte]] = new Array[Array[Byte]](numShards)
+  def update(s: Array[Array[Byte]], row: InternalRow, in: Array[Expression]): Array[Array[Byte]] = {
+    val shard = in(0).eval(row)
+    val sk = in(1).eval(row)
+    if (shard != null && sk != null) {
+      val i = shard.asInstanceOf[Int]
+      require(i >= 0 && i < numShards, s"shard id $i out of [0, $numShards)")
+      s(i) = EbfShardedWireKind.mergeBytes(s(i), sk.asInstanceOf[Array[Byte]])
     }
-    buffer
+    s
   }
+}
 
-  override def merge(buffer: Array[Array[Byte]],
-                     other: Array[Array[Byte]]): Array[Array[Byte]] = {
-    var i = 0
-    while (i < numShards) {
-      buffer(i) = mergeBytes(buffer(i), other(i))
-      i += 1
-    }
-    buffer
-  }
-
+object EbfShardedWireKind {
   private def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a == null) b
-    else if (b == null) a
-    else Ebf.fromBytes(a).merge(Ebf.fromBytes(b)).toBytes
+    if (a == null) b else if (b == null) a else Ebf.fromBytes(a).merge(Ebf.fromBytes(b)).toBytes
 
-  override def eval(buffer: Array[Array[Byte]]): Any = wire(buffer)
-  override def serialize(buffer: Array[Array[Byte]]): Array[Byte] = wire(buffer)
-
-  private def wire(buffer: Array[Array[Byte]]): Array[Byte] =
-    new graft.core.ShardedEbf(buffer, graft.core.ShardedEbf.DefaultRouteSeed).toWire
-
-  override def deserialize(bytes: Array[Byte]): Array[Array[Byte]] =
-    graft.core.ShardedEbf.fromWire(bytes).shardBytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): EbfShardedWireAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): EbfShardedWireAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): EbfShardedWireAgg =
-    copy(left = newLeft, right = newRight)
+  val wire: Wire[Array[Array[Byte]]] = Wire(
+    ShardedEbf.fromWire(_).shardBytes,
+    new ShardedEbf(_, ShardedEbf.DefaultRouteSeed).toWire,
+    (a, b) => { var i = 0; while (i < a.length) { a(i) = mergeBytes(a(i), b(i)); i += 1 }; a })
 }
 
 /** Membership probe against a ShardedEbf wire blob (the sharded twin of
@@ -233,7 +198,7 @@ case class EbfShardedBlobProbeExpr(left: Expression, right: Expression)
   *    sized by the scalar-subquery channel's per-task blob
   *    duplication, see the arithmetic in apply()) for the SHARDED form
   *    (`spark.graft.joinPrune.shardedShards`-way parallel per-shard
-  *    builds under a one-row wire concat — see [[EbfShardedWireAgg]]);
+  *    builds under a one-row wire concat — see [[EbfShardedWireKind]]);
   *    and fact side >= build *
   *    `spark.graft.joinPrune.minSizeRatio` (default 2.0) — pruning a
   *    side smaller than the filter build cannot pay for itself;
@@ -404,7 +369,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
       val perShard = Aggregate(Seq(shardExpr), Seq(shardAlias, skAlias), buildProj)
       val blob = Alias(
         AggregateExpression(
-          EbfShardedWireAgg(shardAlias.toAttribute, skAlias.toAttribute, numShards),
+          SketchAgg(Seq(shardAlias.toAttribute, skAlias.toAttribute), EbfShardedWireKind(numShards)),
           Complete, isDistinct = false),
         "graft_prune_sharded_ebf")()
       val subq = ScalarSubquery(Aggregate(Nil, Seq(blob), perShard))

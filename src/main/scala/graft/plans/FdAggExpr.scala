@@ -3,77 +3,45 @@ package graft.plans
 import graft.core.Fd
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Native Frequent-Directions aggregate: `array<float|double>` vectors
-  * in, FD wire blob out ([[graft.core.Fd]]). Same zero-boxing
-  * TypedImperativeAggregate shape as [[VecSumAgg]] / the O37 sketch
-  * aggregates: elements are read straight off the `ArrayData` into the
-  * sketch's insert scratch, no Seq materialization, and map-side
-  * partial aggregation merges `2*ell x dim` buffers instead of rows.
+/** Frequent Directions over `array<double>` vectors, FD wire blob out
+  * ([[graft.core.Fd]]). An `array<float>` input arrives through the
+  * implicit cast; float -> double is exact, so the blob is the one the
+  * float values give. Elements are read straight off the `ArrayData`
+  * into the sketch's insert scratch, no Seq materialization, and
+  * map-side partial aggregation merges `2*ell x dim` buffers instead of
+  * rows. A null vector, or one whose length is not `dim`, skips the row.
   *
   * No byte-stable merge exists for FD (see [[graft.core.Fd]] scaladoc),
   * so unlike the hash sketches there is no equivalence gate on the
   * blob — gates check the spectral bound, which every merge order
   * satisfies.
   */
-case class FdAggExpr(child: Expression, ell: Int, dim: Int,
-                     mutableAggBufferOffset: Int = 0,
-                     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Fd] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${t.simpleString(10)}")
-  }
-  // lazy: child is unresolved at construction time
-  private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def dataType: DataType = BinaryType
+case class FdKind(ell: Int, dim: Int) extends SketchKind[Fd](Wire.fd) {
+  def name: String = "graft_fd_agg"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def nullable: Boolean = false
-  override def prettyName: String = "graft_fd_agg"
 
   @transient private lazy val scratch = new Array[Double](dim)
 
-  override def createAggregationBuffer(): Fd = Fd.empty(ell, dim)
-
-  override def update(buffer: Fd, input: InternalRow): Fd = {
-    val v = child.eval(input)
+  def empty(): Fd = Fd.empty(ell, dim)
+  def update(s: Fd, row: InternalRow, in: Array[Expression]): Fd = {
+    val v = in(0).eval(row)
     if (v != null) {
       val a = v.asInstanceOf[ArrayData]
       if (a.numElements() == dim) {
         var i = 0
-        if (isFloat) while (i < dim) { scratch(i) = a.getFloat(i).toDouble; i += 1 }
-        else while (i < dim) { scratch(i) = a.getDouble(i); i += 1 }
-        buffer.insert(scratch)
+        while (i < dim) { scratch(i) = a.getDouble(i); i += 1 }
+        s.insert(scratch)
       }
     }
-    buffer
+    s
   }
-
-  override def merge(buffer: Fd, other: Fd): Fd = buffer.merge(other)
-  override def eval(buffer: Fd): Any = buffer.toBytes
-  override def serialize(buffer: Fd): Array[Byte] = buffer.toBytes
-  override def deserialize(bytes: Array[Byte]): Fd = Fd.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): FdAggExpr =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): FdAggExpr =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): FdAggExpr =
-    copy(child = newChild)
 }
 
 object FdAggExpr {
-  def column(v: Column, ell: Int, dim: Int): Column =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(AggregateExpression(
-      FdAggExpr(org.apache.spark.sql.graftshim.ColumnBridge.expression(v), ell, dim),
-      Complete, isDistinct = false))
+  def column(v: Column, ell: Int, dim: Int): Column = SketchAgg.column(Seq(v), FdKind(ell, dim))
 }

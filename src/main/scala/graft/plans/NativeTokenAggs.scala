@@ -4,13 +4,13 @@ import graft.core.{Cms, Ebf, FreqSketch, Hash128, Hll, Kll, TDigest, WireReader,
 import graft.functions.Graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** The four flagship per-host sketches, built as one buffer. */
 final class HostSketches(val ebf: Ebf, val hll: Hll, val kll: Kll, val td: TDigest) {
@@ -166,7 +166,7 @@ object BatchedTokenBuf {
     b => { val c = WireReader.blobs(b, "token sketches", 2); of(c(0), c(1)) },
     t => WireWriter.blobs(t.sketches), _ merge _)
 
-  /** struct<cms, topk> as [[PerLangTokenSketchesAgg]] emits it. */
+  /** struct<cms, topk> as [[PerLangKind]] emits it. */
   val dataType: StructType = StructType(Seq(
     StructField("cms", BinaryType, nullable = false),
     StructField("topk", BinaryType, nullable = false)))
@@ -193,16 +193,16 @@ case class CmsTopkTokensKind(depth: Int = Cms.DefaultDepth, width: Int = Cms.Def
   }
 }
 
-/** Per-LANG token sketches in ONE un-grouped aggregate: the buffer is a
-  * small open map lang -> [[BatchedTokenBuf]], so the aggregation can
-  * run as a side-channel metric on a flowing dataset
-  * (`Dataset.observe` / CollectMetrics — which only admits global
-  * aggregates) while the main plan continues. This is what lets the
-  * flagship compute phase 2 DURING phase 1's scan instead of paying the
-  * 13 GB text scan twice (PLAN16). Output: map<lang,
-  * struct<cms binary, topk binary>>, entries emitted in lang order.
-  * `batchTokens` is the CMS flush batch (at least 1; any value gives the
-  * same bytes).
+/** Per-LANG token sketches in ONE un-grouped aggregate over
+  * (lang, text): the buffer is a small map lang -> [[BatchedTokenBuf]],
+  * so the aggregation can run as a side-channel metric on a flowing
+  * dataset (`Dataset.observe` / CollectMetrics — which only admits
+  * global aggregates) while the main plan continues. This is what lets
+  * the flagship compute phase 2 DURING phase 1's scan instead of paying
+  * the 13 GB text scan twice (PLAN16). Output: map<lang, struct<cms
+  * binary, topk binary>>, entries in lang order. A null lang or text
+  * skips the row. `batchTokens` is the CMS flush batch (at least 1; any
+  * value gives the same bytes).
   *
   * Merge-order caveat (same as everywhere in the library): CMS bytes
   * are identical under any merge order; Misra-Gries heavy hitters are
@@ -211,109 +211,63 @@ case class CmsTopkTokensKind(depth: Int = Cms.DefaultDepth, width: Int = Cms.Def
   * grouped spec therefore compares CMS bytes exactly and MG at the
   * heavy-hitter level.
   */
-case class PerLangTokenSketchesAgg(left: Expression, right: Expression,
-                                   depth: Int, width: Int, capacity: Int, seed: Long,
-                                   batchTokens: Int = 0,
-                                   mutableAggBufferOffset: Int = 0,
-                                   inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeMap[String, BatchedTokenBuf]]
-    with BinaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (lang string, text string), got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+case class PerLangKind(depth: Int, width: Int, capacity: Int, seed: Long, batchTokens: Int)
+    extends SketchKind[PerLangKind.Bufs](PerLangKind.wire) {
+  def name: String = "per_lang_token_sketches_agg"
+  def inputTypes: Seq[DataType] = Seq(StringType, StringType)
   override def dataType: DataType =
     MapType(StringType, BatchedTokenBuf.dataType, valueContainsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "per_lang_token_sketches_agg"
 
-  // TreeMap: deterministic lang-ordered iteration for serialize/eval
-  override def createAggregationBuffer(): java.util.TreeMap[String, BatchedTokenBuf] =
-    new java.util.TreeMap[String, BatchedTokenBuf]()
-
-  private def batch: Int = math.max(1, batchTokens)
-
-  override def update(m: java.util.TreeMap[String, BatchedTokenBuf],
-                      input: InternalRow): java.util.TreeMap[String, BatchedTokenBuf] = {
-    val l = left.eval(input)
+  def empty(): PerLangKind.Bufs = new PerLangKind.Bufs()
+  def update(m: PerLangKind.Bufs, row: InternalRow, in: Array[Expression]): PerLangKind.Bufs = {
+    val l = in(0).eval(row)
     if (l == null) return m
-    val v = right.eval(input)
+    val v = in(1).eval(row)
     if (v == null) return m
-    val lang = l.asInstanceOf[UTF8String].toString // tiny, interned-ish per lang
+    val lang = l.asInstanceOf[UTF8String].toString
     var b = m.get(lang)
     if (b == null) {
-      b = BatchedTokenBuf.empty(depth, width, capacity, seed, batch)
+      b = BatchedTokenBuf.empty(depth, width, capacity, seed, math.max(1, batchTokens))
       m.put(lang, b)
     }
     b.addTokens(Utf8Key.bytes(v.asInstanceOf[UTF8String]))
     m
   }
 
-  override def merge(a: java.util.TreeMap[String, BatchedTokenBuf],
-                     b: java.util.TreeMap[String, BatchedTokenBuf]): java.util.TreeMap[String, BatchedTokenBuf] = {
-    val it = b.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val mine = a.get(e.getKey)
-      if (mine == null) a.put(e.getKey, e.getValue) else mine.merge(e.getValue)
-    }
-    a
+  override def result(m: PerLangKind.Bufs): Any = {
+    val langs = m.keySet.asScala.toArray
+    ArrayBasedMapData(langs.map(UTF8String.fromString),
+      langs.map(l => InternalRow.fromSeq(m.get(l).sketches.toSeq)))
   }
+}
 
-  override def eval(m: java.util.TreeMap[String, BatchedTokenBuf]): Any = {
-    val n = m.size()
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    val it = m.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      keys(i) = UTF8String.fromString(e.getKey)
-      vals(i) = InternalRow.fromSeq(e.getValue.sketches.toSeq)
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
-  }
+object PerLangKind {
+  /** TreeMap: deterministic lang order for the wire and the result. */
+  type Bufs = java.util.TreeMap[String, BatchedTokenBuf]
 
-  override def serialize(m: java.util.TreeMap[String, BatchedTokenBuf]): Array[Byte] = {
-    val entries = new scala.collection.mutable.ArrayBuffer[Array[Byte]]
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      entries += e.getKey.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      entries ++= e.getValue.sketches
-    }
-    WireWriter.blobs(entries.toArray)
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[String, BatchedTokenBuf] = {
-    val m = createAggregationBuffer()
-    val in = new WireReader(bytes, "per-lang token sketches")
-    while (in.remaining > 0) {
-      val lang = new String(in.blob("lang"), java.nio.charset.StandardCharsets.UTF_8)
-      m.put(lang, BatchedTokenBuf.of(in.blob("cms"), in.blob("topk"), batch))
-    }
-    m
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): PerLangTokenSketchesAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): PerLangTokenSketchesAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): PerLangTokenSketchesAgg =
-    copy(left = newLeft, right = newRight)
+  /** (lang, cms, topk) blob triples in lang order. */
+  val wire: Wire[Bufs] = Wire(
+    bytes => {
+      val m = new Bufs()
+      val in = new WireReader(bytes, "per-lang token sketches")
+      while (in.remaining > 0) {
+        val lang = new String(in.blob("lang"), StandardCharsets.UTF_8)
+        m.put(lang, BatchedTokenBuf.of(in.blob("cms"), in.blob("topk")))
+      }
+      m
+    },
+    m => WireWriter.blobs(m.asScala.toArray.flatMap { case (lang, b) =>
+      lang.getBytes(StandardCharsets.UTF_8) +: b.sketches
+    }),
+    (a, b) => {
+      b.forEach((lang, buf) => a.merge(lang, buf, (x, y) => x.merge(y)))
+      a
+    })
 }
 
 object PerLangTokenSketchesAgg {
   def column(lang: Column, text: Column, depth: Int, width: Int, capacity: Int,
              seed: Long, batchTokens: Int = 0): Column =
-    ColumnBridge.column(AggregateExpression(
-      PerLangTokenSketchesAgg(ColumnBridge.expression(lang), ColumnBridge.expression(text),
-        depth, width, capacity, seed, batchTokens),
-      Complete, isDistinct = false))
+    SketchAgg.column(Seq(lang, text), PerLangKind(depth, width, capacity, seed, batchTokens))
 }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.graftshim.{ColumnBridge, FunctionShim, InputCasts}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.reflect.{ClassTag, classTag}
+
 /** The monoid of one sketch type over its wire format: the only
   * serialization the aggregates use, for partial buffers and results
   * alike. */
@@ -27,14 +29,19 @@ object Wire {
   val td: Wire[TDigest] = Wire(TDigest.fromBytes, _.toBytes, _ merge _)
   val freq: Wire[FreqSketch] = Wire(FreqSketch.fromBytes, _.toBytes, _ merge _)
   val sample: Wire[BottomKSample] = Wire(BottomKSample.fromBytes, _.toBytes, _ merge _)
+  val fd: Wire[Fd] = Wire(Fd.fromBytes, _.toBytes, _ merge _)
+
+  /** The monoid of a kind, which may override its wire's. */
+  def of[S <: AnyRef](k: SketchKind[S]): Wire[S] = Wire(k.fromBytes, k.toBytes, k.merge)
 }
 
-/** What [[SketchAgg]] needs to know about one sketch aggregate: its SQL
-  * name, the types its inputs are implicitly cast to, a fresh buffer,
-  * how one input row updates it, and the wire monoid. The result is the
-  * sketch bytes unless a multi-sketch kind overrides [[result]] with a
-  * struct of blobs (and [[fromResult]] with its inverse, which the
-  * merge kind reads).
+/** What [[SketchAgg]] needs to know about one aggregate: its SQL name,
+  * the types its inputs are implicitly cast to, a fresh buffer, how one
+  * input row updates it, and the wire monoid. The result is the sketch
+  * bytes unless a kind overrides [[result]] (with [[dataType]] and
+  * [[nullable]]): a multi-sketch kind returns a struct of blobs (and
+  * overrides [[fromResult]] with its inverse, which the merge kind
+  * reads), a [[ResultKind]] an answer read off the sketch.
   *
   * Update contract: a row whose sketch input is null is skipped, so a
   * null key is never inserted and probes as a miss.
@@ -43,6 +50,7 @@ abstract class SketchKind[S <: AnyRef](wire: Wire[S]) extends Serializable {
   def name: String
   def inputTypes: Seq[DataType]
   def dataType: DataType = BinaryType
+  def nullable: Boolean = true
   /** Fresh buffer; null means "no sketch yet" (see [[MergeKind]]). */
   def empty(): S
   def update(s: S, row: InternalRow, in: Array[Expression]): S
@@ -208,10 +216,10 @@ case class TDigestWeightedKind(compression: Double = TDigest.DefaultCompression)
 }
 
 /** Misra-Gries heavy hitters over string items. */
-case class TopKKind(capacity: Int = FreqSketch.DefaultCapacity)
+case class TopKKind(capacity: Int = FreqSketch.DefaultCapacity, seed: Long = FreqSketch.HashSeed)
     extends StringKind[FreqSketch](Wire.freq) {
   def name: String = "topk_agg"
-  def empty(): FreqSketch = FreqSketch.empty(capacity)
+  def empty(): FreqSketch = FreqSketch.empty(capacity, seed)
   def add(s: FreqSketch, item: UTF8String): Unit = {
     val b = Utf8Key.bytes(item)
     s.addRange(b, 0, b.length, 1L)
@@ -241,9 +249,10 @@ case class SampleKind(k: Int = BottomKSample.DefaultK)
   * multi-sketch kind — into one: the `*_merge_agg` functions, which make
   * the second stage of a salted or checkpointed build a plain SQL
   * aggregate. NULL until the first non-null input arrives; the
-  * parameters come from the incoming sketches, not from `of`. */
-case class MergeKind[S <: AnyRef](of: SketchKind[S])
-    extends SketchKind[S](Wire(of.fromBytes, of.toBytes, of.merge)) {
+  * parameters come from the incoming sketches, not from `of`. An input
+  * that does not decode fails with an `IllegalArgumentException` whose
+  * message starts with this function's name. */
+case class MergeKind[S <: AnyRef](of: SketchKind[S]) extends SketchKind[S](Wire.of(of)) {
   def name: String = of.name.stripSuffix("_agg") + "_merge_agg"
   def inputTypes: Seq[DataType] = Seq(of.dataType)
   override def dataType: DataType = of.dataType
@@ -251,10 +260,26 @@ case class MergeKind[S <: AnyRef](of: SketchKind[S])
   def update(s: S, row: InternalRow, in: Array[Expression]): S = {
     val v = in(0).eval(row)
     if (v == null) s
-    else if (s == null) of.fromResult(v)
-    else of.merge(s, of.fromResult(v))
+    else {
+      val b = try of.fromResult(v) catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$name: ${e.getMessage}", e)
+      }
+      if (s == null) b else of.merge(s, b)
+    }
   }
   override def result(s: S): Any = of.result(s)
+}
+
+/** `of`'s buffer, update and wire under another name and result: what
+  * the approximate-planner rules put in place of an exact aggregate
+  * (`COUNT(DISTINCT)`, `percentile`, `mode`, top-k by count), with the
+  * replaced aggregate's result type and nullability so its `resultId`
+  * keeps resolving. */
+abstract class ResultKind[S <: AnyRef](of: SketchKind[S]) extends SketchKind[S](Wire.of(of)) {
+  def inputTypes: Seq[DataType] = of.inputTypes
+  def empty(): S = of.empty()
+  def update(s: S, row: InternalRow, in: Array[Expression]): S = of.update(s, row, in)
 }
 
 /** The one sketch aggregate. Catalyst plans its partial and final
@@ -276,7 +301,7 @@ case class SketchAgg[S <: AnyRef](children: Seq[Expression], kind: SketchKind[S]
 
   override protected def castTargets: Seq[DataType] = kind.inputTypes
   override def dataType: DataType = kind.dataType
-  override def nullable: Boolean = true
+  override def nullable: Boolean = kind.nullable
   override def prettyName: String = kind.name
   // plan strings read `ebf_agg(url)`, not the kind's parameters
   override protected def flatArguments: Iterator[Any] = children.iterator
@@ -306,6 +331,13 @@ object SketchAgg {
   def column(inputs: Seq[Column], kind: SketchKind[_ <: AnyRef]): Column =
     ColumnBridge.column(AggregateExpression(
       SketchAgg(inputs.map(ColumnBridge.expression), kind), Complete, isDistinct = false))
+
+  /** Whether `e` is a [[SketchAgg]] of a `K` kind: how plan checks see
+    * which aggregate a rule put in. */
+  def isA[K <: SketchKind[_]: ClassTag](e: Expression): Boolean = e match {
+    case a: SketchAgg[_] => classTag[K].runtimeClass.isInstance(a.kind)
+    case _ => false
+  }
 
   /** Every SQL sketch aggregate at its default parameters: 15 builds
     * and 10 merges. */

@@ -1,6 +1,8 @@
 package graft.plans
 
+import graft.core.{WireReader, WireWriter}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -414,68 +416,46 @@ object CosineSimExpr {
   * (partition-local then merge, vs shuffle-arrival order) — both are
   * unspecified-order float sums; centroid low-bit wiggle is within the
   * boundary-sensitivity margin the recall gates already tolerate
-  * (documented at [[graft.similarity.Ivf.trainCentroids]]). */
-case class VecSumAgg(child: Expression, dim: Int,
-                     mutableAggBufferOffset: Int = 0,
-                     inputAggBufferOffset: Int = 0)
-    extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Double]]
-    with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.simpleString(10)}")
-  }
+  * (documented at [[graft.similarity.Ivf.trainCentroids]]). A null
+  * vector skips the row; a null element adds nothing and elements past
+  * `dim` are ignored. */
+case class VecSumKind(dim: Int) extends SketchKind[Array[Double]](VecSumKind.wire(dim)) {
+  def name: String = "graft_vec_sum"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "graft_vec_sum"
 
-  override def createAggregationBuffer(): Array[Double] = new Array[Double](dim + 1)
-
-  override def update(buffer: Array[Double], input: org.apache.spark.sql.catalyst.InternalRow): Array[Double] = {
-    val v = child.eval(input)
+  def empty(): Array[Double] = new Array[Double](dim + 1)
+  def update(s: Array[Double], row: InternalRow, in: Array[Expression]): Array[Double] = {
+    val v = in(0).eval(row)
     if (v != null) {
       val a = v.asInstanceOf[ArrayData]
-      buffer(0) += 1.0
+      s(0) += 1.0
       val n = math.min(dim, a.numElements())
       var d = 0
       while (d < n) {
-        if (!a.isNullAt(d)) buffer(d + 1) += a.getDouble(d)
+        if (!a.isNullAt(d)) s(d + 1) += a.getDouble(d)
         d += 1
       }
     }
-    buffer
+    s
   }
+  override def result(s: Array[Double]): Any = new GenericArrayData(s)
+}
 
-  override def merge(buffer: Array[Double], other: Array[Double]): Array[Double] = {
-    var i = 0
-    while (i < buffer.length) { buffer(i) += other(i); i += 1 }
-    buffer
-  }
-
-  override def eval(buffer: Array[Double]): Any = new GenericArrayData(buffer)
-
-  override def serialize(buffer: Array[Double]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buffer.length * 8)
-    buffer.foreach(bb.putDouble)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getDouble())
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VecSumAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): VecSumAgg =
-    copy(child = newChild)
+object VecSumKind {
+  /** `dim + 1` big-endian doubles; any other length does not decode. */
+  def wire(dim: Int): Wire[Array[Double]] = Wire(
+    b => {
+      val in = new WireReader(b, "vec sum")
+      val s = Array.fill(dim + 1)(in.double("sums"))
+      in.finish()
+      s
+    },
+    s => { val out = new WireWriter(8 * s.length); s.foreach(out.double); out.toBytes },
+    (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
 }
 
 object VecSumAgg {
-  import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
-  def column(v: Column, dim: Int): Column =
-    ColumnBridge.column(AggregateExpression(
-      VecSumAgg(ColumnBridge.expression(v), dim), Complete, isDistinct = false))
+  def column(v: Column, dim: Int): Column = SketchAgg.column(Seq(v), VecSumKind(dim))
 }

@@ -429,7 +429,7 @@ object SketchQueries {
     // O64: the opt-in COUNT(DISTINCT) -> HLL rewrite exercised
     // end-to-end through the driver gate (the cms_literal_probe_check
     // pattern for optimizer artifacts): the config is enabled
-    // in-query, the optimized plan must carry HllNdvAggExpr, the
+    // in-query, the optimized plan must carry HllEstimateKind, the
     // rewritten estimate must EQUAL hll_estimate(hll_agg(key))
     // (same hash/p/seed — the native agg is the library sketch, not a
     // lookalike), sit within the 3-sigma HLL bound of exact, and the
@@ -440,7 +440,7 @@ object SketchQueries {
       val d = docs(s, dir)
       val exact = d.groupBy("lang").agg(countDistinct(col("doc_id")).as("ndv_exact"))
       require(!exact.queryExecution.optimizedPlan.expressions.exists(_.exists(
-        _.isInstanceOf[graft.plans.HllNdvAggExpr])),
+        graft.plans.SketchAgg.isA[graft.plans.HllEstimateKind.type])),
         "rule must be off by default")
       val exactRows = exact.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       s.conf.set("spark.graft.approxDistinct.enabled", "true")
@@ -448,7 +448,7 @@ object SketchQueries {
         try {
           val est = d.groupBy("lang").agg(countDistinct(col("doc_id")).as("ndv_est"))
           val f = est.queryExecution.optimizedPlan.expressions.exists(_.exists(
-            _.isInstanceOf[graft.plans.HllNdvAggExpr]))
+            graft.plans.SketchAgg.isA[graft.plans.HllEstimateKind.type]))
           (est.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, f)
         } finally s.conf.unset("spark.graft.approxDistinct.enabled")
       val libRows = d.groupBy("lang")
@@ -467,7 +467,7 @@ object SketchQueries {
     // like O64: (a) rule off by default and the exact percentiles
     // DuckDB-matched (quantile_cont shares Spark's p*(n-1) linear
     // interpolation); (b) with spark.graft.approxPercentile.enabled the
-    // optimized plan carries KllQuantileAggExpr; (c) each estimate's
+    // optimized plan carries KllQuantileKind; (c) each estimate's
     // EXACT rank sits within the published KLL rank error (the suite's
     // 2x deterministic-compaction margin — kll_rank_bound_check
     // convention). Exact Percentile buffers every distinct value per
@@ -479,7 +479,7 @@ object SketchQueries {
         expr("percentile(n_chars, 0.5D)").as("p50_exact"),
         expr("percentile(n_chars, 0.95D)").as("p95_exact"))
       require(!exact.queryExecution.optimizedPlan.expressions.exists(_.exists(
-        _.isInstanceOf[graft.plans.KllQuantileAggExpr])),
+        graft.plans.SketchAgg.isA[graft.plans.KllQuantileKind])),
         "rule must be off by default")
       val exactRows = exact.collect()
         .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
@@ -490,7 +490,7 @@ object SketchQueries {
             expr("percentile(n_chars, 0.5D)").as("p50_est"),
             expr("percentile(n_chars, 0.95D)").as("p95_est"))
           val f = est.queryExecution.optimizedPlan.expressions.exists(_.exists(
-            _.isInstanceOf[graft.plans.KllQuantileAggExpr]))
+            graft.plans.SketchAgg.isA[graft.plans.KllQuantileKind]))
           (est.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap, f)
         } finally s.conf.unset("spark.graft.approxPercentile.enabled")
       // exact rank of each estimate, one distributed pass over documents
@@ -590,14 +590,14 @@ object SketchQueries {
       val d = docs(s, dir)
       val off = d.groupBy("lang").agg(expr("mode(source)").as("m"))
       require(!off.queryExecution.optimizedPlan.expressions.exists(_.exists(
-        _.isInstanceOf[graft.plans.ModeAggExpr])), "rule must be off by default")
+        graft.plans.SketchAgg.isA[graft.plans.MgModeKind])), "rule must be off by default")
       val offRows = off.collect().map(r => r.getString(0) -> r.getString(1)).toMap
       s.conf.set("spark.graft.approxMode.enabled", "true")
       val (estRows, fired) =
         try {
           val est = d.groupBy("lang").agg(expr("mode(source)").as("m"))
           val f = est.queryExecution.optimizedPlan.expressions.exists(_.exists(
-            _.isInstanceOf[graft.plans.ModeAggExpr]))
+            graft.plans.SketchAgg.isA[graft.plans.MgModeKind]))
           (est.collect().map(r => r.getString(0) -> r.getString(1)).toMap, f)
         } finally s.conf.unset("spark.graft.approxMode.enabled")
       // exact per-(lang, source) counts judge both answers
@@ -628,7 +628,7 @@ object SketchQueries {
       def mgAggs(df: DataFrame): Int = {
         var n = 0
         df.queryExecution.optimizedPlan.foreach(p => p.expressions.foreach(_.foreach {
-          case _: graft.plans.TopKPairsAggExpr => n += 1
+          case e if graft.plans.SketchAgg.isA[graft.plans.MgPairsKind](e) => n += 1
           case _ =>
         }))
         n

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.HllNdvAggExpr
+import graft.plans.{HllEstimateKind, KllQuantileKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -24,7 +24,6 @@ class ApproxDistinctRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   override def afterEach(): Unit = {
     spark.conf.unset("spark.graft.approxDistinct.enabled")
-    spark.conf.unset("spark.graft.approxDistinct.p")
   }
 
   private def enable(): Unit =
@@ -42,7 +41,7 @@ class ApproxDistinctRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def hllAggs(plan: LogicalPlan): Int = {
     var n = 0
     plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: HllNdvAggExpr => n += 1
+      case e if SketchAgg.isA[HllEstimateKind.type](e) => n += 1
       case _ =>
     }))
     n
@@ -158,7 +157,7 @@ class ApproxDistinctRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(hllAggs(plan) === 1, s"distinct rewrite must fire under cube:\n$plan")
       var klls = 0
       plan.foreach(p => p.expressions.foreach(_.foreach {
-        case _: graft.plans.KllQuantileAggExpr => klls += 1
+        case e if SketchAgg.isA[KllQuantileKind](e) => klls += 1
         case _ =>
       }))
       assert(klls === 1, s"percentile rewrite must fire under cube:\n$plan")

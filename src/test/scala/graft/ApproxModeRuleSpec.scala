@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.ModeAggExpr
+import graft.plans.{HllEstimateKind, MgModeKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -41,7 +41,7 @@ class ApproxModeRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def modeAggs(plan: LogicalPlan): Int = {
     var n = 0
     plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: ModeAggExpr => n += 1
+      case e if SketchAgg.isA[MgModeKind](e) => n += 1
       case _ =>
     }))
     n
@@ -103,7 +103,7 @@ class ApproxModeRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(modeAggs(plan) === 1)
       var hlls = 0
       plan.foreach(p => p.expressions.foreach(_.foreach {
-        case _: graft.plans.HllNdvAggExpr => hlls += 1
+        case e if SketchAgg.isA[HllEstimateKind.type](e) => hlls += 1
         case _ =>
       }))
       assert(hlls === 1)

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Kll
 import graft.functions.Graft
-import graft.plans.KllQuantileAggExpr
+import graft.plans.{HllEstimateKind, KllQuantileKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -25,7 +25,6 @@ class ApproxPercentileRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   override def afterEach(): Unit = {
     spark.conf.unset("spark.graft.approxPercentile.enabled")
-    spark.conf.unset("spark.graft.approxPercentile.k")
   }
 
   private def enable(): Unit =
@@ -43,7 +42,7 @@ class ApproxPercentileRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def kllAggs(plan: LogicalPlan): Int = {
     var n = 0
     plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: KllQuantileAggExpr => n += 1
+      case e if SketchAgg.isA[KllQuantileKind](e) => n += 1
       case _ =>
     }))
     n
@@ -146,7 +145,7 @@ class ApproxPercentileRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(kllAggs(plan) === 1, s"percentile rewrite missing:\n$plan")
       var hlls = 0
       plan.foreach(p => p.expressions.foreach(_.foreach {
-        case _: graft.plans.HllNdvAggExpr => hlls += 1
+        case e if SketchAgg.isA[HllEstimateKind.type](e) => hlls += 1
         case _ =>
       }))
       assert(hlls === 1, s"distinct rewrite missing:\n$plan")

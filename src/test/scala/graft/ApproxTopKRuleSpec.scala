@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.TopKPairsAggExpr
+import graft.plans.{HllEstimateKind, MgPairsKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -44,7 +44,7 @@ class ApproxTopKRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def topkAggs(plan: LogicalPlan): Int = {
     var n = 0
     plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: TopKPairsAggExpr => n += 1
+      case e if SketchAgg.isA[MgPairsKind](e) => n += 1
       case _ =>
     }))
     n
@@ -153,7 +153,7 @@ class ApproxTopKRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(topkAggs(plan) === 1, s"topk rewrite missing:\n$plan")
       var hllAggs = 0
       plan.foreach(p => p.expressions.foreach(_.foreach {
-        case _: graft.plans.HllNdvAggExpr => hllAggs += 1
+        case e if SketchAgg.isA[HllEstimateKind.type](e) => hllAggs += 1
         case _ =>
       }))
       assert(hllAggs === 1, s"distinct rewrite missing:\n$plan")

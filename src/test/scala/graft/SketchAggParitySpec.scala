@@ -1,15 +1,19 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.SketchAgg
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import graft.plans._
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{array, col, lit, when}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL contract of all 25 registered sketch aggregates, each one
   * native [[SketchAgg]]: implicit input casts, null skipping, NULL from
-  * an empty merge, binary (or struct-of-binary) nullable results, and no
-  * `ScalaAggregator` in any plan. */
+  * an empty merge, merge errors that name the function, binary (or
+  * struct-of-binary) nullable results, and no `ScalaAggregator` in any
+  * plan. The unregistered kinds that rules and facades run (rewrite
+  * results, FD, vector sums, per-lang tokens, the sharded wire) keep
+  * their names, result types, nullability and null skipping. */
 class SketchAggParitySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.ensure(
@@ -120,5 +124,52 @@ class SketchAggParitySpec extends AnyFunSuite {
       q.collect()
     }
     intercept[AnalysisException](spark.sql("SELECT ebf_agg(k, k) FROM parity_t"))
+  }
+
+  test("a merge fed undecodable bytes names the function in its error") {
+    t
+    for (m <- merges) {
+      val build = builds.toMap.apply(m.stripSuffix("_merge_agg") + "_agg")
+      val sk = s"${call(m.stripSuffix("_merge_agg") + "_agg", build.map(argCol))}"
+      val q = spark.sql(s"SELECT $m(substr(sk, 1, length(sk) - 3)) FROM " +
+        s"(SELECT $sk AS sk FROM parity_t GROUP BY id % 5)")
+      val e = intercept[Exception](q.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.startsWith(s"$m: ") && c.getCause.isInstanceOf[IllegalArgumentException]),
+        s"$m: no IllegalArgumentException naming the function in ${chain.map(_.getMessage).mkString(" <- ")}")
+    }
+  }
+
+  test("rule and facade kinds: names, result types, nullability, null skipping") {
+    t
+    val k = col("k")
+    val vec = when(col("v").isNotNull, array(col("v"), col("v") + 1))
+    val kinds: Seq[(SketchKind[_ <: AnyRef], Seq[Column], String, DataType, Boolean)] = Seq(
+      (HllEstimateKind, Seq(k), "hll_ndv_agg", LongType, false),
+      (KllQuantileKind(Seq(0.5), returnArray = false), Seq(col("v")), "kll_quantile_agg",
+        DoubleType, true),
+      (KllQuantileKind(Seq(0.1, 0.9), returnArray = true), Seq(col("v")), "kll_quantile_agg",
+        ArrayType(DoubleType, containsNull = false), true),
+      (MgModeKind(256), Seq(k), "mg_mode_agg", StringType, true),
+      (MgPairsKind(256), Seq(k), "mg_topk_pairs_agg", ApproxTopKRewriteRule.PairsType, false),
+      (FdKind(2, 2), Seq(vec), "graft_fd_agg", BinaryType, false),
+      (VecSumKind(2), Seq(vec), "graft_vec_sum", ArrayType(DoubleType, containsNull = false), false),
+      (PerLangKind(3, 64, 16, 7L, 0), Seq(k, col("w").cast("string")),
+        "per_lang_token_sketches_agg", MapType(StringType, BatchedTokenBuf.dataType, false), false),
+      (EbfShardedWireKind(4), Seq(lit(null).cast("int"), lit(null).cast("binary")),
+        "ebf_sharded_wire_agg", BinaryType, false))
+    for ((kind, in, name, dt, nullable) <- kinds) {
+      val agg = SketchAgg.column(in, kind).as("r")
+      val all = t.agg(agg)
+      val f = all.schema("r")
+      assert(kind.name === name)
+      assert(f.dataType === dt, name)
+      assert(f.nullable === nullable, name)
+      val notNull = in.map(_.isNotNull).reduce(_ && _)
+      assert(all.head === t.filter(notNull).agg(agg).head, s"$name does not skip null rows")
+      val empty = t.filter(lit(false)).agg(agg).head
+      assert(empty.isNullAt(0) === nullable, s"$name over empty input")
+    }
   }
 }

@@ -156,6 +156,16 @@ class VecProbeExprSpec extends AnyFunSuite {
     }
   }
 
+  test("vector-sum partial buffer: dim + 1 doubles round-trip, any other length is rejected") {
+    val kind = VecSumKind(3)
+    val sums = Array(2.0, -1.5, 0.25, 1e300)
+    val bytes = kind.toBytes(sums)
+    assert(bytes.length === 32)
+    assert(kind.fromBytes(bytes).toSeq === sums.toSeq)
+    for (bad <- Seq(bytes.take(24), bytes.take(31), bytes ++ Array[Byte](0)))
+      intercept[IllegalArgumentException](kind.fromBytes(bad))
+  }
+
   test("interpreted eval matches codegen") {
     // force the interpreted path via a fresh expression's eval() on an
     // InternalRow, compared against the DataFrame (codegen) result
