@@ -1,19 +1,23 @@
 package graft.functions
 
 import graft.core._
+import graft.plans.{GraftExtensions, SketchAgg, SketchFn}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
 /** Session registration for the graft sketch library.
   *
-  * `Graft.ensure(spark)` is idempotent per session: registers every
-  * aggregate and scalar function for both the Column API and SQL, and
-  * tunes the one Catalyst config that matters for object-buffer
-  * aggregation at scale (SURVEY.md §4): the ObjectHashAggregate
-  * sort-based fallback threshold, which defaults to 128 distinct groups
-  * per task — far below the per-task (lang, host) group counts this
-  * engine aggregates — and would silently degrade partial aggregation
-  * to sort-based with per-group spill churn.
+  * `Graft.ensure(spark)` is idempotent per session. It installs the
+  * optimizer rules and native functions of
+  * [[graft.plans.GraftExtensions]], the sketch aggregates
+  * ([[graft.plans.SketchAgg]]), the sketch scalars
+  * ([[graft.plans.SketchFn]]) and the text UDFs, for both the Column API
+  * and SQL. It also tunes the one Catalyst config that matters for
+  * object-buffer aggregation at scale (SURVEY.md §4): the
+  * ObjectHashAggregate sort-based fallback threshold, which defaults to
+  * 128 distinct groups per task — far below the per-task (lang, host)
+  * group counts this engine aggregates — and would silently degrade
+  * partial aggregation to sort-based with per-group spill churn.
   */
 object Graft {
 
@@ -25,55 +29,12 @@ object Graft {
       // sort-based fallback would serialize buffers per row
       spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
       registerAll(spark)
-      // literal-sketch probes rewrite to a once-per-task deserialized
-      // native expression (see ReplaceLiteralEbfProbe); also available
-      // config-only via spark.sql.extensions=graft.plans.GraftExtensions
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.ReplaceLiteralEbfProbe)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.ReplaceLiteralEbfProbe
-      }
-      // opt-in EBF semi-join reduction (fires only when
-      // spark.graft.joinPrune.enabled=true; see EbfJoinPruneRule)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.EbfJoinPruneRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.EbfJoinPruneRule
-      }
-      // opt-in COUNT(DISTINCT) -> HLL estimate (fires only when
-      // spark.graft.approxDistinct.enabled=true; CHANGES RESULTS to a
-      // bounded estimate — see ApproxDistinctRewriteRule)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.ApproxDistinctRewriteRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.ApproxDistinctRewriteRule
-      }
-      // opt-in exact percentile/median -> KLL estimate (fires only when
-      // spark.graft.approxPercentile.enabled=true; CHANGES RESULTS to a
-      // rank-bounded estimate — see ApproxPercentileRewriteRule)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.ApproxPercentileRewriteRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.ApproxPercentileRewriteRule
-      }
-      // opt-in mode(x) -> Misra-Gries top-1 (fires only when
-      // spark.graft.approxMode.enabled=true; exact below capacity,
-      // heavy-hitter estimate beyond — see ApproxModeRewriteRule)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.ApproxModeRewriteRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.ApproxModeRewriteRule
-      }
-      // opt-in top-k-by-count -> Misra-Gries (fires only when
-      // spark.graft.approxTopK.enabled=true; exact below capacity,
-      // heavy-hitter estimate beyond — see ApproxTopKRewriteRule)
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.ApproxTopKRewriteRule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.ApproxTopKRewriteRule
-      }
-      // native SQL expressions and the sketch aggregates (the UDF
-      // registry can't host Expression builders; goes through the
-      // sessionState shim)
-      val natives = Seq(
-        graft.plans.Hash128Expr.sqlDescriptor("graft_hash128_h1", 0),
-        graft.plans.Hash128Expr.sqlDescriptor("graft_hash128_h2", 1),
-        graft.plans.GraftShardExpr.sqlDescriptor,
-        graft.plans.ZOrderKeyExpr.sqlDescriptor) ++ graft.plans.SketchAgg.sqlDescriptors
+      for (rule <- GraftExtensions.rules
+           if !spark.experimental.extraOptimizations.contains(rule))
+        spark.experimental.extraOptimizations :+= rule
+      // the UDF registry can't host Expression builders; natives go
+      // through the sessionState shim
+      val natives = GraftExtensions.functions ++ SketchAgg.sqlDescriptors ++ SketchFn.sqlDescriptors
       for ((id, info, builder) <- natives)
         org.apache.spark.sql.graftshim.FunctionShim.register(spark, id.funcName, info, builder)
       spark.conf.set("graft.registered", "true")
@@ -81,134 +42,13 @@ object Graft {
     spark
   }
 
+  /** The text and web UDFs. */
   def registerAll(spark: SparkSession): Unit = {
     val r = spark.udf
-
-    // scalar functions over serialized sketches. Each deserializes via a
-    // per-thread cache keyed by content hash, so probing N rows against
-    // one broadcast sketch deserializes once per task, not once per row.
-    // null-guarded to mirror the aggregators' null-skipping: a null key
-    // is never inserted, so probing one answers "not a member" rather
-    // than NPE-ing (build/probe symmetry on tables with null keys)
-    r.register("ebf_might_contain",
-      (sk: Array[Byte], key: String) =>
-        sk != null && key != null && SketchCache.ebf(sk).mightContain(key))
-    r.register("ebf_expand", (sk: Array[Byte]) => {
-      val e = Ebf.fromBytes(sk); e.expand(); e.toBytes
-    })
-    r.register("ebf_compress", (sk: Array[Byte]) => {
-      val e = Ebf.fromBytes(sk); e.compress(); e.toBytes
-    })
-    r.register("ebf_delete", (sk: Array[Byte], key: String) => {
-      val e = Ebf.fromBytes(sk); e.delete(key); e.toBytes
-    })
-    r.register("ebf_info", (sk: Array[Byte]) => {
-      val e = SketchCache.ebf(sk)
-      EbfInfo(e.level, e.numBuckets, e.n, e.bitsSet, e.fpWidth, e.fprBound, e.sizeBytes)
-    })
-    r.register("ebf_fpr", (sk: Array[Byte]) => SketchCache.ebf(sk).fprBound)
-    // deterministic shard router (same function drives groupBy-side
-    // sharding and probe-side routing of the sharded EBF); null keys
-    // route to a null shard so they join no shard and probe as misses
-    // instead of NPE-ing. Registered as a NATIVE codegen'd expression
-    // (GraftShardExpr) — the router sits on the map side of every
-    // shard build/probe, where a UDF would break whole-stage codegen.
-    r.register("hll_estimate", (sk: Array[Byte]) => SketchCache.hll(sk).estimate)
-    // O73 extractors: retained sample keys (canonical hash order) and
-    // the retained count. Reads only — cached instances stay unmutated.
-    r.register("sample_keys", (sk: Array[Byte]) => SketchCache.bks(sk).keys.toSeq)
-    r.register("sample_size", (sk: Array[Byte]) => SketchCache.bks(sk).size)
     // O72: winnowing fingerprints as a SQL surface (the Column/library
     // paths use TextFunctions directly)
     r.register("winnow_fingerprints", (text: String, k: Int, w: Int) =>
       TextFunctions.winnowFingerprints(text, k, w).toSeq)
-    // O46 theta set algebra. Estimates round to LONG (hll_estimate
-    // convention). The set-op functions deserialize through the cache
-    // (loaded sketches are canonical: compact() is a no-op, so the
-    // shared instances are never mutated); theta_union builds a FRESH
-    // left operand because merge mutates the receiver.
-    r.register("theta_estimate",
-      (sk: Array[Byte]) => math.rint(SketchCache.theta(sk).estimate).toLong)
-    r.register("theta_intersect_estimate", (a: Array[Byte], b: Array[Byte]) =>
-      math.rint(SketchCache.theta(a).intersectEstimate(SketchCache.theta(b))).toLong)
-    r.register("theta_diff_estimate", (a: Array[Byte], b: Array[Byte]) =>
-      math.rint(SketchCache.theta(a).differenceEstimate(SketchCache.theta(b))).toLong)
-    r.register("theta_jaccard", (a: Array[Byte], b: Array[Byte]) =>
-      SketchCache.theta(a).jaccardEstimate(SketchCache.theta(b)))
-    r.register("theta_union", (a: Array[Byte], b: Array[Byte]) =>
-      Theta.fromBytes(a).merge(SketchCache.theta(b)).toBytes)
-    // null key -> 0: never inserted, so its count is zero (build/probe
-    // symmetry, same rationale as ebf_might_contain's null guard; the
-    // literal-sketch rewrite mirrors this exactly — SketchScalarKinds)
-    r.register("cms_estimate",
-      (sk: Array[Byte], key: String) =>
-        if (key == null) 0L else SketchCache.cms(sk).estimate(key))
-    r.register("cms_total", (sk: Array[Byte]) => SketchCache.cms(sk).total)
-    // equi-join size estimate from two sketches alone (row-wise dot
-    // product, min over rows): never under-estimates, within
-    // eps*totalA*totalB whp — sketch-driven join planning
-    r.register("cms_inner_product",
-      (a: Array[Byte], b: Array[Byte]) => SketchCache.cms(a).innerProduct(SketchCache.cms(b)))
-    // O79 Count Sketch scalars: the estimators are signed/unbiased —
-    // cs_estimate can read negative on a never-inserted key (CMS
-    // cannot); null key -> 0 for build/probe symmetry as above. The
-    // inner-product / F2 estimators are the AMS unbiased join-size /
-    // self-join-size estimators (Double: real-valued by nature, and a
-    // signed Long row-dot would wrap at 10^12-row totals).
-    r.register("cs_estimate",
-      (sk: Array[Byte], key: String) =>
-        if (key == null) 0L else SketchCache.cs(sk).estimate(key))
-    r.register("cs_total", (sk: Array[Byte]) => SketchCache.cs(sk).total)
-    r.register("cs_inner_product",
-      (a: Array[Byte], b: Array[Byte]) => SketchCache.cs(a).innerProduct(SketchCache.cs(b)))
-    r.register("cs_f2", (sk: Array[Byte]) => SketchCache.cs(sk).f2)
-    r.register("dcms_estimate",
-      (sk: Array[Byte], key: String, tNow: Double) =>
-        if (key == null) 0.0 else SketchCache.dcms(sk).estimate(key, tNow))
-    r.register("dcms_total",
-      (sk: Array[Byte], tNow: Double) => SketchCache.dcms(sk).totalAt(tNow))
-    r.register("kll_quantile",
-      (sk: Array[Byte], q: Double) => SketchCache.kll(sk).quantile(q))
-    r.register("kll_rank",
-      (sk: Array[Byte], v: Double) => SketchCache.kll(sk).rank(v))
-    // equi-height histogram export (the ANALYZE-stats / CBO role):
-    // B buckets at the i/B quantiles of ONE mergeable sketch — where
-    // an exact equi-height histogram needs a full sort or Spark's
-    // sampling-based percentile pass per column. Boundaries are
-    // deterministic (KLL compaction is); rows_est comes from rank
-    // differences of the boundary values, which TELESCOPE: masses
-    // sum to n (up to per-bucket rounding), and a heavy tied value
-    // that duplicates boundaries puts all its mass in the FIRST
-    // bucket ending at that value (rank is <=-based), leaving the
-    // duplicate-boundary buckets empty rather than smearing n/B
-    // into them. Each boundary carries the sketch's rank error, so
-    // a bucket's true mass is within n/B +- 2*eps*n (gated in
-    // kll_histogram_check).
-    r.register("kll_histogram", (sk: Array[Byte], b: Int) => {
-      require(b >= 1 && b <= 100000, s"bucket count out of range: $b")
-      val k = SketchCache.kll(sk)
-      if (k.n == 0L) Array.empty[HistBucket]
-      else {
-        val qs = Array.tabulate(b + 1)(i => k.quantile(i.toDouble / b))
-        Array.tabulate(b) { i =>
-          val rLo = if (i == 0) 0.0 else k.rank(qs(i))
-          val rHi = if (i == b - 1) 1.0 else k.rank(qs(i + 1))
-          HistBucket(i, qs(i), qs(i + 1), math.round((rHi - rLo) * k.n))
-        }
-      }
-    })
-    r.register("tdigest_quantile",
-      (sk: Array[Byte], q: Double) => SketchCache.td(sk).quantile(q))
-    r.register("tdigest_cdf",
-      (sk: Array[Byte], v: Double) => SketchCache.td(sk).cdf(v))
-    // heavy-hitter extractors: enumerate the sketch's own candidate set
-    // (array of (item, lower-bound estimate), est desc / item asc)
-    r.register("topk_items", (sk: Array[Byte], k: Int) =>
-      SketchCache.freq(sk).topK(k).map { case (item, est) => TopKItem(item, est) })
-    r.register("topk_estimate",
-      (sk: Array[Byte], item: String) =>
-        if (item == null) 0L else SketchCache.freq(sk).estimate(item))
-    r.register("topk_error", (sk: Array[Byte]) => SketchCache.freq(sk).maxError)
 
     // text / web functions
     r.register("extract_text", (html: Array[Byte]) => TextFunctions.extractText(html))
@@ -242,20 +82,10 @@ object Graft {
   }
 }
 
-/** Output row of `ebf_info` — the "sketch-size/FPR metrics" the north
-  * star requires jobs to carry. */
-case class EbfInfo(level: Int, numBuckets: Int, n: Long, bitsSet: Int,
-                   fpWidth: Int, fprBound: Double, sizeBytes: Int)
-
-/** Output element of `topk_items`. */
-case class TopKItem(item: String, est: Long)
-
-/** Output element of `kll_histogram` — one equi-height bucket. */
-case class HistBucket(bucket: Int, lo: Double, hi: Double, rows_est: Long)
-
-/** Per-thread deserialized-sketch cache. Sketch bytes arriving from a
-  * Column are re-materialized per row by the UDF boundary, so identity
-  * caching fails; instead the key is (length, murmur128 of up to four
+/** Per-thread deserialized-sketch cache: how [[graft.plans.SketchFn]]
+  * reads a sketch input that is not a constant. Sketch bytes arriving
+  * from a column are re-materialized per row, so identity caching
+  * fails; instead the key is (length, murmur128 of up to four
   * 256-byte windows) — O(1) regardless of sketch size, so probing rows
   * against multi-MB sketches doesn't hash the whole blob per row. The
   * windows cover header (with n and level), middle and tail; two
@@ -311,8 +141,8 @@ object SketchCache {
   // sharded-filter case): the per-thread cache below would deserialize
   // a 100 MB+ sketch once per task THREAD — core-count x blob bytes of
   // heap, the difference between "one 400 MB filter per executor" and
-  // an OOM at 32 local threads (measured: JoinPruneMeasure at a 50M-key
-  // build). Identity-keyed (array equals IS reference equality) with
+  // an OOM at 32 local threads (measured at a 50M-key join-prune
+  // build, BENCH/PLANS.md PLAN18). Identity-keyed (array equals IS reference equality) with
   // WEAK keys, so a blob is freed when the stage that shipped it drops
   // the reference. All probe structures are read-only after
   // construction (ShardedEbf is explicitly thread-safe; Ebf probes are

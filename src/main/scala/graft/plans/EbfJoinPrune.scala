@@ -1,19 +1,14 @@
 package graft.plans
 
 import graft.core.{Ebf, ShardedEbf}
-import graft.functions.SketchCache
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Alias, BinaryExpression, Cast, EqualTo, Expression, PredicateHelper, ScalarSubquery}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, EqualTo, Expression, PredicateHelper, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The build side of [[EbfJoinPruneRule]]: `ebf_agg` at its default
   * parameters as a self-contained [[SketchAgg]], which an optimizer
@@ -27,55 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object EbfBuildAggExpr {
   def apply(child: Expression): SketchAgg[Ebf] = SketchAgg(Seq(child), EbfKind())
-}
-
-/** Membership probe where the sketch side is an arbitrary expression —
-  * in [[EbfJoinPruneRule]]'s rewrite it is a [[ScalarSubquery]] whose
-  * value is computed once per query, so every row of a task sees the
-  * SAME byte-array instance and the probe hits [[SketchCache]]'s
-  * reference fast path (zero per-row memcmp; the cache is per-thread,
-  * so concurrent tasks in one executor cannot race). Null sketch or
-  * null key probes false (a null join key can never equi-match).
-  */
-case class EbfProbeExpr(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary sketch, string key), got " +
-          s"${l.simpleString(10)} and ${r.simpleString(10)}")
-    }
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "ebf_probe"
-
-  /** Called from both interpreted eval and generated code. */
-  def probe(sk: Array[Byte], key: UTF8String): Boolean =
-    sk != null && key != null && SketchCache.ebf(sk).mightContain(Utf8Key.bytes(key))
-
-  override def eval(input: InternalRow): Any =
-    probe(left.eval(input).asInstanceOf[Array[Byte]],
-      right.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ebfProbeExpr", this, classOf[EbfProbeExpr].getName)
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        boolean ${ev.value} = $self.probe(
-          ${l.isNull} ? null : ${l.value}, ${r.isNull} ? null : ${r.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): EbfProbeExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Collapses a `(shard, sk)` shard table into ONE ShardedEbf wire blob
@@ -117,56 +63,6 @@ object EbfShardedWireKind {
     (a, b) => { var i = 0; while (i < a.length) { a(i) = mergeBytes(a(i), b(i)); i += 1 }; a })
 }
 
-/** Membership probe against a ShardedEbf wire blob (the sharded twin of
-  * [[EbfProbeExpr]]): the blob — a scalar-subquery value, so the SAME
-  * array instance row after row — deserializes once per task via
-  * [[SketchCache]]'s reference fast path, each shard lazily on first
-  * touch, and every probe routes to exactly one shard
-  * (`ShardedEbf.mightContain`'s byte-key path: same Hash128 routing as
-  * `graft_shard`). Null blob or key probes false. */
-case class EbfShardedBlobProbeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary sharded blob, string key), got " +
-          s"${l.simpleString(10)} and ${r.simpleString(10)}")
-    }
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "ebf_sharded_blob_probe"
-
-  def probe(blob: Array[Byte], key: UTF8String): Boolean =
-    blob != null && key != null &&
-      SketchCache.sharded(blob).mightContain(Utf8Key.bytes(key))
-
-  override def eval(input: InternalRow): Any =
-    probe(left.eval(input).asInstanceOf[Array[Byte]],
-      right.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ebfShardedBlobProbe", this,
-      classOf[EbfShardedBlobProbeExpr].getName)
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${l.code}
-        ${r.code}
-        boolean ${ev.value} = $self.probe(
-          ${l.isNull} ? null : ${l.value}, ${r.isNull} ? null : ${r.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): EbfShardedBlobProbeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 /** O36 — the library-call semi-join reduction (`JoinPrune.ebfPrunedJoin`,
   * O31) as an OPT-IN optimizer rule: existing SQL / DataFrame joins get
   * map-side EBF pruning with no query rewrite.
@@ -174,11 +70,14 @@ case class EbfShardedBlobProbeExpr(left: Expression, right: Expression)
   * For a qualifying equi-join it rewrites
   *
   *   Join(fact, build, type, factKey = buildKey)
-  *     -> Join(Filter(ebf_probe(scalar-subquery(ebf_agg(buildKey)
+  *     -> Join(Filter(ebf_might_contain(scalar-subquery(ebf_agg(buildKey)
   *             over build), factKey), fact), build, ...)
   *
   * the same shape Spark's own `InjectRuntimeFilter` emits with its
-  * fixed-size bloom filter. The fact-side exchange then carries only
+  * fixed-size bloom filter. The probe is a [[SketchFn]] of the
+  * `ebf_might_contain` kind: the subquery's value is the same array
+  * instance on every row of a task, so [[graft.functions.SketchCache]]'s
+  * reference fast path decodes it once per task. The fact-side exchange then carries only
   * rows that MIGHT match; the EBF's no-false-negative guarantee makes
   * the result exactly the plain join's (a false positive reaches the
   * join and is dropped there as before).
@@ -224,8 +123,9 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     })
     side.exists {
       case Filter(cond, _) => cond.exists {
-        case EbfProbeExpr(_, k) => sameKey(k)
-        case EbfShardedBlobProbeExpr(_, k) => sameKey(k)
+        case p @ SketchFn(Seq(_, k), _)
+            if SketchFn.isA[EbfMightContain](p) || SketchFn.isA[EbfShardedMightContain](p) =>
+          sameKey(k)
         case _ => false
       }
       case _ => false
@@ -259,7 +159,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     // x 16-bit fingerprints), i.e. blob ~ 2x the PRUNED bigint-key
     // stats this guard sees — at 32 local cores a 40M-key build
     // (320 MB stats, 640 MB blob) needs >20 GB transient and OOM'd a
-    // 24 GB heap (JoinPruneMeasure, PLANS.md PLAN18). Hence the
+    // 24 GB heap (BENCH/PLANS.md PLAN18). Hence the
     // conservative 512 MB default; raise it only with
     // heap/cores-per-executor headroom, and use the explicit
     // ShardedProbe broadcast/cogroup paths beyond that.
@@ -330,7 +230,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     else Cast(e, StringType, Some(conf.sessionLocalTimeZone))
 
   /** Monolithic window:
-    * `Filter(ebf_probe(subquery(ebf_agg(buildKey)), factKey), fact)`.
+    * `Filter(ebf_might_contain(subquery(ebf_agg(buildKey)), factKey), fact)`.
     * The subquery aggregates the build side down to ONE sketch row
     * (partial aggregation map-side — no build row ever moves
     * unaggregated), evaluated once per query like any scalar subquery,
@@ -343,8 +243,8 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     *       [shard, ebf_agg(buildKey) as sk], buildProj))
     *
     * — numShards PARALLEL per-shard builds+merges (the grouped inner
-    * aggregate), then a one-row concat into a ShardedEbf wire blob the
-    * [[EbfShardedBlobProbeExpr]] filter routes into per fact row. The
+    * aggregate), then a one-row concat into a ShardedEbf wire blob that
+    * the [[EbfShardedMightContain]] filter routes each fact row into. The
     * per-shard merge tail shrinks by numShards, which is what lets the
     * rule reach build sides past the monolithic window. */
   private def prunedSide(fact: LogicalPlan, factKey: Expression,
@@ -359,7 +259,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
         AggregateExpression(EbfBuildAggExpr(asString(buildKey)), Complete, isDistinct = false),
         "graft_prune_ebf")()
       val subq = ScalarSubquery(Aggregate(Nil, Seq(agg), buildProj))
-      Filter(EbfProbeExpr(subq, asString(factKey)), fact)
+      Filter(SketchFn(Seq(subq, asString(factKey)), EbfMightContain()), fact)
     } else {
       val shardExpr = GraftShardExpr(asString(buildKey), numShards)
       val shardAlias = Alias(shardExpr, "graft_prune_shard")()
@@ -373,7 +273,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
           Complete, isDistinct = false),
         "graft_prune_sharded_ebf")()
       val subq = ScalarSubquery(Aggregate(Nil, Seq(blob), perShard))
-      Filter(EbfShardedBlobProbeExpr(subq, asString(factKey)), fact)
+      Filter(SketchFn(Seq(subq, asString(factKey)), EbfShardedMightContain()), fact)
     }
   }
 }

@@ -3,8 +3,8 @@ package graft.plans
 import graft.core._
 import graft.functions.Graft
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
 import org.apache.spark.sql.graftshim.{ColumnBridge, FunctionShim, InputCasts}
 import org.apache.spark.sql.types._
@@ -351,14 +351,8 @@ object SketchAgg {
   }
 
   /** SQL registration triples for [[registered]] (`Graft.ensure`). */
-  def sqlDescriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    registered.map { kind =>
-      val arity = kind.inputTypes.length
-      (FunctionIdentifier(kind.name),
-        new ExpressionInfo(classOf[SketchAgg[_]].getName, kind.name),
-        (args: Seq[Expression]) => {
-          if (args.length != arity) throw FunctionShim.wrongArity(kind.name, arity, args.length)
-          SketchAgg(args, kind)
-        })
-    }
+  def sqlDescriptors: Seq[FunctionShim.Descriptor] = registered.map { kind =>
+    FunctionShim.descriptor(kind.name, classOf[SketchAgg[_]], kind.inputTypes.length)(
+      SketchAgg(_, kind))
+  }
 }

@@ -138,8 +138,8 @@ object PipelineQueries {
     // supplier — the pruned-column size ratio is ~40x, comfortably
     // past the rule's 2x cost guard at every SF) with
     // spark.graft.joinPrune.enabled set must (a) get exactly ONE
-    // EbfProbeExpr filter injected by EbfJoinPruneRule (asserted on the
-    // optimized plan; "exactly one" also regression-guards the
+    // ebf_might_contain SketchFn filter injected by EbfJoinPruneRule
+    // (asserted on the optimized plan; "exactly one" also guards the
     // structural re-application check) and (b) produce exactly the
     // plain join's rows — DuckDB computes the same join as the oracle.
     // The result is materialized eagerly inside the conf-on window so
@@ -161,7 +161,7 @@ object PipelineQueries {
           .orderBy("s_nationkey")
         val probes = df.queryExecution.optimizedPlan.collect {
           case p => p.expressions.flatMap(_.collect {
-            case e: graft.plans.EbfProbeExpr => e
+            case e if graft.plans.SketchFn.isA[graft.plans.EbfMightContain](e) => e
           })
         }.flatten.size
         require(probes == 1,

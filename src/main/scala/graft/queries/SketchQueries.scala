@@ -292,10 +292,10 @@ object SketchQueries {
         lit(java.util.Arrays.equals(merged, allBytes)).as("merge_byte_identical"))
     },
 
-    // the literal-sketch REWRITE path in the driver gate: the collected
-    // CMS probed as an X'..' literal in pure SQL — which
-    // ReplaceLiteralEbfProbe rewrites to the once-per-task native
-    // expression (asserted on the optimized plan) — must agree with the
+    // the literal-sketch path in the driver gate: the collected CMS
+    // probed as an X'..' literal in pure SQL — a SketchFn of the
+    // cms_estimate kind over a constant sketch, decoded once per task
+    // (asserted on the optimized plan) — must agree with the
     // closure-UDF path of cms_overestimate_check: estimates over every
     // distinct token, >= exact and <= exact + eps*N
     "cms_literal_probe_check" -> { (s, dir) =>
@@ -306,9 +306,12 @@ object SketchQueries {
       val hex = bytes.map(b => f"$b%02x").mkString
       val probed = t.groupBy(col("token")).agg(count(lit(1)).as("exact"))
         .withColumn("est", expr(s"cms_estimate(X'$hex', token)"))
-      require(probed.queryExecution.optimizedPlan.expressions.exists(_.exists(
-        _.isInstanceOf[graft.plans.SketchLiteralScalarExpr])),
-        "literal-sketch rule did not fire on the X'..' probe")
+      var constant = false
+      probed.queryExecution.optimizedPlan.foreach(_.expressions.foreach(_.foreach { e =>
+        if (graft.plans.SketchFn.isA[graft.plans.CmsEstimate](e) && e.children.head.foldable)
+          constant = true
+      }))
+      require(constant, "the X'..' probe is not a cms_estimate SketchFn over a constant sketch")
       probed.select(col("token"),
           (col("est") >= col("exact")).as("over"),
           (col("est") <= col("exact") + lit(cms.eps * cms.total) + lit(1.0)).as("within_eps"))

@@ -31,9 +31,19 @@ object FunctionShim {
       .sessionState.functionRegistry
       .registerFunction(FunctionIdentifier(name), info, builder)
 
-  /** Spark's own wrong-argument-count analysis error. */
-  def wrongArity(name: String, expected: Int, got: Int): Throwable =
-    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), got)
+  /** A SQL function: its name, its description and its builder. */
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** A function of exactly `arity` arguments, failing a call with any
+    * other count as Spark's own functions do. */
+  def descriptor(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), (args: Seq[Expression]) => {
+      if (args.length != arity)
+        throw org.apache.spark.sql.errors.QueryCompilationErrors
+          .wrongNumArgsError(name, Seq(arity), args.length)
+      build(args)
+    })
 }
 
 /** Mixin giving an expression implicit casts of its inputs to

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.{EbfBuildAggExpr, EbfProbeExpr}
+import graft.plans.{EbfBuildAggExpr, EbfMightContain, EbfShardedMightContain, SketchFn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -41,9 +41,8 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   private def probeFilters(plan: LogicalPlan): Int = {
     var n = 0
-    plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: EbfProbeExpr => n += 1
-      case _ =>
+    plan.foreach(p => p.expressions.foreach(_.foreach { e =>
+      if (SketchFn.isA[EbfMightContain](e)) n += 1
     }))
     n
   }
@@ -111,9 +110,8 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   private def shardedProbeFilters(plan: LogicalPlan): Int = {
     var n = 0
-    plan.foreach(p => p.expressions.foreach(_.foreach {
-      case _: graft.plans.EbfShardedBlobProbeExpr => n += 1
-      case _ =>
+    plan.foreach(p => p.expressions.foreach(_.foreach { e =>
+      if (SketchFn.isA[EbfShardedMightContain](e)) n += 1
     }))
     n
   }
@@ -179,7 +177,7 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
     // TreeNodeTags live on node INSTANCES: a later rule rebuilding the
     // Join via copy() drops the applied-tag, and in a fixed-point batch
     // the rule would re-fire forever without the structural guard
-    // (a Filter carrying an EbfProbeExpr on the same key).
+    // (a Filter carrying an EBF probe on the same key).
     enable()
     val j = fact.join(build, col("fk") === col("bk"))
     val once = graft.plans.EbfJoinPruneRule(j.queryExecution.optimizedPlan)

@@ -3,7 +3,7 @@ package graft
 import graft.core.{Ebf, Hash128, ShardedEbf}
 import graft.functions.Graft
 import graft.pipeline.ShardedProbe
-import graft.plans.{EbfLiteralProbeExpr, EbfProbeExpr, EbfShardedBlobProbeExpr, EbfShardedProbeExpr, Utf8Key}
+import graft.plans.{EbfMightContain, EbfShardedMightContain, EbfShardedProbeExpr, SketchFn, Utf8Key}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A string column may hold bytes that are not valid UTF-8 (a cast from
-  * binary, a lax parquet writer). The Scala UDFs and `String` kernels
-  * see the decoded `String`, where each invalid sequence became U+FFFD;
+  * binary, a lax parquet writer). The `String` kernels see the decoded
+  * `String`, where each invalid sequence became U+FFFD;
   * every native path must hash the same bytes, or a key the build
   * inserted is missed by the probe. */
 class InvalidUtf8KeySpec extends AnyFunSuite {
@@ -63,15 +63,15 @@ class InvalidUtf8KeySpec extends AnyFunSuite {
     val cms = built.getAs[Array[Byte]](1)
     def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02X").mkString
 
-    // ebf_might_contain over a literal sketch: rewritten to the native
-    // EbfLiteralProbeExpr
+    // ebf_might_contain over a literal sketch: a SketchFn over the
+    // constant, decoded once per task
     val lit = spark.sql(s"SELECT ebf_might_contain(X'${hex(ebf)}', k) FROM bad_keys")
-    var rewritten = false
-    lit.queryExecution.optimizedPlan.foreach(p => p.expressions.foreach(e =>
-      if (e.exists(_.isInstanceOf[EbfLiteralProbeExpr])) rewritten = true))
-    assert(rewritten)
+    var constant = false
+    lit.queryExecution.optimizedPlan.foreach(p => p.expressions.foreach(_.foreach(e =>
+      if (SketchFn.isA[EbfMightContain](e) && e.children.head.foldable) constant = true)))
+    assert(constant)
     assert(lit.collect().forall(_.getBoolean(0)))
-    // ebf_might_contain over a sketch column: the Scala UDF
+    // ebf_might_contain over a sketch column: SketchFn through SketchCache
     assert(spark.sql(
       """SELECT ebf_might_contain(s.sk, b.k) FROM bad_keys b
         |CROSS JOIN (SELECT ebf_agg(k) AS sk FROM bad_keys) s""".stripMargin)
@@ -79,7 +79,8 @@ class InvalidUtf8KeySpec extends AnyFunSuite {
     // the broadcast probe UDF
     allHit(keys, Graft.ebfProbe(spark, Ebf.fromBytes(ebf))(col("k")))
     // the join-prune rule's probe
-    allHit(keys, expr(EbfProbeExpr(Literal(ebf), ColumnBridge.expression(col("k")))))
+    allHit(keys, expr(SketchFn(Seq(Literal(ebf), ColumnBridge.expression(col("k"))),
+      EbfMightContain())))
 
     // the sharded build and its probes: broadcast native expression,
     // sharded blob, broadcast join and cogroup
@@ -88,17 +89,23 @@ class InvalidUtf8KeySpec extends AnyFunSuite {
     allHit(keys, EbfShardedProbeExpr.probeColumn(bc, col("k")))
     val blob = ShardedEbf.fromShardBytes(
       shards.collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1))).toSeq, 4).toWire
-    allHit(keys, expr(EbfShardedBlobProbeExpr(Literal(blob), ColumnBridge.expression(col("k")))))
+    allHit(keys, expr(SketchFn(Seq(Literal(blob), ColumnBridge.expression(col("k"))),
+      EbfShardedMightContain())))
     assert(ShardedProbe.probe(keys, "k", shards, 4).select("hit").collect().forall(_.getBoolean(0)))
     assert(ShardedProbe.probeCogrouped(keys, col("k"), shards, 4).select("hit")
       .collect().forall(_.getBoolean(0)))
 
-    // cms_estimate: literal sketch (native rewrite) and sketch column (UDF)
+    // cms_estimate: literal sketch and sketch column
     assert(spark.sql(s"SELECT cms_estimate(X'${hex(cms)}', k) FROM bad_keys")
       .collect().forall(_.getLong(0) >= 1L))
     assert(spark.sql(
       """SELECT cms_estimate(s.sk, b.k) FROM bad_keys b
         |CROSS JOIN (SELECT cms_agg(k) AS sk FROM bad_keys) s""".stripMargin)
+      .collect().forall(_.getLong(0) >= 1L))
+    // topk_estimate over a sketch column
+    assert(spark.sql(
+      """SELECT topk_estimate(s.sk, b.k) FROM bad_keys b
+        |CROSS JOIN (SELECT topk_agg(k) AS sk FROM bad_keys) s""".stripMargin)
       .collect().forall(_.getLong(0) >= 1L))
 
     // and the hash expression agrees with the String kernel

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SketchCache contracts added in round 5: the JVM-global big-blob
   * path (one deserialized copy per executor, shared across task
   * threads — the per-thread map multiplied a 1.3 GB filter by core
-  * count, measured OOM in JoinPruneMeasure) and the type-token fix
+  * count, measured OOM at a 50M-key join-prune build, BENCH/PLANS.md
+  * PLAN18) and the type-token fix
   * (the same bytes probed as two sketch types must never serve a
   * mis-typed cached instance). */
 class SketchCacheSpec extends AnyFunSuite {

@@ -3,12 +3,15 @@ package graft.plans
 import graft.core.Ebf
 import graft.functions.Graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ReplaceLiteralEbfProbe optimizer rule must rewrite foldable-
-  * sketch probes to the native expression with identical results, and
-  * must leave per-row (non-foldable) sketch probes alone. */
+/** `ebf_might_contain` over a foldable sketch must plan as a SketchFn
+  * over the constant (decoded once per task) with the filter's own
+  * answers, and over a per-row sketch as a SketchFn over that column.
+  * The test names date from the literal-rewrite rule this replaced, and
+  * are kept so the test history lines up. */
 class EbfLiteralProbeSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.ensure(
@@ -20,6 +23,11 @@ class EbfLiteralProbeSpec extends AnyFunSuite {
       .getOrCreate())
 
   private def hex(b: Array[Byte]): String = b.map(x => f"$x%02x").mkString
+
+  private def probeCalls(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e if SketchFn.isA[EbfMightContain](e) => e
+    }))
 
   test("literal-sketch probe is rewritten to ebf_literal_probe with identical results") {
     val members = (0 until 500).map(i => s"m$i")
@@ -34,10 +42,10 @@ class EbfLiteralProbeSpec extends AnyFunSuite {
     val df = probes.select(col("k"),
       expr(s"ebf_might_contain(X'${hex(ebf.toBytes)}', k)").as("hit"))
     val optimized = df.queryExecution.optimizedPlan
-    assert(optimized.expressions.exists(_.exists(_.isInstanceOf[EbfLiteralProbeExpr])),
-      s"rule did not fire:\n$optimized")
-    assert(!optimized.expressions.exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])))
+    assert(probeCalls(df).map(_.children.head.foldable) === Seq(true),
+      s"no constant probe:\n$optimized")
+    assert(!optimized.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]))))
 
     val got = df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     members.foreach(k => assert(got(k), s"false negative through rewrite: $k"))
@@ -52,8 +60,7 @@ class EbfLiteralProbeSpec extends AnyFunSuite {
     val withSk = d.groupBy().agg(expr("ebf_agg(k)").as("sk"))
       .crossJoin(d)
     val df = withSk.select(col("k"), expr("ebf_might_contain(sk, k)").as("hit"))
-    assert(!df.queryExecution.optimizedPlan.expressions.exists(
-      _.exists(_.isInstanceOf[EbfLiteralProbeExpr])))
+    assert(probeCalls(df).map(_.children.head.foldable) === Seq(false))
     assert(df.collect().forall(_.getBoolean(1)))
   }
 
@@ -72,11 +79,18 @@ class EbfLiteralProbeSpec extends AnyFunSuite {
 
   test("config-only integration: spark.sql.extensions=GraftExtensions installs the rule") {
     // a separate session would be ideal, but sessions share the
-    // singleton SparkContext in tests; instead verify the extensions
-    // class wires the rule into an injected builder
+    // singleton SparkContext in tests; instead verify what the
+    // extensions class injects
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
     val rules = org.apache.spark.sql.graftshim.TestShim.optimizerRules(ext, spark)
-    assert(rules.contains(ReplaceLiteralEbfProbe))
+    assert(rules === GraftExtensions.rules)
+    assert(rules.size === 5)
+    val functions = org.apache.spark.sql.graftshim.TestShim.functionNames(ext)
+    assert(functions === GraftExtensions.functions.map(_._1.funcName).toSet)
+    assert(functions === Set("graft_hash128_h1", "graft_hash128_h2", "graft_shard",
+      "graft_zorder_key"))
+    // Graft.ensure installs the same rules in this session
+    assert(GraftExtensions.rules.forall(spark.experimental.extraOptimizations.contains))
   }
 }

@@ -11,4 +11,10 @@ object TestShim {
   def optimizerRules(ext: SparkSessionExtensions,
                      session: SparkSession): Seq[Rule[LogicalPlan]] =
     ext.buildOptimizerRules(session)
+
+  def functionNames(ext: SparkSessionExtensions): Set[String] = {
+    val registry = new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+    ext.registerFunctions(registry)
+    registry.listFunction().map(_.funcName).toSet
+  }
 }
