@@ -8,12 +8,12 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 /** Session registration for the graft sketch library.
   *
   * `Graft.ensure(spark)` is idempotent per session. It installs the
-  * optimizer rules and native functions of
-  * [[graft.plans.GraftExtensions]], the sketch aggregates
-  * ([[graft.plans.SketchAgg]]), the sketch scalars
-  * ([[graft.plans.SketchFn]]) and the text UDFs, for both the Column API
-  * and SQL. It also tunes the one Catalyst config that matters for
-  * object-buffer aggregation at scale (SURVEY.md §4): the
+  * optimizer rules of [[graft.plans.GraftExtensions]] and registers
+  * every graft SQL function: the aggregates, each a
+  * [[graft.plans.SketchAgg]], and the scalars — sketch reads, text
+  * functions, key hash, shard router, z-order key — each a
+  * [[graft.plans.SketchFn]]. It also tunes the one Catalyst config
+  * that matters for object-buffer aggregation at scale (SURVEY.md §4): the
   * ObjectHashAggregate sort-based fallback threshold, which defaults to
   * 128 distinct groups per task — far below the per-task (lang, host)
   * group counts this engine aggregates — and would silently degrade
@@ -28,7 +28,6 @@ object Graft {
       // object-agg groups per task routinely exceed the 128 default;
       // sort-based fallback would serialize buffers per row
       spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      registerAll(spark)
       for (rule <- GraftExtensions.rules
            if !spark.experimental.extraOptimizations.contains(rule))
         spark.experimental.extraOptimizations :+= rule
@@ -40,26 +39,6 @@ object Graft {
       spark.conf.set("graft.registered", "true")
     }
     spark
-  }
-
-  /** The text and web UDFs. */
-  def registerAll(spark: SparkSession): Unit = {
-    val r = spark.udf
-    // O72: winnowing fingerprints as a SQL surface (the Column/library
-    // paths use TextFunctions directly)
-    r.register("winnow_fingerprints", (text: String, k: Int, w: Int) =>
-      TextFunctions.winnowFingerprints(text, k, w).toSeq)
-
-    // text / web functions
-    r.register("extract_text", (html: Array[Byte]) => TextFunctions.extractText(html))
-    r.register("lang_id", (text: String) => TextFunctions.langId(text))
-    r.register("quality_score", (text: String) => TextFunctions.qualityScore(text))
-    r.register("token_count", (text: String) => TextFunctions.tokenCount(text))
-    r.register("bpe_token_count", (text: String) => TextFunctions.bpeishTokenCount(text))
-    r.register("doc_fingerprint", (text: String) => TextFunctions.fingerprint(text))
-    r.register("top_ngram_count", (text: String, n: Int) => TextFunctions.topNgramCount(text, n))
-    r.register("simhash64", (text: String) => TextFunctions.simhash(text))
-    r.register("hamming64", (a: Long, b: Long) => java.lang.Long.bitCount(a ^ b))
   }
 
   /** Probe UDF over a BROADCAST sketch: the E2 pattern — sketch built

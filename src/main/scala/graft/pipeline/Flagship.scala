@@ -63,7 +63,7 @@ object Flagship {
     * allow: lang + host + the 16-byte url hash pair + the 8-byte
     * text_len — never the text, and (since round 3) not the url either
     * (EBF/HLL consume Hash128.H directly, so hashing map-side is
-    * byte-identical and halves the shuffle; Hash128Expr scaladoc).
+    * byte-identical and halves the shuffle; Hash128Part scaladoc).
     * Host extraction: the urls here are generator-shaped
     * scheme://host/path, where substring_index == parse_url(HOST)
     * (spec-asserted) at ~60% of its cost — parse_url stays the

@@ -261,7 +261,7 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
       val subq = ScalarSubquery(Aggregate(Nil, Seq(agg), buildProj))
       Filter(SketchFn(Seq(subq, asString(factKey)), EbfMightContain()), fact)
     } else {
-      val shardExpr = GraftShardExpr(asString(buildKey), numShards)
+      val shardExpr = SketchFn(Seq(asString(buildKey)), GraftShard(numShards))
       val shardAlias = Alias(shardExpr, "graft_prune_shard")()
       val skAlias = Alias(
         AggregateExpression(EbfBuildAggExpr(asString(buildKey)), Complete, isDistinct = false),

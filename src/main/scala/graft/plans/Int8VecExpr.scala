@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
 
-/** Native int8-vector kernels for the quantized similarity path.
+/** Native int8-vector kernels for the quantized similarity path, run as
+  * [[SketchFn]] kinds.
   *
   * Why these exist: the original `Quantize.dotInt8` was
   * `aggregate(zip_with(a, b, ...))` — correct, but Catalyst
@@ -16,100 +13,52 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
   * the brute-force rerank that is one 64-element array allocation +
   * element-wise boxing-ish accessor traffic per candidate PAIR (5M
   * pairs in `ann_int8_recall` at sf0.1 — measured 17.0 s, the slowest
-  * query in the round-3 sweep). These expressions run the fused loop
-  * over the two byte arrays in generated code with zero per-pair
-  * allocation, the same pattern as [[Hash128Expr]] / RangeBucketExpr.
+  * query in the round-3 sweep). These kinds run the fused loop over the
+  * two byte arrays with zero per-pair allocation.
   *
   * Null semantics mirror the higher-order form EXACTLY (spec-asserted
   * element-for-element in Int8VecExprSpec): null array in -> null out;
   * length mismatch -> null (zip_with pads the shorter side with nulls,
   * which nulls the aggregate); any null element -> null.
   */
-abstract class Int8PairExpr extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+case class Int8Dot() extends ScalarKind {
+  def name: String = "int8_dot"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(ByteType), ArrayType(ByteType))
+  def dataType: DataType = LongType
+  override def mayAnswerNull: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(ByteType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<tinyint> args, got " +
-          s"${l.simpleString(10)} and ${r.simpleString(10)}")
-    }
-
-  /** The per-pair combine: byte x byte -> int (never overflows int). */
-  protected def combine(x: Byte, y: Byte): Int
-  /** Java source of the combine for codegen, over byte vars `x`/`y`. */
-  protected def combineJava(x: String, y: String): String
-
-  override protected def nullSafeEval(a0: Any, b0: Any): Any = {
-    val a = a0.asInstanceOf[ArrayData]
-    val b = b0.asInstanceOf[ArrayData]
+  /** `sum_i a(i) * b(i)` over two int8 code arrays, as a long. */
+  def apply(in: Array[Any]): Any = {
+    val a = in(0).asInstanceOf[ArrayData]
+    val b = in(1).asInstanceOf[ArrayData]
     val n = a.numElements()
     if (b.numElements() != n) return null
     var s = 0L
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += combine(a.getByte(i), b.getByte(i))
+      s += a.getByte(i) * b.getByte(i)
       i += 1
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-        final int $n = $a.numElements();
-        if ($b.numElements() != $n) {
-          ${ev.isNull} = true;
-        } else {
-          long $s = 0L;
-          for (int $i = 0; $i < $n; $i++) {
-            if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-            $s += ${combineJava(s"$a.getByte($i)", s"$b.getByte($i)")};
-          }
-          if (!${ev.isNull}) ${ev.value} = $s;
-        }
-      """
-    })
-}
-
-/** `sum_i a(i) * b(i)` over two int8 code arrays, as a long. */
-case class Int8DotExpr(left: Expression, right: Expression) extends Int8PairExpr {
-  override def prettyName: String = "int8_dot"
-  protected def combine(x: Byte, y: Byte): Int = x * y
-  protected def combineJava(x: String, y: String): String = s"$x * $y"
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Int8DotExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 object Int8DotExpr {
-  def column(a: Column, b: Column): Column =
-    ColumnBridge.column(Int8DotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def column(a: Column, b: Column): Column = SketchFn.column(Int8Dot(), a, b)
 }
 
 /** `sum_i a(i)^2` over an int8 code array, as a long — the squared code
   * norm, computed once per VECTOR in the pre-join projection of
   * `Quantize.bruteForceTopKInt8` (never per pair). */
-case class Int8SqNormExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "int8_sqnorm"
+case class Int8SqNorm() extends ScalarKind {
+  def name: String = "int8_sqnorm"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(ByteType))
+  def dataType: DataType = LongType
+  override def mayAnswerNull: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ByteType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<tinyint>, got ${t.simpleString(10)}")
-  }
-
-  override protected def nullSafeEval(a0: Any): Any = {
-    val a = a0.asInstanceOf[ArrayData]
+  def apply(in: Array[Any]): Any = {
+    val a = in(0).asInstanceOf[ArrayData]
     val n = a.numElements()
     var s = 0L
     var i = 0
@@ -121,30 +70,8 @@ case class Int8SqNormExpr(child: Expression) extends UnaryExpression {
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      s"""
-        final int $n = $a.numElements();
-        long $s = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-          final int $v = $a.getByte($i);
-          $s += $v * $v;
-        }
-        if (!${ev.isNull}) ${ev.value} = $s;
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Int8SqNormExpr =
-    copy(child = newChild)
 }
 
 object Int8SqNormExpr {
-  def column(a: Column): Column =
-    ColumnBridge.column(Int8SqNormExpr(ColumnBridge.expression(a)))
+  def column(a: Column): Column = SketchFn.column(Int8SqNorm(), a)
 }

@@ -1,41 +1,33 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
-/** Codegen'd range-bucket router: bucket(v) = #{ boundaries(i) <= v },
-  * i.e. the upper-bound binary search of `v` in the SORTED boundary
-  * array. With boundaries taken at the p/P quantiles of a KLL sketch
-  * this assigns each row its balanced range partition (see
+/** Range-bucket router: bucket(v) = #{ boundaries(i) <= v }, i.e. the
+  * upper-bound binary search of `v` in the SORTED boundary array. With
+  * boundaries taken at the p/P quantiles of a KLL sketch this assigns
+  * each row its balanced range partition (see
   * [[graft.pipeline.RangePartition]]).
   *
-  * Native expression rather than a `functions.aggregate` fold over a
+  * A native kind rather than a `functions.aggregate` fold over a
   * literal array: the fold is O(P) comparisons per row and this router
   * sits on the map side of a full-table exchange — at 100 TB with
   * P ~ 10^4 output ranges that is 10^4 compares/row vs 14 here, and the
   * binary search stays inside whole-stage codegen. Ties go right
   * (duplicate boundaries from heavy value ties collapse to one bucket
   * edge); null keys stay null (the partitioner co-locates them in one
-  * hash-of-null partition, documented at the call site).
+  * hash-of-null partition, documented at the call site). The boundaries
+  * compare by value and never print.
   */
-case class RangeBucketExpr(child: Expression, boundaries: Array[Double])
-    extends UnaryExpression {
+case class RangeBucket(boundaries: Array[Double]) extends ScalarKind {
   require(boundaries.nonEmpty, "empty boundary array: nothing to bucket by")
   require(boundaries.sliding(2).forall(w => w.length < 2 || w(0) <= w(1)),
     "boundaries must be sorted ascending")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_range_bucket needs a DOUBLE key, got ${child.dataType.sql}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_range_bucket"
+  def name: String = "graft_range_bucket"
+  def inputTypes: Seq[DataType] = Seq(DoubleType)
+  def dataType: DataType = IntegerType
 
-  /** Called from both interpreted eval and generated code. */
   def bucket(v: Double): Int = {
     val bs = boundaries
     var lo = 0
@@ -47,29 +39,17 @@ case class RangeBucketExpr(child: Expression, boundaries: Array[Double])
     lo
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    bucket(input.asInstanceOf[Double])
+  def apply(in: Array[Any]): Any = bucket(in(0).asInstanceOf[Double])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("rangeBucketExpr", this, classOf[RangeBucketExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.bucket($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RangeBucketExpr =
-    copy(child = newChild)
-
-  // Array[Double] is reference-equal by default; two RangeBucketExprs
-  // with equal boundary VALUES must compare equal for plan canonicalization
   override def equals(other: Any): Boolean = other match {
-    case RangeBucketExpr(c, bs) =>
-      c == child && java.util.Arrays.equals(bs, boundaries)
+    case RangeBucket(bs) => java.util.Arrays.equals(bs, boundaries)
     case _ => false
   }
-  override def hashCode(): Int =
-    31 * child.hashCode() + java.util.Arrays.hashCode(boundaries)
+  override def hashCode(): Int = java.util.Arrays.hashCode(boundaries)
+  override def toString: String = s"RangeBucket(<${boundaries.length} boundaries>)"
 }
 
 object RangeBucketExpr {
   def apply(c: Column, boundaries: Array[Double]): Column =
-    ColumnBridge.column(RangeBucketExpr(ColumnBridge.expression(c), boundaries))
+    SketchFn.column(RangeBucket(boundaries), c)
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftshim.{FunctionShim, InputCasts}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftshim.{ColumnBridge, FunctionShim, InputCasts}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,22 +35,28 @@ object Read {
 
 /** What [[SketchFn]] needs to know about one scalar: its SQL name, the
   * types its inputs are implicitly cast to (the sketches first), its
-  * result type, how it reads its sketches, and its body.
+  * result type, how it reads its sketches (no [[Read]] for a kind that
+  * reads none), and its body.
   *
-  * Null contract: a NULL sketch answers [[onNullSketch]], a NULL number
-  * answers NULL, and a NULL string key answers [[onNullKey]]; each is
-  * SQL NULL unless the kind says otherwise. A null key was never
-  * inserted (the aggregates skip it), so the estimates read it as 0 and
-  * `ebf_might_contain` as a miss.
+  * Null contract: a NULL sketch answers [[onNullSketch]], a NULL string
+  * answers [[onNullKey]], and any other NULL input answers NULL; the
+  * first two are SQL NULL unless the kind says otherwise. A null key
+  * was never inserted (the aggregates skip it), so the estimates read
+  * it as 0 and `ebf_might_contain` as a miss; a text function answers
+  * what its kernel answers for a null text.
   */
 abstract class ScalarKind(read: Read[_ <: AnyRef]) extends Serializable {
+  /** A kind that reads no sketch. */
+  def this() = this(null)
   def name: String
   def inputTypes: Seq[DataType]
   def dataType: DataType
   /** How many leading inputs are sketches. */
-  def sketches: Int = 1
+  def sketches: Int = if (read == null) 0 else 1
   def onNullSketch: Any = null
   def onNullKey: Any = null
+  /** The body can answer NULL from non-null inputs. */
+  def mayAnswerNull: Boolean = false
   /** Changes its sketch: reads a fresh copy of every sketch, and never
     * folds, so a sketch-sized answer is never inlined into a plan. */
   def mutates: Boolean = false
@@ -180,7 +187,7 @@ case class ThetaJaccard() extends TwoSketches[Theta]("theta_jaccard", DoubleType
   def of(a: Theta, b: Theta): Any = a.jaccardEstimate(b)
 }
 
-case class ThetaUnion() extends TwoSketches[Theta]("theta_union", BinaryType, Read.theta) {
+case class ThetaMerge() extends TwoSketches[Theta]("theta_merge", BinaryType, Read.theta) {
   override def mutates: Boolean = true
   def of(a: Theta, b: Theta): Any = a.merge(b).toBytes
 }
@@ -296,10 +303,12 @@ case class TopKError() extends OneSketch[FreqSketch]("topk_error", LongType, Rea
   def of(s: FreqSketch): Any = s.maxError
 }
 
-/** The one sketch scalar: a [[ScalarKind]] read of one or two sketches,
-  * with its inputs implicitly cast to the kind's types (bigint keys
-  * become strings, decimals doubles) and evaluated inside whole-stage
-  * codegen.
+/** The one graft scalar: every SQL scalar graft registers and every
+  * scalar its Column facades build is a [[ScalarKind]] run by this
+  * expression. A kind reads zero, one or two sketches; its inputs are
+  * implicitly cast to the kind's types (bigint keys become strings,
+  * decimals doubles, ints bigints) and it is evaluated inside
+  * whole-stage codegen.
   *
   * A sketch input that is a constant (an `X'…'` literal, or any other
   * foldable expression) is decoded once per task, when the first row
@@ -325,7 +334,7 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
     case c => c
   }
   override def foldable: Boolean = !kind.mutates && children.forall(_.foldable)
-  override def nullable: Boolean = children.indices.exists { i =>
+  override def nullable: Boolean = kind.mayAnswerNull || children.indices.exists { i =>
     children(i).nullable && (
       if (i < kind.sketches) kind.onNullSketch == null
       else kind.inputTypes(i) != StringType || kind.onNullKey == null)
@@ -378,7 +387,8 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("sketchFn", this, classOf[SketchFn].getName)
     val args = children.map(_.genCode(ctx))
-    val in = ctx.freshName("in")
+    // one input array per generated instance, refilled every row
+    val in = ctx.addMutableState("Object[]", "in", v => s"$v = new Object[${children.length}];")
     val out = ctx.freshName("out")
     def boxed(t: DataType, v: String): String =
       if (CodeGenerator.isPrimitiveType(t)) s"${CodeGenerator.boxedType(t)}.valueOf($v)" else v
@@ -392,7 +402,6 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
       else s"($javaType) $out"
     ev.copy(code = code"""
       ${Block.blocksToBlock(args.map(_.code))}
-      Object[] $in = new Object[${children.length}];
       $fill
       Object $out = $self.answer($in);
       boolean ${ev.isNull} = $out == null;
@@ -433,16 +442,23 @@ object SketchFn {
     case _ => false
   }
 
+  /** `kind` over `inputs`, as a Column: how the facades build a scalar. */
+  def column(kind: ScalarKind, inputs: Column*): Column =
+    ColumnBridge.column(SketchFn(inputs.map(ColumnBridge.expression), kind))
+
   /** Every SQL sketch scalar: 31 kinds. */
   val registered: Seq[ScalarKind] = Seq(EbfMightContain(), EbfExpand(), EbfCompress(),
     EbfDelete(), EbfInfo(), EbfFpr(), HllEstimate(), SampleKeys(), SampleSize(),
-    ThetaEstimate(), ThetaIntersectEstimate(), ThetaDiffEstimate(), ThetaJaccard(), ThetaUnion(),
+    ThetaEstimate(), ThetaIntersectEstimate(), ThetaDiffEstimate(), ThetaJaccard(), ThetaMerge(),
     CmsEstimate(), CmsTotal(), CmsInnerProduct(), CsEstimate(), CsTotal(), CsInnerProduct(),
     CsF2(), DcmsEstimate(), DcmsTotal(), KllQuantile(), KllRank(), KllHistogram(),
     TDigestQuantile(), TDigestCdf(), TopKItems(), TopKEstimate(), TopKError())
 
-  /** SQL registration triples for [[registered]] (`Graft.ensure`). */
-  def sqlDescriptors: Seq[FunctionShim.Descriptor] = registered.map { kind =>
-    FunctionShim.descriptor(kind.name, classOf[SketchFn], kind.inputTypes.length)(SketchFn(_, kind))
-  }
+  /** SQL registration triples for [[registered]] and the text functions
+    * (`Graft.ensure`). */
+  def sqlDescriptors: Seq[FunctionShim.Descriptor] =
+    (registered ++ TextKinds.registered).map { kind =>
+      FunctionShim.descriptor(kind.name, classOf[SketchFn], kind.inputTypes.length)(
+        SketchFn(_, kind))
+    }
 }

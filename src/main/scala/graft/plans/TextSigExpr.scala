@@ -3,20 +3,15 @@ package graft.plans
 import graft.core.Hash128
 import graft.functions.TextFunctions
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftshim.{ColumnBridge, StringInputCast}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen'd kernels for the text-signature tier of the dedup
-  * pipeline: MinHash signatures / band hashes / signature Jaccard,
-  * SimHash, and winnowing fingerprints.
+/** Native kernels for the text-signature tier of the dedup pipeline:
+  * MinHash signatures / band hashes / signature Jaccard, SimHash, and
+  * winnowing fingerprints, run as [[SketchFn]] kinds.
   *
   * Why these exist (r6, the O37/O42 pattern applied to its last
   * holdout): the signature step is a per-row map over what is, at
@@ -26,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `Decontaminate.contaminatedPairsViaWinnow`): each row paid
   * Catalyst->Scala conversion of the text, a boxed `Seq[Long]`
   * signature result, and a second UDF hop re-boxing that Seq for the
-  * band hashes. These expressions run inside whole-stage codegen, read
+  * band hashes. These kinds run inside whole-stage codegen, read
   * the `UTF8String` bytes directly (tokenizing on the 0x20 byte, which
   * never occurs inside a multi-byte UTF-8 sequence), hash shingles
   * through `Hash128.hashBytesRange` with zero per-shingle string
@@ -40,9 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * multi-space, unicode and sub-shingle-length texts). Null semantics
   * deliberately match the retired UDFs, which passed null THROUGH to
   * the kernels rather than null-short-circuiting: minhash(null) is the
-  * all-MaxValue signature, simhash(null) = 0, winnow(null) = empty —
-  * so every expression here is non-nullable, which also spares
-  * downstream operators their null checks.
+  * all-MaxValue signature, simhash(null) = 0, winnow(null) = empty
+  * (each kind's `onNullKey`) — so over a text these are non-nullable,
+  * which also spares downstream operators their null checks.
   */
 private[graft] object TextSig {
 
@@ -184,194 +179,158 @@ private[graft] object TextSig {
   }
 }
 
-/** MinHash signature expression: text -> array<long> of `numHashes`
-  * shingle-minima. Non-nullable (null text -> all-MaxValue signature,
-  * matching the retired UDF's pass-through-null behavior). */
-case class MinhashSigExpr(child: Expression, numHashes: Int, shingleN: Int)
-    extends UnaryExpression with StringInputCast {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_minhash_sig"
-
-  def sigOf(u: UTF8String): ArrayData =
+/** MinHash signature: text -> array<long> of `numHashes` shingle-minima
+  * (null text -> the all-MaxValue signature). */
+case class MinhashSig(numHashes: Int, shingleN: Int) extends ScalarKind {
+  def name: String = "graft_minhash_sig"
+  def inputTypes: Seq[DataType] = Seq(StringType)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def onNullKey: Any = sigOf(null)
+  def apply(in: Array[Any]): Any = sigOf(in(0).asInstanceOf[UTF8String])
+  private def sigOf(u: UTF8String): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(TextSig.minhashSig(u, numHashes, shingleN))
-
-  override def eval(input: InternalRow): Any =
-    sigOf(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashSigExpr", this, classOf[MinhashSigExpr].getName)
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $self.sigOf(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
-    copy(child = newChild)
 }
 
 object MinhashSigExpr {
   def column(text: Column, numHashes: Int, shingleN: Int): Column =
-    ColumnBridge.column(MinhashSigExpr(ColumnBridge.expression(text), numHashes, shingleN))
+    SketchFn.column(MinhashSig(numHashes, shingleN), text)
 }
 
 /** LSH band hashes over a MinHash signature: array<long> ->
   * array<long> of `numBands` rolling-31 hashes. */
-case class MinhashBandsExpr(child: Expression, numBands: Int, rows: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${t.simpleString(10)}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_minhash_bands"
-
-  def bandsOf(sig: ArrayData): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(TextSig.bandHashes(sig, numBands, rows))
-
-  override protected def nullSafeEval(input: Any): Any =
-    bandsOf(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashBandsExpr", this, classOf[MinhashBandsExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.bandsOf($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashBandsExpr =
-    copy(child = newChild)
+case class MinhashBands(numBands: Int, rows: Int) extends ScalarKind {
+  def name: String = "graft_minhash_bands"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def apply(in: Array[Any]): Any = UnsafeArrayData.fromPrimitiveArray(
+    TextSig.bandHashes(in(0).asInstanceOf[ArrayData], numBands, rows))
 }
 
 object MinhashBandsExpr {
   def column(sig: Column, numBands: Int, rows: Int): Column =
-    ColumnBridge.column(MinhashBandsExpr(ColumnBridge.expression(sig), numBands, rows))
+    SketchFn.column(MinhashBands(numBands, rows), sig)
 }
 
 /** Estimated Jaccard from two MinHash signatures: fraction of equal
   * positions — [[TextFunctions.minhashJaccard]] without the two
   * Seq[Long] boxing conversions per candidate pair. */
-case class MinhashJaccardExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> args, got " +
-          s"${l.simpleString(10)} and ${r.simpleString(10)}")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_minhash_jaccard"
-
-  def jaccard(a: ArrayData, b: ArrayData): Double = {
+case class MinhashJaccard() extends ScalarKind {
+  def name: String = "graft_minhash_jaccard"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  def dataType: DataType = DoubleType
+  def apply(in: Array[Any]): Any = {
+    val a = in(0).asInstanceOf[ArrayData]
+    val b = in(1).asInstanceOf[ArrayData]
     val n = a.numElements()
     var same = 0
     var i = 0
     while (i < n) { if (a.getLong(i) == b.getLong(i)) same += 1; i += 1 }
     same.toDouble / n
   }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashJaccardExpr", this, classOf[MinhashJaccardExpr].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$self.jaccard($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): MinhashJaccardExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 object MinhashJaccardExpr {
-  def column(a: Column, b: Column): Column =
-    ColumnBridge.column(MinhashJaccardExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def column(a: Column, b: Column): Column = SketchFn.column(MinhashJaccard(), a, b)
 }
 
-/** 64-bit SimHash expression: text -> long. Non-nullable (null -> 0,
-  * matching the retired UDF's kernel pass-through). */
-case class SimhashExpr(child: Expression)
-    extends UnaryExpression with StringInputCast {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_simhash64"
-
-  def hashOf(u: UTF8String): Long = TextSig.simhash64(u)
-
-  override def eval(input: InternalRow): Any =
-    hashOf(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("simhashExpr", this, classOf[SimhashExpr].getName)
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        long ${ev.value} = $self.hashOf(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashExpr =
-    copy(child = newChild)
+/** `simhash64(text)`: 64-bit SimHash (null text -> 0). */
+case class Simhash64() extends ScalarKind {
+  def name: String = "simhash64"
+  def inputTypes: Seq[DataType] = Seq(StringType)
+  def dataType: DataType = LongType
+  override def onNullKey: Any = 0L
+  def apply(in: Array[Any]): Any = TextSig.simhash64(in(0).asInstanceOf[UTF8String])
 }
 
 object SimhashExpr {
-  def column(text: Column): Column =
-    ColumnBridge.column(SimhashExpr(ColumnBridge.expression(text)))
+  def column(text: Column): Column = SketchFn.column(Simhash64(), text)
 }
 
-/** Winnowing fingerprints expression: text -> array<string> of distinct
-  * window-min md5 gram hashes. The md5 construction IS the output
-  * contract (the DuckDB oracle recomputes it), so this wraps the
-  * [[TextFunctions.winnowFingerprints]] kernel unchanged and removes
-  * only the UDF boundary: the per-row String->UTF8String conversions of
-  * every fingerprint ran through a boxed converter; here they are
-  * wrapped directly. Non-nullable (null -> empty array, kernel
-  * semantics). */
-case class WinnowFpExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with StringInputCast {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_winnow_fps"
-
-  def fpsOf(u: UTF8String): ArrayData = {
-    val fps = TextFunctions.winnowFingerprints(if (u == null) null else u.toString, k, w)
-    val out = new Array[AnyRef](fps.length)
+/** `winnow_fingerprints(text, k, w)`: the distinct window-min md5 gram
+  * hashes of a text (null text -> empty). The md5 construction IS the
+  * output contract (the DuckDB oracle recomputes it), so this wraps the
+  * [[TextFunctions.winnowFingerprints]] kernel unchanged and wraps each
+  * fingerprint as a `UTF8String` directly. */
+case class WinnowFingerprints() extends ScalarKind {
+  def name: String = "winnow_fingerprints"
+  def inputTypes: Seq[DataType] = Seq(StringType, IntegerType, IntegerType)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def onNullKey: Any = new GenericArrayData(Array.empty[Any])
+  def apply(in: Array[Any]): Any = {
+    val fps = TextFunctions.winnowFingerprints(
+      in(0).toString, in(1).asInstanceOf[Int], in(2).asInstanceOf[Int])
+    val out = new Array[Any](fps.length)
     var i = 0
     while (i < fps.length) { out(i) = UTF8String.fromString(fps(i)); i += 1 }
     new GenericArrayData(out)
   }
-
-  override def eval(input: InternalRow): Any =
-    fpsOf(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("winnowFpExpr", this, classOf[WinnowFpExpr].getName)
-    val c = child.genCode(ctx)
-    ev.copy(
-      code = code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $self.fpsOf(${c.isNull} ? null : ${c.value});
-      """,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFpExpr =
-    copy(child = newChild)
 }
 
 object WinnowFpExpr {
   def column(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowFpExpr(ColumnBridge.expression(text), k, w))
+    SketchFn.column(WinnowFingerprints(), text, lit(k), lit(w))
+}
+
+/** `name(text)` over a [[TextFunctions]] kernel of the decoded text; a
+  * null text answers the kernel's own answer for null. */
+abstract class TextKind(val name: String, val dataType: DataType) extends ScalarKind {
+  def inputTypes: Seq[DataType] = Seq(StringType)
+  def of(text: String): Any
+  override def onNullKey: Any = of(null)
+  final def apply(in: Array[Any]): Any = of(in(0).toString)
+}
+
+case class LangId() extends TextKind("lang_id", StringType) {
+  def of(text: String): Any = UTF8String.fromString(TextFunctions.langId(text))
+}
+
+case class QualityScore() extends TextKind("quality_score", DoubleType) {
+  def of(text: String): Any = TextFunctions.qualityScore(text)
+}
+
+case class TokenCount() extends TextKind("token_count", IntegerType) {
+  def of(text: String): Any = TextFunctions.tokenCount(text)
+}
+
+case class BpeTokenCount() extends TextKind("bpe_token_count", IntegerType) {
+  def of(text: String): Any = TextFunctions.bpeishTokenCount(text)
+}
+
+case class DocFingerprint() extends TextKind("doc_fingerprint", LongType) {
+  def of(text: String): Any = TextFunctions.fingerprint(text)
+}
+
+/** `top_ngram_count(text, n)` (null text -> 0). */
+case class TopNgramCount() extends ScalarKind {
+  def name: String = "top_ngram_count"
+  def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
+  def dataType: DataType = IntegerType
+  override def onNullKey: Any = 0
+  def apply(in: Array[Any]): Any =
+    TextFunctions.topNgramCount(in(0).toString, in(1).asInstanceOf[Int])
+}
+
+/** `extract_text(html)`: the visible text of UTF-8 html bytes. */
+case class ExtractText() extends ScalarKind {
+  def name: String = "extract_text"
+  def inputTypes: Seq[DataType] = Seq(BinaryType)
+  def dataType: DataType = StringType
+  def apply(in: Array[Any]): Any =
+    UTF8String.fromString(TextFunctions.extractText(in(0).asInstanceOf[Array[Byte]]))
+}
+
+/** `hamming64(a, b)`: the bits two 64-bit hashes differ in. */
+case class Hamming64() extends ScalarKind {
+  def name: String = "hamming64"
+  def inputTypes: Seq[DataType] = Seq(LongType, LongType)
+  def dataType: DataType = IntegerType
+  def apply(in: Array[Any]): Any =
+    java.lang.Long.bitCount(in(0).asInstanceOf[Long] ^ in(1).asInstanceOf[Long])
+}
+
+object TextKinds {
+  /** The SQL text and web functions: 10 kinds. */
+  val registered: Seq[ScalarKind] = Seq(WinnowFingerprints(), ExtractText(), LangId(),
+    QualityScore(), TokenCount(), BpeTokenCount(), DocFingerprint(), TopNgramCount(),
+    Simhash64(), Hamming64())
 }

@@ -4,14 +4,14 @@ import graft.core.{WireReader, WireWriter}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
-/** Native codegen'd kernels for the ANN probe path (IVF cell
-  * assignment / probing and sign-LSH bucketing).
+/** Native kernels for the ANN probe path (IVF cell assignment /
+  * probing and sign-LSH bucketing), run as [[SketchFn]] kinds.
   *
   * Why these exist: the previous forms were per-row Scala UDFs over
   * `Seq[Double]` — every evaluated vector paid Catalyst->Scala
@@ -20,13 +20,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * (`ann_ivf_recall` 6.54 s / `ann_ivf_clustered` 4.51 s /
   * `ann_lsh_recall` 4.98 s at sf0.1 — the #2/#6/#7 slowest queries in
   * the round-4 sweep, and the last named UDF-where-an-expression-fits
-  * anti-pattern in the repo). These expressions read the `ArrayData`
-  * directly in a fused loop with zero boxing, the same pattern as
-  * [[Int8DotExpr]] / [[RangeBucketExpr]].
+  * anti-pattern in the repo). These kinds read the `ArrayData`
+  * directly in a fused loop with zero boxing.
   *
-  * The captured matrix (centroids / LSH planes) rides along as an
-  * expression field surfaced to generated code via
-  * `ctx.addReferenceObj` — NOT as composed per-element literals, which
+  * The captured matrix (centroids / LSH planes) rides along in the
+  * kind, which generated code reaches through the one [[SketchFn]]
+  * reference object — NOT as composed per-element literals, which
   * is what the old `Ann.lshBuckets` comment correctly rejected
   * (numTables*numBits*dim literal subtrees blow codegen method
   * limits). A reference object is one constant-pool slot regardless of
@@ -38,17 +37,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * spec-asserted identical to the retired UDF logic on random vectors
   * (VecProbeExprSpec). Null input array -> null row; null ELEMENTS
   * (which the embeddings never carry — the UDF form would have thrown)
-  * read as 0.0 rather than poisoning the row.
+  * read as 0.0 rather than poisoning the row, so only a null vector
+  * makes a result NULL.
   */
-private[graft] trait DoubleVecInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${t.simpleString(10)}")
-  }
-  override def nullable: Boolean = true
-}
-
 private[graft] object VecProbeExpr {
   /** Flatten a rectangular matrix row-major, validating uniform width. */
   def flatten(rows: Array[Array[Double]], what: String): Array[Double] = {
@@ -99,17 +90,33 @@ private[graft] object VecProbeExpr {
   }
 }
 
+/** A kernel over one `array<double>` vector with a captured matrix,
+  * which it compares by value (the plan's canonical form needs it) and
+  * never prints. */
+abstract class VecKind(private val matrix: Array[Double], private val params: Int*)
+    extends ScalarKind {
+  def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  final override def equals(other: Any): Boolean = other match {
+    case k: VecKind => k.getClass == getClass && k.params == params &&
+      java.util.Arrays.equals(k.matrix, matrix)
+    case _ => false
+  }
+  final override def hashCode(): Int = (getClass, params, java.util.Arrays.hashCode(matrix)).##
+  final override def toString: String = s"$name(${params.mkString(", ")})"
+  final def apply(in: Array[Any]): Any = of(in(0).asInstanceOf[ArrayData])
+  def of(v: ArrayData): Any
+}
+
 /** Nearest-centroid cell id for a vector (IVF corpus-side assignment):
   * argmin of `(-cosine, cellId)` under `Double.compare` — ties to the
   * lower cell id, matching `sortBy((-cos, c)).head` of the retired UDF
   * exactly. Scalar fast path: no per-row array allocation at all. */
-case class NearestCellExpr(child: Expression, cents: Array[Double],
-                           numCells: Int, dim: Int)
-    extends UnaryExpression with DoubleVecInput {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_cell"
+case class NearestCell(cents: Array[Double], numCells: Int, dim: Int)
+    extends VecKind(cents, numCells, dim) {
+  def name: String = "graft_nearest_cell"
+  def dataType: DataType = IntegerType
 
-  def assign(v: ArrayData): Int = {
+  def of(v: ArrayData): Any = {
     val nd = math.min(dim, v.numElements())
     var nv = 0.0
     var d = 0
@@ -145,35 +152,12 @@ case class NearestCellExpr(child: Expression, cents: Array[Double],
     }
     bestIdx
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    assign(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCellExpr", this, classOf[NearestCellExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.assign($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellExpr =
-    copy(child = newChild)
-
-  // Array fields are reference-equal by default; canonicalization needs
-  // value equality (same pattern as RangeBucketExpr)
-  override def equals(other: Any): Boolean = other match {
-    case NearestCellExpr(c, m, n, d) =>
-      c == child && n == numCells && d == dim && java.util.Arrays.equals(m, cents)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    ((31 * child.hashCode() + numCells) * 31 + dim) * 31 +
-      java.util.Arrays.hashCode(cents)
 }
 
 object NearestCellExpr {
   def column(vec: Column, centroids: Array[Array[Double]]): Column = {
     val flat = VecProbeExpr.flatten(centroids, "centroid")
-    ColumnBridge.column(NearestCellExpr(ColumnBridge.expression(vec), flat,
-      centroids.length, centroids.head.length))
+    SketchFn.column(NearestCell(flat, centroids.length, centroids.head.length), vec)
   }
 }
 
@@ -181,13 +165,12 @@ object NearestCellExpr {
   * probe side): repeated lexicographic-min selection over
   * `(-cosine, cellId)` — identical ordering to the retired UDF's
   * `sortBy((-cos, c)).take(nProbe)`. */
-case class NearestCellsExpr(child: Expression, cents: Array[Double],
-                            numCells: Int, dim: Int, nProbe: Int)
-    extends UnaryExpression with DoubleVecInput {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_nearest_cells"
+case class NearestCells(cents: Array[Double], numCells: Int, dim: Int, nProbe: Int)
+    extends VecKind(cents, numCells, dim, nProbe) {
+  def name: String = "graft_nearest_cells"
+  def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  def probe(v: ArrayData): ArrayData = {
+  def of(v: ArrayData): Any = {
     val keys = new Array[Double](numCells)
     VecProbeExpr.scoreCells(v, cents, numCells, dim, keys)
     val take = math.min(nProbe, numCells)
@@ -212,34 +195,12 @@ case class NearestCellsExpr(child: Expression, cents: Array[Double],
     }
     new GenericArrayData(out)
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    probe(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCellsExpr", this, classOf[NearestCellsExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.probe($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellsExpr =
-    copy(child = newChild)
-
-  override def equals(other: Any): Boolean = other match {
-    case NearestCellsExpr(c, m, n, d, p) =>
-      c == child && n == numCells && d == dim && p == nProbe &&
-        java.util.Arrays.equals(m, cents)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    (((31 * child.hashCode() + numCells) * 31 + dim) * 31 + nProbe) * 31 +
-      java.util.Arrays.hashCode(cents)
 }
 
 object NearestCellsExpr {
   def column(vec: Column, centroids: Array[Array[Double]], nProbe: Int): Column = {
     val flat = VecProbeExpr.flatten(centroids, "centroid")
-    ColumnBridge.column(NearestCellsExpr(ColumnBridge.expression(vec), flat,
-      centroids.length, centroids.head.length, nProbe))
+    SketchFn.column(NearestCells(flat, centroids.length, centroids.head.length, nProbe), vec)
   }
 }
 
@@ -247,13 +208,12 @@ object NearestCellsExpr {
   * `numBits` hyperplane sign bits each, planes flattened row-major
   * `[table][bit][dim]`. Same dot-product accumulation order and
   * `dot >= 0` sign rule as the retired UDF -> identical buckets. */
-case class LshBucketsExpr(child: Expression, planes: Array[Double],
-                          numTables: Int, numBits: Int, dim: Int)
-    extends UnaryExpression with DoubleVecInput {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_buckets"
+case class LshBuckets(planes: Array[Double], numTables: Int, numBits: Int, dim: Int)
+    extends VecKind(planes, numTables, numBits, dim) {
+  def name: String = "graft_lsh_buckets"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  def buckets(v: ArrayData): ArrayData = {
+  def of(v: ArrayData): Any = {
     val nd = math.min(dim, v.numElements())
     val out = new Array[Long](numTables)
     var t = 0
@@ -277,27 +237,6 @@ case class LshBucketsExpr(child: Expression, planes: Array[Double],
     }
     new GenericArrayData(out)
   }
-
-  override protected def nullSafeEval(input: Any): Any =
-    buckets(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("lshBucketsExpr", this, classOf[LshBucketsExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.buckets($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshBucketsExpr =
-    copy(child = newChild)
-
-  override def equals(other: Any): Boolean = other match {
-    case LshBucketsExpr(c, p, t, b, d) =>
-      c == child && t == numTables && b == numBits && d == dim &&
-        java.util.Arrays.equals(p, planes)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    (((31 * child.hashCode() + numTables) * 31 + numBits) * 31 + dim) * 31 +
-      java.util.Arrays.hashCode(planes)
 }
 
 object LshBucketsExpr {
@@ -306,8 +245,7 @@ object LshBucketsExpr {
     require(planes.length == numTables * numBits,
       s"plane matrix has ${planes.length} rows, expected ${numTables * numBits}")
     val flat = VecProbeExpr.flatten(planes, "plane")
-    ColumnBridge.column(LshBucketsExpr(ColumnBridge.expression(vec), flat,
-      numTables, numBits, dim))
+    SketchFn.column(LshBuckets(flat, numTables, numBits, dim), vec)
   }
 }
 

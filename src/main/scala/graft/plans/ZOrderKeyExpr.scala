@@ -1,17 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
-/** Codegen'd Morton (Z-order) key: bit-interleave of `bits` low bits
-  * from each child bucket id into one long, most-significant bucket
-  * bits most significant in the key.
+/** Morton (Z-order) key `graft_zorder_key(bucket1, ..., bits)`:
+  * bit-interleave of `bits` low bits from each of `dims` bucket ids
+  * into one long, most-significant bucket bits most significant in the
+  * key.
   *
   * This is the multi-column clustering primitive (the role of Delta's
   * `OPTIMIZE ZORDER BY` / Iceberg's z-ordered sort): a LINEAR sort
@@ -22,40 +17,30 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * on EVERY participating column and a sidecar index
   * ([[graft.pipeline.SketchIndex]]-style min/max) prunes band
   * predicates on any of them. Children are expected to be BALANCED
-  * bucket ids (e.g. [[RangeBucketExpr]] over KLL quantile boundaries,
+  * bucket ids (e.g. [[RangeBucket]] over KLL quantile boundaries,
   * see [[graft.pipeline.ZOrder]]) — interleaving raw skewed values
   * would collapse most rows into few cells and lose the locality.
   *
   * Values outside [0, 2^bits) are masked to their low `bits` bits
-  * (callers bucketing via `RangeBucketExpr` with 2^bits - 1
+  * (callers bucketing via [[RangeBucket]] with 2^bits - 1
   * boundaries produce in-range ids by construction). Null in any
-  * child -> null key, mirroring `RangeBucketExpr`'s null-preserving
+  * input -> null key, mirroring [[RangeBucket]]'s null-preserving
   * contract; the layout operator documents the null-placement caveat.
   *
-  * Native expression rather than a shiftleft/bitand built-in tree: the
+  * A native kind rather than a shiftleft/bitand built-in tree: the
   * composed form is `bits x dims` expression nodes evaluated per row
   * on the map side of a full-table exchange; here it is one fused
-  * loop inside whole-stage codegen (the [[Hash128Expr]] /
-  * [[RangeBucketExpr]] pattern).
+  * loop inside whole-stage codegen.
   */
-case class ZOrderKeyExpr(children: Seq[Expression], bits: Int) extends Expression {
-  require(children.size >= 2 && children.size <= 8,
-    s"z-order interleave needs 2..8 columns, got ${children.size}")
-  require(bits >= 1 && bits * children.size <= 63,
-    s"bits * dims must fit a positive long, got $bits x ${children.size}")
+case class ZOrderKey(dims: Int, bits: Int) extends ScalarKind {
+  require(dims >= 2 && dims <= 8, s"z-order interleave needs 2..8 columns, got $dims")
+  require(bits >= 1 && bits * dims <= 63,
+    s"bits * dims must fit a positive long, got $bits x $dims")
 
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "graft_zorder_key"
+  def name: String = "graft_zorder_key"
+  def inputTypes: Seq[DataType] = Seq.fill(dims)(IntegerType)
+  def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    children.zipWithIndex.collectFirst {
-      case (c, i) if c.dataType != IntegerType =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs INT bucket ids, arg $i is ${c.dataType.sql}")
-    }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-
-  /** Called from both interpreted eval and generated code. */
   def interleave(vals: Array[Int]): Long = {
     val d = vals.length
     val mask = (1 << bits) - 1
@@ -72,75 +57,10 @@ case class ZOrderKeyExpr(children: Seq[Expression], bits: Int) extends Expressio
     z
   }
 
-  override def eval(input: InternalRow): Any = {
-    val d = children.size
-    val vals = new Array[Int](d)
-    var i = 0
-    while (i < d) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      vals(i) = v.asInstanceOf[Int]
-      i += 1
-    }
-    interleave(vals)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("zOrderKeyExpr", this, classOf[ZOrderKeyExpr].getName)
-    val evals = children.map(_.genCode(ctx))
-    val arr = ctx.freshName("zvals")
-    val childEval = evals.map(_.code.toString).mkString("\n")
-    val anyNull = evals.map(_.isNull.toString).mkString(" || ")
-    val assigns = evals.zipWithIndex
-      .map { case (e, i) => s"$arr[$i] = ${e.value};" }.mkString("\n")
-    ev.copy(code = code"""
-      $childEval
-      boolean ${ev.isNull} = false;
-      long ${ev.value} = -1L;
-      if ($anyNull) {
-        ${ev.isNull} = true;
-      } else {
-        int[] $arr = new int[${children.size}];
-        $assigns
-        ${ev.value} = $self.interleave($arr);
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ZOrderKeyExpr =
-    copy(children = newChildren)
+  def apply(in: Array[Any]): Any = interleave(Array.tabulate(dims)(i => in(i).asInstanceOf[Int]))
 }
 
 object ZOrderKeyExpr {
   def column(buckets: Seq[Column], bits: Int): Column =
-    ColumnBridge.column(ZOrderKeyExpr(buckets.map(ColumnBridge.expression), bits))
-
-  /** SQL registration triple for
-    * `graft_zorder_key(bucket1, bucket2[, ...], bits)` — the LAST
-    * argument is the foldable per-dimension bit width, everything
-    * before it an INT bucket id (the SQL twin of the Column API;
-    * shared by `GraftExtensions` and `Graft.ensure`). */
-  def sqlDescriptor: (
-      org.apache.spark.sql.catalyst.FunctionIdentifier,
-      org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      Seq[Expression] => Expression) = {
-    val builder = (args: Seq[Expression]) => {
-      if (args.size < 3) throw new IllegalArgumentException(
-        s"graft_zorder_key expects (bucket1, bucket2, ..., bits literal), got ${args.size} args")
-      val bitsExpr = args.last
-      if (!bitsExpr.foldable) throw new IllegalArgumentException(
-        "graft_zorder_key bits must be a foldable integral literal")
-      val bits = bitsExpr.eval() match {
-        case i: java.lang.Integer => i.intValue()
-        case l: java.lang.Long => l.intValue()
-        case other => throw new IllegalArgumentException(
-          s"graft_zorder_key bits must be an integral literal, got $other")
-      }
-      ZOrderKeyExpr(args.init, bits)
-    }
-    (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_zorder_key"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ZOrderKeyExpr].getName, "graft_zorder_key"),
-      builder)
-  }
+    SketchFn.column(ZOrderKey(buckets.size, bits), buckets: _*)
 }

@@ -965,7 +965,7 @@ object SketchQueries {
       s.range(1).select(
         expr(s"theta_intersect_estimate(X'$a', X'$b')").as("early_and_late"),
         expr(s"theta_diff_estimate(X'$a', X'$b')").as("early_not_late"),
-        expr(s"theta_estimate(theta_union(X'$a', X'$b'))").as("early_or_late"))
+        expr(s"theta_estimate(theta_merge(X'$a', X'$b'))").as("early_or_late"))
     },
 
     // estimating mode: lineitem orderkeys exceed k, so the estimator

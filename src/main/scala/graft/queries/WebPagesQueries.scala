@@ -114,7 +114,7 @@ object WebPagesQueries {
     // per-(lang,host) EBF/HLL built from map-side Hash128 columns
     // (16 bytes through the exchange) must be byte-identical to the
     // string-fed build — the invariant that makes the flagship's
-    // halved shuffle a pure win (Hash128Expr scaladoc)
+    // halved shuffle a pure win (Hash128Part scaladoc)
     "wp_hash_shuffle_equivalence" -> { (s, _) =>
       Graft.ensure(s)
       val wp = webpages(s)

@@ -18,8 +18,7 @@ object ColumnBridge {
 
 /** Session-level native-function registration (FunctionRegistry is
   * reachable only through the `private[sql]` sessionState) — lets
-  * `Graft.ensure` expose codegen'd expressions in SQL for sessions not
-  * configured with `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * `Graft.ensure` expose graft's native expressions in SQL. */
 object FunctionShim {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -56,14 +55,6 @@ trait InputCasts
   self: Expression =>
   protected def castTargets: Seq[org.apache.spark.sql.types.DataType]
   override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] = castTargets
-}
-
-/** [[InputCasts]] for a unary expression over a string — the behavior a
-  * registered Scala UDF with a String parameter had. */
-trait StringInputCast extends InputCasts {
-  self: Expression =>
-  override protected def castTargets: Seq[org.apache.spark.sql.types.DataType] =
-    Seq(org.apache.spark.sql.types.StringType)
 }
 
 /** The listener bus, which Spark keeps package-private. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.{Int8DotExpr, Int8SqNormExpr}
+import graft.plans.{Int8Dot, Int8DotExpr, Int8SqNorm, Int8SqNormExpr, SketchFn}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -86,8 +86,8 @@ class Int8VecExprSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types.{ArrayType, ByteType}
     def arr(xs: Byte*) = Literal(new GenericArrayData(xs.toArray), ArrayType(ByteType))
-    assert(Int8DotExpr(arr(1, 2), arr(3, 4)).eval(null) === 11L)
-    assert(Int8DotExpr(arr(1, 2), arr(3)).eval(null) === null)
-    assert(Int8SqNormExpr(arr(-3, 4)).eval(null) === 25L)
+    assert(SketchFn(Seq(arr(1, 2), arr(3, 4)), Int8Dot()).eval(null) === 11L)
+    assert(SketchFn(Seq(arr(1, 2), arr(3)), Int8Dot()).eval(null) === null)
+    assert(SketchFn(Seq(arr(-3, 4)), Int8SqNorm()).eval(null) === 25L)
   }
 }

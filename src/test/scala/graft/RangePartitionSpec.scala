@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Kll
 import graft.pipeline.RangePartition
-import graft.plans.RangeBucketExpr
+import graft.plans.RangeBucket
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,7 +46,7 @@ class RangePartitionSpec extends AnyFunSuite {
 
   test("bucket router: upper-bound semantics, ties right, codegen == interpreted") {
     val bs = Array(10.0, 20.0, 20.0, 30.0) // duplicate boundary = collapsed bucket
-    val e = RangeBucketExpr(org.apache.spark.sql.graftshim.ColumnBridge.expression(lit(0.0)), bs)
+    val e = RangeBucket(bs)
     assert(e.bucket(-5.0) == 0)
     assert(e.bucket(10.0) == 1) // tie goes right
     assert(e.bucket(19.9) == 1)

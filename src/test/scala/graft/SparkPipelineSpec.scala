@@ -275,7 +275,7 @@ class SparkPipelineSpec extends AnyFunSuite {
     // it really is the native expression, not a UDF
     val plan = spark.range(5).select(expr("graft_shard(cast(id as string), 8)"))
       .queryExecution.optimizedPlan
-    assert(plan.expressions.exists(_.exists(_.isInstanceOf[graft.plans.GraftShardExpr])))
+    assert(plan.expressions.exists(_.exists(graft.plans.SketchFn.isA[graft.plans.GraftShard](_))))
     // implicit input cast preserved from the UDF era: non-string keys work
     val viaLong = spark.range(5)
       .select(expr("graft_shard(id, 8)").as("a"),

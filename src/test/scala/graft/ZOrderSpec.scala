@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Kll
 import graft.pipeline.ZOrder
-import graft.plans.ZOrderKeyExpr
+import graft.plans.ZOrderKey
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,8 +35,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("interleave is a bijection on the full 2-D and 3-D bucket grids") {
     for (d <- Seq(2, 3); bits <- Seq(2, 4)) {
-      val e = ZOrderKeyExpr(
-        Seq.fill(d)(org.apache.spark.sql.catalyst.expressions.Literal(0)), bits)
+      val e = ZOrderKey(d, bits)
       val n = 1 << bits
       val grid = Seq.fill(d)(0 until n).foldLeft(Seq(Seq.empty[Int])) {
         (acc, dim) => acc.flatMap(p => dim.map(v => p :+ v))
@@ -51,8 +50,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("high bucket bits dominate: the top z bits are the per-dim top bits") {
-    val e = ZOrderKeyExpr(
-      Seq.fill(2)(org.apache.spark.sql.catalyst.expressions.Literal(0)), 8)
+    val e = ZOrderKey(2, 8)
     // any point in the top quadrant of both dims outranks any point in
     // the bottom quadrant of both — the property cell routing relies on
     val hi = e.interleave(Array(192, 200))
@@ -63,8 +61,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("dataframe path (codegen) matches interpreted interleave; null-preserving") {
     import spark.implicits._
-    val e = ZOrderKeyExpr(
-      Seq.fill(2)(org.apache.spark.sql.catalyst.expressions.Literal(0)), 8)
+    val e = ZOrderKey(2, 8)
     val rows = Seq((0, 0), (1, 2), (255, 255), (17, 254), (128, 64))
     val got = rows.toDF("a", "b")
       .select(graft.plans.ZOrderKeyExpr.column(Seq(col("a"), col("b")), 8).as("z"))

@@ -17,8 +17,9 @@ class MergeLawsSpec extends AnyFunSuite {
   // 0.06) — a random seed makes the gate flaky by construction, and a
   // rare failing case once sent scalacheck's Stream shrinker into a
   // 20+-minute minimization of a 2000-element list mid-suite. A seed
-  // sweep (tools/KllTdProbe, 1500 seeds) measured worst margins of
-  // 0.008/0.040 (KLL) and 0.019/0.060 (t-digest), so the properties
+  // sweep (1500 seeds, by a one-off tool whose source is in the git
+  // history as src/main/scala/graft/tools/KllTdProbe.scala) measured
+  // worst margins of 0.008/0.040 (KLL) and 0.019/0.060 (t-digest), so the properties
   // are sound; the fixed seed + NoShrink below make the gate
   // deterministic and fast-failing.
   private val params = SCTest.Parameters.default.withMinSuccessfulTests(40)

@@ -124,7 +124,7 @@ class NativeGoldenSpec extends AnyFunSuite {
 
   private val longs = ArrayType(LongType, containsNull = false)
   private val strings = ArrayType(StringType, containsNull = false)
-  private val winnowSql = ArrayType(StringType, containsNull = true)
+  private val winnowSql = ArrayType(StringType, containsNull = false)
 
   /** (label, call, golden answers for rows 0..7 or the one answer of
     * every row, result type). */

@@ -149,7 +149,7 @@ class ScalarGoldenSpec extends AnyFunSuite {
     ("theta_intersect_estimate(${th1}, ${th2})", "1294", LongType),
     ("theta_diff_estimate(${th1}, ${th2})", "1360", LongType),
     ("theta_jaccard(${th1}, ${th2})", "0.23927824121839297", DoubleType),
-    ("theta_union(${th1}, ${th2})", "0a2efeb4d378c92f", BinaryType),
+    ("theta_merge(${th1}, ${th2})", "0a2efeb4d378c92f", BinaryType),
     ("cms_estimate(${cms}, key)", "14 20 7 3 7 15 0 7", LongType),
     ("cms_estimate(${cms}, nk)", "14 20 7 3 7 15 17 7", LongType),
     ("cms_total(${cms})", "4000", LongType),

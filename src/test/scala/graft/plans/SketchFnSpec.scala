@@ -70,6 +70,16 @@ class SketchFnSpec extends AnyFunSuite {
     assert(df.schema.map(_.nullable) === Seq(false, true, false, false, true))
     val r = df.orderBy("per_row").collect()
     assert(r.map(_.isNullAt(1)).count(identity) === 2)
+
+    // kinds that read no sketch: a null text answers the kernel's value,
+    // int8_dot can answer NULL from non-null arrays, and a vector kind
+    // over a vector that is never NULL is never NULL
+    val native = spark.range(3).select(
+      expr("lang_id(CASE WHEN id = 0 THEN 'a b' END)"),
+      expr("hamming64(id, CASE WHEN id = 0 THEN 1L END)"),
+      Int8DotExpr.column(expr("array(cast(id AS tinyint))"), expr("array(cast(id AS tinyint))")),
+      NearestCellExpr.column(expr("array(cast(id AS double), 1.0D)"), Array(Array(1.0, 0.0))))
+    assert(native.schema.map(_.nullable) === Seq(false, true, true, false))
   }
 
   test("a corrupt sketch fails with an IllegalArgumentException named for the function") {
@@ -111,7 +121,7 @@ class SketchFnSpec extends AnyFunSuite {
     val a = Theta.empty(); (0 until 100).foreach(i => a.add(s"a$i"))
     val b = Theta.empty(); (0 until 100).foreach(i => b.add(s"b$i"))
     val u = spark.range(3).selectExpr(
-      s"theta_estimate(theta_union(X'${hex(a.toBytes)}', X'${hex(b.toBytes)}'))")
+      s"theta_estimate(theta_merge(X'${hex(a.toBytes)}', X'${hex(b.toBytes)}'))")
     assert(u.collect().map(_.getLong(0)).toSeq === Seq(200L, 200L, 200L))
   }
 

@@ -175,8 +175,8 @@ class VecProbeExprSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val flat = VecProbeExpr.flatten(centroids, "centroid")
     val bound = BoundReference(0, ArrayType(DoubleType), nullable = true)
-    val scalar = NearestCellExpr(bound, flat, centroids.length, dim)
-    val probe = NearestCellsExpr(bound, flat, centroids.length, dim, 3)
+    val scalar = SketchFn(Seq(bound), NearestCell(flat, centroids.length, dim))
+    val probe = SketchFn(Seq(bound), NearestCells(flat, centroids.length, dim, 3))
     vectors.take(50).foreach { case (_, v) =>
       val row = InternalRow(ArrayData.toArrayData(v))
       val expect = Ivf.nearestCells(v, centroids, 3)
