@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * (duplicate boundaries from heavy value ties collapse to one bucket
   * edge); null keys stay null (the partitioner co-locates them in one
   * hash-of-null partition, documented at the call site). The boundaries
-  * compare by value and never print.
+  * compare by value, as plan canonicalization needs.
   */
 case class RangeBucket(boundaries: Array[Double]) extends ScalarKind {
   require(boundaries.nonEmpty, "empty boundary array: nothing to bucket by")
@@ -46,7 +46,6 @@ case class RangeBucket(boundaries: Array[Double]) extends ScalarKind {
     case _ => false
   }
   override def hashCode(): Int = java.util.Arrays.hashCode(boundaries)
-  override def toString: String = s"RangeBucket(<${boundaries.length} boundaries>)"
 }
 
 object RangeBucketExpr {

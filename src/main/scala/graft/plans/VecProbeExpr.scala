@@ -91,8 +91,7 @@ private[graft] object VecProbeExpr {
 }
 
 /** A kernel over one `array<double>` vector with a captured matrix,
-  * which it compares by value (the plan's canonical form needs it) and
-  * never prints. */
+  * which it compares by value (the plan's canonical form needs it). */
 abstract class VecKind(private val matrix: Array[Double], private val params: Int*)
     extends ScalarKind {
   def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
@@ -102,7 +101,6 @@ abstract class VecKind(private val matrix: Array[Double], private val params: In
     case _ => false
   }
   final override def hashCode(): Int = (getClass, params, java.util.Arrays.hashCode(matrix)).##
-  final override def toString: String = s"$name(${params.mkString(", ")})"
   final def apply(in: Array[Any]): Any = of(in(0).asInstanceOf[ArrayData])
   def of(v: ArrayData): Any
 }
