@@ -22,7 +22,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * fingerprint, wall time, group count). A restart replays the
   * manifest, skips completed chunks whose lineage matches, and re-runs
   * only the remainder. The final pass re-aggregates all chunk outputs
-  * with the `*_merge_agg` aggregators — correct under arbitrary chunk
+  * with each spec's [[SaltedAgg.SketchSpec.merge]], the stage-2
+  * aggregate of the salted build — correct under arbitrary chunk
   * completion order because sketch merge is associative and commutative
   * (the §2.1 theorem), which is exactly why chunked execution cannot
   * change the result.
@@ -191,7 +192,7 @@ object CheckpointRunner {
     if (pending.size > stopAfter) return null // stopped early (kill simulation)
 
     // final pass: re-aggregate all chunk sketches (associative merge)
-    val mergeAggs = specs.map(sp => expr(s"${sp.mergeFn}(${sp.name})").as(sp.name)) ++
+    val mergeAggs = specs.map(sp => sp.merge.as(sp.name)) ++
       Seq(sum("__rows").as("rows"))
     written.groupBy(keys.map(col): _*).agg(mergeAggs.head, mergeAggs.tail: _*)
   }

@@ -2,14 +2,15 @@ package graft.pipeline
 
 import graft.data.WebPagesGen
 import graft.functions.Graft
-import graft.plans.{BatchedTokenBuf, EbfShardedProbeExpr, MergeKind, PerHostKind, SketchAgg}
+import graft.plans.{BatchedTokenBuf, MergeKind, PerHostKind, SketchAgg}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The flagship benchmark pipeline — the BASELINE.md protocol job:
   * over a Common-Crawl-shaped webpages table,
   *
-  *   1. per-(lang, host) sketches via salted two-stage aggregation
+  *   1. per-(lang, host) sketches via [[SaltedAgg.adaptiveSketchAgg]],
+  *      which salts only the sampled Zipf-head hosts
   *      (EBF membership, HLL NDV, KLL + t-digest doc-length quantiles),
   *      with per-group parameters sized for per-host cardinality —
   *      at 10^12 rows the group count is ~10^7-10^8, so per-group
@@ -20,8 +21,8 @@ import org.apache.spark.sql.functions._
   *      Bloom filter — a parallel groupBy(shard) build with no
   *      single-reducer merge tail (a monolithic 10^12-url filter would
   *      be terabytes; see ShardedEbf);
-  *   4. an FPR probe of held-out non-member urls against (3) through a
-  *      broadcast of the shard array, which must sit within the
+  *   4. an FPR probe of held-out non-member urls against (3) through
+  *      [[ShardedProbe.probeBroadcast]], which must sit within the
   *      published bound, plus a zero-false-negatives member sweep.
   *
   * Phases 1-3 are the "sketch-build + merge throughput (docs/sec)"
@@ -46,7 +47,8 @@ object Flagship {
   /** Per-(lang,host) spec with small per-group parameters: the four
     * sketches in ONE aggregate over url-hash halves and a precomputed
     * `text_len` ([[graft.plans.PerHostKind]]), merged in stage 2 by the
-    * same kind's [[graft.plans.MergeKind]]. Consumes `text_len`, NOT
+    * same kind's [[graft.plans.MergeKind]] — its [[SaltedAgg.SketchSpec.merge]],
+    * so the spec runs salted or checkpointed alike. Consumes `text_len`, NOT
     * length(text) inline: the adaptive salted aggregation clusters rows
     * through a shuffle first, and shuffling the full 1KB text to compute
     * an 8-byte length on the other side is a 4GB shuffle where 30MB
@@ -164,17 +166,16 @@ object Flagship {
 
     // phase 4: FPR probe of held-out non-member urls + member sweep,
     // through the codegen'd native expression over broadcast shards
-    // (EbfShardedProbeExpr — no UDF boundary, no per-row sketch bytes)
+    // (no UDF boundary, no per-row sketch bytes)
     val ((fps, falseNegs, sharded), t4) =
       if (nProbes <= 0) ((-1L, -1L, null: graft.core.ShardedEbf), 0.0)
       else time {
         val bc = ShardedProbe.broadcastShards(shardTable, numShards)
-        def hit(c: org.apache.spark.sql.Column) = EbfShardedProbeExpr.probeColumn(bc, c)
-        val fp = WebPagesGen.probeUrls(spark, nProbes, member = false)
-          .toDF("url").agg(sum(when(hit(col("url")), 1L).otherwise(0L)))
-          .head.getLong(0)
-        val fn = wp.select(col("url"))
-          .agg(sum(when(!hit(col("url")), 1L).otherwise(0L))).head.getLong(0)
+        def rowsWith(hit: Boolean, urls: DataFrame): Long =
+          ShardedProbe.probeBroadcast(urls, col("url"), bc)
+            .agg(sum(when(col("hit") === hit, 1L).otherwise(0L))).head.getLong(0)
+        val fp = rowsWith(hit = true, WebPagesGen.probeUrls(spark, nProbes, member = false).toDF("url"))
+        val fn = rowsWith(hit = false, wp.select(col("url")))
         (fp, fn, bc.value)
       }
     shardTable.unpersist(blocking = false)

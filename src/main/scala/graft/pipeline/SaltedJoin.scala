@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   * hot set are replicated — the hot set is the Zipf head, small by
   * definition, so the dim blow-up is |hot dim rows| x numSalts, paid
   * once, while the fact side (the big side) is never replicated. Cold
-  * keys keep salt 0 on both sides and pay nothing. Hot detection is a
-  * sampled pre-pass over the fact side (same estimator as
-  * [[SaltedAgg.adaptiveSketchAgg]]): one cheap scan, hot set collected
-  * and broadcast.
+  * keys keep salt 0 on both sides and pay nothing. Hot detection is
+  * [[SaltedAgg.hotKeys]] over the fact side, the rule
+  * [[SaltedAgg.adaptiveSketchAgg]] uses: one cheap sampled scan, hot
+  * set collected and broadcast. A fact row's salt is
+  * [[SaltedAgg.salt]], as an int.
   *
   * Join types: inner, left/left_outer, left_semi, left_anti — the
   * fact-preserving types. right/full outer are refused: an unmatched
@@ -63,21 +64,7 @@ object SaltedJoin {
                  numSalts: Int, joinType: String = "inner",
                  hotRowThreshold: Long = 1000000L,
                  sampleFraction: Double = 0.01): DataFrame = {
-    val spark = fact.sparkSession
-    val keyCols = keys.map(col)
-    // Hot set materialized once and broadcast — the Zipf head is small
-    // by definition. Coalesce collapses the sample's per-split task
-    // count (PLAN13: scheduling overhead grew with cores).
-    val hotRows = fact.sample(withReplacement = false, sampleFraction, seed = 42L)
-      .coalesce(math.max(2, spark.sparkContext.defaultParallelism))
-      .groupBy(keyCols: _*).count()
-      .filter(col("count") >= math.max(1.0, hotRowThreshold * sampleFraction))
-      .select(keyCols: _*)
-      .collect()
-    val keySchema = org.apache.spark.sql.types.StructType(
-      keys.map(k => fact.schema(fact.schema.fieldIndex(k))))
-    import scala.jdk.CollectionConverters._
-    val hot = spark.createDataFrame(hotRows.toSeq.asJava, keySchema)
+    val hot = SaltedAgg.hotKeys(fact, keys, hotRowThreshold, sampleFraction)
     joinSkewedWithHot(fact, dim, keys, saltOn, numSalts, hot, joinType)
   }
 
@@ -95,9 +82,7 @@ object SaltedJoin {
     val hot = broadcast(hotKeys.select(keys.map(col): _*).distinct()
       .withColumn("__hot", lit(true)))
     val factSalted = fact.join(hot, keys, "left")
-      .withColumn("__salt",
-        when(col("__hot").isNotNull, pmod(xxhash64(saltOn), lit(numSalts)).cast("int"))
-          .otherwise(lit(0)))
+      .withColumn("__salt", SaltedAgg.salt(col("__hot").isNotNull, saltOn, numSalts).cast("int"))
       .drop("__hot")
     val dimSalted = dim.join(hot, keys, "left")
       .withColumn("__salt",

@@ -8,15 +8,19 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The 10^12-scale probe path: the sharded EBF kept as a `(shard, sk)`
-  * DataFrame — never collected to the driver — and membership probes
-  * expressed as a broadcast join by shard id followed by
-  * `ebf_might_contain` on the one matched shard.
+  * DataFrame built by a parallel groupBy(shard), and two ways to probe
+  * it:
+  *
+  *   - [[broadcastShards]] + [[probeBroadcast]]: the table collected
+  *     once into a `Broadcast[ShardedEbf]`, probed per row by the
+  *     codegen'd native expression with no per-row sketch bytes;
+  *   - [[probeCogrouped]]: keys and shards co-grouped by shard id, each
+  *     shard deserialized once per group, no broadcast and no driver
+  *     collect — for shard tables too big to broadcast.
   *
   * At web scale the shard table is 10^4-10^5 rows of ~MB sketches:
-  * far too big for one driver object, exactly right for a broadcast
-  * (or, beyond broadcast limits, a shuffled join on shard id — the
-  * same plan shape at any scale). The per-row UDF hits the per-thread
-  * SketchCache, so each task deserializes each shard it touches once.
+  * far too big for one driver object, right for a broadcast while it
+  * fits an executor, and for the co-grouped probe beyond that.
   */
 object ShardedProbe {
 
@@ -57,15 +61,10 @@ object ShardedProbe {
     * broadcast hash join's build side — `BroadcastExchangeExec` also
     * collects its child to the driver before torrenting — but the
     * probe side then runs as a codegen'd native expression with NO
-    * per-row sketch-byte materialization. A genuine byte-carrying
-    * broadcast join (see [[probe]]) copies the matched shard's ~MB `sk`
-    * binary out of the joined row for every probed key
-    * (`UnsafeRow.getBinary` copies), which is catastrophic at 10^6+
-    * probe rows; measured numbers in BENCH/PLANS.md. Beyond
-    * driver/broadcast limits (shard tables of 10s of GB), fall back to
-    * [[probe]]'s join form with a shuffled join, where each reduce
-    * partition touches ~1 shard and the per-thread SketchCache
-    * amortizes deserialization. */
+    * per-row sketch-byte materialization (a join that carries `sk` into
+    * the probed rows copies the matched shard's ~MB binary for every
+    * key, measured in BENCH/PLANS.md). Beyond driver/broadcast limits
+    * (shard tables of 10s of GB), use [[probeCogrouped]]. */
   def broadcastShards(shardTable: DataFrame, numShards: Int): Broadcast[ShardedEbf] = {
     val rows = shardTable.collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
     val sharded = ShardedEbf.fromShardBytes(rows.toSeq, numShards)
@@ -110,19 +109,5 @@ object ShardedProbe {
     }.toDF("key", "hit")
     probed.unionByName(
       keyDs.filter(col("key").isNull).select(col("key"), lit(false).as("hit")))
-  }
-
-  /** Probe `keys(keyCol)` against a shard table; adds boolean `hit`.
-    * Keys routing to an absent shard (no rows ever inserted) miss. */
-  def probe(keys: DataFrame, keyCol: String, shardTable: DataFrame,
-            numShards: Int): DataFrame = {
-    Graft.ensure(keys.sparkSession)
-    keys
-      .withColumn("__shard", expr(s"graft_shard($keyCol, $numShards)"))
-      .join(broadcast(shardTable), col("__shard") === shardTable("shard"), "left")
-      .withColumn("hit",
-        when(col("sk").isNull, lit(false))
-          .otherwise(expr(s"ebf_might_contain(sk, $keyCol)")))
-      .drop("__shard", "shard", "sk")
   }
 }

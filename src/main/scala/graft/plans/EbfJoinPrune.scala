@@ -10,24 +10,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.types._
 
-/** The build side of [[EbfJoinPruneRule]]: `ebf_agg` at its default
-  * parameters as a self-contained [[SketchAgg]], which an optimizer
-  * rule can inject after analysis (the key is cast to string by the
-  * rule itself). Output bytes equal `ebf_agg` over the same rows.
-  *
-  * The elastic filter is what makes one un-sized code path safe here:
-  * Spark's runtime bloom filter must guess NDV from (often stale) stats
-  * at plan time; this filter EXPANDS to the observed keys at a bounded
-  * FPR, so a 10^3-key and a 10^8-key build side get the same plan.
-  */
-object EbfBuildAggExpr {
-  def apply(child: Expression): SketchAgg[Ebf] = SketchAgg(Seq(child), EbfKind())
-}
-
 /** Collapses a `(shard, sk)` shard table into ONE ShardedEbf wire blob
   * (`ShardedEbf.toWire`, also the partial buffer's wire) — the final,
   * cheap step of the rule's BEYOND-broadcast-window rewrite: the heavy
-  * per-shard merges happen in the grouped [[EbfBuildAggExpr]] BELOW this
+  * per-shard merges happen in the grouped `ebf_agg` BELOW this
   * aggregate (numShards parallel reducers — the single-reducer merge
   * tail is exactly why the monolithic form stops at `maxBuildBytes`),
   * and this one-row aggregate only concatenates numShards finished
@@ -234,7 +220,13 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     * The subquery aggregates the build side down to ONE sketch row
     * (partial aggregation map-side — no build row ever moves
     * unaggregated), evaluated once per query like any scalar subquery,
-    * then the probe is a map-only, codegen'd fact-side filter.
+    * then the probe is a map-only, codegen'd fact-side filter. Its
+    * `ebf_agg` is `SketchAgg(Seq(key), EbfKind())`, the SQL function at
+    * its default parameters. The elastic filter is what makes one
+    * un-sized code path safe here: Spark's runtime bloom filter must
+    * guess NDV from (often stale) stats at plan time; this filter
+    * EXPANDS to the observed keys at a bounded FPR, so a 10^3-key and a
+    * 10^8-key build side get the same plan.
     *
     * Sharded window (`sharded = true`): the subquery becomes
     *
@@ -254,18 +246,16 @@ object EbfJoinPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     // AFTER the pruning rules — without the Project the subquery would
     // re-scan every build column
     val buildProj = Project(buildKey.references.toSeq, build)
+    val ebfAgg = AggregateExpression(SketchAgg(Seq(asString(buildKey)), EbfKind()), Complete,
+      isDistinct = false)
     if (!sharded) {
-      val agg = Alias(
-        AggregateExpression(EbfBuildAggExpr(asString(buildKey)), Complete, isDistinct = false),
-        "graft_prune_ebf")()
+      val agg = Alias(ebfAgg, "graft_prune_ebf")()
       val subq = ScalarSubquery(Aggregate(Nil, Seq(agg), buildProj))
       Filter(SketchFn(Seq(subq, asString(factKey)), EbfMightContain()), fact)
     } else {
       val shardExpr = SketchFn(Seq(asString(buildKey)), GraftShard(numShards))
       val shardAlias = Alias(shardExpr, "graft_prune_shard")()
-      val skAlias = Alias(
-        AggregateExpression(EbfBuildAggExpr(asString(buildKey)), Complete, isDistinct = false),
-        "graft_prune_sk")()
+      val skAlias = Alias(ebfAgg, "graft_prune_sk")()
       val perShard = Aggregate(Seq(shardExpr), Seq(shardAlias, skAlias), buildProj)
       val blob = Alias(
         AggregateExpression(

@@ -202,8 +202,12 @@ case class MinhashBands(numBands: Int, rows: Int) extends ScalarKind {
   def name: String = "graft_minhash_bands"
   def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   def dataType: DataType = ArrayType(LongType, containsNull = false)
-  def apply(in: Array[Any]): Any = UnsafeArrayData.fromPrimitiveArray(
-    TextSig.bandHashes(in(0).asInstanceOf[ArrayData], numBands, rows))
+  def apply(in: Array[Any]): Any = {
+    val sig = in(0).asInstanceOf[ArrayData]
+    require(sig.numElements() >= numBands * rows,
+      s"signature of ${sig.numElements()} elements, $numBands bands of $rows rows need ${numBands * rows}")
+    UnsafeArrayData.fromPrimitiveArray(TextSig.bandHashes(sig, numBands, rows))
+  }
 }
 
 object MinhashBandsExpr {
@@ -222,6 +226,7 @@ case class MinhashJaccard() extends ScalarKind {
     val a = in(0).asInstanceOf[ArrayData]
     val b = in(1).asInstanceOf[ArrayData]
     val n = a.numElements()
+    require(n == b.numElements(), s"signatures of different lengths: $n and ${b.numElements()}")
     var same = 0
     var i = 0
     while (i < n) { if (a.getLong(i) == b.getLong(i)) same += 1; i += 1 }

@@ -29,7 +29,9 @@ object PipelineQueries {
       Graft.ensure(s)
       val d = docs(s, dir)
       val plain = SaltedAgg.plainAgg(d, Seq("source"), specs)
-      val salted = SaltedAgg.sketchAgg(d, Seq("source"), col("doc_id"), 16, specs)
+      // every source hot: each row salted 16 ways
+      val salted = SaltedAgg.adaptiveSketchAgg(d, Seq("source"), col("doc_id"), 16, specs,
+        hotRowThreshold = 1L, sampleFraction = 1.0)
       plain.as("p").join(salted.as("q"), "source")
         .select(col("source"),
           (col("p.ebf") === col("q.ebf")).as("ebf_equal"),
@@ -64,14 +66,12 @@ object PipelineQueries {
 
     "ebf_shard_table_probe" -> { (s, dir) =>
       Graft.ensure(s)
-      // the no-collect probe path: sketch table + broadcast join by shard
+      // the no-collect probe path: sketch table co-grouped with the keys by shard
       val d = docs(s, dir)
-      val table = graft.pipeline.ShardedProbe.buildShardTable(
-        d, col("doc_id").cast("string"), numShards = 8, m0 = 256)
-      graft.pipeline.ShardedProbe.probe(
-          d.select(col("doc_id"), col("doc_id").cast("string").as("key")),
-          "key", table, numShards = 8)
-        .select(col("doc_id"), col("hit"))
+      val key = col("doc_id").cast("string")
+      val table = graft.pipeline.ShardedProbe.buildShardTable(d, key, numShards = 8, m0 = 256)
+      graft.pipeline.ShardedProbe.probeCogrouped(d, key, table, numShards = 8)
+        .select(col("key").cast("bigint").as("doc_id"), col("hit"))
         .orderBy("doc_id")
     },
 
@@ -624,12 +624,11 @@ object PipelineQueries {
         val reloaded = s.read.parquet(tmp)
         val ident = table.as("a").join(reloaded.as("b"), "shard")
           .agg(bool_and(col("a.sk") === col("b.sk")).as("eq"), count(lit(1)).as("n")).head
-        val keys = d.select(col("doc_id"), col("doc_id").cast("string").as("key"))
-        def hits(t: DataFrame): Long = graft.pipeline.ShardedProbe
-          .probe(keys, "key", t, numShards = 8)
+        val bc = graft.pipeline.ShardedProbe.broadcastShards(reloaded, numShards = 8)
+        val hitsReloaded = graft.pipeline.ShardedProbe
+          .probeBroadcast(d, col("doc_id").cast("string"), bc)
           .agg(sum(when(col("hit"), 1L).otherwise(0L))).head.getLong(0)
         val total = d.count()
-        val hitsReloaded = hits(reloaded)
         s.range(1).select(
           lit(ident.getBoolean(0)).as("shards_byte_identical_after_roundtrip"),
           lit(ident.getLong(1) == 8L).as("all_shards_present"),

@@ -1,29 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan snapshot aid for the optimization rounds: `runMain
   * graft.tools.PlanDump <sfDir> <outDir> <suffix> <query> [query...]`
   * writes `.explain("formatted")` for each named declared query to
   * `<outDir>/<query>_<suffix>.txt` — the before/after evidence files
-  * the optimization deliverable commits (plans/r06/...). Same session
-  * shape as the bench sweep so plan choices (AQE, broadcast thresholds,
-  * partition counts) match what the timed runs execute. */
+  * the optimization deliverable commits (plans/r06/...). It runs in
+  * the bench sweep's session (at `SPARK_GRAFT_CPUS` cores, default the
+  * machine's) so plan choices (AQE, broadcast thresholds, partition
+  * counts) match what the timed runs execute. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <query> [query...]")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     Files.createDirectories(Paths.get(outDir))
     args.drop(3).foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -1,26 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timer: `runMain graft.tools.QueryTime <sfDir>
-  * <query> [query...]` — same session config and noop-sink
-  * materialization as `graft.Bench`'s query sweep, for iterating on one
-  * query without paying the full sweep. */
+  * <query> [query...]` — `graft.Bench`'s session at `SPARK_GRAFT_CPUS`
+  * cores (default: the machine's) and its noop-sink materialization,
+  * for iterating on one query without paying the full sweep. */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QueryTime <sfDir> <query> [query...]")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-querytime")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val trials = sys.env.getOrElse("QT_TRIALS", "2").toInt
     args.drop(1).foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -1,13 +1,12 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.ListenerBus
 import java.util.concurrent.atomic.AtomicLong
 
 /** Shuffle-volume probe for the optimization evidence: `runMain
   * graft.tools.ShuffleBytes <sfDir> <query> [query...]` runs each named
-  * declared query to the noop sink (same session shape as QueryTime)
+  * declared query to the noop sink (in QueryTime's session)
   * and reports total shuffle WRITE bytes/records from SparkListener
   * task metrics — the number a plan-shape claim ("the exchange now
   * carries survivors only") must move. */
@@ -23,16 +22,7 @@ object ShuffleBytes {
     }
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString("; ")}\n$usage")
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-shufflebytes")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val bytes = new AtomicLong(0L)
     val recs = new AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.{EbfBuildAggExpr, EbfMightContain, EbfShardedMightContain, SketchFn}
+import graft.plans.{EbfKind, EbfMightContain, EbfShardedMightContain, SketchAgg, SketchFn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
@@ -191,12 +191,12 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
       s"rule re-fired after tag loss:\n$twice")
   }
 
-  test("EbfBuildAggExpr output is byte-identical to ebf_agg") {
+  test("the rule's SketchAgg(k, EbfKind()) build is byte-identical to ebf_agg") {
     import org.apache.spark.sql.graftshim.ColumnBridge
     val keys = spark.range(2000).select(concat(lit("k"), col("id")).as("k"))
     val nativeCol = ColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression(
-        EbfBuildAggExpr(ColumnBridge.expression(col("k"))),
+        SketchAgg(Seq(ColumnBridge.expression(col("k"))), EbfKind()),
         org.apache.spark.sql.catalyst.expressions.aggregate.Complete, isDistinct = false))
     val a = keys.agg(nativeCol.as("sk")).head.getAs[Array[Byte]](0)
     val b = keys.agg(expr("ebf_agg(k)").as("sk")).head.getAs[Array[Byte]](0)

@@ -46,7 +46,9 @@ class SparkPipelineSpec extends AnyFunSuite {
     val withHost = wp.withColumn("host", parse_url(col("url"), lit("HOST")))
     val plain = SaltedAgg.plainAgg(withHost, Seq("host"), specs)
       .collect().map(r => r.getString(0) -> r.toSeq.tail.map(_.asInstanceOf[Array[Byte]].toSeq)).toMap
-    val salted = SaltedAgg.sketchAgg(withHost, Seq("host"), col("url"), 8, specs)
+    // every host hot: each row salted 8 ways
+    val salted = SaltedAgg.adaptiveSketchAgg(withHost, Seq("host"), col("url"), 8, specs,
+      hotRowThreshold = 1L, sampleFraction = 1.0)
       .collect().map(r => r.getString(0) -> r.toSeq.tail.map(_.asInstanceOf[Array[Byte]].toSeq)).toMap
     assert(plain.keySet === salted.keySet)
     assert(plain === salted)

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import graft.core.{Kll, TDigest}
 import graft.data.WebPagesGen
 import graft.functions.Graft
 import graft.pipeline.CheckpointRunner.LineageMismatch
 import graft.pipeline.SaltedAgg.SketchSpec
+import graft.plans.Hash128Expr
 import graft.util.GraftFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -176,5 +178,42 @@ class CheckpointRunnerSpec extends AnyFunSuite {
       }
       rows.unpersist()
     }
+  }
+
+  test("a multi-sketch spec (the flagship's per-host struct) resumes to the single-shot build") {
+    // the per-(lang, host) input of SparkPipelineSpec's salted tests
+    val hosts = WebPagesGen.dataset(spark, 5000L, numHosts = 200).toDF()
+      .select(col("lang"), col("url"),
+        Hash128Expr.h1(col("url"), Graft.SketchSeed).as("__h1"),
+        Hash128Expr.h2(col("url"), Graft.SketchSeed).as("__h2"),
+        length(col("text")).cast("double").as("text_len"))
+      .withColumn("host", parse_url(col("url"), lit("HOST")))
+      .cache()
+    val hostKeys = Seq("lang", "host")
+    val specs = Flagship.perHostNativeSpecs
+    def sketches(df: DataFrame): Map[(String, String), Seq[Array[Byte]]] =
+      df.select(col("lang"), col("host"), col("sk.ebf"), col("sk.hll"), col("sk.kll"), col("sk.td"))
+        .collect().map(r => (r.getString(0), r.getString(1)) ->
+          (2 to 5).map(r.getAs[Array[Byte]](_))).toMap
+    withDir { dir =>
+      def run(stopAfter: Int): DataFrame = CheckpointRunner.run(spark, hosts, col("url"), 4,
+        hostKeys, specs, dir.toString, stopAfter)
+      assert(run(stopAfter = 2) == null)
+      assert(CheckpointRunner.readManifest(dir.toString).size === 2)
+      val resumed = run(stopAfter = Int.MaxValue)
+      assert(resumed.agg(sum("rows")).head.getLong(0) === 5000L)
+      val got = sketches(resumed)
+      val want = sketches(SaltedAgg.plainAgg(hosts, hostKeys, specs))
+      assert(got.keySet === want.keySet && got.nonEmpty)
+      // EBF and HLL bytes are merge-order free; KLL and t-digest bytes
+      // follow the merge tree, so those two are compared by count
+      for ((g, w) <- want; v = got(g)) {
+        assert(v(0).toSeq === w(0).toSeq, s"ebf differs for $g")
+        assert(v(1).toSeq === w(1).toSeq, s"hll differs for $g")
+        assert(Kll.fromBytes(v(2)).n === Kll.fromBytes(w(2)).n, s"kll n differs for $g")
+        assert(TDigest.fromBytes(v(3)).n === TDigest.fromBytes(w(3)).n, s"td n differs for $g")
+      }
+    }
+    hosts.unpersist()
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native codegen'd probe expression must agree exactly with the
-  * UDF + broadcast-join probe paths — under whole-stage codegen, under
-  * interpreted eval, and on null keys. */
+  * `ShardedEbf` kernel and the co-grouped probe — under whole-stage
+  * codegen, under interpreted eval, and on null keys. */
 class EbfShardedProbeExprSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Graft.ensure(
@@ -28,9 +28,9 @@ class EbfShardedProbeExprSpec extends AnyFunSuite {
     (members, ShardedProbe.broadcastShards(table, numShards), table)
   }
 
-  test("no false negatives; agrees with join-probe and sharded-object probe") {
+  test("no false negatives; agrees with the sharded-object probe") {
     import spark.implicits._
-    val (members, bc, table) = fixture()
+    val (members, bc, _) = fixture()
     // mixed member/non-member/null probe set
     val probes = ((0 until 3000 by 3).map(i => s"key$i") ++
       (0 until 1000).map(i => s"other$i")).toDF("k")
@@ -39,10 +39,8 @@ class EbfShardedProbeExprSpec extends AnyFunSuite {
 
     val viaExpr = ShardedProbe.probeBroadcast(probes, col("k"), bc)
       .collect().map(r => Option(r.getString(0)) -> r.getBoolean(1)).toMap
-    val viaJoin = ShardedProbe.probe(probes, "k", table, numShards)
-      .collect().map(r => Option(r.getString(0)) -> r.getBoolean(1)).toMap
     val obj = bc.value
-    assert(viaExpr === viaJoin)
+    viaExpr.foreach { case (k, hit) => k.foreach(k => assert(hit === obj.mightContain(k), k)) }
     // every member hits (no false negatives through the expression)
     members.collect().map(_.getString(0)).foreach { k =>
       assert(obj.mightContain(k), s"object probe missed member $k")

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -112,5 +112,34 @@ class TextSigExprSpec extends AnyFunSuite {
     assert(nullRow.getSeq[Long](0) == Seq.fill(8)(Long.MaxValue))
     assert(nullRow.getLong(1) == 0L)
     assert(nullRow.getSeq[String](2).isEmpty)
+  }
+
+  test("signatures too short for the call fail named for the function, generated and interpreted") {
+    def failsAs(name: String)(c: Column): Unit = {
+      val e = intercept[Throwable](spark.range(4).select(c).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists {
+        case iae: IllegalArgumentException => iae.getMessage.startsWith(s"$name: ")
+        case _ => false
+      }, chain.map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n"))
+    }
+    val id = col("id")
+    def checkAll(): Unit = {
+      failsAs("graft_minhash_jaccard")(
+        MinhashJaccardExpr.column(array(id, id + 1, id + 2, id + 3), array(id)))
+      failsAs("graft_minhash_jaccard")(MinhashJaccardExpr.column(array(id), array(id, lit(7L))))
+      failsAs("graft_minhash_bands")(MinhashBandsExpr.column(array(id, id), 3, 2))
+      // equal lengths, and a signature at least bands x rows long, still answer
+      assert(spark.range(4).select(
+          MinhashJaccardExpr.column(array(id, lit(1L)), array(id, lit(2L))),
+          size(MinhashBandsExpr.column(array(id, id, id), 1, 2)))
+        .collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq === Seq.fill(4)((0.5, 1)))
+    }
+    checkAll()
+    val modes = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    modes.foreach { case (k, v) => spark.conf.set(k, v) }
+    try checkAll()
+    finally modes.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
