@@ -76,10 +76,10 @@ final class CountSketch(val depth: Int, val width: Int, val seed: Long)
     * guarantee: |estimate - true| <= 3*sqrt(F2/width) with probability
     * >= 1 - exp(-Omega(depth)). Even depth takes the lower-middle order
     * statistic (depth defaults odd). The median scratch is a
-    * THREAD-LOCAL (not an instance field): this runs per probe row on
-    * the UDF/literal-expression path, and SketchCache shares big
-    * deserialized instances across task threads — instance state would
-    * race where a per-thread array costs one allocation per thread. */
+    * THREAD-LOCAL (not an instance field): this runs per probe row, and
+    * `SketchCache` shares one decoded instance across task threads —
+    * instance state would race where a per-thread array costs one
+    * allocation per thread. */
   def estimateHash(h: Hash128.H): Long = {
     val vs = CountSketch.medianScratch.get()
     var r = 0

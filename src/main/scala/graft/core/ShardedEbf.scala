@@ -52,6 +52,11 @@ final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val ro
     }
   }
 
+  /** The heap [[shard]] can add to this instance: every shard decoded,
+    * and the array that holds them. */
+  private[graft] def shardHeapBytes: Long =
+    32L + 8L * numShards + shardBytes.iterator.map(Ebf.heapBytes).sum
+
   def mightContain(key: String): Boolean = shard(shardOf(key)).mightContain(key)
 
   /** Byte-key probe (UTF-8 bytes hash identically to the String form) —
@@ -76,7 +81,8 @@ final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val ro
     * (len | bytes)*` with len = -1 for an absent (never-built) shard.
     * Lets the sharded filter travel as ONE binary value — the
     * scalar-subquery channel the join-prune rule uses past the
-    * single-EBF window — and deserialize once per task via SketchCache.
+    * single-EBF window — and decode once per executor through
+    * `SketchCache`.
     * Round-trips exactly (spec-asserted); shard order is positional so
     * equal tables are byte-equal. */
   def toWire: Array[Byte] = {

@@ -4,6 +4,7 @@ import graft.core._
 import graft.plans.{GraftExtensions, SketchAgg, SketchFn}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.util.SizeEstimator
 
 /** Session registration for the graft sketch library.
   *
@@ -61,34 +62,114 @@ object Graft {
   }
 }
 
-/** Per-thread deserialized-sketch cache: how [[graft.plans.SketchFn]]
+/** The JVM-wide cache of decoded sketches: how [[graft.plans.SketchFn]]
   * reads a sketch input that is not a constant. Sketch bytes arriving
-  * from a column are re-materialized per row, so identity caching
-  * fails; instead the key is (length, murmur128 of up to four
-  * 256-byte windows) — O(1) regardless of sketch size, so probing rows
-  * against multi-MB sketches doesn't hash the whole blob per row. The
-  * windows cover header (with n and level), middle and tail; two
-  * *distinct* sketches colliding on all four windows AND length is
-  * negligible for cache-keying within a query. */
-object SketchCache {
-  // `token` (the deserialized class) is part of the identity: the same
-  // byte blob probed as two different sketch types must never serve one
-  // type's cached instance for the other (the tlLast fast path would
-  // otherwise asInstanceOf-throw; the content-keyed map had the same
-  // latent hazard)
-  private final case class Key(len: Int, h1: Long, h2: Long, token: Class[_])
-  // bytes kept alongside the deserialized value: a hit is confirmed with
-  // Arrays.equals before being served, so two distinct sketches whose
-  // differences all fall outside the sampled hash windows can never
-  // alias to each other's deserialized form (deserialization — the
-  // expensive part — is still skipped on a genuine hit)
-  private final case class Entry(bytes: Array[Byte], value: AnyRef)
+  * from a column are a new copy on every row, so the key is their
+  * content: the length, murmur128 of up to four 256-byte windows
+  * (header with n and level, middle, tail), and the decoded type, so
+  * the same bytes read as two types never share an entry. A lookup is
+  * O(1) in the sketch's size, and a hit is confirmed with
+  * `Arrays.equals` before it is served.
+  *
+  * Each content decodes once per JVM: concurrent readers of one blob
+  * wait for its one decode, and readers of other blobs never do. A
+  * decoded sketch is only read from then on, by every task thread.
+  *
+  * The cache is bounded by the heap its entries take: the wire bytes
+  * and the decoded sketch, sized by Spark's `SizeEstimator` with its
+  * big arrays rounded up to whole G1 regions, plus for a [[ShardedEbf]]
+  * every shard, which decodes after it is cached.
+  * Past the budget the least recently used entries go first, but
+  * never the two most recently used, because a two-sketch row reads
+  * two. An evicted sketch is garbage once its last reader drops it.
+  */
+class SketchCache(val budget: Long) {
+  import SketchCache.{Entry, Key}
 
-  private val tl = new ThreadLocal[java.util.HashMap[Key, Entry]] {
-    override def initialValue(): java.util.HashMap[Key, Entry] = new java.util.HashMap()
+  // access order: iteration starts at the least recently used
+  private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
+  private var charged = 0L
+
+  /** The bytes the cached entries are charged for. */
+  def resident: Long = synchronized(charged)
+
+  private def get[S <: AnyRef](bytes: Array[Byte], token: Class[S], from: Array[Byte] => S): S = {
+    val key = SketchCache.keyOf(bytes, token)
+    val e = synchronized {
+      val hit = entries.get(key)
+      if (hit != null) hit
+      else { val e = new Entry(key, bytes); entries.put(key, e); e }
+    }
+    // the same sampled windows over different content: a private copy
+    if (!java.util.Arrays.equals(bytes, e.bytes)) return from(bytes)
+    var v = e.value
+    if (v == null) e.synchronized {
+      v = e.value
+      if (v == null) {
+        v = try from(bytes) catch { case t: Throwable => synchronized(entries.remove(key, e)); throw t }
+        e.value = v
+        admit(e, bytes.length + SketchCache.heapBytes(v) + (v match {
+          case s: ShardedEbf => s.shardHeapBytes
+          case _ => 0L
+        }))
+      }
+    }
+    v.asInstanceOf[S]
   }
 
-  private def sampleKey(bytes: Array[Byte], token: Class[_]): Key = {
+  private def admit(e: Entry, charge: Long): Unit = synchronized {
+    if (entries.get(e.key) eq e) {
+      e.charge = charge
+      charged += charge
+      val lru = entries.values.iterator
+      var evictable = entries.size - 2
+      while (charged > budget && evictable > 0) {
+        charged -= lru.next().charge
+        lru.remove()
+        evictable -= 1
+      }
+    }
+  }
+
+  def ebf(b: Array[Byte]): Ebf = get(b, classOf[Ebf], Ebf.fromBytes)
+  def freq(b: Array[Byte]): FreqSketch = get(b, classOf[FreqSketch], FreqSketch.fromBytes)
+  def hll(b: Array[Byte]): Hll = get(b, classOf[Hll], Hll.fromBytes)
+  def cms(b: Array[Byte]): Cms = get(b, classOf[Cms], Cms.fromBytes)
+  def kll(b: Array[Byte]): Kll = get(b, classOf[Kll], Kll.fromBytes)
+  def td(b: Array[Byte]): TDigest = get(b, classOf[TDigest], TDigest.fromBytes)
+  def sharded(b: Array[Byte]): ShardedEbf = get(b, classOf[ShardedEbf], ShardedEbf.fromWire)
+  def theta(b: Array[Byte]): Theta = get(b, classOf[Theta], Theta.fromBytes)
+  def dcms(b: Array[Byte]): DecayedCms = get(b, classOf[DecayedCms], DecayedCms.fromBytes)
+  def bks(b: Array[Byte]): BottomKSample = get(b, classOf[BottomKSample], BottomKSample.fromBytes)
+  def cs(b: Array[Byte]): CountSketch = get(b, classOf[CountSketch], CountSketch.fromBytes)
+}
+
+/** The executor's one cache, with a budget of an eighth of the heap. */
+object SketchCache extends SketchCache(Runtime.getRuntime.maxMemory / 8) {
+  private final case class Key(len: Int, h1: Long, h2: Long, token: Class[_])
+
+  // `value` is published once, by the decoding thread; `charge` is
+  // guarded by the cache's lock
+  private final class Entry(val key: Key, val bytes: Array[Byte]) {
+    @volatile var value: AnyRef = _
+    var charge = 0L
+  }
+
+  /** What `v` occupies: Spark's `SizeEstimator`, with each primitive
+    * array `v` holds rounded up to the heap regions it takes. */
+  private def heapBytes(v: AnyRef): Long =
+    v.getClass.getDeclaredFields.iterator.filter { f =>
+      f.getType.isArray && f.getType.getComponentType.isPrimitive &&
+        !java.lang.reflect.Modifier.isStatic(f.getModifiers)
+    }.foldLeft(SizeEstimator.estimate(v)) { (total, f) =>
+      f.setAccessible(true)
+      f.get(v) match {
+        case null => total
+        case a => val size = SizeEstimator.estimate(a); total - size + Heap.array(size)
+      }
+    }
+
+  private def keyOf(bytes: Array[Byte], token: Class[_]): Key = {
     val n = bytes.length
     if (n <= 1024) {
       val h = Hash128.hashBytes(bytes, 0x5eed)
@@ -107,91 +188,4 @@ object SketchCache {
       Key(n, h1, h2, token)
     }
   }
-
-  // reference fast path: when the SAME byte-array instance recurs row
-  // after row (a scalar-subquery constant, a broadcast value, a literal
-  // evaluated once per batch) the per-row content verification is pure
-  // overhead — `eq` proves identity without reading a single byte. One
-  // entry per thread suffices: the pattern this serves is a run of rows
-  // probing one sketch.
-  private val tlLast = new ThreadLocal[Entry]
-
-  // JVM-global cache for BIG blobs (the scalar-subquery / broadcast
-  // sharded-filter case): the per-thread cache below would deserialize
-  // a 100 MB+ sketch once per task THREAD — core-count x blob bytes of
-  // heap, the difference between "one 400 MB filter per executor" and
-  // an OOM at 32 local threads (measured at a 50M-key join-prune
-  // build, BENCH/PLANS.md PLAN18). Identity-keyed (array equals IS reference equality) with
-  // WEAK keys, so a blob is freed when the stage that shipped it drops
-  // the reference. All probe structures are read-only after
-  // construction (ShardedEbf is explicitly thread-safe; Ebf probes are
-  // pure reads) and the synchronized map publishes them safely.
-  // Deserialization happens under the map lock: every thread wants the
-  // same blob, so one builds and the rest wait instead of duplicating.
-  private val BigBlobBytes: Int = 8 << 20
-  private val globalBig = new java.util.WeakHashMap[Array[Byte], AnyRef]
-  // second level for big blobs arriving as content-equal but DISTINCT
-  // instances (a per-row UnsafeRow.getBinary copy): tiny bound — these
-  // entries pin >=8MB blobs strongly, and more than a couple of live
-  // big filters at once means the query is in trouble anyway
-  private val globalBigByContent = new java.util.HashMap[Key, Entry]
-
-  private def getBig[S <: AnyRef](bytes: Array[Byte], token: Class[S],
-                                  from: Array[Byte] => S): S =
-    globalBig.synchronized {
-      val byId = globalBig.get(bytes)
-      if (token.isInstance(byId)) byId.asInstanceOf[S]
-      else {
-        val key = sampleKey(bytes, token)
-        val e = globalBigByContent.get(key)
-        val v =
-          if (e != null && java.util.Arrays.equals(bytes, e.bytes))
-            e.value.asInstanceOf[S]
-          else {
-            if (globalBigByContent.size() > 4) globalBigByContent.clear()
-            val built = from(bytes)
-            globalBigByContent.put(key, Entry(bytes, built))
-            built
-          }
-        globalBig.put(bytes, v)
-        v
-      }
-    }
-
-  private def get[S <: AnyRef](bytes: Array[Byte], token: Class[S],
-                               from: Array[Byte] => S): S = {
-    if (bytes.length >= BigBlobBytes) return getBig(bytes, token, from)
-    val last = tlLast.get()
-    if (last != null && (last.bytes eq bytes) && token.isInstance(last.value))
-      return last.value.asInstanceOf[S]
-    val key = sampleKey(bytes, token)
-    val m = tl.get()
-    val e = m.get(key)
-    if (e != null && java.util.Arrays.equals(bytes, e.bytes)) {
-      tlLast.set(e)
-      e.value.asInstanceOf[S]
-    } else {
-      // 256: a 64-shard table probed alongside a handful of other
-      // sketches must fit without evicting (eviction clears the map)
-      if (m.size() > 256) m.clear()
-      val v = from(bytes)
-      val entry = Entry(bytes, v)
-      m.put(key, entry)
-      tlLast.set(entry)
-      v.asInstanceOf[S]
-    }
-  }
-
-  def ebf(b: Array[Byte]): Ebf = get(b, classOf[Ebf], Ebf.fromBytes)
-  def freq(b: Array[Byte]): FreqSketch = get(b, classOf[FreqSketch], FreqSketch.fromBytes)
-  def hll(b: Array[Byte]): Hll = get(b, classOf[Hll], Hll.fromBytes)
-  def cms(b: Array[Byte]): Cms = get(b, classOf[Cms], Cms.fromBytes)
-  def kll(b: Array[Byte]): Kll = get(b, classOf[Kll], Kll.fromBytes)
-  def td(b: Array[Byte]): TDigest = get(b, classOf[TDigest], TDigest.fromBytes)
-  def sharded(b: Array[Byte]): graft.core.ShardedEbf =
-    get(b, classOf[graft.core.ShardedEbf], graft.core.ShardedEbf.fromWire)
-  def theta(b: Array[Byte]): Theta = get(b, classOf[Theta], Theta.fromBytes)
-  def dcms(b: Array[Byte]): DecayedCms = get(b, classOf[DecayedCms], DecayedCms.fromBytes)
-  def bks(b: Array[Byte]): BottomKSample = get(b, classOf[BottomKSample], BottomKSample.fromBytes)
-  def cs(b: Array[Byte]): CountSketch = get(b, classOf[CountSketch], CountSketch.fromBytes)
 }

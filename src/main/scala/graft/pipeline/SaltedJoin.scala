@@ -64,8 +64,9 @@ object SaltedJoin {
                  numSalts: Int, joinType: String = "inner",
                  hotRowThreshold: Long = 1000000L,
                  sampleFraction: Double = 0.01): DataFrame = {
-    val hot = SaltedAgg.hotKeys(fact, keys, hotRowThreshold, sampleFraction)
-    joinSkewedWithHot(fact, dim, keys, saltOn, numSalts, hot, joinType)
+    // hotKeys is duplicate-free already
+    salted(fact, dim, keys, saltOn, numSalts,
+      SaltedAgg.hotKeys(fact, keys, hotRowThreshold, sampleFraction), joinType)
   }
 
   /** Same, with the hot-key set supplied explicitly (one row per hot
@@ -74,17 +75,22 @@ object SaltedJoin {
     * joinType)`: salting only changes row routing. */
   def joinSkewedWithHot(fact: DataFrame, dim: DataFrame, keys: Seq[String], saltOn: Column,
                         numSalts: Int, hotKeys: DataFrame,
-                        joinType: String = "inner"): DataFrame = {
+                        joinType: String = "inner"): DataFrame =
+    salted(fact, dim, keys, saltOn, numSalts, hotKeys.select(keys.map(col): _*).distinct(),
+      joinType)
+
+  /** The salted join over `hot`, the distinct hot key tuples. */
+  private def salted(fact: DataFrame, dim: DataFrame, keys: Seq[String], saltOn: Column,
+                     numSalts: Int, hot: DataFrame, joinType: String): DataFrame = {
     require(numSalts >= 1, s"numSalts must be positive ($numSalts)")
     require(FactPreserving.contains(joinType.toLowerCase),
       s"joinType '$joinType' not supported: salted dim replicas would duplicate " +
         "null-extended rows of right/full outer joins — flip the sides instead")
-    val hot = broadcast(hotKeys.select(keys.map(col): _*).distinct()
-      .withColumn("__hot", lit(true)))
-    val factSalted = fact.join(hot, keys, "left")
+    val flagged = broadcast(hot.withColumn("__hot", lit(true)))
+    val factSalted = fact.join(flagged, keys, "left")
       .withColumn("__salt", SaltedAgg.salt(col("__hot").isNotNull, saltOn, numSalts).cast("int"))
       .drop("__hot")
-    val dimSalted = dim.join(hot, keys, "left")
+    val dimSalted = dim.join(flagged, keys, "left")
       .withColumn("__salt",
         when(col("__hot").isNotNull, sequence(lit(0), lit(numSalts - 1)))
           .otherwise(array(lit(0))))

@@ -62,8 +62,9 @@ object EbfShardedWireKind {
   * the same shape Spark's own `InjectRuntimeFilter` emits with its
   * fixed-size bloom filter. The probe is a [[SketchFn]] of the
   * `ebf_might_contain` kind: the subquery's value is the same array
-  * instance on every row of a task, so [[graft.functions.SketchCache]]'s
-  * reference fast path decodes it once per task. The fact-side exchange then carries only
+  * instance on every row of a task, so the expression's per-input slot
+  * reads it once per task, from the executor's
+  * [[graft.functions.SketchCache]]. The fact-side exchange then carries only
   * rows that MIGHT match; the EBF's no-false-negative guarantee makes
   * the result exactly the plain join's (a false positive reaches the
   * join and is dropped there as before).

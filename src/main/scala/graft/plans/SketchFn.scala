@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.reflect.{ClassTag, classTag}
 
 /** How a scalar reads one sketch input: `shared` may serve an instance
-  * other rows and threads hold too ([[SketchCache]]), `fresh` decodes a
-  * private copy. */
+  * every task thread of the JVM holds too ([[SketchCache]]), `fresh`
+  * decodes a private copy. */
 final case class Read[S <: AnyRef](shared: Array[Byte] => S, fresh: Array[Byte] => S)
 
 object Read {
@@ -310,13 +310,16 @@ case class TopKError() extends OneSketch[FreqSketch]("topk_error", LongType, Rea
   * decimals doubles, ints bigints) and it is evaluated inside
   * whole-stage codegen.
   *
-  * A sketch input that is a constant (an `X'…'` literal, or any other
-  * foldable expression) is decoded once per task, when the first row
-  * needs it;
-  * any other goes through [[SketchCache]], whose reference fast path
-  * makes a scalar-subquery blob cost one decode per task too. A call
-  * whose inputs are all constant is foldable, so `ConstantFolding`
-  * evaluates it once at planning, unless the kind mutates.
+  * Each sketch input remembers the last bytes it read and their
+  * decoded sketch, compared by reference, in the expression instance a
+  * task deserializes for itself, so nothing stays pinned after the
+  * task. A constant (an `X'…'` literal: the same array on every row)
+  * decodes once per task into a private copy. Any other input reads
+  * through [[SketchCache]]: a scalar-subquery blob, also the same array
+  * on every row, once per task, and a per-row copy on every row. A
+  * mutating kind decodes a fresh copy on every row. A call whose
+  * inputs are all constant is foldable, so `ConstantFolding` evaluates
+  * it once at planning, unless the kind mutates.
   *
   * A sketch that does not decode fails with an
   * `IllegalArgumentException` whose message starts with the function's
@@ -340,18 +343,19 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
       else kind.inputTypes(i) != StringType || kind.onNullKey == null)
   }
 
-  // per constant sketch input: its decoded sketch, or Absent for NULL;
-  // null for an input that is not constant
-  @transient private lazy val pinned: Array[AnyRef] = Array.tabulate(kind.sketches) { i =>
-    if (kind.mutates || !children(i).foldable) null
-    else children(i).eval() match {
-      case null => SketchFn.Absent
-      case b: Array[Byte] => decode(b, own = true)
+  // per sketch input: the last bytes it read and their sketch
+  @transient private lazy val last = new Array[(Array[Byte], AnyRef)](kind.sketches)
+
+  private def sketch(i: Int, b: Array[Byte]): AnyRef = {
+    val l = last(i)
+    if (l != null && (l._1 eq b)) l._2
+    else {
+      val s = try kind.decode(b, own = children(i).foldable)
+        catch { case e: IllegalArgumentException => throw kind.named(e) }
+      if (!kind.mutates) last(i) = (b, s)
+      s
     }
   }
-
-  private def decode(b: Array[Byte], own: Boolean): AnyRef =
-    try kind.decode(b, own) catch { case e: IllegalArgumentException => throw kind.named(e) }
 
   /** The answer for evaluated inputs; called by eval and generated code.
     * Checks every null before decoding anything. */
@@ -359,8 +363,7 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
     val n = kind.sketches
     var i = 0
     while (i < n) {
-      val p = pinned(i)
-      if ((p eq SketchFn.Absent) || (p == null && in(i) == null)) return kind.onNullSketch
+      if (in(i) == null) return kind.onNullSketch
       i += 1
     }
     var nullKey = false
@@ -374,8 +377,7 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
     if (nullKey) return kind.onNullKey
     i = 0
     while (i < n) {
-      if (pinned(i) != null) in(i) = pinned(i)
-      else in(i) = decode(in(i).asInstanceOf[Array[Byte]], own = false)
+      in(i) = sketch(i, in(i).asInstanceOf[Array[Byte]])
       i += 1
     }
     try kind(in) catch { case e: IllegalArgumentException => throw kind.named(e) }
@@ -414,8 +416,6 @@ case class SketchFn(children: Seq[Expression], kind: ScalarKind)
 }
 
 object SketchFn {
-  private object Absent
-
   val EbfInfoType: StructType = StructType(Seq(
     StructField("level", IntegerType, nullable = false),
     StructField("numBuckets", IntegerType, nullable = false),

@@ -948,8 +948,8 @@ object SketchQueries {
         .orderBy("event_type")
     },
 
-    // set algebra through the registered SQL surface (X'..' literals ->
-    // SketchCache path): two PARTIALLY-overlapping user cohorts
+    // set algebra through the registered SQL surface (X'..' literals,
+    // decoded once per task): two PARTIALLY-overlapping user cohorts
     // (early-window clickers vs late-window purchasers — every user
     // does every event type over the full month, so cohorts need a
     // time cut to differ), exact vs DuckDB INTERSECT/EXCEPT/union

@@ -1,0 +1,122 @@
+package graft.core
+
+import graft.functions.SketchCache
+import graft.plans.{EbfShardedMightContain, ScalarKind, SketchFn}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `SketchCache` hands one decoded instance to every task thread of the
+  * JVM, so every read a scalar makes of a cached sketch must be pure.
+  * Each non-mutating [[SketchFn]] kind here reads one shared instance
+  * from 8 threads at once and must answer what a private copy answers.
+  * The reads that tidy state first (`TDigest.mergeBuffer`,
+  * `Theta.compact`) are no-ops only while a decoded instance's buffer is
+  * empty; the last test pins that. */
+class SharedReadSpec extends AnyFunSuite {
+
+  private def filled[S <: BytesSerde](s: S)(add: (S, Int) => Unit): Array[Byte] = {
+    (0 until 3000).foreach(i => add(s, i))
+    s.toBytes
+  }
+
+  private def fixtures(salt: String): Map[String, Array[Byte]] = {
+    val route = new ShardedEbf(Array.fill(4)(null), ShardedEbf.DefaultRouteSeed)
+    val shards = Array.fill(4)(Ebf.empty())
+    (0 until 3000).foreach { i => val k = s"k$salt$i"; shards(route.shardOf(k)).insert(k) }
+    Map(
+      "ebf" -> filled(Ebf.empty())((s, i) => s.insert(s"k$salt$i")),
+      "ebf_sharded" -> ShardedEbf.fromShardBytes(
+        shards.indices.map(i => i -> shards(i).toBytes), 4).toWire,
+      "hll" -> filled(Hll.empty())((s, i) => s.add(s"k$salt$i")),
+      "sample" -> filled(BottomKSample.empty(64))((s, i) => s.add(s"k$salt$i")),
+      "theta" -> filled(Theta.empty(256))((s, i) => s.add(s"k$salt${i * 2}")),
+      "cms" -> filled(Cms.empty())((s, i) => s.add(s"k$salt${i % 700}")),
+      "cs" -> filled(CountSketch.empty())((s, i) => s.add(s"k$salt${i % 700}")),
+      "dcms" -> filled(DecayedCms.empty(lambda = 0.01))((s, i) => s.add(s"k$salt${i % 700}", i / 10.0)),
+      "kll" -> filled(Kll.empty())((s, i) => s.add(((i * 7919) % 3001).toDouble)),
+      "tdigest" -> filled(TDigest.empty())((s, i) => s.add(((i * 7919) % 3001).toDouble)),
+      "topk" -> filled(FreqSketch.empty(64))((s, i) => s.add(s"k$salt${(i * i) % 500}")))
+  }
+
+  private lazy val first = fixtures("a")
+  private lazy val second = fixtures("b")
+
+  private def prefix(kind: ScalarKind): String =
+    if (kind.name.startsWith("ebf_sharded")) "ebf_sharded" else kind.name.takeWhile(_ != '_')
+
+  private val kinds: Seq[ScalarKind] =
+    SketchFn.registered.filter(k => k.sketches > 0 && !k.mutates) :+ EbfShardedMightContain()
+
+  /** Row `j` of `kind`'s inputs: its sketches shared or private. */
+  private def inputs(kind: ScalarKind, j: Int, shared: Boolean): Array[Any] =
+    kind.inputTypes.zipWithIndex.map {
+      case (BinaryType, i) =>
+        kind.decode((if (i == 0) first else second)(prefix(kind)), own = !shared): Any
+      case (StringType, _) => UTF8String.fromString(s"ka${j * 271}")
+      case (DoubleType, _) => j / 10.0
+      case (IntegerType, _) => j + 1
+      case (t, _) => fail(s"no input for $t")
+    }.toArray
+
+  test("every cached kind answers from one instance shared by 8 threads as from a private copy") {
+    val covered = kinds.map(k => k.decode(first(prefix(k)), own = true).getClass.getSimpleName).toSet
+    assert(covered === Set("Ebf", "ShardedEbf", "Hll", "Theta", "Cms", "CountSketch",
+      "DecayedCms", "Kll", "TDigest", "FreqSketch", "BottomKSample"))
+    val expected = for (k <- kinds; j <- 0 to 10) yield k(inputs(k, j, shared = false))
+
+    val threads = 8
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Boolean]())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val done = (0 until threads).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            start.await()
+            for (round <- 0 until 20; ki <- kinds.indices; j <- 0 to 10) {
+              // each thread walks the kinds from its own offset
+              val at = (ki + t * 3 + round) % kinds.size
+              val kind = kinds(at)
+              val in = inputs(kind, j, shared = true)
+              seen.add(System.identityHashCode(in(0)))
+              val got = kind(in)
+              if (got != expected(at * 11 + j)) wrong.add(s"${kind.name} row $j: $got")
+            }
+          }
+        })
+      }
+      start.countDown()
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    assert(wrong.isEmpty, wrong.toArray.take(5).mkString("\n"))
+    // one decoded instance per blob, read by every thread
+    val blobs = kinds.map(prefix).distinct
+    assert(seen.size === blobs.size, seen)
+  }
+
+  test("a decoded TDigest or Theta reads without tidying: its buffer is empty") {
+    val td = SketchCache.td(first("tdigest"))
+    val means = td.means
+    td.quantile(0.3); td.cdf(1500.0)
+    assert(td.means eq means)
+    val th = SketchCache.theta(first("theta"))
+    val other = SketchCache.theta(second("theta"))
+    val vals = th.vals
+    th.estimate; th.intersectEstimate(other); th.differenceEstimate(other); th.jaccardEstimate(other)
+    assert(th.vals eq vals)
+    // the reads do tidy a buffer that holds something
+    val own = TDigest.fromBytes(first("tdigest"))
+    val ownMeans = own.means
+    own.add(1.0)
+    own.quantile(0.3)
+    assert(own.means ne ownMeans)
+    val ownTheta = Theta.empty(256)
+    val ownVals = ownTheta.vals
+    ownTheta.add("new")
+    ownTheta.estimate
+    assert(ownTheta.vals ne ownVals)
+  }
+}

@@ -3,13 +3,13 @@ package graft.functions
 import graft.core.{Ebf, Theta}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SketchCache contracts added in round 5: the JVM-global big-blob
-  * path (one deserialized copy per executor, shared across task
-  * threads — the per-thread map multiplied a 1.3 GB filter by core
-  * count, measured OOM at a 50M-key join-prune build, BENCH/PLANS.md
-  * PLAN18) and the type-token fix
-  * (the same bytes probed as two sketch types must never serve a
-  * mis-typed cached instance). */
+/** SketchCache contracts: one decoded copy per executor, shared across
+  * task threads, for every blob size (a per-thread cache multiplied a
+  * 1.3 GB filter by core count, measured OOM at a 50M-key join-prune
+  * build, BENCH/PLANS.md PLAN18); a content-equal copy served the same
+  * instance; and the type token (the same bytes probed as two sketch
+  * types must never serve a mis-typed cached instance). Its budget and
+  * eviction are [[SketchCacheBoundSpec]]'s. */
 class SketchCacheSpec extends AnyFunSuite {
 
   /** An EBF comfortably past the 8 MB big-blob threshold. */

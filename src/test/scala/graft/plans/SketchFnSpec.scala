@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.core.{Cms, Ebf, Hll, Kll, Theta}
-import graft.functions.Graft
+import graft.functions.{Graft, SketchCache}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -143,8 +143,46 @@ class SketchFnSpec extends AnyFunSuite {
       s"${e.bitsSet},${e.fpWidth},${e.fprBound},${e.sizeBytes}]]")
   }
 
+  test("a blob that is the same array on every row is read once per expression instance") {
+    import SketchFnSpec._
+    spark.range(1).selectExpr(s"X'${hex(ebfBytes)}' AS s").createOrReplaceTempView("one_blob")
+    reads.clear()
+    val df = spark.range(0, 40, 1, 2)
+      .select(SketchFn.column(ReadsCounted(), expr("(SELECT max(s) FROM one_blob)")))
+    assert(!df.queryExecution.optimizedPlan.expressions.exists(_.foldable))
+    assert(df.collect().map(_.getDouble(0)).toSet === Set(Ebf.fromBytes(ebfBytes).fprBound))
+    assert(reads.size === 2)
+  }
+
+  test("a per-row copy is read through the cache and hits on equal content") {
+    import SketchFnSpec._
+    val copies = spark.createDataFrame(
+      java.util.Arrays.asList(Seq.fill(40)(org.apache.spark.sql.Row(ebfBytes.clone())): _*),
+      StructType(Seq(StructField("s", BinaryType)))).repartition(2)
+    reads.clear()
+    decoded.clear()
+    assert(copies.select(SketchFn.column(ReadsCounted(), col("s"))).collect().length === 40)
+    assert(reads.size === 40)
+    assert(decoded.size === 1)
+    assert(decoded.iterator.next() eq SketchCache.ebf(ebfBytes))
+  }
+
   test("a wrong argument count is Spark's own analysis error") {
     val e = intercept[AnalysisException](spark.sql("SELECT hll_estimate()").collect())
     assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
+  }
+}
+
+object SketchFnSpec {
+  /** The arrays [[ReadsCounted]] read a shared sketch from, one per read. */
+  val reads = new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()
+  /** The distinct sketch instances it answered from. */
+  val decoded: java.util.Set[Ebf] = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[Ebf, java.lang.Boolean]()))
+
+  /** `ebf_fpr`, counting its reads. */
+  case class ReadsCounted() extends OneSketch[Ebf]("reads_counted", DoubleType,
+      Read(b => { reads.add(b); SketchCache.ebf(b) }, Ebf.fromBytes)) {
+    def of(s: Ebf): Any = { decoded.add(s); s.fprBound }
   }
 }
