@@ -36,9 +36,13 @@ package graft.core
   * filter. The previous per-bucket `Array[Array[Int]]` layout allocated
   * millions of small arrays; at 32 aggregation threads G1 degraded
   * progressively (humongous-region fragmentation: identical runs went
-  * 3.7s -> 16.9s within one JVM). Expansion/compression/merge are
-  * single passes over the flat array; canonical serialization is one
-  * primitive sort (pairs order = bucket asc, fp asc).
+  * 3.7s -> 16.9s within one JVM). Expansion, compression, merge,
+  * serialization and decoding each cost O(pairs). The canonical order
+  * (bucket asc, fp asc) is that of the packed key
+  * `(bucket << fpWidth) | fp`, which has `log2(m0) + l0` bits at every
+  * level (fingerprint-preserving rehash moves bits between the two
+  * halves, never adds any), so an LSD radix sort produces it; a merge
+  * routes the other filter's pairs straight to the merged level.
   *
   * == Deviations from the paper (documented deliberately) ==
   *  - Buckets hold exact unbounded fingerprint multisets (the paper
@@ -82,9 +86,9 @@ final class Ebf(
   var level: Int = 0
   var n: Long = 0L                        // total inserted keys (multiset size)
   // flat (bucket << 32 | fp) pairs, unsorted; counts(b) = #fps in bucket b
-  private var pairs: Array[Long] = new Array[Long](64)
-  private var numPairs: Int = 0
-  private var counts: Array[Int] = new Array[Int](m0)
+  private[core] var pairs: Array[Long] = new Array[Long](64)
+  private[core] var numPairs: Int = 0
+  private[core] var counts: Array[Int] = new Array[Int](m0)
 
   @inline def numBuckets: Int = m0 << level
   @inline def fpWidth: Int = l0 - level
@@ -147,9 +151,15 @@ final class Ebf(
     * content-determined normal form that makes merge associative.
     * Routes every fingerprint in ONE pass regardless of the level gap. */
   private def normalize(): Unit = {
-    var target = level
-    while (target < maxLevel && n * alphaDen > alphaNum.toLong * (m0.toLong << target)) target += 1
+    val target = levelFor(n, level)
     if (target > level) expandTo(target)
+  }
+
+  /** The normal-form level of `keys` keys, starting from `from`. */
+  private def levelFor(keys: Long, from: Int): Int = {
+    var target = from
+    while (target < maxLevel && keys * alphaDen > alphaNum.toLong * (m0.toLong << target)) target += 1
+    target
   }
 
   /** Double the bucket array; route each fingerprint by its low bit. */
@@ -272,28 +282,38 @@ final class Ebf(
     }
   }
 
-  /** In-place merge: align levels upward (one pass each), concatenate
-    * pair arrays, add counts, re-normalize. Associative and commutative
-    * (see class doc). */
+  /** In-place merge in one pass over `other`'s pairs: expand this
+    * filter once to the normal-form level of the combined key count,
+    * then route each of `other`'s pairs straight to that level and count
+    * it where it lands. `other` is only read, so it may be an instance
+    * other threads share; `a.merge(a)` doubles the multiset. Associative
+    * and commutative (see class doc). */
   def merge(other: Ebf): Ebf = {
     require(m0 == other.m0 && k == other.k && l0 == other.l0 &&
       alphaNum == other.alphaNum && alphaDen == other.alphaDen && seed == other.seed,
       "cannot merge EBFs with different parameters")
-    if (level < other.level) expandTo(other.level)
-    if (other.level < level) other.expandTo(level)
-    // append pairs
-    if (numPairs + other.numPairs > pairs.length) {
-      val grown = new Array[Long](math.max(pairs.length * 2, numPairs + other.numPairs))
-      System.arraycopy(pairs, 0, grown, 0, numPairs)
-      pairs = grown
+    val total = n + other.n
+    val target = levelFor(total, math.max(level, other.level))
+    if (target > level) expandTo(target)
+    // read after the expansion, which re-levels `other` too when it is `this`
+    val add = other.numPairs
+    val gap = target - other.level
+    val m = other.numBuckets.toLong
+    val mask = (1L << gap) - 1
+    if (numPairs + add > pairs.length)
+      pairs = java.util.Arrays.copyOf(pairs, math.max(pairs.length * 2, numPairs + add))
+    val src = other.pairs
+    var i = 0
+    while (i < add) {
+      val p = src(i)
+      val f = p & 0xffffffffL
+      val nb = (p >>> 32) + (f & mask) * m
+      pairs(numPairs + i) = (nb << 32) | (f >>> gap)
+      counts(nb.toInt) += 1
+      i += 1
     }
-    System.arraycopy(other.pairs, 0, pairs, numPairs, other.numPairs)
-    numPairs += other.numPairs
-    var b = 0
-    val m = numBuckets
-    while (b < m) { counts(b) += other.counts(b); b += 1 }
-    n += other.n
-    normalize()
+    numPairs += add
+    n = total
     this
   }
 
@@ -308,47 +328,71 @@ final class Ebf(
   def fprBound: Double =
     math.pow(1.0 - math.exp(-k.toDouble * n / numBuckets), k.toDouble)
 
-  /** Canonical serialization: one primitive sort of the pair array
-    * yields (bucket asc, fp asc); the counts section, then the
-    * fingerprints bit-packed at the current width. Byte-identical for
-    * equal content. */
+  /** Canonical serialization in O(pairs), read-only (decoded instances
+    * are shared across threads): the packed keys radix-sorted into
+    * (bucket asc, fp asc), the counts section planned from their runs
+    * over the occupied buckets only, then the fingerprints bit-packed at
+    * the current width. Written into an exactly sized buffer.
+    * Byte-identical for equal content. */
   def toBytes: Array[Byte] = {
+    val c = canonical
     val w = fpWidth
-    val sorted = java.util.Arrays.copyOf(pairs, numPairs)
-    java.util.Arrays.sort(sorted)
-    val out = new WireWriter(Ebf.HeaderBytes + 16 + fpBytes)
+    val out = new WireWriter(c.bytes)
       .int(Ebf.MAGIC).int(m0).int(k).int(l0).int(level).int(alphaNum).int(alphaDen)
       .long(seed).long(n)
-      .cells(numBuckets, 0, signed = false, null)(countAt)
-    var acc = 0L
-    var accBits = 0
-    var i = 0
-    while (i < numPairs && w > 0) {
-      acc |= (sorted(i) & ((1L << w) - 1)) << accBits
-      accBits += w
-      while (accBits >= 8) {
-        out.byte((acc & 0xff).toInt)
-        acc >>>= 8
-        accBits -= 8
+      .cells(numBuckets, 0, signed = false, c.buckets, c.runs, c.occupied)
+    if (w > 0) {
+      val keys = c.keys
+      val mask = (1L << w) - 1
+      var acc = 0L
+      var accBits = 0
+      var i = 0
+      while (i < numPairs) {
+        acc |= (keys(i) & mask) << accBits
+        accBits += w
+        while (accBits >= 8) {
+          out.byte((acc & 0xff).toInt)
+          acc >>>= 8
+          accBits -= 8
+        }
+        i += 1
       }
-      i += 1
+      if (accBits > 0) out.byte((acc & 0xff).toInt)
     }
-    if (accBits > 0) out.byte((acc & 0xff).toInt)
     out.toBytes
   }
 
-  // Counts section: dense varints, or a sparse (nnz, then
-  // index-delta/count pairs) list when that is byte-cheaper. The web's
-  // long tail makes most per-host filters nearly empty, where the dense
-  // form pays one byte per EMPTY bucket (1 KiB at m0=1024); sparse
-  // costs ~2 bytes per occupied bucket.
-  private def countAt: Int => Long = b => counts(b).toLong
+  /** [[toBytes]]`.length`, from the same plan. */
+  def sizeBytes: Int = canonical.bytes
 
-  private def fpBytes: Int = ((numPairs.toLong * fpWidth + 7) / 8).toInt
-
-  /** [[toBytes]]`.length`, without the sort or the bytes. */
-  def sizeBytes: Int =
-    Ebf.HeaderBytes + WireWriter.cellsSize(numBuckets, 0, signed = false, null)(countAt) + fpBytes
+  /** The packed keys sorted, and the occupied buckets with their counts
+    * read off the sorted runs. The counts section those feed is dense
+    * varints, or a sparse (nnz, then index-delta/count pairs) list when
+    * that is byte-cheaper: the web's long tail makes most per-host
+    * filters nearly empty, where the dense form pays one byte per EMPTY
+    * bucket (1 KiB at m0=1024) and sparse ~2 bytes per occupied one. */
+  private def canonical: Ebf.Canonical = {
+    val w = fpWidth
+    val sorted = Ebf.sortedKeys(pairs, numPairs, w, log2m0 + l0)
+    val bound = math.min(numPairs, numBuckets)
+    val buckets = new Array[Int](bound)
+    val runs = new Array[Int](bound)
+    var occupied = 0
+    var i = 0
+    while (i < numPairs) {
+      val b = (sorted(i) >>> w).toInt
+      if (occupied == 0 || buckets(occupied - 1) != b) {
+        buckets(occupied) = b
+        occupied += 1
+      }
+      runs(occupied - 1) += 1
+      i += 1
+    }
+    val bytes = Ebf.HeaderBytes +
+      WireWriter.cellsSize(numBuckets, 0, signed = false, buckets, runs, occupied) +
+      ((numPairs.toLong * w + 7) / 8).toInt
+    new Ebf.Canonical(sorted, buckets, runs, occupied, bytes)
+  }
 
   def copyOf: Ebf = Ebf.fromBytes(toBytes)
 }
@@ -376,6 +420,70 @@ object Ebf {
 
   private val HeaderBytes = 44
 
+  /** A filter's canonical order: its packed keys sorted, and per
+    * occupied bucket (ascending) its fingerprint count; `bytes` is the
+    * length of its wire form. */
+  private final class Canonical(val keys: Array[Long], val buckets: Array[Int], val runs: Array[Int],
+                                val occupied: Int, val bytes: Int)
+
+  /** Below this many keys the JDK sort beats the radix passes' fixed
+    * cost of clearing and summing their digit histograms. */
+  private val RadixMin = 512
+  /** Widest radix digit: 2^11 histogram slots stay in L1. */
+  private val RadixDigit = 11
+
+  /** The first `len` pairs as packed keys `(bucket << w) | fp`, each
+    * below `2^bits`, sorted ascending into a fresh array: an LSD radix
+    * sort of `ceil(bits / 11)` stable passes of equal width. Packing
+    * counts the first digit, and each scatter counts the next one, so
+    * no pass reads the keys only to count them. */
+  private def sortedKeys(pairs: Array[Long], len: Int, w: Int, bits: Int): Array[Long] = {
+    var src = new Array[Long](len)
+    val passes = (bits + RadixDigit - 1) / RadixDigit
+    if (len < RadixMin || passes == 0) {
+      var i = 0
+      while (i < len) { val p = pairs(i); src(i) = ((p >>> 32) << w) | (p & 0xffffffffL); i += 1 }
+      java.util.Arrays.sort(src)
+      return src
+    }
+    val digit = (bits + passes - 1) / passes
+    val mask = (1 << digit) - 1
+    var hist = new Array[Int](mask + 1)
+    var next = new Array[Int](mask + 1)
+    var i = 0
+    while (i < len) {
+      val p = pairs(i)
+      val key = ((p >>> 32) << w) | (p & 0xffffffffL)
+      src(i) = key
+      hist(key.toInt & mask) += 1
+      i += 1
+    }
+    var dst = new Array[Long](len)
+    var shift = 0
+    while (shift < passes * digit) {
+      // counts -> start offset of each digit value
+      var sum = 0
+      var d = 0
+      while (d <= mask) { val c = hist(d); hist(d) = sum; sum += c; d += 1 }
+      val nextShift = shift + digit
+      val counting = nextShift < passes * digit
+      java.util.Arrays.fill(next, 0)
+      i = 0
+      while (i < len) {
+        val key = src(i)
+        val at = (key >>> shift).toInt & mask
+        dst(hist(at)) = key
+        hist(at) += 1
+        if (counting) next((key >>> nextShift).toInt & mask) += 1
+        i += 1
+      }
+      val t = src; src = dst; dst = t
+      val h = hist; hist = next; next = h
+      shift = nextShift
+    }
+    src
+  }
+
   /** The heap [[fromBytes]] allocates for `bytes`, read off the header
     * within the limits `fromBytes` enforces: the filter object, its
     * bucket counts and its fingerprint pairs. Null reads as an empty
@@ -392,11 +500,15 @@ object Ebf {
     }
   }
 
-  /** Decodes [[Ebf.toBytes]]. The header goes through the constructor;
-    * the body must then be exactly what that header implies: a level
-    * the filter can reach, `k * n` stored fingerprints, and their packed
-    * bytes to the end of the blob, all checked before the bucket array
-    * is allocated. */
+  /** Decodes [[Ebf.toBytes]] in one pass over the counts section, which
+    * writes each bucket's pairs in place, then one local loop over the
+    * packed fingerprints. The header goes through the constructor; the
+    * body must then be exactly what that header implies: a level the
+    * filter can reach, `k * n` stored fingerprints, and their packed
+    * bytes to the end of the blob. The pair array is sized by the bytes
+    * left, which bound the fingerprints of any nonzero width; at width 0
+    * it grows only as the counts section claims pairs. The bucket array
+    * is allocated once the whole body has checked out. */
   def fromBytes(bytes: Array[Byte]): Ebf = {
     val in = WireReader(bytes, "EBF2", MAGIC)
     val m0 = in.int("m0"); val k = in.int("k"); val l0 = in.int("l0"); val level = in.int("level")
@@ -406,52 +518,50 @@ object Ebf {
     in.check(level >= 0 && level <= e.maxLevel, "level", s"$level outside [0, ${e.maxLevel}]")
     in.check(n >= 0 && n <= Int.MaxValue / k, "n", s"$n keys exceed the pair capacity")
     val m = m0 << level
-    // (bucket << 32 | count) per occupied bucket, ascending
-    var occupied: Array[Long] = null
-    var nOccupied = 0
-    var total = 0L
-    in.cells("counts", m, 0, signed = false)(bound => occupied = new Array[Long](bound)) { (b, c) =>
-      if (c <= 0 || c > Int.MaxValue) in.fail("counts", s"bad count $c")
-      occupied(nOccupied) = (b.toLong << 32) | c
-      nOccupied += 1
-      total += c
-    }
-    in.check(total == n * k, "counts", s"$total fingerprints stored for $n keys of $k")
     val w = l0 - level
-    in.check(in.remaining == (total * w + 7) / 8, "fingerprints",
+    val total = (n * k).toInt
+    val fpLen = (total.toLong * w + 7) / 8
+    in.check(fpLen < in.remaining, "fingerprints",
+      s"${in.remaining} bytes left for the counts and $total fingerprints of $w bits")
+    var pairs = new Array[Long](math.max(64L, math.min(total, 8L * in.remaining)).toInt)
+    var stored = 0
+    in.cells("counts", m, 0, signed = false)(_ => ()) { (b, c) =>
+      if (c <= 0 || c > total - stored) in.fail("counts", s"bad count $c: over $total fingerprints for $n keys of $k")
+      val pair = b.toLong << 32
+      val end = stored + c.toInt
+      if (end > pairs.length) pairs = java.util.Arrays.copyOf(pairs, math.min(total, math.max(2L * pairs.length, end)).toInt)
+      while (stored < end) { pairs(stored) = pair; stored += 1 }
+    }
+    in.check(stored == total, "counts", s"$stored fingerprints stored for $n keys of $k")
+    in.check(in.remaining == fpLen, "fingerprints",
       s"${in.remaining} bytes for $total fingerprints of $w bits")
-    e.level = level
-    e.n = n
-    e.counts = new Array[Int](m)
-    e.pairs = new Array[Long](math.max(64, total.toInt))
-    e.numPairs = total.toInt
+    val counts = new Array[Int](m)
+    var at = in.skip("fingerprints", fpLen.toInt)
+    val mask = (1L << w) - 1
     var acc = 0L
     var accBits = 0
-    var idx = 0
-    var o = 0
-    while (o < nOccupied) {
-      val b = occupied(o) >>> 32
-      val c = (occupied(o) & 0xffffffffL).toInt
-      e.counts(b.toInt) = c
-      var j = 0
-      while (j < c) {
-        var f = 0L
-        if (w > 0) {
-          while (accBits < w) {
-            acc |= in.byte("fingerprints").toLong << accBits
-            accBits += 8
-          }
-          f = acc & ((1L << w) - 1)
-          acc >>>= w
-          accBits -= w
+    var i = 0
+    while (i < total) {
+      val p = pairs(i)
+      if (w > 0) {
+        while (accBits < w) {
+          acc |= (bytes(at) & 0xffL) << accBits
+          at += 1
+          accBits += 8
         }
-        e.pairs(idx) = (b << 32) | f
-        idx += 1
-        j += 1
+        pairs(i) = p | (acc & mask)
+        acc >>>= w
+        accBits -= w
       }
-      o += 1
+      counts((p >>> 32).toInt) += 1
+      i += 1
     }
     in.finish()
+    e.level = level
+    e.n = n
+    e.counts = counts
+    e.pairs = pairs
+    e.numPairs = total
     e
   }
 }

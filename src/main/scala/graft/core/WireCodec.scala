@@ -45,23 +45,35 @@ final class WireWriter(sizeHint: Int = 64) {
     * for the layout). `cell(i)` reads cell i; `nonZero`, when not null,
     * lists in ascending order the only indexes that can be nonzero, so
     * a sparse in-memory table is never scanned cell by cell. */
-  def cells(n: Int, width: Int, signed: Boolean, nonZero: Array[Int])(cell: Int => Long): this.type = {
-    val plan = WireWriter.plan(n, width, signed, nonZero, cell)
+  def cells(n: Int, width: Int, signed: Boolean, nonZero: Array[Int])(cell: Int => Long): this.type =
+    if (nonZero == null) section(n, width, signed, null, n, cell)
+    else section(n, width, signed, nonZero, nonZero.length, e => cell(nonZero(e)))
+
+  /** The same section from parallel arrays: cell `nonZero(e)` holds
+    * `values(e)` for `e < count`, indexes ascending, every other cell 0. */
+  def cells(n: Int, width: Int, signed: Boolean, nonZero: Array[Int], values: Array[Int], count: Int): this.type =
+    section(n, width, signed, nonZero, count, e => values(e).toLong)
+
+  /** Entry `e < count` is cell `nonZero(e)` (cell `e` when `nonZero` is
+    * null) and holds `value(e)`. */
+  private def section(n: Int, width: Int, signed: Boolean, nonZero: Array[Int], count: Int,
+                      value: Int => Long): this.type = {
+    val plan = WireWriter.plan(n, width, signed, nonZero, count, value)
     room(plan.bytes)
     if (plan.sparse) {
       byte(1).varint(plan.nnz)
       var prev = -1
-      WireWriter.foreachNonZero(n, nonZero, cell) { (i, c) =>
+      WireWriter.foreachNonZero(nonZero, count, value) { (i, c) =>
         varint((i - prev - 1).toLong).varint(WireWriter.enc(c, signed))
         prev = i
       }
     } else {
       byte(0)
-      var o = 0
+      var e = 0
       var i = 0
       while (i < n) {
-        val c = if (nonZero == null) cell(i)
-          else if (o < nonZero.length && nonZero(o) == i) { o += 1; cell(i) } else 0L
+        val c = if (nonZero == null) value(i)
+          else if (e < count && nonZero(e) == i) { e += 1; value(e - 1) } else 0L
         if (width == 8) long(c) else varint(WireWriter.enc(c, signed))
         i += 1
       }
@@ -100,19 +112,22 @@ object WireWriter {
     *    a varint when it is 0.
     * Varint values are zigzagged when `signed`. The choice is a pure
     * function of the cell contents, so equal contents encode to equal
-    * bytes however they were built. */
-  def cellsSize(n: Int, width: Int, signed: Boolean, nonZero: Array[Int])(cell: Int => Long): Int =
-    plan(n, width, signed, nonZero, cell).bytes
+    * bytes however they were built. Here the cells are given as
+    * parallel arrays, as the second form of [[WireWriter.cells]] takes
+    * them. */
+  def cellsSize(n: Int, width: Int, signed: Boolean, nonZero: Array[Int], values: Array[Int], count: Int): Int =
+    plan(n, width, signed, nonZero, count, e => values(e).toLong).bytes
 
   private final class Plan(val nnz: Int, val sparse: Boolean, val bytes: Int)
 
   /** Both forms' costs in one pass over the nonzero cells. */
-  private def plan(n: Int, width: Int, signed: Boolean, nonZero: Array[Int], cell: Int => Long): Plan = {
+  private def plan(n: Int, width: Int, signed: Boolean, nonZero: Array[Int], count: Int,
+                   value: Int => Long): Plan = {
     var nnz = 0
     var sparse = 0L
     var nonZeroDense = 0L
     var prev = -1
-    foreachNonZero(n, nonZero, cell) { (i, c) =>
+    foreachNonZero(nonZero, count, value) { (i, c) =>
       val len = varintLen(enc(c, signed))
       nnz += 1
       sparse += varintLen((i - prev - 1).toLong) + len
@@ -126,13 +141,11 @@ object WireWriter {
     new Plan(nnz, sparse < dense, bytes.toInt)
   }
 
-  private def foreachNonZero(n: Int, nonZero: Array[Int], cell: Int => Long)(f: (Int, Long) => Unit): Unit = {
-    val m = if (nonZero == null) n else nonZero.length
+  private def foreachNonZero(nonZero: Array[Int], count: Int, value: Int => Long)(f: (Int, Long) => Unit): Unit = {
     var e = 0
-    while (e < m) {
-      val i = if (nonZero == null) e else nonZero(e)
-      val c = cell(i)
-      if (c != 0L) f(i, c)
+    while (e < count) {
+      val c = value(e)
+      if (c != 0L) f(if (nonZero == null) e else nonZero(e), c)
       e += 1
     }
   }
@@ -164,6 +177,10 @@ final class WireReader(data: Array[Byte], val format: String) {
     pos += n
     p
   }
+
+  /** Consumes the next `n` bytes and returns their offset in the blob,
+    * for a caller that decodes them in its own loop. */
+  def skip(field: String, n: Int): Int = take(field, n)
 
   /** One byte, unsigned. */
   def byte(field: String): Int = data(take(field, 1)) & 0xff

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * from 8 threads at once and must answer what a private copy answers.
   * The reads that tidy state first (`TDigest.mergeBuffer`,
   * `Theta.compact`) are no-ops only while a decoded instance's buffer is
-  * empty; the last test pins that. */
+  * empty; the last test pins that. An EBF merge only reads its
+  * argument, so two cached filters merge into a fresh buffer while
+  * other threads read them. */
 class SharedReadSpec extends AnyFunSuite {
 
   private def filled[S <: BytesSerde](s: S)(add: (S, Int) => Unit): Array[Byte] = {
@@ -95,6 +97,39 @@ class SharedReadSpec extends AnyFunSuite {
     // one decoded instance per blob, read by every thread
     val blobs = kinds.map(prefix).distinct
     assert(seen.size === blobs.size, seen)
+  }
+
+  test("merging two cached EBFs into a fresh buffer leaves both readable") {
+    // two levels apart, so a merge that re-levelled its argument would show
+    val wide = filled(Ebf.empty())((s, i) => s.insert(s"w$i"))
+    val narrow = { val e = Ebf.empty(); (0 until 40).foreach(i => e.insert(s"n$i")); e.toBytes }
+    val a = SketchCache.ebf(wide)
+    val b = SketchCache.ebf(narrow)
+    assert(a.level > b.level)
+    val expected = (0 until 200).map(i => (a.mightContain(s"w$i"), b.mightContain(s"n$i"), a.mightContain(s"x$i")))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val readers = (0 until 4).map { _ =>
+        pool.submit(new Runnable {
+          def run(): Unit = while (!stop.get()) {
+            val got = (0 until 200).map(i => (a.mightContain(s"w$i"), b.mightContain(s"n$i"), a.mightContain(s"x$i")))
+            if (got != expected) wrong.add("probe answers changed")
+            if (!java.util.Arrays.equals(b.toBytes, narrow)) wrong.add("narrow bytes changed")
+          }
+        })
+      }
+      (0 until 50).foreach { _ =>
+        val fresh = Ebf.empty().merge(a).merge(b)
+        assert(fresh.n === a.n + b.n)
+      }
+      stop.set(true)
+      readers.foreach(_.get())
+    } finally pool.shutdown()
+    assert(wrong.isEmpty, wrong.toArray.distinct.mkString("\n"))
+    assert(java.util.Arrays.equals(a.toBytes, wide) && java.util.Arrays.equals(b.toBytes, narrow))
+    assert(SketchCache.ebf(narrow).level === Ebf.fromBytes(narrow).level)
   }
 
   test("a decoded TDigest or Theta reads without tidying: its buffer is empty") {

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * eviction are [[SketchCacheBoundSpec]]'s. */
 class SketchCacheSpec extends AnyFunSuite {
 
-  /** An EBF comfortably past the 8 MB big-blob threshold. */
+  /** A multi-megabyte EBF: the size a per-thread cache multiplied by
+    * the core count. */
   private lazy val bigBytes: Array[Byte] = {
     val e = Ebf.empty(seed = Graft.SketchSeed)
     var i = 0
@@ -22,7 +23,7 @@ class SketchCacheSpec extends AnyFunSuite {
     b
   }
 
-  test("big blobs deserialize ONCE per JVM and are shared across threads") {
+  test("a multi-MB blob decodes ONCE per JVM, shared across threads") {
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Ebf]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
@@ -41,7 +42,7 @@ class SketchCacheSpec extends AnyFunSuite {
     assert(results.peek().mightContain("big-key-123".getBytes("UTF-8")))
   }
 
-  test("big-blob content level: a copied instance reuses the deserialized value") {
+  test("content level: a copied blob reuses the deserialized instance") {
     val copy = bigBytes.clone()
     assert(SketchCache.ebf(copy) eq SketchCache.ebf(bigBytes))
   }
@@ -64,7 +65,7 @@ class SketchCacheSpec extends AnyFunSuite {
     assert(SketchCache.ebf(small).n === 100)
   }
 
-  test("small sketches keep the per-thread reference fast path") {
+  test("small sketches come from the one JVM-wide cache too") {
     val t = Theta.empty(64)
     (1 to 50).foreach(i => t.add(s"v$i"))
     val b = t.toBytes
