@@ -9,40 +9,38 @@ package graft.core
   * monoid so it can serve as a distributed Spark aggregation buffer.
   *
   * == Structure ==
-  * `m = m0 * 2^level` buckets. For each of `k` derived hash functions,
-  * a key consumes `log2(m0)` bits for base addressing and up to `l0`
-  * further bits as a fingerprint. At `level` L the bucket index is
-  * `b0 + (fp & (2^L - 1)) * m0` and the remaining stored fingerprint is
-  * `fp >>> L` — so expansion (L -> L+gap) routes each stored fingerprint
-  * `f` in bucket `b` to bucket `b + (f & (2^gap - 1)) * m` with
-  * fingerprint `f >>> gap` ("fingerprint-preserving rehash"), and
-  * compression is its exact inverse. A bucket is "set" iff it holds
-  * >= 1 fingerprint, so expansion clears bits in child buckets that
-  * receive no fingerprints and the false-positive rate drops after
-  * growth.
+  * `m = m0 * 2^level` buckets. Each of a key's `k` derived hashes gives
+  * it one *address*: the hash's low `log2(m0) + l0` bits. At `level` L
+  * the bucket is the address's low `log2(m0) + L` bits and the stored
+  * fingerprint is the rest, `addr >>> (log2(m0) + L)`. In the paper's
+  * terms, with `b0` the low `log2(m0)` bits and `fp` the `l0` above
+  * them, that is bucket `b0 + (fp & (2^L - 1)) * m0` and fingerprint
+  * `fp >>> L`: expansion moves a fingerprint's low bit into the bucket
+  * index ("fingerprint-preserving rehash") and compression moves it
+  * back. A bucket is "set" iff it holds >= 1 fingerprint, so expansion
+  * clears bits in child buckets that receive no fingerprints and the
+  * false-positive rate drops after growth.
   *
   * == Normal form (the distributed-merge theorem) ==
   * After every insert/merge the filter expands while `n > alpha * m`
-  * (and `level < maxLevel`). Because expansion routes fingerprints by
-  * their own content, the state at level L is a pure function of the
-  * inserted key multiset — `expand(union(A,B)) == union(expand(A),
-  * expand(B))` — hence merge is associative and commutative and the
-  * serialized bytes are identical under arbitrary partition merge
-  * orderings.
+  * (and `level < maxLevel`). The stored addresses do not depend on the
+  * level, so the state at level L is a pure function of the inserted
+  * key multiset — `expand(union(A,B)) == union(expand(A), expand(B))`
+  * — hence merge is associative and commutative and the serialized
+  * bytes are identical under arbitrary partition merge orderings.
   *
   * == Physical layout (GC-aware, learned from the 1M-row bench) ==
-  * Fingerprints live in ONE flat `Array[Long]` of `(bucket << 32) | fp`
-  * pairs plus one per-bucket count array — O(1) heap objects per
-  * filter. The previous per-bucket `Array[Array[Int]]` layout allocated
+  * The addresses live in ONE flat `Array[Long]`, plus one per-bucket
+  * count array at the current level — O(1) heap objects per filter.
+  * The previous per-bucket `Array[Array[Int]]` layout allocated
   * millions of small arrays; at 32 aggregation threads G1 degraded
   * progressively (humongous-region fragmentation: identical runs went
-  * 3.7s -> 16.9s within one JVM). Expansion, compression, merge,
-  * serialization and decoding each cost O(pairs). The canonical order
-  * (bucket asc, fp asc) is that of the packed key
-  * `(bucket << fpWidth) | fp`, which has `log2(m0) + l0` bits at every
-  * level (fingerprint-preserving rehash moves bits between the two
-  * halves, never adds any), so an LSD radix sort produces it; a merge
-  * routes the other filter's pairs straight to the merged level.
+  * 3.7s -> 16.9s within one JVM). Changing level rewrites no address:
+  * expansion and compression only recount the buckets, and a merge
+  * appends the other filter's addresses whatever its level. The
+  * canonical order (bucket asc, fp asc) is that of the packed key
+  * `(bucket << fpWidth) | fp`, the address with its two parts swapped,
+  * so an LSD radix sort over its `log2(m0) + l0` bits produces it.
   *
   * == Deviations from the paper (documented deliberately) ==
   *  - Buckets hold exact unbounded fingerprint multisets (the paper
@@ -85,7 +83,7 @@ final class Ebf(
 
   var level: Int = 0
   var n: Long = 0L                        // total inserted keys (multiset size)
-  // flat (bucket << 32 | fp) pairs, unsorted; counts(b) = #fps in bucket b
+  // flat addresses (see Structure), unsorted; counts(b) = #fps in bucket b
   private[core] var pairs: Array[Long] = new Array[Long](64)
   private[core] var numPairs: Int = 0
   private[core] var counts: Array[Int] = new Array[Int](m0)
@@ -93,20 +91,11 @@ final class Ebf(
   @inline def numBuckets: Int = m0 << level
   @inline def fpWidth: Int = l0 - level
 
-  @inline private def bucketOf(h: Hash128.H, i: Int): Int = {
-    val hi = h.derived(i)
-    val b0 = (hi & (m0 - 1)).toInt
-    val fpFull = ((hi >>> log2m0) & ((1L << l0) - 1)).toInt
-    b0 + ((fpFull & ((1 << level) - 1)) * m0)
-  }
+  /** The address of `h`'s `i`-th derived hash. */
+  @inline private def address(h: Hash128.H, i: Int): Long =
+    h.derived(i) & ((1L << (log2m0 + l0)) - 1)
 
-  @inline private def pairOf(h: Hash128.H, i: Int): Long = {
-    val hi = h.derived(i)
-    val b0 = (hi & (m0 - 1)).toInt
-    val fpFull = ((hi >>> log2m0) & ((1L << l0) - 1)).toInt
-    val b = b0 + ((fpFull & ((1 << level) - 1)) * m0)
-    (b.toLong << 32) | (fpFull >>> level).toLong
-  }
+  @inline private def bucket(addr: Long): Int = (addr & (numBuckets - 1)).toInt
 
   @inline private def appendPair(p: Long): Unit = {
     if (numPairs == pairs.length) {
@@ -121,9 +110,9 @@ final class Ebf(
   def insertHash(h: Hash128.H): Unit = {
     var i = 0
     while (i < k) {
-      val p = pairOf(h, i)
-      appendPair(p)
-      counts((p >>> 32).toInt) += 1
+      val a = address(h, i)
+      appendPair(a)
+      counts(bucket(a)) += 1
       i += 1
     }
     n += 1
@@ -137,7 +126,7 @@ final class Ebf(
   def mightContainHash(h: Hash128.H): Boolean = {
     var i = 0
     while (i < k) {
-      if (counts(bucketOf(h, i)) == 0) return false
+      if (counts(bucket(h.derived(i))) == 0) return false
       i += 1
     }
     true
@@ -148,11 +137,10 @@ final class Ebf(
   def mightContain(key: Long): Boolean = mightContainHash(Hash128.hashLong(key, seed))
 
   /** Expand to the load threshold's target level — the
-    * content-determined normal form that makes merge associative.
-    * Routes every fingerprint in ONE pass regardless of the level gap. */
+    * content-determined normal form that makes merge associative. */
   private def normalize(): Unit = {
     val target = levelFor(n, level)
-    if (target > level) expandTo(target)
+    if (target > level) relevel(target)
   }
 
   /** The normal-form level of `keys` keys, starting from `from`. */
@@ -162,52 +150,35 @@ final class Ebf(
     target
   }
 
-  /** Double the bucket array; route each fingerprint by its low bit. */
+  /** Double the bucket array: each fingerprint's low bit joins its bucket. */
   def expand(): Unit = expandTo(level + 1)
 
-  /** Single-pass expansion to `target`: pair (b, f) at level L maps to
-    * (b + (f & (2^gap - 1)) * m, f >>> gap), gap = target - L. */
+  /** Expand to level `target` in one recount of the buckets. */
   def expandTo(target: Int): Unit = {
     require(target > level, s"target $target must exceed level $level")
     require(target <= maxLevel,
       s"cannot expand past level $maxLevel (fingerprint or address space exhausted)")
-    val gap = target - level
-    val m = numBuckets.toLong
-    val mask = (1L << gap) - 1
-    val newCounts = new Array[Int]((m0 << target).toInt)
-    var i = 0
-    while (i < numPairs) {
-      val p = pairs(i)
-      val b = p >>> 32
-      val f = p & 0xffffffffL
-      val nb = b + (f & mask) * m
-      pairs(i) = (nb << 32) | (f >>> gap)
-      newCounts(nb.toInt) += 1
-      i += 1
-    }
-    counts = newCounts
-    level = target
+    relevel(target)
   }
 
-  /** Halve the bucket array; fingerprints regain their routing bit.
-    * Exact inverse of [[expand]] on the fingerprint multiset. */
+  /** Halve the bucket array: each bucket's top bit returns to its
+    * fingerprints. Exact inverse of [[expand]]. */
   def compress(): Unit = {
     require(level > 0, "cannot compress below level 0")
-    val half = numBuckets / 2
-    val newCounts = new Array[Int](half)
-    var i = 0
-    while (i < numPairs) {
-      val p = pairs(i)
-      val b = (p >>> 32).toInt
-      val f = p & 0xffffffffL
-      val t = if (b >= half) 1L else 0L
-      val nb = b - t * half
-      pairs(i) = (nb.toLong << 32) | ((f << 1) | t)
-      newCounts(nb.toInt) += 1
-      i += 1
-    }
-    counts = newCounts
-    level -= 1
+    relevel(level - 1)
+  }
+
+  /** Move to level `target`: the addresses stay, the buckets are recounted. */
+  private def relevel(target: Int): Unit = {
+    level = target
+    counts = new Array[Int](numBuckets)
+    count(0)
+  }
+
+  /** Count the addresses from index `from` on into their buckets. */
+  private def count(from: Int): Unit = {
+    var i = from
+    while (i < numPairs) { counts(bucket(pairs(i))) += 1; i += 1 }
   }
 
   /** Remove one inserted key (O(pairs) scan; local post-merge use only —
@@ -216,103 +187,55 @@ final class Ebf(
   def delete(key: String): Boolean = deleteHash(Hash128.hashString(key, seed))
   def delete(key: Long): Boolean = deleteHash(Hash128.hashLong(key, seed))
 
+  /** Exact multiset delete: each of the key's `k` addresses takes its
+    * own stored copy (two hash functions can give the same address), all
+    * found in one scan before any is removed. */
   def deleteHash(h: Hash128.H): Boolean = {
-    // targets (with multiplicity: two hash fns can produce the same pair)
-    val targets = new Array[Long](k)
+    val want = new Array[Long](k) // -1 once matched: addresses are >= 0
     var i = 0
-    while (i < k) { targets(i) = pairOf(h, i); i += 1 }
-    deleteTargets(targets)
-  }
-
-  /** Exact multiset delete: verify all targets present, then remove. */
-  private def deleteTargets(targets: Array[Long]): Boolean = {
-    val need = new java.util.HashMap[java.lang.Long, Integer]()
-    var i = 0
-    while (i < targets.length) {
-      need.merge(targets(i), Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
-      i += 1
-    }
-    // count available occurrences
-    val have = new java.util.HashMap[java.lang.Long, Integer]()
+    while (i < k) { want(i) = address(h, i); i += 1 }
+    val at = new Array[Int](k)    // matched indexes, ascending
+    var found = 0
     var j = 0
-    while (j < numPairs) {
+    while (j < numPairs && found < k) {
       val p = pairs(j)
-      if (need.containsKey(p))
-        have.merge(p, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
+      var t = 0
+      while (t < k && want(t) != p) t += 1
+      if (t < k) { want(t) = -1L; at(found) = j; found += 1 }
       j += 1
     }
-    val it = need.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val avail = have.get(e.getKey)
-      if (avail == null || avail < e.getValue) return false
+    if (found < k) return false
+    // back-fill from the highest index so no move disturbs a lower one
+    while (found > 0) {
+      found -= 1
+      counts(bucket(pairs(at(found)))) -= 1
+      numPairs -= 1
+      pairs(at(found)) = pairs(numPairs)
     }
-    // remove one occurrence per target instance
-    val remaining = new java.util.HashMap[java.lang.Long, Integer](need)
-    val idxs = new Array[Int](targets.length)
-    var nIdx = 0
-    j = 0
-    while (j < numPairs && nIdx < targets.length) {
-      val p = pairs(j)
-      val r = remaining.get(p)
-      if (r != null && r > 0) {
-        remaining.put(p, Integer.valueOf(r - 1))
-        idxs(nIdx) = j
-        nIdx += 1
-      }
-      j += 1
-    }
-    removeIndexes(idxs, nIdx)
     n -= 1
     true
   }
 
-  /** Remove pairs at the given (ascending) indexes by back-filling. */
-  private def removeIndexes(idxs: Array[Int], count: Int): Unit = {
-    // process from the highest index so swaps don't disturb lower ones
-    val sorted = java.util.Arrays.copyOf(idxs, count)
-    java.util.Arrays.sort(sorted)
-    var i = count - 1
-    while (i >= 0) {
-      val idx = sorted(i)
-      counts((pairs(idx) >>> 32).toInt) -= 1
-      pairs(idx) = pairs(numPairs - 1)
-      numPairs -= 1
-      i -= 1
-    }
-  }
-
-  /** In-place merge in one pass over `other`'s pairs: expand this
-    * filter once to the normal-form level of the combined key count,
-    * then route each of `other`'s pairs straight to that level and count
-    * it where it lands. `other` is only read, so it may be an instance
-    * other threads share; `a.merge(a)` doubles the multiset. Associative
-    * and commutative (see class doc). */
+  /** In-place merge: re-level this filter once to the normal-form level
+    * of the combined key count, then append `other`'s addresses, which
+    * hold at any level, and count them. `other` is only read, so it may
+    * be an instance other threads share; `a.merge(a)` doubles the
+    * multiset. Associative and commutative (see class doc). */
   def merge(other: Ebf): Ebf = {
     require(m0 == other.m0 && k == other.k && l0 == other.l0 &&
       alphaNum == other.alphaNum && alphaDen == other.alphaDen && seed == other.seed,
       "cannot merge EBFs with different parameters")
     val total = n + other.n
     val target = levelFor(total, math.max(level, other.level))
-    if (target > level) expandTo(target)
-    // read after the expansion, which re-levels `other` too when it is `this`
+    if (target > level) relevel(target)
+    val from = numPairs
     val add = other.numPairs
-    val gap = target - other.level
-    val m = other.numBuckets.toLong
-    val mask = (1L << gap) - 1
-    if (numPairs + add > pairs.length)
-      pairs = java.util.Arrays.copyOf(pairs, math.max(pairs.length * 2, numPairs + add))
-    val src = other.pairs
-    var i = 0
-    while (i < add) {
-      val p = src(i)
-      val f = p & 0xffffffffL
-      val nb = (p >>> 32) + (f & mask) * m
-      pairs(numPairs + i) = (nb << 32) | (f >>> gap)
-      counts(nb.toInt) += 1
-      i += 1
-    }
-    numPairs += add
+    if (from + add > pairs.length)
+      pairs = java.util.Arrays.copyOf(pairs, math.max(pairs.length * 2, from + add))
+    // read after the copy, which replaces `other.pairs` too when it is `this`
+    System.arraycopy(other.pairs, 0, pairs, from, add)
+    numPairs = from + add
+    count(from)
     n = total
     this
   }
@@ -373,7 +296,7 @@ final class Ebf(
     * bucket (1 KiB at m0=1024) and sparse ~2 bytes per occupied one. */
   private def canonical: Ebf.Canonical = {
     val w = fpWidth
-    val sorted = Ebf.sortedKeys(pairs, numPairs, w, log2m0 + l0)
+    val sorted = Ebf.sortedKeys(pairs, numPairs, log2m0 + level, log2m0 + l0)
     val bound = math.min(numPairs, numBuckets)
     val buckets = new Array[Int](bound)
     val runs = new Array[Int](bound)
@@ -432,17 +355,21 @@ object Ebf {
   /** Widest radix digit: 2^11 histogram slots stay in L1. */
   private val RadixDigit = 11
 
-  /** The first `len` pairs as packed keys `(bucket << w) | fp`, each
-    * below `2^bits`, sorted ascending into a fresh array: an LSD radix
-    * sort of `ceil(bits / 11)` stable passes of equal width. Packing
-    * counts the first digit, and each scatter counts the next one, so
-    * no pass reads the keys only to count them. */
-  private def sortedKeys(pairs: Array[Long], len: Int, w: Int, bits: Int): Array[Long] = {
+  /** The first `len` of the `bits`-wide addresses as packed keys
+    * `(bucket << w) | fp`, the address's low `b` bits (the bucket)
+    * swapped above its `w = bits - b` high ones (the fingerprint), sorted
+    * ascending into a fresh array: an LSD radix sort of
+    * `ceil(bits / 11)` stable passes of equal width. Packing counts the
+    * first digit, and each scatter counts the next one, so no pass reads
+    * the keys only to count them. */
+  private def sortedKeys(addrs: Array[Long], len: Int, b: Int, bits: Int): Array[Long] = {
     var src = new Array[Long](len)
+    val w = bits - b
+    val low = (1L << b) - 1
     val passes = (bits + RadixDigit - 1) / RadixDigit
     if (len < RadixMin || passes == 0) {
       var i = 0
-      while (i < len) { val p = pairs(i); src(i) = ((p >>> 32) << w) | (p & 0xffffffffL); i += 1 }
+      while (i < len) { val a = addrs(i); src(i) = ((a & low) << w) | (a >>> b); i += 1 }
       java.util.Arrays.sort(src)
       return src
     }
@@ -452,8 +379,8 @@ object Ebf {
     var next = new Array[Int](mask + 1)
     var i = 0
     while (i < len) {
-      val p = pairs(i)
-      val key = ((p >>> 32) << w) | (p & 0xffffffffL)
+      val a = addrs(i)
+      val key = ((a & low) << w) | (a >>> b)
       src(i) = key
       hist(key.toInt & mask) += 1
       i += 1
@@ -501,8 +428,9 @@ object Ebf {
   }
 
   /** Decodes [[Ebf.toBytes]] in one pass over the counts section, which
-    * writes each bucket's pairs in place, then one local loop over the
-    * packed fingerprints. The header goes through the constructor; the
+    * writes each bucket's index in place as its addresses' low bits, then
+    * one local loop that puts each packed fingerprint above its bucket's
+    * bits. The header goes through the constructor; the
     * body must then be exactly what that header implies: a level the
     * filter can reach, `k * n` stored fingerprints, and their packed
     * bytes to the end of the blob. The pair array is sized by the bytes
@@ -527,10 +455,9 @@ object Ebf {
     var stored = 0
     in.cells("counts", m, 0, signed = false)(_ => ()) { (b, c) =>
       if (c <= 0 || c > total - stored) in.fail("counts", s"bad count $c: over $total fingerprints for $n keys of $k")
-      val pair = b.toLong << 32
       val end = stored + c.toInt
       if (end > pairs.length) pairs = java.util.Arrays.copyOf(pairs, math.min(total, math.max(2L * pairs.length, end)).toInt)
-      while (stored < end) { pairs(stored) = pair; stored += 1 }
+      while (stored < end) { pairs(stored) = b; stored += 1 }
     }
     in.check(stored == total, "counts", s"$stored fingerprints stored for $n keys of $k")
     in.check(in.remaining == fpLen, "fingerprints",
@@ -538,22 +465,23 @@ object Ebf {
     val counts = new Array[Int](m)
     var at = in.skip("fingerprints", fpLen.toInt)
     val mask = (1L << w) - 1
+    val shift = Integer.numberOfTrailingZeros(m)
     var acc = 0L
     var accBits = 0
     var i = 0
     while (i < total) {
-      val p = pairs(i)
+      val b = pairs(i)
       if (w > 0) {
         while (accBits < w) {
           acc |= (bytes(at) & 0xffL) << accBits
           at += 1
           accBits += 8
         }
-        pairs(i) = p | (acc & mask)
+        pairs(i) = b | ((acc & mask) << shift)
         acc >>>= w
         accBits -= w
       }
-      counts((p >>> 32).toInt) += 1
+      counts(b.toInt) += 1
       i += 1
     }
     in.finish()
