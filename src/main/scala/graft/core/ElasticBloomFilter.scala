@@ -411,22 +411,6 @@ object Ebf {
     src
   }
 
-  /** The heap [[fromBytes]] allocates for `bytes`, read off the header
-    * within the limits `fromBytes` enforces: the filter object, its
-    * bucket counts and its fingerprint pairs. Null reads as an empty
-    * default filter, a header too short to read as nothing. */
-  private[graft] def heapBytes(bytes: Array[Byte]): Long = {
-    def of(buckets: Long, pairs: Long): Long =
-      96L + Heap.array(16L + 4L * math.max(buckets, 0L)) + Heap.array(16L + 8L * math.max(pairs, 64L))
-    if (bytes == null) of(DefaultM0, 0L)
-    else if (bytes.length < HeaderBytes) 0L
-    else {
-      val h = java.nio.ByteBuffer.wrap(bytes)
-      of(math.min(h.getInt(4).toLong << math.min(math.max(h.getInt(16), 0), 30), 1L << 30),
-        math.min(math.min(h.getLong(36), Int.MaxValue) * h.getInt(8), Int.MaxValue))
-    }
-  }
-
   /** Decodes [[Ebf.toBytes]] in one pass over the counts section, which
     * writes each bucket's index in place as its addresses' low bits, then
     * one local loop that puts each packed fingerprint above its bucket's

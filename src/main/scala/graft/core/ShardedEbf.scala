@@ -14,12 +14,13 @@ package graft.core
   * in one shard whose load matches the global load (hash partitioning
   * is uniform), so the per-shard bound IS the global bound.
   *
-  * At 10^12 rows the shard table stays as a (shard, sketch) DataFrame
-  * and probes become broadcast-joins by shard id; at bench scale the
-  * shards are collected and broadcast whole.
+  * The shard table is a (shard, sketch) DataFrame
+  * (`ShardedProbe.buildShardTable`). `ShardedProbe.probeBroadcast`
+  * collects it into one broadcast instance of this class while it fits
+  * an executor; `ShardedProbe.probeCogrouped` co-groups keys with their
+  * shard's bytes beyond that.
   */
-final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val routeSeed: Long)
-    extends Serializable {
+final class ShardedEbf(shardBytes: Array[Array[Byte]]) extends Serializable {
   require(shardBytes.nonEmpty, "need at least one shard")
 
   // Shards deserialize LAZILY, per JVM, on first probe: the wire bytes
@@ -35,11 +36,8 @@ final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val ro
 
   @inline def numShards: Int = shardBytes.length
 
-  @inline def shardOf(key: String): Int = {
-    val h = Hash128.hash64(key, routeSeed)
-    val m = (h % numShards).toInt
-    if (m < 0) m + numShards else m
-  }
+  @inline def shardOf(key: String): Int =
+    ShardedEbf.route(key.getBytes(java.nio.charset.StandardCharsets.UTF_8), numShards)
 
   def shard(i: Int): Ebf = {
     val cached = cache.get(i)
@@ -52,20 +50,12 @@ final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val ro
     }
   }
 
-  /** The heap [[shard]] can add to this instance: every shard decoded,
-    * and the array that holds them. */
-  private[graft] def shardHeapBytes: Long =
-    32L + 8L * numShards + shardBytes.iterator.map(Ebf.heapBytes).sum
-
   def mightContain(key: String): Boolean = shard(shardOf(key)).mightContain(key)
 
   /** Byte-key probe (UTF-8 bytes hash identically to the String form) —
     * lets callers holding UTF8String avoid a per-row String decode. */
-  def mightContain(key: Array[Byte]): Boolean = {
-    val h = Hash128.hashBytes(key, routeSeed).h1
-    val m = (h % numShards).toInt
-    shard(if (m < 0) m + numShards else m).mightContain(key)
-  }
+  def mightContain(key: Array[Byte]): Boolean =
+    shard(ShardedEbf.route(key, numShards)).mightContain(key)
 
   def n: Long = (0 until numShards).map(shard(_).n).sum
 
@@ -76,49 +66,24 @@ final class ShardedEbf(private[graft] val shardBytes: Array[Array[Byte]], val ro
     shardBytes.map(b => if (b == null) 0L else b.length.toLong).sum
 
   def maxLevel: Int = (0 until numShards).map(shard(_).level).max
-
-  /** Whole-table wire form: `SEBF1 | routeSeed | numShards |
-    * (len | bytes)*` with len = -1 for an absent (never-built) shard.
-    * Lets the sharded filter travel as ONE binary value — the
-    * scalar-subquery channel the join-prune rule uses past the
-    * single-EBF window — and decode once per executor through
-    * `SketchCache`.
-    * Round-trips exactly (spec-asserted); shard order is positional so
-    * equal tables are byte-equal. */
-  def toWire: Array[Byte] = {
-    val out = new WireWriter(16 + 4 * numShards + totalSizeBytes.toInt)
-      .int(ShardedEbf.WireMagic).long(routeSeed).int(numShards)
-    shardBytes.foreach(out.blob)
-    out.toBytes
-  }
 }
 
 object ShardedEbf {
   val DefaultRouteSeed: Long = 0x5a4d
-  /** "SEB1" — sharded-table wire magic. */
-  val WireMagic: Int = 0x53454231
-
-  /** Decodes [[ShardedEbf.toWire]]; each shard's own bytes are checked
-    * when [[ShardedEbf.shard]] first decodes it. */
-  def fromWire(bytes: Array[Byte]): ShardedEbf = {
-    val in = WireReader(bytes, "SEB1", WireMagic)
-    val seed = in.long("routeSeed")
-    val n = in.count("shards", in.int("shards"), 4)
-    in.check(n >= 1, "shards", "no shards")
-    val arr = Array.fill(n)(in.blob("shards", nullable = true))
-    in.finish()
-    new ShardedEbf(arr, seed)
-  }
+  /** The shard `key`'s UTF-8 bytes route to:
+    * `hash64(key, DefaultRouteSeed) mod numShards`, non-negative. The one
+    * route of the shard builds (`graft_shard`) and of every probe. */
+  def route(key: Array[Byte], numShards: Int): Int =
+    java.lang.Math.floorMod(Hash128.hashBytes(key, DefaultRouteSeed).h1, numShards.toLong).toInt
 
   /** Assemble from (shardId, serializedSketch) rows. A shard with no
     * rows is a legal empty filter. */
-  def fromShardBytes(rows: Seq[(Int, Array[Byte])], numShards: Int,
-                     routeSeed: Long = DefaultRouteSeed): ShardedEbf = {
+  def fromShardBytes(rows: Seq[(Int, Array[Byte])], numShards: Int): ShardedEbf = {
     val arr = new Array[Array[Byte]](numShards)
     rows.foreach { case (id, bytes) =>
       require(id >= 0 && id < numShards, s"shard id $id out of range")
       arr(id) = bytes
     }
-    new ShardedEbf(arr, routeSeed)
+    new ShardedEbf(arr)
   }
 }

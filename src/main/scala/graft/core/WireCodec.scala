@@ -38,8 +38,8 @@ final class WireWriter(sizeHint: Int = 64) {
     this
   }
 
-  /** Int length then the bytes; a null blob is length -1. */
-  def blob(b: Array[Byte]): this.type = if (b == null) int(-1) else int(b.length).bytes(b)
+  /** Int length then the bytes. */
+  def blob(b: Array[Byte]): this.type = int(b.length).bytes(b)
 
   /** A cell section over cells `0 until n` (see [[WireWriter.cellsSize]]
     * for the layout). `cell(i)` reads cell i; `nonZero`, when not null,
@@ -222,12 +222,8 @@ final class WireReader(data: Array[Byte], val format: String) {
     n.toInt
   }
 
-  /** [[WireWriter.blob]]'s inverse; a length of -1 reads as null only
-    * when `nullable`. */
-  def blob(field: String, nullable: Boolean = false): Array[Byte] = {
-    val len = int(field)
-    if (len == -1 && nullable) null else bytes(field, len)
-  }
+  /** [[WireWriter.blob]]'s inverse. */
+  def blob(field: String): Array[Byte] = bytes(field, int(field))
 
   def magic(expected: Int): Unit = {
     val m = int("magic")

@@ -77,8 +77,7 @@ object Graft {
   *
   * The cache is bounded by the heap its entries take: the wire bytes
   * and the decoded sketch, sized by Spark's `SizeEstimator` with its
-  * big arrays rounded up to whole G1 regions, plus for a [[ShardedEbf]]
-  * every shard, which decodes after it is cached.
+  * big arrays rounded up to whole G1 regions.
   * Past the budget the least recently used entries go first, but
   * never the two most recently used, because a two-sketch row reads
   * two. An evicted sketch is garbage once its last reader drops it.
@@ -108,10 +107,7 @@ class SketchCache(val budget: Long) {
       if (v == null) {
         v = try from(bytes) catch { case t: Throwable => synchronized(entries.remove(key, e)); throw t }
         e.value = v
-        admit(e, bytes.length + SketchCache.heapBytes(v) + (v match {
-          case s: ShardedEbf => s.shardHeapBytes
-          case _ => 0L
-        }))
+        admit(e, bytes.length + SketchCache.heapBytes(v))
       }
     }
     v.asInstanceOf[S]
@@ -137,7 +133,6 @@ class SketchCache(val budget: Long) {
   def cms(b: Array[Byte]): Cms = get(b, classOf[Cms], Cms.fromBytes)
   def kll(b: Array[Byte]): Kll = get(b, classOf[Kll], Kll.fromBytes)
   def td(b: Array[Byte]): TDigest = get(b, classOf[TDigest], TDigest.fromBytes)
-  def sharded(b: Array[Byte]): ShardedEbf = get(b, classOf[ShardedEbf], ShardedEbf.fromWire)
   def theta(b: Array[Byte]): Theta = get(b, classOf[Theta], Theta.fromBytes)
   def dcms(b: Array[Byte]): DecayedCms = get(b, classOf[DecayedCms], DecayedCms.fromBytes)
   def bks(b: Array[Byte]): BottomKSample = get(b, classOf[BottomKSample], BottomKSample.fromBytes)

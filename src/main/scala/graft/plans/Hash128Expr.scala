@@ -60,8 +60,8 @@ object Hash128Expr {
   def h2(c: Column, seed: Long): Column = SketchFn.column(Hash128Part(seed, 1), c)
 }
 
-/** The shard router `graft_shard(key, numShards)`:
-  * `hash64(key, RouteSeed) mod numShards`, non-negative, null key ->
+/** The shard router `graft_shard(key, numShards)`: the key's shard by
+  * `ShardedEbf.route`, the route every sharded probe takes; null key ->
   * null shard (joins no shard, probes as a miss). The router sits on
   * the map side of every shard build and probe (32M+ rows in the
   * flagship's phase 3 alone), so it runs inside whole-stage codegen.
@@ -72,11 +72,8 @@ case class GraftShard(numShards: Int) extends ScalarKind {
   def name: String = "graft_shard"
   def inputTypes: Seq[DataType] = Seq(StringType)
   def dataType: DataType = IntegerType
-  def apply(in: Array[Any]): Any = {
-    val h = Utf8Key.hash(in(0).asInstanceOf[UTF8String], ShardedEbf.DefaultRouteSeed).h1
-    val m = (h % numShards).toInt
-    if (m < 0) m + numShards else m
-  }
+  def apply(in: Array[Any]): Any =
+    ShardedEbf.route(Utf8Key.bytes(in(0).asInstanceOf[UTF8String]), numShards)
 }
 
 object GraftShardExpr {

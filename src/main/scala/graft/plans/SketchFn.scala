@@ -21,7 +21,6 @@ final case class Read[S <: AnyRef](shared: Array[Byte] => S, fresh: Array[Byte] 
 
 object Read {
   val ebf: Read[Ebf] = Read(SketchCache.ebf, Ebf.fromBytes)
-  val sharded: Read[ShardedEbf] = Read(SketchCache.sharded, ShardedEbf.fromWire)
   val hll: Read[Hll] = Read(SketchCache.hll, Hll.fromBytes)
   val theta: Read[Theta] = Read(SketchCache.theta, Theta.fromBytes)
   val cms: Read[Cms] = Read(SketchCache.cms, Cms.fromBytes)
@@ -118,15 +117,6 @@ case class EbfMightContain() extends SketchKey[Ebf]("ebf_might_contain", Boolean
   override def onNullSketch: Any = false
   override def onNullKey: Any = false
   def of(s: Ebf, key: UTF8String): Any = s.mightContain(Utf8Key.bytes(key))
-}
-
-/** The join-prune rule's probe of a `ShardedEbf` wire blob; it has no
-  * SQL name. Each key routes to one shard, decoded on first touch. */
-case class EbfShardedMightContain()
-    extends SketchKey[ShardedEbf]("ebf_sharded_might_contain", BooleanType, Read.sharded) {
-  override def onNullSketch: Any = false
-  override def onNullKey: Any = false
-  def of(s: ShardedEbf, key: UTF8String): Any = s.mightContain(Utf8Key.bytes(key))
 }
 
 case class EbfExpand() extends OneSketch[Ebf]("ebf_expand", BinaryType, Read.ebf) {

@@ -1,8 +1,9 @@
 package graft
 
 import graft.functions.Graft
-import graft.plans.{EbfKind, EbfMightContain, EbfShardedMightContain, SketchAgg, SketchFn}
+import graft.plans.{EbfKind, EbfMightContain, SketchAgg, SketchFn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
@@ -25,8 +26,6 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
     spark.conf.unset("spark.graft.joinPrune.enabled")
     spark.conf.unset("spark.graft.joinPrune.maxBuildBytes")
     spark.conf.unset("spark.graft.joinPrune.minSizeRatio")
-    spark.conf.unset("spark.graft.joinPrune.maxShardedBuildBytes")
-    spark.conf.unset("spark.graft.joinPrune.shardedShards")
   }
 
   private def enable(): Unit =
@@ -78,14 +77,22 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("no-op when the build side is too large or the ratio unmet") {
+    // the rule must leave the join exactly as the rule-off plan has it:
+    // no probe of any kind, no sketch build, no scalar subquery
+    val off = fact.join(build, col("fk") === col("bk")).queryExecution.optimizedPlan
+    def untouched(plan: LogicalPlan): Unit = {
+      assert(plan.canonicalized === off.canonicalized, s"rule changed the plan:\n$plan")
+      assert(!plan.exists(_.expressions.exists(_.exists {
+        case _: SketchFn | _: ScalarSubquery => true
+        case _ => false
+      })), s"plan carries a sketch or a subquery:\n$plan")
+    }
     enable()
     spark.conf.set("spark.graft.joinPrune.maxBuildBytes", "16")
-    val j = fact.join(build, col("fk") === col("bk"))
-    assert(probeFilters(j.queryExecution.optimizedPlan) === 0)
+    untouched(fact.join(build, col("fk") === col("bk")).queryExecution.optimizedPlan)
     spark.conf.unset("spark.graft.joinPrune.maxBuildBytes")
     spark.conf.set("spark.graft.joinPrune.minSizeRatio", "1e12")
-    val j2 = fact.join(build, col("fk") === col("bk"))
-    assert(probeFilters(j2.queryExecution.optimizedPlan) === 0)
+    untouched(fact.join(build, col("fk") === col("bk")).queryExecution.optimizedPlan)
   }
 
   test("no-op for floating-point join keys (string-render hazard)") {
@@ -108,69 +115,24 @@ class EbfJoinPruneRuleSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(j.count() === plain.count())
   }
 
-  private def shardedProbeFilters(plan: LogicalPlan): Int = {
-    var n = 0
-    plan.foreach(p => p.expressions.foreach(_.foreach { e =>
-      if (SketchFn.isA[EbfShardedMightContain](e)) n += 1
-    }))
-    n
-  }
-
-  test("sharded window: fires past maxBuildBytes with the blob probe, exact result") {
-    val plain = fact.join(build, col("fk") === col("bk")).orderBy("id", "bk")
-    val expected = plain.collect()
-    enable()
-    // push the monolithic window below this build side so only the
-    // sharded window can admit it
-    spark.conf.set("spark.graft.joinPrune.maxBuildBytes", "1")
-    spark.conf.set("spark.graft.joinPrune.shardedShards", "8")
-    val pruned = fact.join(build, col("fk") === col("bk")).orderBy("id", "bk")
-    val opt = pruned.queryExecution.optimizedPlan
-    assert(probeFilters(opt) === 0, s"monolithic probe fired out of window:\n$opt")
-    assert(shardedProbeFilters(opt) === 1, s"sharded probe did not fire:\n$opt")
-    assert(pruned.collect() === expected)
-  }
-
-  test("sharded window: no-op past maxShardedBuildBytes") {
-    enable()
-    spark.conf.set("spark.graft.joinPrune.maxBuildBytes", "1")
-    spark.conf.set("spark.graft.joinPrune.maxShardedBuildBytes", "2")
-    val j = fact.join(build, col("fk") === col("bk"))
-    val opt = j.queryExecution.optimizedPlan
-    assert(probeFilters(opt) === 0 && shardedProbeFilters(opt) === 0,
-      s"rule fired beyond every window:\n$opt")
-  }
-
-  test("sharded blob probe has no false negatives and routes like graft_shard") {
-    enable()
-    spark.conf.set("spark.graft.joinPrune.maxBuildBytes", "1")
-    spark.conf.set("spark.graft.joinPrune.shardedShards", "8")
-    // left_semi: surviving keys == exactly the distinct fk values with a
-    // matching bk (false positives are dropped by the join itself)
-    val semi = fact.join(build, col("fk") === col("bk"), "left_semi")
-    assert(shardedProbeFilters(semi.queryExecution.optimizedPlan) === 1)
-    spark.conf.unset("spark.graft.joinPrune.enabled")
-    val plainSemi = fact.join(build, col("fk") === col("bk"), "left_semi")
-    assert(semi.count() === plainSemi.count())
-  }
-
   test("ShardedEbf wire round-trips and probes identically") {
     val keys = (0 until 5000).map(i => s"key-$i")
     val shards = 8
-    val byShard = keys.groupBy(k => graft.core.Hash128.hashBytes(
-      k.getBytes("UTF-8"), graft.core.ShardedEbf.DefaultRouteSeed).h1 match {
-      case h => { val m = (h % shards).toInt; if (m < 0) m + shards else m }
-    })
+    val byShard = keys.groupBy(k => java.lang.Math.floorMod(graft.core.Hash128.hashBytes(
+      k.getBytes("UTF-8"), graft.core.ShardedEbf.DefaultRouteSeed).h1, shards.toLong).toInt)
     val rows = byShard.toSeq.map { case (s, ks) =>
       val e = graft.core.Ebf.empty(seed = Graft.SketchSeed)
       ks.foreach(k => e.insert(k.getBytes("UTF-8")))
       (s, e.toBytes)
     }
-    val orig = graft.core.ShardedEbf.fromShardBytes(rows, shards)
-    val rt = graft.core.ShardedEbf.fromWire(orig.toWire)
-    assert(java.util.Arrays.equals(orig.toWire, rt.toWire))
-    assert(keys.forall(rt.mightContain), "wire round-trip lost members")
-    assert(rt.numShards === shards)
+    val sharded = graft.core.ShardedEbf.fromShardBytes(rows, shards)
+    // each shard's wire bytes decode to the filter that wrote them
+    rows.foreach { case (s, bytes) =>
+      assert(java.util.Arrays.equals(sharded.shard(s).toBytes, bytes), s"shard $s")
+    }
+    assert(keys.forall(sharded.mightContain), "String probe lost members")
+    assert(keys.forall(k => sharded.mightContain(k.getBytes("UTF-8"))), "byte probe lost members")
+    assert(sharded.numShards === shards)
   }
 
   test("structural guard: tag loss via copy() does not stack duplicate probes") {

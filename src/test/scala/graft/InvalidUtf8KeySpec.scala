@@ -1,9 +1,9 @@
 package graft
 
-import graft.core.{Ebf, Hash128, ShardedEbf}
+import graft.core.{Ebf, Hash128}
 import graft.functions.Graft
 import graft.pipeline.ShardedProbe
-import graft.plans.{EbfMightContain, EbfShardedMightContain, EbfShardedProbeExpr, SketchFn, Utf8Key}
+import graft.plans.{EbfMightContain, EbfShardedProbeExpr, SketchFn, Utf8Key}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
@@ -82,15 +82,11 @@ class InvalidUtf8KeySpec extends AnyFunSuite {
     allHit(keys, expr(SketchFn(Seq(Literal(ebf), ColumnBridge.expression(col("k"))),
       EbfMightContain())))
 
-    // the sharded build and its probes: broadcast native expression,
-    // sharded blob and cogroup
+    // the sharded build and its probes: broadcast native expression
+    // and cogroup
     val shards = ShardedProbe.buildShardTable(keys, col("k"), 4, m0 = 64)
     val bc = ShardedProbe.broadcastShards(shards, 4)
     allHit(keys, EbfShardedProbeExpr.probeColumn(bc, col("k")))
-    val blob = ShardedEbf.fromShardBytes(
-      shards.collect().map(r => (r.getInt(0), r.getAs[Array[Byte]](1))).toSeq, 4).toWire
-    allHit(keys, expr(SketchFn(Seq(Literal(blob), ColumnBridge.expression(col("k"))),
-      EbfShardedMightContain())))
     assert(ShardedProbe.probeCogrouped(keys, col("k"), shards, 4).select("hit")
       .collect().forall(_.getBoolean(0)))
 

@@ -156,9 +156,7 @@ class SketchAggParitySpec extends AnyFunSuite {
       (FdKind(2, 2), Seq(vec), "graft_fd_agg", BinaryType, false),
       (VecSumKind(2), Seq(vec), "graft_vec_sum", ArrayType(DoubleType, containsNull = false), false),
       (PerLangKind(3, 64, 16, 7L, 0), Seq(k, col("w").cast("string")),
-        "per_lang_token_sketches_agg", MapType(StringType, BatchedTokenBuf.dataType, false), false),
-      (EbfShardedWireKind(4), Seq(lit(null).cast("int"), lit(null).cast("binary")),
-        "ebf_sharded_wire_agg", BinaryType, false))
+        "per_lang_token_sketches_agg", MapType(StringType, BatchedTokenBuf.dataType, false), false))
     for ((kind, in, name, dt, nullable) <- kinds) {
       val agg = SketchAgg.column(in, kind).as("r")
       val all = t.agg(agg)

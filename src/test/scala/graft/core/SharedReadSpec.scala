@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.functions.SketchCache
-import graft.plans.{EbfShardedMightContain, ScalarKind, SketchFn}
+import graft.plans.{ScalarKind, SketchFn}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,14 +22,9 @@ class SharedReadSpec extends AnyFunSuite {
     s.toBytes
   }
 
-  private def fixtures(salt: String): Map[String, Array[Byte]] = {
-    val route = new ShardedEbf(Array.fill(4)(null), ShardedEbf.DefaultRouteSeed)
-    val shards = Array.fill(4)(Ebf.empty())
-    (0 until 3000).foreach { i => val k = s"k$salt$i"; shards(route.shardOf(k)).insert(k) }
+  private def fixtures(salt: String): Map[String, Array[Byte]] =
     Map(
       "ebf" -> filled(Ebf.empty())((s, i) => s.insert(s"k$salt$i")),
-      "ebf_sharded" -> ShardedEbf.fromShardBytes(
-        shards.indices.map(i => i -> shards(i).toBytes), 4).toWire,
       "hll" -> filled(Hll.empty())((s, i) => s.add(s"k$salt$i")),
       "sample" -> filled(BottomKSample.empty(64))((s, i) => s.add(s"k$salt$i")),
       "theta" -> filled(Theta.empty(256))((s, i) => s.add(s"k$salt${i * 2}")),
@@ -39,16 +34,13 @@ class SharedReadSpec extends AnyFunSuite {
       "kll" -> filled(Kll.empty())((s, i) => s.add(((i * 7919) % 3001).toDouble)),
       "tdigest" -> filled(TDigest.empty())((s, i) => s.add(((i * 7919) % 3001).toDouble)),
       "topk" -> filled(FreqSketch.empty(64))((s, i) => s.add(s"k$salt${(i * i) % 500}")))
-  }
 
   private lazy val first = fixtures("a")
   private lazy val second = fixtures("b")
 
-  private def prefix(kind: ScalarKind): String =
-    if (kind.name.startsWith("ebf_sharded")) "ebf_sharded" else kind.name.takeWhile(_ != '_')
+  private def prefix(kind: ScalarKind): String = kind.name.takeWhile(_ != '_')
 
-  private val kinds: Seq[ScalarKind] =
-    SketchFn.registered.filter(k => k.sketches > 0 && !k.mutates) :+ EbfShardedMightContain()
+  private val kinds: Seq[ScalarKind] = SketchFn.registered.filter(k => k.sketches > 0 && !k.mutates)
 
   /** Row `j` of `kind`'s inputs: its sketches shared or private. */
   private def inputs(kind: ScalarKind, j: Int, shared: Boolean): Array[Any] =
@@ -63,7 +55,7 @@ class SharedReadSpec extends AnyFunSuite {
 
   test("every cached kind answers from one instance shared by 8 threads as from a private copy") {
     val covered = kinds.map(k => k.decode(first(prefix(k)), own = true).getClass.getSimpleName).toSet
-    assert(covered === Set("Ebf", "ShardedEbf", "Hll", "Theta", "Cms", "CountSketch",
+    assert(covered === Set("Ebf", "Hll", "Theta", "Cms", "CountSketch",
       "DecayedCms", "Kll", "TDigest", "FreqSketch", "BottomKSample"))
     val expected = for (k <- kinds; j <- 0 to 10) yield k(inputs(k, j, shared = false))
 

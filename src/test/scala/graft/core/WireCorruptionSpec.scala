@@ -66,10 +66,6 @@ class WireCorruptionSpec extends AnyFunSuite {
     Format("DCM1", {
       val d = DecayedCms.empty(2, 4, 3L, 0.1); keys("d", 6).foreach(d.add(_, 1.0)); d.toBytes
     }, b => { val d = DecayedCms.fromBytes(b); d.estimate("probe", 2.0); d.toBytes }),
-    Format("SEB1", ShardedEbf.fromShardBytes(Seq(0 -> ebfBytes(16, 8, 4), 2 -> ebfBytes(16, 8, 2)), 3)
-      .toWire, b => {
-      val s = ShardedEbf.fromWire(b); (0 until s.numShards).foreach(s.shard); s.mightContain("x"); s.toWire
-    }),
     Format("FDS1", { val f = Fd.empty(2, 2); f.insert(Array(1.0, 2.0)); f.insert(Array(3.0, -1.0)); f.toBytes },
       b => { val f = Fd.fromBytes(b); f.gram; f.insert(Array(0.5, 0.5)); f.toBytes })
   )
@@ -138,10 +134,6 @@ class WireCorruptionSpec extends AnyFunSuite {
     int("BKS1", 12, -5),                      // first key length
     int("DCM1", 8, 0x7f001000),
     int("DCM1", 4, 3),                        // cells beyond the bytes present
-    int("SEB1", 12, 1 << 30),                 // shard count
-    int("SEB1", 12, 0),
-    int("SEB1", 16, 1 << 30),                 // first shard length
-    int("SEB1", 24, 0x7f001000),              // first shard's m0
     int("FDS1", 8, 0),
     int("FDS1", 12, 5)                        // rows beyond 2*ell
   )

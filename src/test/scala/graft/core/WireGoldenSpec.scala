@@ -57,8 +57,6 @@ class WireGoldenSpec extends AnyFunSuite {
     f.toBytes
   }
 
-  private lazy val ebfShard: Array[Byte] = ebf(64, 3, 8, 40)
-
   private def modeAt(b: Array[Byte], off: Int): Int = b(off).toInt
 
   private lazy val goldens: Seq[Golden] = Seq(
@@ -96,8 +94,6 @@ class WireGoldenSpec extends AnyFunSuite {
       keys("dcm", 60).zipWithIndex.foreach { case (s, i) => d.add(s, i * 0.5, 1.0 + i % 3) }
       d.toBytes
     }, DecayedCms.fromBytes(_).toBytes, "abd0c3fcb4eeeff50c4a05b2ca3354bf73e8b9c16803721925526f12b6a86bb1"),
-    Golden("SEB1", ShardedEbf.fromShardBytes(Seq(0 -> ebfShard, 2 -> ebf(64, 3, 8, 7)), 3,
-      routeSeed = 41L).toWire, ShardedEbf.fromWire(_).toWire, "198489a8b92914c29fb46adc0d016e783db235e322140f3225d13ed4bec13099"),
     Golden("FDS1", {
       val f = Fd.empty(4, 3)
       doubles(43L, 18).grouped(3).foreach(r => f.insert(r.toArray))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.core.{Ebf, ShardedEbf}
+import graft.core.Ebf
 import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,7 +29,7 @@ class SketchCacheBoundSpec extends AnyFunSuite {
     assert(SketchCache.budget === Runtime.getRuntime.maxMemory / 8)
   }
 
-  test("an entry is charged for its bytes and decoded sketch; a sharded one for every shard") {
+  test("an entry is charged for its bytes and decoded sketch") {
     val b = blobs(7)
     assert(chargeOf(_.ebf(b)) === b.length + SizeEstimator.estimate(Ebf.fromBytes(b)))
 
@@ -42,13 +42,6 @@ class SketchCacheBoundSpec extends AnyFunSuite {
     val taken = if (region == 0) counts else (counts + region - 1) / region * region
     assert(chargeOf(_.ebf(wide)) ===
       wide.length + SizeEstimator.estimate(Ebf.fromBytes(wide)) - counts + taken)
-
-    val wire = ShardedEbf.fromShardBytes(Seq(0 -> blobs(3), 2 -> blobs(40), 3 -> blobs(47)), 4).toWire
-    val charge = chargeOf(_.sharded(wire))
-    val all = ShardedEbf.fromWire(wire)
-    (0 until all.numShards).foreach(all.shard)
-    val held = wire.length + SizeEstimator.estimate(all)
-    assert(charge >= held && charge <= held * 1.1, s"charged $charge for $held")
   }
 
   test("8 writers keep the resident charge within the budget") {

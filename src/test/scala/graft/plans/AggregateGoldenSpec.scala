@@ -15,8 +15,8 @@ import scala.jdk.CollectionConverters._
 /** Pins the outputs of the rewrite and vector aggregates on one seeded
   * input with nulls: the COUNT(DISTINCT) estimate, the percentile
   * quantiles, the MG mode (with a tie) and top-k pairs, the FD blob
-  * from double and from float vectors, the vector sums, the per-lang
-  * token CMS bytes and the sharded join-prune blob. The spec reaches
+  * from double and from float vectors, the vector sums and the per-lang
+  * token CMS bytes. The spec reaches
   * each aggregate only through its rule or its `column` facade and
   * finds it by its SQL name, so it runs unchanged on two commits; run
   * it on both to check that their outputs are identical.
@@ -35,8 +35,7 @@ class AggregateGoldenSpec extends AnyFunSuite with BeforeAndAfterEach {
       .getOrCreate())
 
   private val rules = Seq("approxDistinct.enabled", "approxPercentile.enabled",
-    "approxMode.enabled", "approxTopK.enabled", "joinPrune.enabled",
-    "joinPrune.maxBuildBytes", "joinPrune.shardedShards", "joinPrune.minSizeRatio")
+    "approxMode.enabled", "approxTopK.enabled")
 
   override def afterEach(): Unit = rules.foreach(r => spark.conf.unset(s"spark.graft.$r"))
 
@@ -160,21 +159,5 @@ class AggregateGoldenSpec extends AnyFunSuite with BeforeAndAfterEach {
       "de:7ffd04a00cc4bfc0a03f3d992303d0d73210b59e2dbafa8455b2090f651e0acb; " +
       "en:6e7ff60cf9732c72cfcf9456510ddd9cff245c6671d4638e0fe49e19db5501ea; " +
       "fr:55dcd921353ce648099bffd4fea88be654a0cd285bcea4ed6c7cbb41354ccc10")
-  }
-
-  test("join-prune sharded window: ShardedEbf wire blob") {
-    enable("joinPrune.enabled")
-    spark.conf.set("spark.graft.joinPrune.maxBuildBytes", "1")
-    spark.conf.set("spark.graft.joinPrune.shardedShards", "8")
-    spark.conf.set("spark.graft.joinPrune.minSizeRatio", "0")
-    val fact = spark.range(20000).select(concat(lit("k"), (col("id") % 500).cast("string")).as("fk"))
-    val q = fact.join(input.select("k"), col("fk") === col("k"), "left_semi")
-    assert(fired(q, "ebf_sharded_wire_agg") === 1)
-    val sub = q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case s: ScalarSubquery => s.plan
-    }))
-    assert(sub.size === 1)
-    val blob = spark.sessionState.executePlan(sub.head).executedPlan.executeCollect().head.getBinary(0)
-    assert(sha256(blob) === "dcae6c6d6b376aebc80d0fcbb009a3df54434ef2461e6f6e67c44b0163c0926a")
   }
 }
